@@ -116,13 +116,18 @@ def main() -> None:
         try:
             for _ in range(iterations):
                 t0 = time.perf_counter()
-                df = registry[name].fn(spark, sf_dir)
-                # collect() forces full evaluation incl. the final
-                # projection (count() would let Catalyst prune result
-                # expressions); all bench queries return small
-                # (aggregated / limited) results.
-                n = len(df.collect())
-                elapsed = time.perf_counter() - t0
+                try:
+                    df = registry[name].fn(spark, sf_dir)
+                    # collect() forces full evaluation incl. the final
+                    # projection (count() would let Catalyst prune result
+                    # expressions); all bench queries return small
+                    # (aggregated / limited) results.
+                    n = len(df.collect())
+                    elapsed = time.perf_counter() - t0
+                finally:
+                    # outside the timed region: no iteration may read a
+                    # cache that an earlier iteration's persist() filled
+                    spark.catalog.clearCache()
                 best = elapsed if best is None else min(best, elapsed)
         except Exception as exc:  # one broken query must not lose the run
             failed.append(name)

@@ -4,22 +4,23 @@ The reference proves which operator served a query via
 ``checkSparkAnswerAndOperator`` (reference:
 spark/src/test/scala/org/apache/spark/sql/CometTestBase.scala:225-268)
 and commits approved plans per query in its plan-stability suite
-(test/.../CometPlanStabilitySuite.scala:78-125).  The rebuild keeps
-the idea but parses Spark's own explain output: assert that the
-expected physical operators (and only those) executed, that filters
-reached the parquet scan, and that joins picked the intended strategy.
-
-Parsing is deliberately minimal — operator names only — because
-explain formatting varies between Spark versions (SURVEY.md §7.4.5).
+(test/.../CometPlanStabilitySuite.scala:78-125).  Every plan count and
+lookup here walks Spark's own physical plan over py4j (``walk_plan``),
+scalar subqueries and cached sub-plans included; only ``plan_string``
+and ``operators_in_plan`` render text (``Engine.explain``, the goldens).
 """
 
 from __future__ import annotations
 
 import re
+from collections.abc import Iterator
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 
 _OP_LINE = re.compile(r"^\s*(?:[+:*!\-(\d)\s]*)([A-Za-z][A-Za-z0-9]+)")
+
+_REUSED = frozenset({"ReusedExchangeExec", "ReusedSubqueryExec"})
 
 
 def plan_string(df: DataFrame, mode: str = "formatted") -> str:
@@ -41,84 +42,102 @@ def operators_in_plan(df: DataFrame) -> list[str]:
     return ops
 
 
-def assert_operators(
-    df: DataFrame,
-    expected: list[str] | None = None,
-    forbidden: list[str] | None = None,
-) -> None:
-    """Assert the physical plan contains each ``expected`` operator name
-    (substring match against the plan) and none of the ``forbidden``."""
-    text = plan_string(df, "simple")
-    for op in expected or []:
-        assert op in text, f"operator {op!r} missing from plan:\n{text}"
-    for op in forbidden or []:
-        assert op not in text, f"operator {op!r} unexpectedly in plan:\n{text}"
+def walk_plan(plan) -> Iterator[tuple[str, object]]:
+    """Yield ``(class simple name, JVM node)`` for every node of the
+    physical plan of ``plan`` (a DataFrame, or a JVM ``SparkPlan``).
+
+    ``AdaptiveSparkPlanExec`` is replaced by its current plan (final
+    once the query ran, initial before) and each ``*QueryStageExec`` by
+    its plan.  Subqueries are descended into, and so is the cached plan
+    under an ``InMemoryTableScanExec``, once however many scans read it.
+    ``ReusedExchangeExec`` / ``ReusedSubqueryExec`` are yielded but not
+    descended into: what they reuse ran once, elsewhere in the tree."""
+    if isinstance(plan, DataFrame):
+        plan = plan._jdf.queryExecution().executedPlan()
+    seen_cached: set[int] = set()
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+            continue
+        if cls.endswith("QueryStageExec"):
+            stack.append(node.plan())
+            continue
+        yield cls, node
+        if cls in _REUSED:
+            continue
+        if cls == "InMemoryTableScanExec":
+            cached = node.relation().cachedPlan()
+            key = SparkContext._jvm.System.identityHashCode(cached)
+            if key not in seen_cached:
+                seen_cached.add(key)
+                stack.append(cached)
+        for seq in (node.subqueries(), node.children()):
+            for i in range(seq.size()):
+                stack.append(seq.apply(i))
+
+
+def scan_table(scan) -> str:
+    """Table of a ``FileSourceScanExec`` (``.../lineitem.parquet`` ->
+    ``lineitem``)."""
+    name = scan.relation().location().rootPaths().apply(0).getName()
+    return name.rsplit(".", 1)[0]
 
 
 def pushed_filters(df: DataFrame) -> list[str]:
-    """PushedFilters entries from the formatted plan (parquet pushdown proof)."""
-    text = plan_string(df, "formatted")
+    """PushedFilters entries of every parquet scan (pushdown proof)."""
     out = []
-    for m in re.finditer(r"PushedFilters:\s*\[([^\]]*)\]", text):
-        body = m.group(1).strip()
-        if body:
-            out.extend(p.strip() for p in body.split(","))
+    for cls, node in walk_plan(df):
+        if cls == "FileSourceScanExec":
+            body = node.metadata().apply("PushedFilters").strip("[]")
+            out.extend(f for f in body.split(", ") if f)
     return out
 
 
 def shuffle_count(df: DataFrame) -> int:
-    """Number of shuffle exchanges in the plan — the scale metric to minimize."""
-    return plan_string(df, "simple").count("Exchange hashpartitioning") + plan_string(
-        df, "simple"
-    ).count("Exchange rangepartitioning")
+    """Number of hash/range shuffle exchanges in the plan — the scale
+    metric to minimize."""
+    return sum(
+        1
+        for cls, node in walk_plan(df)
+        if cls == "ShuffleExchangeExec"
+        and node.outputPartitioning().getClass().getSimpleName()
+        in ("HashPartitioning", "RangePartitioning")
+    )
 
 
 def broadcast_join_count(df: DataFrame) -> int:
-    return plan_string(df, "simple").count("BroadcastHashJoin")
+    return sum(1 for cls, _ in walk_plan(df) if cls == "BroadcastHashJoinExec")
 
 
-_SCAN_TABLE = re.compile(r"([A-Za-z_0-9]+)\.parquet")
+def skew_split_joins(df: DataFrame) -> int:
+    """Number of shuffled joins AQE split for skew (after execution)."""
+    return sum(
+        1
+        for cls, node in walk_plan(df)
+        if cls in ("SortMergeJoinExec", "ShuffledHashJoinExec") and node.isSkewJoin()
+    )
 
 
 def scans_under_broadcast(df: DataFrame) -> list[str]:
-    """Table names of every FileScan sitting BENEATH a BroadcastExchange
-    in the physical plan — the build sides Catalyst has committed to
-    materializing on every executor.  The 100 TB invariant
-    (tests/test_asymptotic_regime.py) is that in asymptotic mode this
-    list never names a scaling table.
+    """Table names of every parquet scan BENEATH a BroadcastExchange —
+    the build sides materialized on every executor.  The 100 TB
+    invariant (tests/test_asymptotic_regime.py) is that in asymptotic
+    mode this list never names a scaling table.
 
-    Subtree membership is recovered from the simple plan's indentation:
-    a node's children are the following lines whose operator name
-    starts at a deeper column; a BroadcastExchange's subtree ends at
-    the first line at or left of its own depth.
-
-    OPAQUE nodes under a broadcast are flagged, not skipped: a
-    ``ReusedExchange`` or ``InMemoryTableScan`` descendant prints no
-    FileScan of its own — its source subtree lives elsewhere in the
-    plan (or in the cache manager) — so a scaling scan could reach the
-    broadcast through one without ever appearing in this subtree.
-    Those descendants are reported as ``<opaque:OpName>`` markers so
-    the asymptotic contract test fails on them unless the composed
-    plan was adjudicated and allowlisted by name (round-11 advice:
-    cached/reused build sides must not bypass the contract).
-    """
-    lines = plan_string(df, "simple").splitlines()
-    parsed = []  # (depth, op_name, raw_line)
-    for line in lines:
-        m = _OP_LINE.match(line)
-        if m:
-            parsed.append((m.start(1), m.group(1), line))
+    A ``ReusedExchange`` or ``InMemoryTableScan`` descendant reads rows
+    computed elsewhere, so a scaling scan could reach the broadcast
+    through one: each is also reported as an ``<opaque:OpName>`` marker,
+    which the contract test fails on unless adjudicated by name."""
     out: list[str] = []
-    for i, (depth, op, _line) in enumerate(parsed):
-        if op != "BroadcastExchange":
+    for cls, node in walk_plan(df):
+        if cls != "BroadcastExchangeExec":
             continue
-        for d2, op2, line2 in parsed[i + 1 :]:
-            if d2 <= depth:
-                break
-            if op2 == "FileScan":
-                sm = _SCAN_TABLE.search(line2)
-                if sm:
-                    out.append(sm.group(1))
-            elif op2 in ("ReusedExchange", "InMemoryTableScan"):
-                out.append(f"<opaque:{op2}>")
+        for cls2, node2 in walk_plan(node.child()):
+            if cls2 == "FileSourceScanExec":
+                out.append(scan_table(node2))
+            elif cls2 in ("ReusedExchangeExec", "InMemoryTableScanExec"):
+                out.append(f"<opaque:{cls2[: -len('Exec')]}>")
     return out

@@ -95,7 +95,7 @@ def _stats_join_back(
     hot probe partition runs as one straggler task.  Rebalancing the
     (dimension-bounded) stats side costs one extra small exchange and
     restores the bare-stage shape, after which AQE splits the skewed
-    probe partition (`skew=true`, pinned in tests/test_skew_stress.py).
+    probe partition (`isSkewJoin`, pinned in tests/test_skew_stress.py).
     """
     if name in FIXED_SIZE_DIMS or table_bytes(sf_dir, name) <= _DIM_HINT_MAX_BYTES:
         return rows.join(F.broadcast(stats), key, how)

@@ -37,10 +37,10 @@ DEFAULT_CONF: dict[str, str] = {
     # text_bm25_multiquery's tf) runs |partitions| near-empty tasks of
     # pure scheduling overhead.  True sizes cached partitions from bytes
     # (advisoryPartitionSizeInBytes) — 1 task at sf0.1, advisory-sized
-    # at 100 TB.  Measured (dev/cached_coalesce_ab.py, interleaved
-    # min-of-9 per arm, identical rows): return_ratio_rank warm
-    # 0.951→0.660 s, cold 1.30→0.906 s; bm25_multiquery warm
-    # 0.936→0.628 s, cold 1.25→1.013 s.
+    # at 100 TB.  Measured (dev/cached_coalesce_ab.json, interleaved
+    # min-of-9 warm / min-of-3 cold per arm, identical rows):
+    # return_ratio_rank warm 0.951→0.660 s, cold 1.30→0.906 s;
+    # bm25_multiquery warm 0.936→0.628 s, cold 1.25→1.013 s.
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     # Prefer hash join when a side is small post-AQE; mirrors the
     # reference's biggest tuned win (replaceSortMergeJoin, BASELINE.md).

@@ -39,29 +39,26 @@ QUERIES = [
 SFS = ["sf0.001", "sf0.01", "sf0.1"]
 
 
-def probe(plan: str) -> str:
-    bhj = plan.count("BroadcastHashJoin")
-    smj = plan.count("SortMergeJoin")
-    shj = plan.count("ShuffledHashJoin")
-    bnl = plan.count("BroadcastNestedLoopJoin")
-    exch = plan.count("Exchange hashpartitioning") + plan.count(
-        "Exchange rangepartitioning"
-    )
-    parts = []
-    if bhj:
-        parts.append(f"{bhj}×BHJ")
-    if smj:
-        parts.append(f"{smj}×SMJ")
-    if shj:
-        parts.append(f"{shj}×SHJ")
-    if bnl:
-        parts.append(f"{bnl}×BNLJ")
-    parts.append(f"{exch}ex")
+_JOINS = {
+    "BroadcastHashJoinExec": "BHJ",
+    "SortMergeJoinExec": "SMJ",
+    "ShuffledHashJoinExec": "SHJ",
+    "BroadcastNestedLoopJoinExec": "BNLJ",
+}
+
+
+def probe(df) -> str:
+    from collections import Counter
+
+    from datafusion_comet_spark.plans import shuffle_count, walk_plan
+
+    ops = Counter(cls for cls, _ in walk_plan(df))
+    parts = [f"{ops[cls]}×{tag}" for cls, tag in _JOINS.items() if ops[cls]]
+    parts.append(f"{shuffle_count(df)}ex")
     return " ".join(parts)
 
 
 def main() -> None:
-    from datafusion_comet_spark.plans.introspect import plan_string
     from datafusion_comet_spark.queries import load_all
     from datafusion_comet_spark.session import get_session
 
@@ -73,7 +70,7 @@ def main() -> None:
         cells = []
         for sf in SFS:
             df = registry[name].fn(spark, f"/root/testdata/{sf}")
-            cells.append(probe(plan_string(df, "simple")))
+            cells.append(probe(df))
         rows.append((name, cells))
     print("| query | " + " | ".join(SFS) + " |")
     print("|---|" + "---|" * len(SFS))
@@ -103,7 +100,7 @@ def main() -> None:
         print("|---|---|")
         for name in QUERIES:
             df = registry[name].fn(spark, "/root/testdata/sf0.1")
-            print(f"| {name} | {probe(plan_string(df, 'simple'))} |")
+            print(f"| {name} | {probe(df)} |")
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)

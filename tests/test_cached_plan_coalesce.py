@@ -21,6 +21,7 @@ Two pins:
 
 from __future__ import annotations
 
+from datafusion_comet_spark.plans import walk_plan
 from datafusion_comet_spark.queries import load_all
 from datafusion_comet_spark.session import DEFAULT_CONF
 
@@ -36,22 +37,25 @@ def test_session_enables_cached_plan_repartitioning():
 
 def test_cached_subtree_gets_aqe_shuffle_read(spark, sf_dir):
     spark.catalog.clearCache()  # the cache must materialize under test
-    df = REGISTRY["tpcds_return_ratio_rank"].fn(spark, sf_dir)
-    df.collect()
-    txt = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    assert "InMemoryRelation" in txt, "query lost its persist()"
-    cached = txt[txt.index("InMemoryRelation") :]
-    # The cached relation prints its own AdaptiveSparkPlan/Final Plan.
-    # Flag ON: the cached plan's final aggregate reads through an
-    # AQEShuffleRead sitting ABOVE its ShuffleQueryStage (size-adapted
-    # partitions).  Flag OFF (the default): the aggregate sits directly
-    # on the ShuffleQueryStage — the raw |shuffle.partitions| layout —
-    # which is exactly the structural diff between
-    # plans/r12/tpcds_return_ratio_rank_{before,after}.txt.
-    head = cached[:2000]
-    i_read = head.find("AQEShuffleRead")
-    i_stage = head.find("ShuffleQueryStage")
-    assert i_stage != -1, head
-    assert i_read != -1 and i_read < i_stage, head
+    try:
+        df = REGISTRY["tpcds_return_ratio_rank"].fn(spark, sf_dir)
+        df.collect()
+        cached = [
+            node.relation().cachedPlan()
+            for cls, node in walk_plan(df)
+            if cls == "InMemoryTableScanExec"
+        ]
+        assert cached, "query lost its persist()"
+        # Flag ON: the cached plan's final aggregate reads its
+        # ShuffleQueryStage through an AQEShuffleRead (size-adapted
+        # partitions).  Flag OFF (the default): no AQEShuffleRead — the
+        # raw |shuffle.partitions| layout, the structural diff between
+        # plans/r12/tpcds_return_ratio_rank_{before,after}.txt.
+        reads = [
+            node.child().getClass().getSimpleName()
+            for cls, node in walk_plan(cached[0])
+            if cls == "AQEShuffleReadExec"
+        ]
+        assert "ShuffleQueryStageExec" in reads, reads
+    finally:
+        spark.catalog.clearCache()

@@ -30,6 +30,8 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from datafusion_comet_spark.plans import pushed_filters, walk_plan
+
 ROW_GROUP_SIZE = 8000
 SRC = "/root/testdata/sf0.01/lineitem.parquet"
 
@@ -57,31 +59,6 @@ def small_split(spark):
     spark.conf.set(key, str(256 * 1024))
     yield
     spark.conf.set(key, saved)
-
-
-def _scan_leaves(df):
-    """Post-execution FileSourceScanExec nodes with live metrics."""
-    ep = df._jdf.queryExecution().executedPlan()
-    if "AdaptiveSparkPlan" in ep.getClass().getSimpleName():
-        ep = ep.executedPlan()
-
-    def walk(node):
-        n = node.children().size()
-        if n == 0:
-            return [node]
-        out = []
-        for i in range(n):
-            out += walk(node.children().apply(i))
-        return out
-
-    return [
-        n for n in walk(ep)
-        if "FileSourceScan" in n.getClass().getSimpleName()
-    ]
-
-
-def _metric(node, name):
-    return node.metrics().apply(name).value()
 
 
 def test_multi_rowgroup_file_splits_into_tasks(spark, mrg_path, small_split):
@@ -133,10 +110,8 @@ def test_pushed_filter_prunes_row_groups(spark, mrg_path):
         spark.read.parquet(mrg_path)
         .filter((F.col("l_orderkey") >= 100) & (F.col("l_orderkey") <= 200))
     )
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan and "l_orderkey" in plan.split(
-        "PushedFilters"
-    )[1][:200], plan[:2000]
+    pushed = pushed_filters(df)
+    assert any("l_orderkey" in f for f in pushed), pushed
 
     n_match = df.count()
     assert 0 < n_match < ROW_GROUP_SIZE
@@ -147,9 +122,9 @@ def test_pushed_filter_prunes_row_groups(spark, mrg_path):
         .filter((F.col("l_orderkey") >= 100) & (F.col("l_orderkey") <= 200))
     )
     df2.collect()
-    scans = _scan_leaves(df2)
+    scans = [n for cls, n in walk_plan(df2) if cls == "FileSourceScanExec"]
     assert scans, "no FileSourceScanExec found in executed plan"
-    scanned = sum(_metric(s, "numOutputRows") for s in scans)
+    scanned = sum(s.metrics().apply("numOutputRows").value() for s in scans)
     # the range spans at most 2 row groups of a sorted file; allow 2
     assert scanned <= 2 * ROW_GROUP_SIZE, (
         f"scan output {scanned} rows of {total} — row groups not pruned"

@@ -10,13 +10,17 @@ broadcast, no Python (BatchEvalPython) in any hot path.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from datafusion_comet_spark.plans import (
     broadcast_join_count,
-    operators_in_plan,
     plan_string,
     pushed_filters,
+    scan_table,
+    shuffle_count,
+    skew_split_joins,
+    walk_plan,
 )
 from datafusion_comet_spark.queries import load_all
 from datafusion_comet_spark.testing import (
@@ -26,10 +30,8 @@ from datafusion_comet_spark.testing import scale_regime as _scale_regime
 
 
 def _skip_if_beyond_pinned_regime(sf_dir):
-    import pytest as _pytest
-
     if _beyond_pinned_regime(sf_dir):
-        _pytest.skip(
+        pytest.skip(
             "lineitem beyond the pinned plan-regime windows (> 200 MB): "
             "the broadcast-flip ladder continues with scale (SCALE.md "
             "round-9 ladder note); exact exchange/golden pins cover the "
@@ -38,6 +40,19 @@ def _skip_if_beyond_pinned_regime(sf_dir):
 
 
 REGISTRY = load_all()
+
+
+def _ops(df) -> list[str]:
+    """Class names of every node of ``df``'s physical plan (walk_plan)."""
+    return [cls for cls, _ in walk_plan(df)]
+
+
+@pytest.fixture(scope="module")
+def registry_plans(spark, sf_dir):
+    """Every registry query built once for the inventory-wide guards:
+    building all of them (streaming runs included) is most of this
+    file's wall time."""
+    return {name: q.fn(spark, sf_dir) for name, q in REGISTRY.items()}
 
 
 def test_q6_filters_reach_parquet_scan(spark, sf_dir):
@@ -54,10 +69,8 @@ def test_q5_broadcasts_dimension_tables(spark, sf_dir):
 
 def test_q1_is_two_phase_hash_aggregate(spark, sf_dir):
     df = REGISTRY["q1_pricing_summary"].fn(spark, sf_dir)
-    plan = plan_string(df, "simple")
-    assert "HashAggregate" in plan
     # partial + final aggregation around a single exchange
-    assert plan.count("HashAggregate") >= 2
+    assert _ops(df).count("HashAggregateExec") >= 2
 
 
 def test_topk_uses_take_ordered(spark, sf_dir):
@@ -65,17 +78,17 @@ def test_topk_uses_take_ordered(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan_string(df, "simple")
 
 
-def test_no_python_udf_in_registered_queries(spark, sf_dir):
+def test_no_python_udf_in_registered_queries(registry_plans):
     """Hot paths stay JVM-side: no BatchEvalPython / ArrowEvalPython
     operator may appear in any registered query plan.  Queries tagged
     ``udtf`` are exempt — they exist to exercise the Python UDTF
     surface itself (the plan legitimately contains
     BatchEvalPythonUDTF)."""
     offenders = []
-    for name, q in REGISTRY.items():
-        if "udtf" in q.tags:
+    for name, df in registry_plans.items():
+        if "udtf" in REGISTRY[name].tags:
             continue
-        plan = plan_string(q.fn(spark, sf_dir), "simple")
+        plan = plan_string(df, "simple")
         if "BatchEvalPython" in plan or "ArrowEvalPython" in plan:
             offenders.append(name)
     assert not offenders, f"Python in hot path: {offenders}"
@@ -85,17 +98,18 @@ def test_scan_prunes_columns(spark, sf_dir):
     """Column pruning: a two-column projection must not read the full
     lineitem schema."""
     df = REGISTRY["q6_forecast_revenue"].fn(spark, sf_dir)
-    plan = plan_string(df, "formatted")
-    read_schema = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
-    assert read_schema, "no ReadSchema in formatted plan"
-    line = read_schema[0]
-    assert "l_returnflag" not in line and "l_orderkey" not in line, line
+    read = [
+        set(node.requiredSchema().fieldNames())
+        for cls, node in walk_plan(df)
+        if cls == "FileSourceScanExec"
+    ]
+    assert read, "no parquet scan in the plan"
+    assert not read[0] & {"l_returnflag", "l_orderkey"}, read
 
 
 def test_semi_join_planned_for_exists(spark, sf_dir):
     df = REGISTRY["q4_order_priority"].fn(spark, sf_dir)
-    ops = " ".join(operators_in_plan(df))
-    assert "LeftSemi" in plan_string(df, "simple") or "Semi" in ops
+    assert "LeftSemi" in plan_string(df, "simple")
 
 
 def test_anti_join_planned_for_not_exists(spark, sf_dir):
@@ -191,13 +205,8 @@ def test_sessionize_single_user_exchange(spark, sf_dir):
     the whole point of the pattern at 100 TB (SCALE.md).  Windows add
     partition-local sorts but no second shuffle of the event table."""
     df = REGISTRY["events_sessionize"].fn(spark, sf_dir)
-    plan = plan_string(df, "simple")
-    hash_exchanges = [
-        ln
-        for ln in plan.splitlines()
-        if "Exchange hashpartitioning" in ln and "user_id" in ln
-    ]
-    assert len(hash_exchanges) == 1, plan[:3000]
+    keys = [k for k in _hash_exchange_keys(df) if "user_id" in k]
+    assert len(keys) == 1, keys
 
 
 def test_topk_per_group_pushes_window_group_limit(spark, sf_dir):
@@ -213,9 +222,8 @@ def test_funnel_single_pass_over_events(spark, sf_dir):
     conditional-min collapse replaces the naive one-self-join-per-stage
     shape."""
     df = REGISTRY["events_funnel"].fn(spark, sf_dir)
-    plan = plan_string(df, "formatted")
-    scans = [ln for ln in plan.splitlines() if ln.startswith("Location: InMemoryFileIndex")]
-    assert len(scans) == 1, plan[:3000]
+    ops = _ops(df)
+    assert ops.count("FileSourceScanExec") == 1, ops
 
 
 def test_higher_order_lambdas_stay_jvm_side(spark, sf_dir):
@@ -255,9 +263,8 @@ def test_retention_reuses_user_exchange(spark, sf_dir):
     user_id; AQE must not insert a second full exchange of events beyond
     the two the pattern needs (one per side of the self-join)."""
     df = REGISTRY["events_retention"].fn(spark, sf_dir)
-    plan = plan_string(df, "simple")
     # events is scanned once per side but never more
-    assert plan.count("Scan parquet") <= 2
+    assert _ops(df).count("FileSourceScanExec") <= 2
 
 
 def test_analyze_table_records_cbo_statistics(spark, sf_dir):
@@ -378,15 +385,9 @@ def test_curation_pipeline_v2_exchange_budget(spark, sf_dir):
     rollup; the eval-shingle side must be a BroadcastExchange, never a
     shuffled join input)."""
     df = REGISTRY["pipeline_corpus_curation_v2"].fn(spark, sf_dir)
-    plan = plan_string(df, "simple")
-    n_exchange = sum(
-        1
-        for ln in plan.splitlines()
-        if "Exchange" in ln and "BroadcastExchange" not in ln
-        and "Reused" not in ln
-    )
-    assert n_exchange <= 5, f"{n_exchange} exchanges:\n{plan[:3000]}"
-    assert "BroadcastExchange" in plan, plan[:2000]
+    ops = _ops(df)
+    assert ops.count("ShuffleExchangeExec") <= 5, ops
+    assert "BroadcastExchangeExec" in ops, ops
 
 
 def test_doc_pack_greedy_two_exchanges(spark, sf_dir):
@@ -395,14 +396,8 @@ def test_doc_pack_greedy_two_exchanges(spark, sf_dir):
     pin it: at most 3 non-broadcast exchanges including the final
     orderBy's range partition."""
     df = REGISTRY["doc_pack_greedy"].fn(spark, sf_dir)
-    plan = plan_string(df, "simple")
-    n_exchange = sum(
-        1
-        for ln in plan.splitlines()
-        if "Exchange" in ln and "BroadcastExchange" not in ln
-        and "Reused" not in ln
-    )
-    assert n_exchange <= 3, f"{n_exchange} exchanges:\n{plan[:3000]}"
+    ops = _ops(df)
+    assert ops.count("ShuffleExchangeExec") <= 3, ops
 
 
 def test_aqe_splits_skewed_join_partition(spark, sf_dir):
@@ -467,11 +462,7 @@ def test_aqe_splits_skewed_join_partition(spark, sf_dir):
             .agg(F.count(F.lit(1)).alias("n"), F.max("payload").alias("p"))
         )
         joined.collect()  # materialize so AQE finalizes the plan
-        final_plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "isFinalPlan=true" in final_plan
-        assert "skew=true" in final_plan or "skewed" in final_plan, (
-            "AQE did not mark the skewed join:\n" + final_plan[:4000]
-        )
+        assert skew_split_joins(joined), "AQE did not split the skewed join"
     finally:
         for k, v in saved.items():
             if v is None:
@@ -575,24 +566,30 @@ TPCH_EXCHANGE_BUDGET_LARGE = {
     "q21_scale_rewrite": 4,
 }
 
-def test_tpch_exchange_budgets(spark, sf_dir):
-    _skip_if_beyond_pinned_regime(sf_dir)
-    from datafusion_comet_spark.plans.introspect import plan_string as _ps
+def _assert_exchange_budgets(spark, sf_dir, budgets: dict) -> None:
+    """Every query's static hash/range shuffle count equals its budget.
 
-    # clean-cache start: see test_tpcds_exchange_budgets
-    spark.catalog.clearCache()
-    budgets = dict(TPCH_EXCHANGE_BUDGET)
-    if _scale_regime(sf_dir):
-        budgets.update(TPCH_EXCHANGE_BUDGET_LARGE)
+    Static budgets are pinned from a CLEAN cache: a lingering
+    CacheManager entry (tpcds_return_ratio_rank persists its candidate
+    aggregate; the single-fact-pass pin test materializes it) rewrites
+    matching subtrees into InMemoryRelation on the NEXT construction and
+    the exchange count changes — so the cache is cleared before every
+    query, not once per table."""
     diffs = {}
     for name, budget in budgets.items():
-        p = _ps(REGISTRY[name].fn(spark, sf_dir), "simple")
-        n = p.count("Exchange hashpartitioning") + p.count(
-            "Exchange rangepartitioning"
-        )
+        spark.catalog.clearCache()
+        n = shuffle_count(REGISTRY[name].fn(spark, sf_dir))
         if n != budget:
             diffs[name] = (budget, n)
     assert not diffs, f"exchange budget drift (expected, actual): {diffs}"
+
+
+def test_tpch_exchange_budgets(spark, sf_dir):
+    _skip_if_beyond_pinned_regime(sf_dir)
+    budgets = dict(TPCH_EXCHANGE_BUDGET)
+    if _scale_regime(sf_dir):
+        budgets.update(TPCH_EXCHANGE_BUDGET_LARGE)
+    _assert_exchange_budgets(spark, sf_dir, budgets)
 
 
 def test_or_of_and_predicate_pushed_to_scan(spark, sf_dir):
@@ -603,9 +600,9 @@ def test_or_of_and_predicate_pushed_to_scan(spark, sf_dir):
     df = REGISTRY["tpcds_attribute_combo_parts"].fn(spark, sf_dir)
     pf = pushed_filters(df)
     assert any("Or(" in f for f in pf), f"OR tree not pushed: {pf}"
-    ops = operators_in_plan(df)
-    assert "Exchange" in ops  # only the rollup shuffles
-    assert ops.count("FileScan") == 1
+    ops = _ops(df)
+    assert "ShuffleExchangeExec" in ops  # only the rollup shuffles
+    assert ops.count("FileSourceScanExec") == 1, ops
 
 
 def test_monthly_pivot_wide_single_exchange(spark, sf_dir):
@@ -613,12 +610,12 @@ def test_monthly_pivot_wide_single_exchange(spark, sf_dir):
     two-phase aggregate — a single fact exchange, no Expand, no
     per-month re-aggregation."""
     df = REGISTRY["tpcds_monthly_pivot_wide"].fn(spark, sf_dir)
-    ops = operators_in_plan(df)
+    ops = _ops(df)
     # one hash exchange for the aggregate + one range exchange for the
     # final ORDER BY over the |nations|-sized result; nothing else
-    assert ops.count("Exchange") == 2, ops
-    assert "Expand" not in ops, ops
-    assert ops.count("FileScan") == 3  # lineitem + two broadcast dims
+    assert ops.count("ShuffleExchangeExec") == 2, ops
+    assert "ExpandExec" not in ops, ops
+    assert ops.count("FileSourceScanExec") == 3, ops  # lineitem + two broadcast dims
 
 
 def test_multi_distinct_uses_expand(spark, sf_dir):
@@ -627,9 +624,9 @@ def test_multi_distinct_uses_expand(spark, sf_dir):
     scan — the single-pass alternative to q28's literal six-subquery
     cross join."""
     df = REGISTRY["tpcds_price_band_distincts"].fn(spark, sf_dir)
-    ops = operators_in_plan(df)
-    assert "Expand" in ops, ops
-    assert ops.count("FileScan") == 1, ops
+    ops = _ops(df)
+    assert "ExpandExec" in ops, ops
+    assert ops.count("FileSourceScanExec") == 1, ops
 
 
 # Queries whose single-partition window input is bounded BY
@@ -669,7 +666,29 @@ _SINGLE_WINDOW_BOUNDED = {
 }
 
 
-def test_no_unpartitioned_window_over_unbounded_input(spark, sf_dir):
+def _single_partition_feed(window) -> bool:
+    """Whether a WindowExec is fed by a SinglePartition exchange with
+    no WindowGroupLimit on the path.
+
+    Follows the Window's direct input spine — unary child after unary
+    child — to the first exchange: that exchange, however many
+    Project/Filter/Sort nodes away, is what partitions the Window's
+    input.  The walk stops without a verdict at the first non-unary
+    node (a join or union partitions only its own inputs) and a
+    WindowGroupLimit on the path means rank-limit pruning already
+    bounds the feed."""
+    node = window.child()
+    while True:
+        cls = node.getClass().getSimpleName()
+        if "Exchange" in cls:
+            partitioning = node.outputPartitioning().getClass().getSimpleName()
+            return partitioning == "SinglePartition$"
+        if cls == "WindowGroupLimitExec" or node.children().size() != 1:
+            return False
+        node = node.children().apply(0)
+
+
+def test_no_unpartitioned_window_over_unbounded_input(registry_plans):
     """Inventory-wide guard (round-3 verdict item 1): no registered
     query may plan an unpartitioned WindowExec over unbounded-
     cardinality input — the single reducer that holds 100 TB.
@@ -690,58 +709,14 @@ def test_no_unpartitioned_window_over_unbounded_input(spark, sf_dir):
     favor of broadcast-scalar / TakeOrdered+count-rank spellings; this
     test keeps them retired.
     """
-    import re
-
-    def _indent(ln: str) -> int:
-        # chars before the operator name: spaces plus the tree-drawing
-        # ':', '+', '-' rail characters
-        return len(re.match(r"^[\s:+-]*", ln).group(0))
-
     offenders = []
-    for name, q in REGISTRY.items():
-        plan = plan_string(q.fn(spark, sf_dir), "simple")
-        lines = plan.splitlines()
-        for i, ln in enumerate(lines):
-            if "WindowGroupLimit" in ln or not re.search(r"\bWindow\b", ln):
-                continue
-            # Walk the Window's direct input spine: consecutive lines of
-            # strictly increasing indent (each unary child one level
-            # deeper) until the first Exchange — that exchange, however
-            # many Project/Filter/Sort nodes away, is what feeds the
-            # Window.  The old 4-line text lookahead missed deeper
-            # exchanges and credited WindowGroupLimits belonging to
-            # adjacent operators.  The walk stops at the first BINARY
-            # operator: a join/union's left child also renders strictly
-            # deeper, so continuing would attribute an Exchange inside a
-            # join's left leg to the Window's feed (false offender for
-            # Window-over-join plans).  An Exchange below a binary node
-            # partitions only that node's input, not the Window's.
-            _binary = re.compile(
-                r"\b(SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin|"
-                r"BroadcastNestedLoopJoin|CartesianProduct|Union)\b"
-            )
-            spine: list[str] = []
-            prev = _indent(ln)
-            exchange_line = None
-            for nxt in lines[i + 1 :]:
-                d = _indent(nxt)
-                if d <= prev:
-                    break  # sibling branch — spine ends
-                prev = d
-                if _binary.search(nxt):
-                    break  # binary node: its children are not the spine
-                if "Exchange" in nxt:
-                    exchange_line = nxt
-                    break
-                spine.append(nxt)
-            if exchange_line is None or "SinglePartition" not in exchange_line:
-                continue
-            if any("WindowGroupLimit" in s for s in spine):
-                continue  # rank-limit pruned ON THE PATH: bounded feed
-            if name in _SINGLE_WINDOW_BOUNDED:
-                continue
-            offenders.append(name)
-            break
+    for name, df in registry_plans.items():
+        if name in _SINGLE_WINDOW_BOUNDED:
+            continue
+        for cls, node in walk_plan(df):
+            if cls == "WindowExec" and _single_partition_feed(node):
+                offenders.append(name)
+                break
     assert not offenders, (
         f"unpartitioned WindowExec over unbounded input: {offenders}"
     )
@@ -753,24 +728,15 @@ def test_q11_threshold_reuses_fact_exchange(spark, sf_dir):
     shows the per-part aggregate's exchange reused by the 1-row
     re-aggregation branch, and no Window operator exists anywhere in
     the plan (the retired single-reducer spelling)."""
-    import io
-    from contextlib import redirect_stdout
-
     # pinned to sf0.01: at sf0.001 AQE broadcast-converts every join
     # and no shuffle stage exists at all (nothing to reuse); the claim
     # under test is about the scale regime where the per-part
     # aggregate DOES shuffle
     df = REGISTRY["q11_important_stock"].fn(spark, "/root/testdata/sf0.01")
     df.collect()
-    # the FORMATTED post-execution explain is the rendering that shows
-    # AQE stage reuse (the adaptive plan's raw toString flattens
-    # materialized stages and hides it)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain(mode="formatted")
-    plan = buf.getvalue()
-    assert "ReusedExchange" in plan, plan[:3000]
-    assert "Window" not in plan, plan[:3000]
+    ops = _ops(df)
+    assert "ReusedExchangeExec" in ops, ops
+    assert not any("Window" in cls for cls in ops), ops
 
 
 def test_temperature_mixture_shuffle_budget(spark, sf_dir):
@@ -783,17 +749,10 @@ def test_temperature_mixture_shuffle_budget(spark, sf_dir):
     that duplicates the whole count subtree (its branches differ by a
     join-null filter, so ReuseExchange cannot merge them)."""
     df = REGISTRY["sample_temperature_mixture"].fn(spark, sf_dir)
-    plan = plan_string(df, "simple")
-    n_exchange = sum(
-        1
-        for ln in plan.splitlines()
-        if "Exchange" in ln and "BroadcastExchange" not in ln
-        and "Reused" not in ln
-    )
-    assert n_exchange <= 4, f"{n_exchange} exchanges:\n{plan[:3000]}"
-    assert "BroadcastExchange" in plan, plan[:3000]
-    n_scans = plan.count("FileScan parquet")
-    assert n_scans <= 2, f"{n_scans} corpus scans:\n{plan[:3000]}"
+    ops = _ops(df)
+    assert ops.count("ShuffleExchangeExec") <= 4, ops
+    assert "BroadcastExchangeExec" in ops, ops
+    assert ops.count("FileSourceScanExec") <= 2, ops
 
 
 def test_epoch_repetition_never_shuffles_by_doc_id(spark, sf_dir):
@@ -801,13 +760,12 @@ def test_epoch_repetition_never_shuffles_by_doc_id(spark, sf_dir):
     on doc_id: every hash exchange must be keyed on source only, and
     the two per-source aggregates meet in a broadcast join."""
     df = REGISTRY["corpus_epoch_repetition"].fn(spark, sf_dir)
-    plan = plan_string(df, "simple")
-    for ln in plan.splitlines():
-        if "Exchange hashpartitioning" in ln and "Reused" not in ln:
-            assert "doc_id" not in ln, f"doc_id exchange: {ln}"
-    assert "BroadcastExchange" in plan, plan[:3000]
+    keys = _hash_exchange_keys(df)
+    assert keys and not any("doc_id" in k for k in keys), keys
+    ops = _ops(df)
+    assert "BroadcastExchangeExec" in ops, ops
     # the fan-out is a Generate (explode) node, map-side
-    assert "Generate" in plan, plan[:3000]
+    assert "GenerateExec" in ops, ops
 
 
 def test_sample_prefix():
@@ -844,74 +802,70 @@ def test_sample_prefix():
     assert rows_only == [], rows_only
 
 
-def _table_scan_count(df, table: str, post_exec: bool = False) -> int:
-    """Count FileScan passes over one table in the FINAL physical plan.
+def _hash_exchange_keys(df) -> list[str]:
+    """Partitioning of every hash shuffle in the plan, as Spark prints
+    it (``hashpartitioning(user_id#12L, 8)``)."""
+    return [
+        node.outputPartitioning().toString()
+        for cls, node in walk_plan(df)
+        if cls == "ShuffleExchangeExec"
+        and node.outputPartitioning().getClass().getSimpleName()
+        == "HashPartitioning"
+    ]
 
-    The formatted explain of an executed AdaptiveSparkPlan prints the
-    Final Plan tree, then the Initial Plan tree, then one detail block
-    per node id from BOTH trees — so counting raw `Location:` lines
-    double-counts every scan.  Instead: collect scan node ids from the
-    Final Plan tree only, then resolve each id's table via its detail
-    block."""
-    import io
-    import re
-    from contextlib import redirect_stdout
 
-    if post_exec:
-        df.collect()
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain(mode="formatted")
-    text = buf.getvalue()
-    final_tree = text.split("== Initial Plan ==")[0]
-    ids = re.findall(r"Scan parquet\s*\((\d+)\)", final_tree)
-    count = 0
-    for block in text.split("\n\n"):
-        m = re.match(r"\((\d+)\) Scan parquet", block)
-        if m and m.group(1) in ids and f"{table}.parquet" in block:
-            count += 1
-    return count
+def _physical_passes(df, table: str) -> int:
+    """Execute ``df`` and count the parquet scans of ``table`` in its
+    executed plan — scalar subqueries and cached sub-plans included,
+    reused exchanges not.  Every counted scan must have produced rows,
+    so the count is passes that physically ran."""
+    df.collect()
+    rows = [
+        node.metrics().apply("numOutputRows").value()
+        for cls, node in walk_plan(df)
+        if cls == "FileSourceScanExec" and scan_table(node) == table
+    ]
+    assert all(n > 0 for n in rows), f"{table} scans without rows: {rows}"
+    return len(rows)
 
 
 def test_date_intersect_returns_single_orders_pass(spark, sf_dir):
     """tpcds_date_intersect_returns (q83 shape) promises ONE orders
     pass: the naive three INTERSECT legs + share re-aggregate each
     rescan orders; the rewrite collapses them (SCALE.md:788).
-    Post-execution explain so AQE's ReusedExchange materialization is
-    visible."""
+    Counted after execution so AQE's ReusedExchange materialization is
+    in the plan."""
     df = REGISTRY["tpcds_date_intersect_returns"].fn(spark, sf_dir)
-    n = _table_scan_count(df, "orders", post_exec=True)
+    n = _physical_passes(df, "orders")
     assert n == 1, f"{n} orders passes"
 
 
-def test_multi_supplier_returned_single_lineitem_pass(spark, sf_dir):
-    """tpcds_multi_supplier_returned (q95 shape): in the executed final
-    plan the q94-style one-pass flag aggregate AND the
-    returned-distinct leg resolve to ONE physical lineitem pass — AQE
-    ReusedExchange covers the second leg (better than the naive three
-    and than SCALE.md's original two-pass claim, corrected there)."""
+def test_multi_supplier_returned_two_lineitem_passes(spark, sf_dir):
+    """tpcds_multi_supplier_returned (q95 shape): TWO physical lineitem
+    passes — the q94-style one-pass flag aggregate (orderkey, suppkey,
+    returnflag) that builds the semi-join's membership set, and the
+    shipdate-filtered report pass — against the naive three (multi,
+    returned-distinct, semi).  No ReusedExchange merges them: the two
+    scans read different column sets."""
     df = REGISTRY["tpcds_multi_supplier_returned"].fn(spark, sf_dir)
-    n = _table_scan_count(df, "lineitem", post_exec=True)
-    assert n == 1, f"{n} lineitem passes"
+    n = _physical_passes(df, "lineitem")
+    assert n == 2, f"{n} lineitem passes"
 
 
-def test_cross_channel_rollup_two_lineitem_passes(spark, sf_dir):
+def test_cross_channel_rollup_three_lineitem_passes(spark, sf_dir):
     """tpcds_cross_channel_rollup (q14 shape): the count-distinct-
-    channel pass replacing the naive two channel legs, plus the report
-    pass, in the main executed plan.  Round-12 correction: the round-8
-    "ReusedExchange absorbs the threshold leg" claim was WRONG — the
-    scalar-subquery threshold is a THIRD physical pass whose scan
-    prints outside the main final-plan tree, so this counter cannot
-    see it.  Fusing the threshold into a persisted per-partkey pass
-    (3→2 real passes) was built and MEASURED-REJECTED: rows identical,
-    but cold 1.855→2.126 s at sf0.1 and 2.513→3.115 s at generator sf1
-    (the extra fact-scaled column through the orders-join exchange plus
-    the persist barrier cost more than the saved 1-column scan at both
+    channel pass replacing the naive two channel legs, the 1-column
+    pass of the broadcast 1-row price threshold, and the report pass.
+    Fusing the threshold into a persisted per-partkey pass (3→2
+    passes) was built and MEASURED-REJECTED: rows identical, but cold
+    1.855→2.126 s at sf0.1 and 2.513→3.115 s at generator sf1 (the
+    extra fact-scaled column through the orders-join exchange plus the
+    persist barrier cost more than the saved 1-column scan at both
     scales; the warm bench win was pure cross-iteration cache reuse) —
-    dev/cc_fuse_ab.py, dev/cc_fuse_ab{,_sf1}.json, OPTIMIZATION_r12.md."""
+    dev/cc_fuse_ab{,_sf1}.json, OPTIMIZATION_r12.md."""
     df = REGISTRY["tpcds_cross_channel_rollup"].fn(spark, sf_dir)
-    n = _table_scan_count(df, "lineitem", post_exec=True)
-    assert n == 2, f"{n} lineitem passes in the main final plan"
+    n = _physical_passes(df, "lineitem")
+    assert n == 3, f"{n} lineitem passes"
 
 
 def test_return_ratio_rank_single_fact_pass(spark, sf_dir):
@@ -922,19 +876,22 @@ def test_return_ratio_rank_single_fact_pass(spark, sf_dir):
     executed plan rescans the fact three times (measured: 1.62x
     slower at sf0.1)."""
     df = REGISTRY["tpcds_return_ratio_rank"].fn(spark, sf_dir)
-    n = _table_scan_count(df, "lineitem", post_exec=True)
+    n = _physical_passes(df, "lineitem")
     assert n == 1, f"{n} lineitem passes"
 
 
 # Non-broadcast exchange budget per TPC-DS-shape query — the TPC-H
 # budget table's counterpart for the second benchmark surface.  Exact
-# static counts (simple plan string), identical at sf0.001 and sf0.1
-# (verified at both before pinning).  Three design notes the counts
-# encode:
-# - tpcds_return_ratio_rank dropped 14 -> its current count when the
-#   candidate aggregate gained persist() (exchange reuse does not
-#   survive per-branch column pruning — SCALE.md round-7 entry); the
-#   runtime single-fact-pass is separately pinned.
+# static counts (shuffle_count: hash/range exchanges in the walked
+# plan, a cached sub-plan counted once however many scans read it),
+# identical at sf0.001 and sf0.1 (verified at both before pinning).
+# Three design notes the counts encode:
+# - tpcds_return_ratio_rank's candidate aggregate is persist()ed
+#   (exchange reuse does not survive per-branch column pruning —
+#   SCALE.md round-7 entry), so its 4 exchanges include the cached
+#   plan's once.  The explain-text count was 14: the simple plan
+#   prints the cached lineage again under each InMemoryTableScan.
+#   The runtime single-fact-pass is separately pinned.
 # - tpcds_date_intersect_returns is statically exchange-rich because
 #   the INTERSECT legs repeat the orders aggregate subtree; at runtime
 #   AQE ReusedExchange collapses them to ONE orders pass (pinned by
@@ -1008,7 +965,7 @@ TPCDS_EXCHANGE_BUDGET = {
     "tpcds_rank_in_category": 3,
     "tpcds_repeat_purchase_chain": 3,
     "tpcds_return_lag_histogram": 2,
-    "tpcds_return_ratio_rank": 14,
+    "tpcds_return_ratio_rank": 4,
     "tpcds_returner_nation_outlier": 3,
     "tpcds_returns_demographic_loss": 2,
     "tpcds_rolling_brand_deviation": 3,
@@ -1032,15 +989,6 @@ TPCDS_EXCHANGE_BUDGET = {
 
 def test_tpcds_exchange_budgets(spark, sf_dir):
     _skip_if_beyond_pinned_regime(sf_dir)
-    from datafusion_comet_spark.plans.introspect import plan_string as _ps
-
-    # Static budgets are pinned from a CLEAN cache: a lingering
-    # CacheManager entry (tpcds_return_ratio_rank persists its
-    # candidate aggregate; the single-fact-pass pin test materializes
-    # it) rewrites matching subtrees into InMemoryRelation on the NEXT
-    # construction and the printed exchange count changes (observed:
-    # 14 -> 25 when this test ran after the fact-pass pin).
-    spark.catalog.clearCache()
     budgets = dict(TPCDS_EXCHANGE_BUDGET)
     if _scale_regime(sf_dir):
         # measured at gen_scale_data sf1 — see TPCH_EXCHANGE_BUDGET_LARGE
@@ -1051,15 +999,7 @@ def test_tpcds_exchange_budgets(spark, sf_dir):
                 "tpcds_underperforming_pairs": 5,
             }
         )
-    diffs = {}
-    for name, budget in budgets.items():
-        p = _ps(REGISTRY[name].fn(spark, sf_dir), "simple")
-        n = p.count("Exchange hashpartitioning") + p.count(
-            "Exchange rangepartitioning"
-        )
-        if n != budget:
-            diffs[name] = (budget, n)
-    assert not diffs, f"exchange budget drift (expected, actual): {diffs}"
+    _assert_exchange_budgets(spark, sf_dir, budgets)
 
 
 def test_scd2_single_dimension_pass(spark, sf_dir):
@@ -1068,10 +1008,10 @@ def test_scd2_single_dimension_pass(spark, sf_dir):
     inner-join/anti-join/union three-leg spelling that scanned the
     dimension twice (measured 1.28x at sf0.1).  The update batch's own
     scan is separate by nature (a real SCD2 reads it from another
-    table)."""
+    table), so customer is scanned exactly twice."""
     df = REGISTRY["scd2_dimension_update"].fn(spark, sf_dir)
-    n = _table_scan_count(df, "customer", post_exec=True)
-    assert n <= 2, f"{n} customer scans (dimension + update batch)"
+    n = _physical_passes(df, "customer")
+    assert n == 2, f"{n} customer scans (dimension + update batch)"
 
 
 # Exchange budgets for the remaining non-benchmark families
@@ -1299,21 +1239,7 @@ REGISTRY_EXCHANGE_BUDGET = {
 
 
 def test_registry_exchange_budgets(spark, sf_dir):
-    from datafusion_comet_spark.plans.introspect import plan_string as _ps
-
-    # clean-cache start: see test_tpcds_exchange_budgets — persisted
-    # subtrees from earlier tests (or earlier queries in THIS loop)
-    # must not rewrite later plans into InMemoryRelation
-    spark.catalog.clearCache()
-    diffs = {}
-    for name, budget in REGISTRY_EXCHANGE_BUDGET.items():
-        p = _ps(REGISTRY[name].fn(spark, sf_dir), "simple")
-        n = p.count("Exchange hashpartitioning") + p.count(
-            "Exchange rangepartitioning"
-        )
-        if n != budget:
-            diffs[name] = (budget, n)
-    assert not diffs, f"exchange budget drift (expected, actual): {diffs}"
+    _assert_exchange_budgets(spark, sf_dir, REGISTRY_EXCHANGE_BUDGET)
 
 
 # Scan-width budgets for the bench set (round 8): the exchange
@@ -1323,8 +1249,8 @@ def test_registry_exchange_budgets(spark, sf_dir):
 # keeps the exchange count but multiplies scanned and shuffled bytes;
 # at 100 TB that is the difference between reading 7 and 11 of
 # lineitem's columns in q1).  Values are the sorted per-scan
-# top-level ReadSchema field counts, measured identical at sf0.001
-# and sf0.1 before pinning.
+# top-level read-schema field counts (FileSourceScanExec.requiredSchema),
+# measured identical at sf0.001 and sf0.1 before pinning.
 SCAN_WIDTH_BUDGET = {
     "q1_pricing_summary": [7],
     "q3_shipping_priority": [2, 3, 4],
@@ -1358,38 +1284,15 @@ SCAN_WIDTH_BUDGET = {
 }
 
 
-def _read_schema_widths(df) -> list:
-    """Sorted top-level field counts of every ReadSchema in the
-    formatted plan (nested structs/arrays count as one field)."""
-    import re
-
-    from datafusion_comet_spark.plans.introspect import plan_string as _ps
-
-    def width(s: str) -> int:
-        inner = s[s.index("<") + 1 :]
-        if inner.strip().startswith(">"):
-            return 0
-        depth, n = 0, 1
-        for ch in inner:
-            if ch == "<":
-                depth += 1
-            elif ch == ">":
-                if depth == 0:
-                    break
-                depth -= 1
-            elif ch == "," and depth == 0:
-                n += 1
-        return n
-
-    plan = _ps(df, "formatted")
-    return sorted(width(m) for m in re.findall(r"ReadSchema: (struct<.*)", plan))
-
-
 def test_bench_scan_width_budgets(spark, sf_dir):
-    spark.catalog.clearCache()  # see test_tpcds_exchange_budgets
     diffs = {}
     for name, budget in SCAN_WIDTH_BUDGET.items():
-        widths = _read_schema_widths(REGISTRY[name].fn(spark, sf_dir))
+        spark.catalog.clearCache()  # see _assert_exchange_budgets
+        widths = sorted(
+            node.requiredSchema().size()
+            for cls, node in walk_plan(REGISTRY[name].fn(spark, sf_dir))
+            if cls == "FileSourceScanExec"
+        )
         if widths != budget:
             diffs[name] = (budget, widths)
     assert not diffs, f"scan width drift (expected, actual): {diffs}"

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from datafusion_comet_spark.plans import walk_plan
 from datafusion_comet_spark.queries import load_all
 
 REGISTRY = load_all()
@@ -309,9 +310,9 @@ def test_seeded_sample_reproducible_and_unbiased(spark, sf_dir):
     assert len(keys1) == total_sampled
     # the seed must actually reach the plan (the positional-fraction +
     # keyword-seed form does NOT propagate it)
-    good = orders.sample(fraction=0.1, seed=42)._jdf.queryExecution()
-    assert ", 42" in good.executedPlan().toString().splitlines()[0] or \
-           " 42" in [l for l in good.executedPlan().toString().splitlines() if "Sample" in l][0]
+    good = orders.sample(fraction=0.1, seed=42)
+    seeds = [n.seed() for cls, n in walk_plan(good) if cls == "SampleExec"]
+    assert seeds == [42], seeds
     # a different seed must give a genuinely different sample (guards
     # against a degenerate stream that ignores the seed)
     keys3 = sample_keys(43)
@@ -1342,7 +1343,6 @@ def test_join_constraint_propagation_bounds_state(spark, sf_dir):
     streaming run needed): the purchases-side scan must carry a
     pushed user_id filter it was never given explicitly."""
     from datafusion_comet_spark.catalog import load_table
-    from datafusion_comet_spark.plans import plan_string
 
     ev = load_table(spark, sf_dir, "events")
     clicks = ev.filter(
@@ -1352,11 +1352,14 @@ def test_join_constraint_propagation_bounds_state(spark, sf_dir):
         F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts")
     )
     joined = clicks.join(purchases, clicks.user_id == purchases.p_user)
-    plan = plan_string(joined, "formatted")
     # two scans; BOTH must show a user_id/p_user < 60 pushed filter
-    pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
-    with_bound = [ln for ln in pushed if "LessThan(user_id,60)" in ln]
-    assert len(with_bound) == 2, plan[:3000]
+    pushed = [
+        node.metadata().apply("PushedFilters")
+        for cls, node in walk_plan(joined)
+        if cls == "FileSourceScanExec"
+    ]
+    assert len(pushed) == 2, pushed
+    assert all("LessThan(user_id,60)" in p for p in pushed), pushed
 
 
 def test_state_source_schema_contract(spark, sf_dir):

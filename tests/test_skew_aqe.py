@@ -4,7 +4,7 @@
 pins the AUTOMATIC one: with `spark.sql.adaptive.skewJoin.enabled`
 (on in the engine's defaults, session.py), a sort-merge join whose
 shuffle produces one oversized partition must be re-planned at runtime
-with that partition split (`skew=true` marker on the join) — and the
+with that partition split (`isSkewJoin` on the executed join) — and the
 split must not change the result.  At 100 TB this is the difference
 between one straggler task holding the stage for hours and N parallel
 tasks; the reference leaves skew handling entirely to Spark/AQE
@@ -22,6 +22,8 @@ from __future__ import annotations
 from contextlib import contextmanager
 
 from pyspark.sql import functions as F
+
+from datafusion_comet_spark.plans import skew_split_joins
 
 
 @contextmanager
@@ -79,26 +81,14 @@ def test_aqe_splits_skewed_join_partition(spark):
             F.min("rpad").alias("rmin"),
         )
         n = res.collect()[0]["n"]
-        # Public-API plan capture: DataFrame.explain() prints the
-        # (post-execution, isFinalPlan=true) AQE plan Python-side, so
-        # redirect_stdout sees it — no private queryExecution() poking.
-        import io
-        from contextlib import redirect_stdout
-
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            res.explain(mode="extended")
-        plan = buf.getvalue()
     # result correctness: hot key 0 matches 40 right rows, every other
     # key k matches 40 right rows too (uniform 1k keys, 40 each)
     hot_left = 400_000 * 19 // 20
     cold_left = 400_000 - hot_left
     assert n == hot_left * 40 + cold_left * 40, n
-    # "skew=true" is the SortMergeJoin marker AQE's OptimizeSkewedJoin
-    # emits in Spark 4.1's plan string (pinned to the pyspark version
-    # in this container; the marker has been stable since Spark 3.0,
-    # SPARK-29544).
-    assert "skew=true" in plan, (
-        "AQE did not mark the skewed join partition for splitting:\n"
-        + plan[:2000]
+    # isSkewJoin is the flag AQE's OptimizeSkewedJoin sets on the
+    # SortMergeJoinExec it splits (SPARK-29544); the aggregate's own
+    # executed plan is read, since that is the QueryExecution that ran
+    assert skew_split_joins(res), (
+        "AQE did not mark the skewed join partition for splitting"
     )
