@@ -128,19 +128,34 @@ def _spread_scan(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+# The scalar helpers below are spelled as Spark SQL fragments: one
+# F.expr parse per call instead of a py4j round trip per Column op
+# (_drev() cost 14 commands, _sum_rev_money() 34; each now costs 3),
+# and they are called hundreds of times across the registry.  Each
+# fragment parses to the same Catalyst tree as the Column-API
+# spelling it replaced; hot query bodies use the same lever.
+_REV_CENTS = (
+    "CAST(round(l_extendedprice * 100) AS BIGINT)"
+    " * (100 - CAST(round(l_discount * 100) AS BIGINT))"
+)
+SPARK_SQL_REV = (
+    "CAST(l_extendedprice AS DECIMAL(18,2))"
+    " * (CAST(1 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(4,2)))"
+)
+
+
 def _ts(s: str) -> Column:
-    return F.lit(s).cast("timestamp")
+    return F.expr(f"CAST('{s}' AS TIMESTAMP)")
 
 
 def _dec(name: str, p: int = 18, s: int = 2) -> Column:
     """Money column (2-dp double in the source) as an exact decimal."""
-    return F.col(name).cast(f"decimal({p},{s})")
+    return F.expr(f"CAST({name} AS DECIMAL({p},{s}))")
 
 
 def _drev() -> Column:
     """Exact-decimal TPC-H revenue: l_extendedprice * (1 - l_discount)."""
-    one = F.lit(1).cast("decimal(3,2)")
-    return _dec("l_extendedprice") * (one - _dec("l_discount", 4, 2))
+    return F.expr(SPARK_SQL_REV)
 
 
 def _money(col: Column, n: int = 2) -> Column:
@@ -152,9 +167,7 @@ def _rev_cents() -> Column:
     """Exact revenue as a 64-bit cents·1e2 product — the scaled-integer
     kernel of q1 (see its docstring), reusable wherever a query's only
     money aggregate is round(sum(revenue), 2)."""
-    pc = F.round(F.col("l_extendedprice") * 100).cast("long")
-    dc = F.round(F.col("l_discount") * 100).cast("long")
-    return pc * (100 - dc)
+    return F.expr(_REV_CENTS)
 
 
 def _sum_rev_money() -> Column:
@@ -163,8 +176,10 @@ def _sum_rev_money() -> Column:
     accumulator is decimal(20,0) (exact at SF1000 where a long sum
     would overflow and ANSI-raise).  Value-identical to
     _money(F.sum(_drev()))."""
-    total = F.sum(_rev_cents().cast("decimal(20,0)"))
-    return F.round((total / 10000).cast("decimal(38,6)"), 2).cast("double")
+    return F.expr(
+        f"CAST(round(CAST(sum(CAST({_REV_CENTS} AS DECIMAL(20,0))) / 10000"
+        " AS DECIMAL(38,6)), 2) AS DOUBLE)"
+    )
 
 
 # SQL-side mirrors of the decimal expressions (DuckDB dialect).

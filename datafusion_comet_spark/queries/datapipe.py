@@ -122,23 +122,19 @@ def _shingles(tokens, k: int = 3):
     )).otherwise(F.array(F.concat_ws(" ", tokens)))
 
 
-def _shingle_hashes(tokens):
-    """3-token shingle set, pre-hashed: murmur3 over the token triple
-    directly (F.hash is variadic) — no intermediate shingle strings,
-    no slice/concat allocations.  Equivalent set semantics to hashing
-    the joined string, at a fraction of the per-row cost."""
-    n = F.size(tokens)
-    idx = F.sequence(F.lit(0), F.greatest(n - 3, F.lit(0)))
-    tri = F.transform(
-        idx,
-        lambda i: F.hash(
-            F.element_at(tokens, i + 1),
-            F.element_at(tokens, i + 2),
-            F.element_at(tokens, i + 3),
-        ),
+def _shingle_hashes(tokens: str) -> str:
+    """3-token shingle set of the array column ``tokens``, pre-hashed
+    (a SQL fragment): murmur3 over the token triple directly (hash is
+    variadic) — no intermediate shingle strings, no slice/concat
+    allocations.  Equivalent set semantics to hashing the joined
+    string, at a fraction of the per-row cost."""
+    return (
+        f"array_distinct(CASE WHEN size({tokens}) >= 3 THEN transform("
+        f"sequence(0, greatest(size({tokens}) - 3, 0)), i -> hash("
+        f"element_at({tokens}, i + 1), element_at({tokens}, i + 2), "
+        f"element_at({tokens}, i + 3))) "
+        f"ELSE array(hash(concat_ws(' ', {tokens}))) END)"
     )
-    short = F.array(F.hash(F.concat_ws(" ", tokens)))
-    return F.array_distinct(F.when(n >= 3, tri).otherwise(short))
 
 
 def minhash_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -170,17 +166,19 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
     # The projection above the shuffle still materializes `toks` as a
     # column before the lambda reads it (pitfall (1) below).
     n_parts = docs.sparkSession.sparkContext.defaultParallelism
+    # SQL fragments, not Column calls: the 16 family members alone cost
+    # 304 py4j commands per build as Column calls, ~50 as F.expr.
     exploded = (
-        docs.select("doc_id", F.col(text_col).alias("_text"))
+        docs.selectExpr("doc_id", f"{text_col} AS _text")
         .repartition(n_parts, "doc_id")
-        .select("doc_id", F.split(F.lower(F.col("_text")), " ").alias("toks"))
-        .select("doc_id", F.explode(_shingle_hashes(F.col("toks"))).alias("h"))
+        .selectExpr("doc_id", "split(lower(_text), ' ') AS toks")
+        .selectExpr("doc_id", f"explode({_shingle_hashes('toks')}) AS h")
     )
     agg = exploded.groupBy("doc_id").agg(
-        *[F.min(F.hash("h", F.lit(j))).alias(f"m{j}") for j in range(N_HASHES)]
+        *[F.expr(f"min(hash(h, {j})) AS m{j}") for j in range(N_HASHES)]
     )
-    return agg.select(
-        "doc_id", F.array(*[f"m{j}" for j in range(N_HASHES)]).alias("sig")
+    return agg.selectExpr(
+        "doc_id", f"array({', '.join(f'm{j}' for j in range(N_HASHES))}) AS sig"
     )
 
 
@@ -189,26 +187,19 @@ def lsh_band_buckets(sigs: DataFrame) -> DataFrame:
     """(doc_id, sig) -> one row per LSH band: (doc_id, sig, band, bucket).
 
     Band key = murmur3 over the band's signature slice (identical
-    expression in dedup_minhash_lsh and dedup_lsh_star_cluster)."""
-    return sigs.select(
-        "doc_id",
-        "sig",
-        F.posexplode(
-            F.array(
-                *[
-                    F.hash(
-                        F.concat_ws(
-                            ",",
-                            *[
-                                F.col("sig")[i].cast("string")
-                                for i in range(b * BAND_SIZE, (b + 1) * BAND_SIZE)
-                            ],
-                        )
-                    )
-                    for b in range(N_HASHES // BAND_SIZE)
-                ]
-            )
-        ).alias("band", "bucket"),
+    expression in dedup_minhash_lsh and dedup_lsh_star_cluster), spelled
+    as one SQL fragment rather than 177 py4j Column calls."""
+    bands = ", ".join(
+        "hash(concat_ws(',', "
+        + ", ".join(
+            f"CAST(sig[{i}] AS STRING)"
+            for i in range(b * BAND_SIZE, (b + 1) * BAND_SIZE)
+        )
+        + "))"
+        for b in range(N_HASHES // BAND_SIZE)
+    )
+    return sigs.selectExpr(
+        "doc_id", "sig", f"posexplode(array({bands})) AS (band, bucket)"
     )
 
 
@@ -286,12 +277,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so AQE right-sizes it (32 reducers of nothing cost 3 extra
     # stage-schedules at small SF; at 100 TB AQE keeps them wide).
     bands = bands.repartition("band", "bucket")
-    left = bands.select(
-        F.col("doc_id").alias("a"), F.col("sig").alias("sig_a"), "band", "bucket"
-    )
-    right = bands.select(
-        F.col("doc_id").alias("b"), F.col("sig").alias("sig_b"), "band", "bucket"
-    )
+    left = bands.selectExpr("doc_id AS a", "sig AS sig_a", "band", "bucket")
+    right = bands.selectExpr("doc_id AS b", "sig AS sig_b", "band", "bucket")
     est = sig_match_count(sf_dir)(F.col("sig_a"), F.col("sig_b")) / F.lit(
         float(N_HASHES)
     )
@@ -300,9 +287,9 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two 16-int signature arrays.
     return (
         left.join(right, ["band", "bucket"])
-        .filter(F.col("a") < F.col("b"))
+        .filter("a < b")
         .select("a", "b", F.round(est, 4).alias("est_jaccard"))
-        .filter(F.col("est_jaccard") >= 0.5)
+        .filter("est_jaccard >= 0.5")
         .distinct()
         .orderBy("a", "b")
     )

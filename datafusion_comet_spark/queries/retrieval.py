@@ -51,6 +51,21 @@ BM25_QUERIES: tuple[tuple[int, str], ...] = (
     (3, "stream"), (3, "batch"), (3, "merge"),
 )
 
+# Okapi BM25 contribution of one (doc, term) row in integer micros
+# (k1=1.2, b=0.75), over columns n_docs, df, tf, dl and avgdl — one SQL
+# fragment shared by both BM25 operators (3 py4j commands to build,
+# against 45 for the Column-API spelling).  Double literals carry the
+# D suffix (a bare 0.5 is a DECIMAL in Spark SQL) and commutative
+# operands keep the order the Column-API spelling produced, so the
+# plan is unchanged.
+_BM25_CONTRIB_MICROS = (
+    "CAST(round("
+    "ln(1.0D + (n_docs - df + 0.5D) / (df + 0.5D))"
+    " * (tf * 2.2D)"
+    " / (tf + (dl * 0.75D / avgdl + 0.25D) * 1.2D)"
+    " * 1000000.0D) AS BIGINT)"
+)
+
 
 # The K-gram rolling-hash projection shared by every winnow variant:
 # engine-portable md5 hex prefix per K-token gram (lexicographic =
@@ -97,11 +112,9 @@ def winnow_fingerprint_positions(
     the DuckDB oracles; distinct (fp, pos) pairs replace the flag
     variant's array_distinct (one fp selected at two positions is two
     matchable span instances)."""
-    toked = docs.select(
-        id_col, F.split(F.lower("text"), " ").alias("toks")
-    )
-    hashed = toked.select(
-        id_col, F.expr(_guarded_grams(K + WIN - 1)).alias("hashes")
+    toked = docs.selectExpr(id_col, "split(lower(text), ' ') AS toks")
+    hashed = toked.selectExpr(
+        id_col, f"{_guarded_grams(K + WIN - 1)} AS hashes"
     )
     # array_distinct BEFORE the explode: adjacent windows re-select the
     # same minimum constantly (that's the winnowing rule working), and
@@ -130,9 +143,9 @@ def winnow_fingerprint_positions(
         f"'pos', cast(s - 1 as bigint) + array_position(sl, m)))[0])[0])) "
         f"ELSE array() END"
     )
-    return hashed.select(
-        id_col, F.explode(F.expr(win)).alias("w")
-    ).select(id_col, "w.fp", "w.pos")
+    return hashed.selectExpr(id_col, f"explode({win}) AS w").select(
+        id_col, "w.fp", "w.pos"
+    )
 
 
 def winnow_fingerprints(
@@ -314,55 +327,33 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread 0.98 s (the winnow family's md5-gram hashing is what makes
     # the rebalance pay; this pipeline has no such stage)
     docs = load_table(spark, sf_dir, "documents")
-    toked = docs.select(
-        "doc_id", F.split(F.lower("text"), " ").alias("toks")
+    toked = docs.selectExpr("doc_id", "split(lower(text), ' ') AS toks")
+    toks = toked.selectExpr(
+        "doc_id", "size(toks) AS dl", "explode(toks) AS tok"
     )
-    toks = toked.select(
-        "doc_id",
-        F.size("toks").alias("dl"),
-        F.explode("toks").alias("tok"),
-    )
+    terms = ", ".join(f"'{t}'" for t in BM25_TERMS)
     tf = (
-        toks.filter(F.col("tok").isin(*BM25_TERMS))
+        toks.filter(f"tok IN ({terms})")
         .groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).alias("tf"), F.min("dl").alias("dl"))
+        .agg(F.expr("count(1) AS tf"), F.expr("min(dl) AS dl"))
     )
-    stats = toked.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size("toks")).alias("sum_dl"),
+    stats = toked.selectExpr(
+        "count(1) AS n_docs",
+        "sum(size(toks)) AS sum_dl",
         *[
-            F.sum(F.array_contains("toks", t).cast("int"))
-            .cast("bigint")
-            .alias(f"df_{t}")
+            f"CAST(sum(CAST(array_contains(toks, '{t}') AS INT)) AS BIGINT)"
+            f" AS df_{t}"
             for t in BM25_TERMS
         ],
     )
-    df_case = F.when(F.col("tok") == BM25_TERMS[0], F.col(f"df_{BM25_TERMS[0]}"))
-    for t in BM25_TERMS[1:]:
-        df_case = df_case.when(F.col("tok") == t, F.col(f"df_{t}"))
+    df_case = " ".join(f"WHEN tok = '{t}' THEN df_{t}" for t in BM25_TERMS)
     scored = (
         tf.crossJoin(F.broadcast(stats))
-        .withColumn("df", df_case)
-        .withColumn(
-            "avgdl",
-            F.col("sum_dl").cast("double") / F.col("n_docs").cast("double"),
-        )
-        .withColumn(
-            "contrib_micros",
-            F.round(
-                F.log(
-                    F.lit(1.0)
-                    + (F.col("n_docs") - F.col("df") + 0.5)
-                    / (F.col("df") + 0.5)
-                )
-                * (F.col("tf") * 2.2)
-                / (
-                    F.col("tf")
-                    + 1.2 * (0.25 + 0.75 * F.col("dl") / F.col("avgdl"))
-                )
-                * 1000000.0
-            ).cast("bigint"),
-        )
+        .withColumns({
+            "df": F.expr(f"CASE {df_case} END"),
+            "avgdl": F.expr("CAST(sum_dl AS DOUBLE) / CAST(n_docs AS DOUBLE)"),
+        })
+        .withColumn("contrib_micros", F.expr(_BM25_CONTRIB_MICROS))
     )
     w = W.orderBy(F.col("bm25_micros").desc(), "doc_id")
     return (
@@ -457,46 +448,36 @@ def dedup_winnow_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents"), sf_dir, "documents"
     )
     fpp = winnow_fingerprint_positions(docs)
-    wfp = W.partitionBy("fp")
     spans = (
-        fpp.select(
+        fpp.selectExpr(
             "doc_id",
             "pos",
-            F.min("doc_id").over(wfp).alias("mn"),
-            F.max("doc_id").over(wfp).alias("mx"),
+            "min(doc_id) OVER (PARTITION BY fp) AS mn",
+            "max(doc_id) OVER (PARTITION BY fp) AS mx",
         )
-        .filter((F.col("mn") != F.col("mx")) & (F.col("doc_id") != F.col("mn")))
+        .filter("mn != mx AND doc_id != mn")
         .groupBy("doc_id")
-        .agg(F.sort_array(F.collect_set("pos")).alias("poss"))
+        .agg(F.expr("sort_array(collect_set(pos)) AS poss"))
     )
-    toked = docs.select(
-        "doc_id", F.split(F.lower("text"), " ").alias("toks")
-    )
+    toked = docs.selectExpr("doc_id", "split(lower(text), ' ') AS toks")
     joined = toked.join(spans, "doc_id", "left").withColumn(
-        "poss", F.coalesce("poss", F.expr("cast(array() as array<bigint>)"))
+        "poss", F.expr("coalesce(poss, cast(array() as array<bigint>))")
     )
-    covered = F.array_distinct(
-        F.flatten(
-            F.transform(
-                F.col("poss"), lambda p: F.sequence(p, p + F.lit(K - 1))
-            )
-        )
+    covered = (
+        f"array_distinct(flatten(transform(poss, p -> sequence(p, p + {K - 1}))))"
     )
-    keep_idx = F.array_except(
-        F.sequence(F.lit(1).cast("bigint"), F.size("toks").cast("bigint")),
-        covered,
-    )
-    kept = F.transform(
-        F.col("keep_idx"),
-        lambda i: F.element_at(F.col("toks"), i.cast("int")),
+    keep_idx = F.expr(
+        "array_except(sequence(CAST(1 AS BIGINT), CAST(size(toks) AS BIGINT)), "
+        f"{covered})"
     )
     return (
         joined.withColumn("keep_idx", keep_idx)
-        .select(
+        .selectExpr(
             "doc_id",
-            F.size("toks").cast("bigint").alias("n_toks"),
-            (F.size("toks") - F.size("keep_idx")).cast("bigint").alias("n_cut"),
-            F.md5(F.array_join(kept, " ").cast("binary")).alias("kept_md5"),
+            "CAST(size(toks) AS BIGINT) AS n_toks",
+            "CAST(size(toks) - size(keep_idx) AS BIGINT) AS n_cut",
+            "md5(CAST(array_join(transform(keep_idx, "
+            "i -> element_at(toks, CAST(i AS INT))), ' ') AS BINARY)) AS kept_md5",
         )
         .orderBy("doc_id")
     )
@@ -581,27 +562,17 @@ def text_bm25_multiquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     # which plans as an opaque ExistingRDD scan): stays in Catalyst
     # with exact row counts, no Python->JVM row serialization.  In
     # production this is `spark.read.table("audit_queries")`.
-    qterms = spark.range(1).select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(q).cast("int").alias("query_id"),
-                        F.lit(t).alias("term"),
-                    )
-                    for q, t in BM25_QUERIES
-                ]
-            )
-        ).alias("qt")
+    structs = ", ".join(
+        f"struct(CAST({q} AS INT) AS query_id, '{t}' AS term)"
+        for q, t in BM25_QUERIES
+    )
+    qterms = spark.range(1).selectExpr(
+        f"explode(array({structs})) AS qt"
     ).select("qt.query_id", "qt.term")
     terms = qterms.select("term").distinct()
-    toked = docs.select(
-        "doc_id", F.split(F.lower("text"), " ").alias("toks")
-    )
-    toks = toked.select(
-        "doc_id",
-        F.size("toks").alias("dl"),
-        F.explode("toks").alias("tok"),
+    toked = docs.selectExpr("doc_id", "split(lower(text), ' ') AS toks")
+    toks = toked.selectExpr(
+        "doc_id", "size(toks) AS dl", "explode(toks) AS tok"
     )
     # persist() the matched-docs aggregate: tf feeds BOTH the scored
     # rows and the df aggregate, and per-branch column pruning
@@ -617,40 +588,19 @@ def text_bm25_multiquery(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.broadcast(terms), toks["tok"] == terms["term"], "left_semi"
         )
         .groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).alias("tf"), F.min("dl").alias("dl"))
+        .agg(F.expr("count(1) AS tf"), F.expr("min(dl) AS dl"))
         .persist()
     )
-    df = tf.groupBy("tok").agg(
-        F.count(F.lit(1)).cast("bigint").alias("df")
-    )
-    stats = toked.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size("toks")).alias("sum_dl"),
-    )
+    df = tf.groupBy("tok").agg(F.expr("CAST(count(1) AS BIGINT) AS df"))
+    stats = toked.selectExpr("count(1) AS n_docs", "sum(size(toks)) AS sum_dl")
     scored = (
         tf.join(F.broadcast(df), "tok")
         .join(F.broadcast(qterms), F.col("tok") == F.col("term"))
         .crossJoin(F.broadcast(stats))
         .withColumn(
-            "avgdl",
-            F.col("sum_dl").cast("double") / F.col("n_docs").cast("double"),
+            "avgdl", F.expr("CAST(sum_dl AS DOUBLE) / CAST(n_docs AS DOUBLE)")
         )
-        .withColumn(
-            "contrib_micros",
-            F.round(
-                F.log(
-                    F.lit(1.0)
-                    + (F.col("n_docs") - F.col("df") + 0.5)
-                    / (F.col("df") + 0.5)
-                )
-                * (F.col("tf") * 2.2)
-                / (
-                    F.col("tf")
-                    + 1.2 * (0.25 + 0.75 * F.col("dl") / F.col("avgdl"))
-                )
-                * 1000000.0
-            ).cast("bigint"),
-        )
+        .withColumn("contrib_micros", F.expr(_BM25_CONTRIB_MICROS))
     )
     w = W.partitionBy("query_id").orderBy(
         F.col("bm25_micros").desc(), "doc_id"

@@ -24,7 +24,16 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from . import register
-from ._shared import SQL_REV, _dec, _dim_hint, _drev, _money, _stats_join_back, _ts
+from ._shared import (
+    SPARK_SQL_REV,
+    SQL_REV,
+    _dec,
+    _dim_hint,
+    _drev,
+    _money,
+    _stats_join_back,
+    _ts,
+)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -270,35 +279,25 @@ def tpcds_return_ratio_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (identical IEEE bits), so rank ties are data-determined, not
     float-noise-determined."""
     li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= _ts("1998-01-01 00:00:00"))
-        & (F.col("l_shipdate") < _ts("1998-04-01 00:00:00"))
+        "l_shipdate >= CAST('1998-01-01 00:00:00' AS TIMESTAMP)"
+        " AND l_shipdate < CAST('1998-04-01 00:00:00' AS TIMESTAMP)"
     )
-    zero_dec = F.lit(0).cast("decimal(18,2)")
     per_part = (
         li.groupBy("l_partkey")
         .agg(
-            F.sum(
-                F.when(F.col("l_returnflag") == "R", _drev()).otherwise(
-                    zero_dec
-                )
-            ).alias("ret_amt"),
-            F.sum(_drev()).alias("tot_amt"),
-            F.sum(
-                F.when(F.col("l_returnflag") == "R", F.col("l_quantity"))
-                .otherwise(F.lit(0))
-            )
-            .cast("long")
-            .alias("ret_qty"),
-            F.sum("l_quantity").cast("long").alias("tot_qty"),
-            F.count(F.lit(1)).alias("n_lines"),
+            F.expr(
+                f"sum(CASE WHEN l_returnflag = 'R' THEN {SPARK_SQL_REV}"
+                " ELSE CAST(0 AS DECIMAL(18,2)) END) AS ret_amt"
+            ),
+            F.expr(f"sum({SPARK_SQL_REV}) AS tot_amt"),
+            F.expr(
+                "CAST(sum(CASE WHEN l_returnflag = 'R' THEN l_quantity ELSE 0 END)"
+                " AS BIGINT) AS ret_qty"
+            ),
+            F.expr("CAST(sum(l_quantity) AS BIGINT) AS tot_qty"),
+            F.expr("count(1) AS n_lines"),
         )
-        .filter(F.col("n_lines") >= 5)
-    )
-    amt_ratio = F.round(
-        F.col("ret_amt").cast("double") / F.col("tot_amt").cast("double"), 6
-    )
-    qty_ratio = F.round(
-        F.col("ret_qty").cast("double") / F.col("tot_qty").cast("double"), 6
+        .filter("n_lines >= 5")
     )
     # persist() the tiny aggregate output (|parts| rows, MEMORY_AND_DISK):
     # WITHOUT it, per-branch column pruning specializes each consumer's
@@ -308,10 +307,10 @@ def tpcds_return_ratio_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cache the fact is scanned once and every branch reads the
     # InMemoryRelation — 1.62x at sf0.1 (min-of-5), pinned by
     # tests/test_plans.py::test_return_ratio_rank_single_fact_pass.
-    cand = per_part.select(
+    cand = per_part.selectExpr(
         "l_partkey",
-        amt_ratio.alias("amt_ratio"),
-        qty_ratio.alias("qty_ratio"),
+        "round(CAST(ret_amt AS DOUBLE) / CAST(tot_amt AS DOUBLE), 6) AS amt_ratio",
+        "round(CAST(ret_qty AS DOUBLE) / CAST(tot_qty AS DOUBLE), 6) AS qty_ratio",
     ).persist()
     # Scale shape: the naive spelling ranks ALL |parts| aggregate rows
     # through one unpartitioned WindowExec reducer (the OR'd rank
@@ -331,58 +330,47 @@ def tpcds_return_ratio_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # column pruning here); the fact is scanned once and no task ever
     # holds more than its own aggregate partition.
     th_amt = (
-        cand.orderBy(F.col("amt_ratio").desc())
+        cand.orderBy(F.desc("amt_ratio"))
         .limit(10)
-        .agg(F.min("amt_ratio").alias("th_amt"))
+        .agg(F.expr("min(amt_ratio) AS th_amt"))
     )
     th_qty = (
-        cand.orderBy(F.col("qty_ratio").desc())
+        cand.orderBy(F.desc("qty_ratio"))
         .limit(10)
-        .agg(F.min("qty_ratio").alias("th_qty"))
+        .agg(F.expr("min(qty_ratio) AS th_qty"))
     )
     kept = (
         cand.join(F.broadcast(th_amt.join(th_qty)))
-        .filter(
-            (F.col("amt_ratio") >= F.col("th_amt"))
-            | (F.col("qty_ratio") >= F.col("th_qty"))
-        )
+        .filter("amt_ratio >= th_amt OR qty_ratio >= th_qty")
         .select("l_partkey", "amt_ratio", "qty_ratio")
     )
-    ka = kept.select(
-        F.col("l_partkey").alias("ka_key"), F.col("amt_ratio").alias("ka_v")
-    )
-    kq = kept.select(
-        F.col("l_partkey").alias("kq_key"), F.col("qty_ratio").alias("kq_v")
-    )
+    ka = kept.selectExpr("l_partkey AS ka_key", "amt_ratio AS ka_v")
+    kq = kept.selectExpr("l_partkey AS kq_key", "qty_ratio AS kq_v")
     amt_gt = (
         cand.select("amt_ratio")
-        .join(F.broadcast(ka), F.col("amt_ratio") > F.col("ka_v"))
+        .join(F.broadcast(ka), F.expr("amt_ratio > ka_v"))
         .groupBy("ka_key")
-        .agg(F.count(F.lit(1)).alias("amt_gt"))
+        .agg(F.expr("count(1) AS amt_gt"))
     )
     qty_gt = (
         cand.select("qty_ratio")
-        .join(F.broadcast(kq), F.col("qty_ratio") > F.col("kq_v"))
+        .join(F.broadcast(kq), F.expr("qty_ratio > kq_v"))
         .groupBy("kq_key")
-        .agg(F.count(F.lit(1)).alias("qty_gt"))
+        .agg(F.expr("count(1) AS qty_gt"))
     )
     return (
         kept.join(
             _dim_hint(amt_gt, sf_dir, "part"), kept.l_partkey == F.col("ka_key"), "left"
         )
         .join(_dim_hint(qty_gt, sf_dir, "part"), kept.l_partkey == F.col("kq_key"), "left")
-        .select(
+        .selectExpr(
             "l_partkey",
             "amt_ratio",
             "qty_ratio",
-            (F.coalesce(F.col("amt_gt"), F.lit(0)) + 1)
-            .cast("long")
-            .alias("amt_rank"),
-            (F.coalesce(F.col("qty_gt"), F.lit(0)) + 1)
-            .cast("long")
-            .alias("qty_rank"),
+            "CAST(coalesce(amt_gt, 0) + 1 AS BIGINT) AS amt_rank",
+            "CAST(coalesce(qty_gt, 0) + 1 AS BIGINT) AS qty_rank",
         )
-        .filter((F.col("amt_rank") <= 10) | (F.col("qty_rank") <= 10))
+        .filter("amt_rank <= 10 OR qty_rank <= 10")
         .orderBy("amt_rank", "qty_rank", "l_partkey")
     )
 

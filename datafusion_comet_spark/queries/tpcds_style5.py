@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from . import register
-from ._shared import SQL_REV, _dim_hint, _drev, _spread_scan
+from ._shared import SPARK_SQL_REV, SQL_REV, _dim_hint, _spread_scan
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -118,28 +118,27 @@ def tpcds_cross_channel_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     common = (
         li.select("l_orderkey", "l_partkey")
         .join(
-            orders.filter(F.col("o_orderstatus").isin("O", "F")),
-            F.col("l_orderkey") == F.col("o_orderkey"),
+            orders.filter("o_orderstatus IN ('O', 'F')"),
+            F.expr("l_orderkey = o_orderkey"),
         )
         .groupBy("l_partkey")
         .agg(
-            (
-                F.max((F.col("o_orderstatus") == "O").cast("int"))
-                + F.max((F.col("o_orderstatus") == "F").cast("int"))
-            ).alias("nch")
+            F.expr(
+                "max(CAST(o_orderstatus = 'O' AS INT))"
+                " + max(CAST(o_orderstatus = 'F' AS INT)) AS nch"
+            )
         )
-        .filter(F.col("nch") == 2)
+        .filter("nch = 2")
         .select("l_partkey")
     )
     # price > avg as exact integer cross-multiplication on cents,
     # widened to DECIMAL(38,0)/HUGEINT: a double avg differs in the
     # last ulp between engines' accumulation orders and can flip
     # boundary rows
-    threshold = li.agg(
-        F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
-        .cast("decimal(38,0)")
-        .alias("sum_cents"),
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("n_all"),
+    threshold = li.selectExpr(
+        "CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS DECIMAL(38,0))"
+        " AS sum_cents",
+        "CAST(count(1) AS DECIMAL(38,0)) AS n_all",
     )
     # Report pass: the per-row decimal(38,0) cross-multiplication, the
     # three broadcast probes and the rollup Expand all run in the scan
@@ -152,25 +151,19 @@ def tpcds_cross_channel_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("l_partkey") == F.col("cp"), "left_semi")
         .crossJoin(F.broadcast(threshold))
         .filter(
-            F.round(F.col("l_extendedprice") * 100)
-            .cast("decimal(38,0)")
-            * F.col("n_all")
-            > F.col("sum_cents")
+            "CAST(round(l_extendedprice * 100) AS DECIMAL(38,0)) * n_all"
+            " > sum_cents"
         )
         .join(_dim_hint(part, sf_dir, "part"), F.col("l_partkey") == part.p_partkey)
-        .withColumn("yr", F.year("l_shipdate").cast("int"))
+        .withColumn("yr", F.expr("CAST(year(l_shipdate) AS INT)"))
     )
     return (
         filtered.rollup("p_brand", "yr")
         .agg(
-            (
-                F.grouping("p_brand")
-                + F.lit(2) * F.grouping("yr")
-            ).cast("int").alias("lvl"),
-            F.count(F.lit(1)).cast("long").alias("n_lines"),
-            F.round(F.sum(_drev()), 2).cast("double").alias("revenue"),
+            F.expr("CAST(grouping(p_brand) + 2 * grouping(yr) AS INT) AS lvl"),
+            F.expr("CAST(count(1) AS BIGINT) AS n_lines"),
+            F.expr(f"CAST(round(sum({SPARK_SQL_REV}), 2) AS DOUBLE) AS revenue"),
         )
-        .select("p_brand", "yr", "lvl", "n_lines", "revenue")
         .orderBy(
             "lvl",
             F.col("p_brand").asc_nulls_first(),

@@ -59,6 +59,19 @@ DEFAULT_CONF: dict[str, str] = {
     # TimestampType in Spark; read them as raw nanosecond longs and let the
     # catalog normalize to microsecond timestamps (catalog.load_table).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # --- plan construction -------------------------------------------------
+    # PySpark wraps every Column and functions call in _with_origin,
+    # which with debugging on costs ~5 extra py4j round trips per call
+    # (active-session lookup, origin object, conf read, set, clear) to
+    # record the Python call site for DataFrame error contexts — the
+    # dominant share of build time (q1_pricing_summary 668 -> 188 py4j
+    # commands per build).  The cost of turning it off: an analysis or
+    # runtime error's query context no longer names the Python line.
+    # PySpark reads this once per process at the first Column call, so
+    # it must be set before any query is built; to get call sites back,
+    # start the session with
+    # extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     # --- misc --------------------------------------------------------------
     "spark.ui.enabled": "false",
     "spark.sql.shuffle.partitions": "32",

@@ -104,12 +104,15 @@ def write_read_parquet(
     """Parquet write → read-back.  ``codec`` mirrors the reference's
     shuffle/write codec set (zstd/lz4/snappy, operator.proto:301-306);
     ``partition_by`` produces hive-style partition dirs so read-back
-    filters on the partition column prune at planning time."""
+    filters on the partition column prune at planning time.  Read-back
+    passes the written frame's schema: without it Spark runs a job to
+    read the footers and infer the schema it already has (partition
+    columns still move last, as with inference)."""
     writer = df.write.mode("overwrite").option("compression", codec)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-    return spark.read.parquet(path)
+    return spark.read.schema(df.schema).parquet(path)
 
 
 def write_read_xml(
