@@ -29,7 +29,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
@@ -76,23 +75,26 @@ BENCH_QUERIES = [
 # table.
 
 
+def bench_names(registry) -> list[str]:
+    """The benched queries, in bench order: BENCH_QUERIES, then every
+    other "bench"-tagged registry query by name."""
+    names = [n for n in BENCH_QUERIES if n in registry]
+    return names + sorted(
+        n for n, q in registry.items() if "bench" in q.tags and n not in names
+    )
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     if not os.path.isdir(sf_dir):
         sys.exit(f"bench: data dir not found: {sf_dir}")
-    try:
-        sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
-    except ValueError:
-        sf = -1.0
 
     from datafusion_comet_spark.queries import load_all
     from datafusion_comet_spark.session import get_session
+    from datafusion_comet_spark.testing import scale_factor, timings
 
     registry = load_all()
-    names = [n for n in BENCH_QUERIES if n in registry]
-    names += sorted(
-        n for n, q in registry.items() if "bench" in q.tags and n not in names
-    )
+    names = bench_names(registry)
 
     warm = [n for n in names if "warm_by_design" in registry[n].tags]
     if warm:
@@ -119,30 +121,22 @@ def main() -> None:
     per_query: dict[str, float] = {}
     failed: list[str] = []
     for name in names:
-        best = None
-        n = 0
+        counts: list[int] = []
+        # the timed region is build + collect(); collect() forces full
+        # evaluation incl. the final projection (count() would let
+        # Catalyst prune result expressions); all bench queries return
+        # small (aggregated / limited) results
+        def run():
+            counts.append(len(registry[name].fn(spark, sf_dir).collect()))
+
         try:
-            for _ in range(iterations):
-                t0 = time.perf_counter()
-                try:
-                    df = registry[name].fn(spark, sf_dir)
-                    # collect() forces full evaluation incl. the final
-                    # projection (count() would let Catalyst prune result
-                    # expressions); all bench queries return small
-                    # (aggregated / limited) results.
-                    n = len(df.collect())
-                    elapsed = time.perf_counter() - t0
-                finally:
-                    # outside the timed region: no iteration may read a
-                    # cache that an earlier iteration's persist() filled
-                    spark.catalog.clearCache()
-                best = elapsed if best is None else min(best, elapsed)
+            secs = timings(spark, run, iterations)
         except Exception as exc:  # one broken query must not lose the run
             failed.append(name)
             print(f"# {name}: FAILED {exc!r}", file=sys.stderr)
             continue
-        per_query[name] = round(best, 3)
-        print(f"# {name}: {per_query[name]:.3f}s ({n} rows)", file=sys.stderr)
+        per_query[name] = round(min(secs), 3)
+        print(f"# {name}: {per_query[name]:.3f}s ({counts[-1]} rows)", file=sys.stderr)
     total = round(sum(per_query.values()), 3)
 
     out = {
@@ -150,7 +144,7 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": per_query,
-        "sf": sf,
+        "sf": scale_factor(sf_dir),
     }
     if failed:
         out["failed"] = failed

@@ -1,16 +1,22 @@
-"""Differential test harness: Spark result vs DuckDB oracle.
+"""Differential test harness and measurement harness.
 
-Rebuild of the reference's checkSparkAnswer methodology (reference:
+Differential: the reference's checkSparkAnswer methodology (reference:
 spark/src/test/scala/org/apache/spark/sql/CometTestBase.scala:159-345)
 with DuckDB standing in for vanilla Spark as the oracle, mirroring the
 driver's own verify loop: row count + column names + order-insensitive
 value comparison, floats with tolerance, NaN/-0.0 canonicalized.
+
+Measurement: ``timings`` is the one wall-clock timer of bench.py and
+the dev/ scripts (the reference's single benchmarks/tpc/tpcbench.py
+methodology), ``conf_override`` the one scoped conf change, and ``ab``
+the one interleaved same-process conf A/B with an exact row check.
 """
 
 from __future__ import annotations
 
 import math
 import os
+import time
 from contextlib import contextmanager
 from datetime import date, datetime
 from decimal import Decimal
@@ -78,6 +84,20 @@ def compare_to_oracle(
     Column-name sets must match (driver sorts columns by name before
     hashing); rows are compared as canonicalized sorted multisets.
     """
+    compare_rows_to_oracle(
+        spark_df.columns, spark_df.collect(), oracle_sql, sf_dir, float_round
+    )
+
+
+def compare_rows_to_oracle(
+    spark_cols: list[str],
+    spark_rows: list,
+    oracle_sql: str,
+    sf_dir: str,
+    float_round: int = 6,
+) -> None:
+    """``compare_to_oracle`` on rows already collected (for callers that
+    must not run the query a second time)."""
     con = duckdb_connection(sf_dir)
     try:
         cur = con.execute(oracle_sql)
@@ -86,11 +106,10 @@ def compare_to_oracle(
     finally:
         con.close()
 
-    spark_cols = spark_df.columns
     assert sorted(spark_cols) == sorted(oracle_cols), (
         f"column mismatch: spark={sorted(spark_cols)} oracle={sorted(oracle_cols)}"
     )
-    spark_rows = [tuple(r) for r in spark_df.collect()]
+    spark_rows = [tuple(r) for r in spark_rows]
     assert len(spark_rows) == len(oracle_rows), (
         f"row count mismatch: spark={len(spark_rows)} oracle={len(oracle_rows)}"
     )
@@ -100,6 +119,80 @@ def compare_to_oracle(
     assert not mismatches, (
         f"{len(mismatches)}/{len(a)} rows differ; first 5: {mismatches[:5]}"
     )
+
+
+def scale_factor(sf_dir: str) -> float:
+    """The scale factor a data dir's basename names (``.../sf0.1`` ->
+    0.1), or -1.0 when the basename is not ``sf<number>``."""
+    try:
+        return float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
+    except ValueError:
+        return -1.0
+
+
+def timings(spark, thunk, n: int) -> list[float]:
+    """Wall seconds of each of ``n`` calls of ``thunk``.
+
+    The SQL cache is cleared after every call, outside the timed region
+    and also when the call raises, so no run reads a cache that an
+    earlier run's persist() filled.  ``thunk`` must consume its result
+    (collect(), a write) inside the call."""
+    out = []
+    for _ in range(n):
+        t0 = time.perf_counter()
+        try:
+            thunk()
+            out.append(time.perf_counter() - t0)
+        finally:
+            spark.catalog.clearCache()
+    return out
+
+
+@contextmanager
+def conf_override(spark, settings: dict[str, str]):
+    """Set session confs for the body; on exit, exception included,
+    restore each key's earlier value, or unset it if it was unset."""
+    saved = {k: spark.conf.get(k, None) for k in settings}
+    try:
+        for k, v in settings.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def ab(
+    spark, build, arms: dict[str, dict[str, str]], blocks: int, runs: int
+) -> tuple[dict[str, float], bool]:
+    """Interleaved same-process A/B over named conf arms.
+
+    ``build()`` returns a fresh DataFrame; it is called under each arm's
+    confs, so analysis and planning see them.  After one arm-neutral
+    warmup run, each of ``blocks`` blocks runs every arm in turn,
+    ``runs`` times each, under ``conf_override`` (cache cleared after
+    every run).  Returns the per-arm minimum seconds and whether the
+    arms' last collected rows are exactly equal as multisets (no
+    rounding: a conf that only changes the plan must not change a bit).
+    """
+    timings(spark, lambda: build().collect(), 1)
+    best: dict[str, float] = {}
+    rows: dict[str, list] = {}
+    for _ in range(blocks):
+        for arm, conf in arms.items():
+
+            def run():
+                rows[arm] = build().collect()
+
+            with conf_override(spark, conf):
+                secs = timings(spark, run, runs)
+            best[arm] = min(secs + [best.get(arm, math.inf)])
+    key = lambda r: [(x is None, str(x)) for x in r]
+    multisets = [sorted(map(tuple, r), key=key) for r in rows.values()]
+    return best, all(m == multisets[0] for m in multisets)
 
 
 def lineitem_bytes(sf_dir: str) -> int:
@@ -172,32 +265,22 @@ def asymptotic_mode(spark, sf_dir: str):
         TABLES,
     )
 
-    saved_threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     scaling = [t for t in TABLES if t not in FIXED_SIZE_DIMS]
-    saved_bytes = {
-        t: _TABLE_BYTES_CACHE.get((sf_dir, t)) for t in scaling
-    }
-    saved_rgs = {
-        t: _TABLE_ROW_GROUPS_CACHE.get((sf_dir, t)) for t in scaling
-    }
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
-        for t in scaling:
-            _TABLE_BYTES_CACHE[(sf_dir, t)] = 1 << 40
-            # 100 TB layouts carry far more row groups than any cluster
-            # has cores, so the scan-starvation rebalance (_spread_scan)
-            # must be a no-op in the asymptotic plans
-            _TABLE_ROW_GROUPS_CACHE[(sf_dir, t)] = 1 << 20
-        yield
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved_threshold)
-        for t, v in saved_bytes.items():
-            if v is None:
-                _TABLE_BYTES_CACHE.pop((sf_dir, t), None)
-            else:
-                _TABLE_BYTES_CACHE[(sf_dir, t)] = v
-        for t, v in saved_rgs.items():
-            if v is None:
-                _TABLE_ROW_GROUPS_CACHE.pop((sf_dir, t), None)
-            else:
-                _TABLE_ROW_GROUPS_CACHE[(sf_dir, t)] = v
+    # 100 TB layouts carry far more row groups than any cluster has
+    # cores, so the scan-starvation rebalance (_spread_scan) must be a
+    # no-op in the asymptotic plans
+    forged = [(_TABLE_BYTES_CACHE, 1 << 40), (_TABLE_ROW_GROUPS_CACHE, 1 << 20)]
+    saved = [(c, {t: c.get((sf_dir, t)) for t in scaling}) for c, _ in forged]
+    with conf_override(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+        try:
+            for cache, value in forged:
+                for t in scaling:
+                    cache[(sf_dir, t)] = value
+            yield
+        finally:
+            for cache, old in saved:
+                for t, v in old.items():
+                    if v is None:
+                        cache.pop((sf_dir, t), None)
+                    else:
+                        cache[(sf_dir, t)] = v

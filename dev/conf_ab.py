@@ -4,40 +4,28 @@
 Usage:
     python dev/conf_ab.py "spark.sql.x=defaultVal|candidateVal" [query ...]
 
-For each query: warmup once, then BLOCKS interleaved (A,B) blocks, each
-arm timed min-of-RUNS with the conf set before building the DataFrame
-(fresh fn() call per run so planning sees the conf).  Rows are collected
-and compared for exact multiset equality between arms.  Caches cleared
-between arms so persist()-based queries re-materialize under each arm.
+For each query, ``testing.ab`` over the two values: warmup once, then
+AB_BLOCKS interleaved (A,B) blocks, each arm timed min-of-AB_RUNS with
+the conf set before building the DataFrame, rows compared for exact
+multiset equality between arms.  Writes dev/conf_ab_<last key part>.json.
 """
 from __future__ import annotations
 
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from bench import bench_names
 from datafusion_comet_spark.queries import load_all
 from datafusion_comet_spark.session import get_session
+from datafusion_comet_spark.testing import ab
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 BLOCKS = int(os.environ.get("AB_BLOCKS", "3"))
 RUNS = int(os.environ.get("AB_RUNS", "2"))
-
-BENCH_DEFAULT = None  # filled from bench.py ordering
-
-
-def bench_names(registry):
-    import bench
-
-    names = [n for n in bench.BENCH_QUERIES if n in registry]
-    names += sorted(
-        n for n, q in registry.items() if "bench" in q.tags and n not in names
-    )
-    return names
 
 
 def main() -> None:
@@ -47,42 +35,23 @@ def main() -> None:
     registry = load_all()
     names = sys.argv[2:] or bench_names(registry)
     spark = get_session(app_name="dcs-conf-ab")
+    arms = {val_a: {key: val_a}, val_b: {key: val_b}}
     out = {}
     for name in names:
-        fn = registry[name].fn
         try:
-            fn(spark, SF_DIR).collect()  # warmup, arm-neutral
+            best, eq = ab(
+                spark, lambda: registry[name].fn(spark, SF_DIR), arms, BLOCKS, RUNS
+            )
         except Exception as exc:
             out[name] = {"error": repr(exc)}
             continue
-        mins = {val_a: None, val_b: None}
-        rows_by = {}
-        for _ in range(BLOCKS):
-            for arm in (val_a, val_b):
-                spark.conf.set(key, arm)
-                spark.catalog.clearCache()
-                best = None
-                for _ in range(RUNS):
-                    t0 = time.perf_counter()
-                    rows = fn(spark, SF_DIR).collect()
-                    el = time.perf_counter() - t0
-                    best = el if best is None else min(best, el)
-                rows_by[arm] = rows
-                if mins[arm] is None or best < mins[arm]:
-                    mins[arm] = best
-        keyf = lambda r: [(x is None, str(x)) for x in r]
-        eq = sorted(map(tuple, rows_by[val_a]), key=keyf) == sorted(
-            map(tuple, rows_by[val_b]), key=keyf
-        )
         out[name] = {
             "rows_equal": eq,
-            val_a: round(mins[val_a], 3),
-            val_b: round(mins[val_b], 3),
-            "b_over_a": round(mins[val_b] / mins[val_a], 3),
+            val_a: round(best[val_a], 3),
+            val_b: round(best[val_b], 3),
+            "b_over_a": round(best[val_b] / best[val_a], 3),
         }
         print(json.dumps({name: out[name]}), flush=True)
-    spark.conf.set(key, val_a)
-    spark.catalog.clearCache()
     spark.stop()
     tag = key.rsplit(".", 1)[-1]
     with open(os.path.join(REPO, "dev", f"conf_ab_{tag}.json"), "w") as f:

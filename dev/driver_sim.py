@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -24,10 +23,24 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
 
+def _check(spark, q) -> str:
+    from datafusion_comet_spark.testing import compare_to_oracle
+
+    try:
+        df = q.fn(spark, SF_DIR)
+        if q.oracle is None:
+            return f"rows-only ({df.count()} rows)"
+        compare_to_oracle(df, q.oracle, SF_DIR)
+        return "green"
+    except Exception:
+        traceback.print_exc()
+        return "RED"
+
+
 def main() -> int:
     from datafusion_comet_spark.queries import SAMPLE_PREFIX, load_all
     from datafusion_comet_spark.session import get_session
-    from datafusion_comet_spark.testing import compare_to_oracle
+    from datafusion_comet_spark.testing import timings
 
     reg = load_all()
     argv = sys.argv[1:]
@@ -40,24 +53,15 @@ def main() -> int:
 
     spark = get_session(app_name="dcs-driver-sim")
     failures: list[str] = []
-    t_total = time.time()
+    total = 0.0
     for i, name in enumerate(names, 1):
-        q = reg[name]
-        t0 = time.time()
-        try:
-            df = q.fn(spark, SF_DIR)
-            if q.oracle is None:
-                n = df.count()
-                status = f"rows-only ({n} rows)"
-            else:
-                compare_to_oracle(df, q.oracle, SF_DIR)
-                status = "green"
-        except Exception:
-            status = "RED"
+        status = []
+        (sec,) = timings(spark, lambda: status.append(_check(spark, reg[name])), 1)
+        total += sec
+        if status[0] == "RED":
             failures.append(name)
-            traceback.print_exc()
-        print(f"  {i:2d}/{len(names)} {name}: {status} ({time.time() - t0:.2f}s)", flush=True)
-    print(f"total {time.time() - t_total:.1f}s; failures: {failures or 'none'}")
+        print(f"  {i:2d}/{len(names)} {name}: {status[0]} ({sec:.2f}s)", flush=True)
+    print(f"total {total:.1f}s; failures: {failures or 'none'}")
     return 1 if failures else 0
 
 

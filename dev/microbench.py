@@ -25,7 +25,6 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -33,88 +32,65 @@ sys.path.insert(0, REPO)
 ITERATIONS = int(os.environ.get("SPARK_GRAFT_BENCH_ITERATIONS", "3"))
 
 
-def timed(fn) -> float:
-    best = None
-    for _ in range(ITERATIONS):
-        t0 = time.perf_counter()
-        fn()
-        elapsed = time.perf_counter() - t0
-        best = elapsed if best is None else min(best, elapsed)
-    return round(best, 3)
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    try:
-        sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
-    except ValueError:
-        sf = -1.0
 
     from pyspark.sql import functions as F
 
     from datafusion_comet_spark.session import get_session
+    from datafusion_comet_spark.testing import scale_factor, timings
 
     spark = get_session(app_name="dcs-microbench")
     li_path = os.path.join(sf_dir, "lineitem.parquet")
     li = spark.read.parquet(li_path)
     li.count()  # warm: JVM JIT + parquet footers in page cache
 
-    cases: dict[str, float] = {}
+    def noop(build):
+        return lambda: build().write.format("noop").mode("overwrite").save()
 
-    # -- scan: all columns materialized vs pruned projection with a
-    #    pushed predicate (CometReadBenchmark's numeric-scan cases).
-    cases["scan_full_width"] = timed(
-        lambda: spark.read.parquet(li_path)
-        .write.format("noop").mode("overwrite").save()
-    )
-    cases["scan_pruned_pushed"] = timed(
-        lambda: spark.read.parquet(li_path)
-        .filter(F.col("l_shipdate") > "1998-01-01")
-        .select("l_orderkey", "l_extendedprice")
-        .write.format("noop").mode("overwrite").save()
-    )
-
-    # -- shuffle: hash repartition of the full fact (CometShuffleBenchmark;
-    #    partition count matches the session's shuffle parallelism).
-    cases["shuffle_hash_32"] = timed(
-        lambda: li.repartition(32, "l_orderkey")
-        .write.format("noop").mode("overwrite").save()
-    )
-    # round-robin forces serialization of every row with no key
-    cases["shuffle_roundrobin_32"] = timed(
-        lambda: li.repartition(32)
-        .write.format("noop").mode("overwrite").save()
-    )
-
-    # -- aggregate: two-phase partial/final hash aggregation
-    cases["agg_twophase"] = timed(
-        lambda: li.groupBy("l_partkey")
-        .agg(F.sum("l_extendedprice"), F.count(F.lit(1)))
-        .write.format("noop").mode("overwrite").save()
-    )
-
-    # -- columnar→row boundary: Arrow-batched driver materialization
-    #    (CometColumnarToRowBenchmark; Arrow path per session config)
-    cases["columnar_to_row_arrow"] = timed(
-        lambda: li.select(
+    out = tempfile.mkdtemp(prefix="dcs_microbench_")
+    thunks = {
+        # -- scan: all columns materialized vs pruned projection with a
+        #    pushed predicate (CometReadBenchmark's numeric-scan cases).
+        "scan_full_width": noop(lambda: spark.read.parquet(li_path)),
+        "scan_pruned_pushed": noop(
+            lambda: spark.read.parquet(li_path)
+            .filter(F.col("l_shipdate") > "1998-01-01")
+            .select("l_orderkey", "l_extendedprice")
+        ),
+        # -- shuffle: hash repartition of the full fact
+        #    (CometShuffleBenchmark; partition count matches the
+        #    session's shuffle parallelism).
+        "shuffle_hash_32": noop(lambda: li.repartition(32, "l_orderkey")),
+        # round-robin forces serialization of every row with no key
+        "shuffle_roundrobin_32": noop(lambda: li.repartition(32)),
+        # -- aggregate: two-phase partial/final hash aggregation
+        "agg_twophase": noop(
+            lambda: li.groupBy("l_partkey")
+            .agg(F.sum("l_extendedprice"), F.count(F.lit(1)))
+        ),
+        # -- columnar→row boundary: Arrow-batched driver materialization
+        #    (CometColumnarToRowBenchmark; Arrow path per session config)
+        "columnar_to_row_arrow": lambda: li.select(
             "l_orderkey", "l_quantity", "l_extendedprice", "l_shipdate"
-        ).toPandas()
-    )
-
+        ).toPandas(),
+    }
     # -- write: parquet per codec (ParquetWriter codec matrix,
     #    reference operator.proto:301-306 zstd/lz4/snappy)
-    out = tempfile.mkdtemp(prefix="dcs_microbench_")
+    for codec in ("zstd", "lz4", "snappy"):
+        thunks[f"write_parquet_{codec}"] = lambda c=codec: (
+            li.write.option("compression", c).mode("overwrite")
+            .parquet(os.path.join(out, c))
+        )
     try:
-        for codec in ("zstd", "lz4", "snappy"):
-            dest = os.path.join(out, codec)
-            cases[f"write_parquet_{codec}"] = timed(
-                lambda d=dest, c=codec: li.write.option("compression", c)
-                .mode("overwrite").parquet(d)
-            )
+        cases = {
+            name: round(min(timings(spark, thunk, ITERATIONS)), 3)
+            for name, thunk in thunks.items()
+        }
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
-    print(json.dumps({"metric": "microbench", "cases": cases, "sf": sf}))
+    print(json.dumps({"metric": "microbench", "cases": cases, "sf": scale_factor(sf_dir)}))
     spark.stop()
 
 

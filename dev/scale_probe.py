@@ -61,6 +61,7 @@ def probe(df) -> str:
 def main() -> None:
     from datafusion_comet_spark.queries import load_all
     from datafusion_comet_spark.session import get_session
+    from datafusion_comet_spark.testing import conf_override
 
     spark = get_session(app_name="dcs-scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
@@ -86,24 +87,16 @@ def main() -> None:
     print()
     print("With autoBroadcastJoinThreshold=64KB (simulating ~512x growth"
           " past sf0.1):")
-    saved = {
-        k: spark.conf.get(k)
-        for k in (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.autoBroadcastJoinThreshold",
-        )
+    shrunk = {
+        "spark.sql.autoBroadcastJoinThreshold": "65536",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold": "65536",
     }
-    try:
-        for k in saved:
-            spark.conf.set(k, "65536")
+    with conf_override(spark, shrunk):
         print("| query | joins at simulated scale |")
         print("|---|---|")
         for name in QUERIES:
             df = registry[name].fn(spark, "/root/testdata/sf0.1")
             print(f"| {name} | {probe(df)} |")
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
     spark.stop()
 
 

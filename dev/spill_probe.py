@@ -10,12 +10,14 @@ joins spill to disk when execution memory runs out.  This probe runs
 the heaviest registry queries with execution memory deliberately
 starved and reports, per query:
 
-- wall time (vs an unconstrained same-process baseline run),
+- wall time of one run (build + collect),
 - total spill bytes (memory + disk), summed from the Spark metrics
   system (TaskMetrics via the AppStatusStore — the same numbers the
   UI's "Spill (memory/disk)" columns show),
-- correctness: the constrained rows must equal the unconstrained rows
-  (collected once each, compared sorted).
+- correctness: the collected rows must match the query's DuckDB oracle
+  by ``testing.compare_to_oracle``'s rules.  VALUES-pinned oracles
+  (outputs captured on the sf0.001/sf0.01 corpora) are reported, not
+  checked.
 
 Run it in a FRESH process (driver memory is a JVM-launch-time option):
 
@@ -28,7 +30,7 @@ constrained default here is 0.08, which shrinks the unified pool ~8x
 on top of the heap cut — starving execution memory without shrinking
 the heap so far that parquet/codegen buffers OOM outright).
 
-Output: a markdown table + one JSON line (consumed by SCALE.md).
+Output: one JSON line (consumed by SCALE.md).
 """
 
 from __future__ import annotations
@@ -36,7 +38,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -55,28 +56,6 @@ QUERIES = [
     "dedup_minhash_lsh",         # banded signature shuffles
     "text_stats",                # map-only control — expect 0 spill
 ]
-
-
-def _session(constrained: bool):
-    from pyspark.sql import SparkSession
-
-    from datafusion_comet_spark.session import DEFAULT_CONF, default_parallelism
-
-    cpus = default_parallelism()
-    b = SparkSession.builder.appName(
-        "dcs-spill-probe" + ("-tight" if constrained else "")
-    ).master(f"local[{cpus}]")
-    for k, v in DEFAULT_CONF.items():
-        b = b.config(k, v)
-    b = b.config("spark.sql.shuffle.partitions", str(cpus))
-    if constrained:
-        b = b.config("spark.driver.memory", os.environ.get("SPILL_MEM", "2g"))
-        b = b.config(
-            "spark.memory.fraction", os.environ.get("SPILL_FRACTION", "0.08")
-        )
-    else:
-        b = b.config("spark.driver.memory", "48g")
-    return b.getOrCreate()
 
 
 def _spill_since(spark, prev: tuple[int, int]) -> tuple[int, int, tuple[int, int]]:
@@ -111,9 +90,17 @@ def main() -> None:
         sys.exit(f"spill_probe: data dir not found: {sf_dir}")
 
     from datafusion_comet_spark.queries import load_all
+    from datafusion_comet_spark.session import get_session
+    from datafusion_comet_spark.testing import compare_rows_to_oracle, timings
 
     reg = load_all()
-    spark = _session(constrained=True)
+    spark = get_session(
+        app_name="dcs-spill-probe-tight",
+        extra_conf={
+            "spark.driver.memory": os.environ.get("SPILL_MEM", "2g"),
+            "spark.memory.fraction": os.environ.get("SPILL_FRACTION", "0.08"),
+        },
+    )
     heap = spark.sparkContext._jsc.sc().conf().get("spark.driver.memory")
     frac = spark.conf.get("spark.memory.fraction")
     print(f"# constrained session: driver.memory={heap} memory.fraction={frac}",
@@ -123,81 +110,55 @@ def main() -> None:
     reg["q1_pricing_summary"].fn(spark, sf_dir).collect()
 
     rows = []
-    cum = (0, 0)
+    n_checked = n_green = 0
     _, _, cum = _spill_since(spark, (0, 0))
     for name in QUERIES:
-        fn = reg[name].fn
-        t0 = time.perf_counter()
+        q = reg[name]
+        got = {}
+
+        def run():
+            got["df"] = q.fn(spark, sf_dir)
+            got["rows"] = got["df"].collect()
+
         try:
-            got = fn(spark, sf_dir).collect()
+            (dt,) = timings(spark, run, 1)
         except Exception as exc:  # record OOM/abort instead of dying
             rows.append({"query": name, "error": str(exc)[:200]})
             print(f"# {name}: FAILED {str(exc)[:120]}", file=sys.stderr)
             _, _, cum = _spill_since(spark, cum)
             continue
-        dt = time.perf_counter() - t0
         mem, disk, cum = _spill_since(spark, cum)
-        rows.append({
+        print(f"# {name}: {dt:.3f}s spill mem={mem/2**20:.1f}MB "
+              f"disk={disk/2**20:.1f}MB ({len(got['rows'])} rows)", file=sys.stderr)
+        r = {
             "query": name,
             "sec": round(dt, 3),
-            "rows": len(got),
+            "rows": len(got["rows"]),
             "spill_mem_mb": round(mem / 2**20, 1),
             "spill_disk_mb": round(disk / 2**20, 1),
-            "result": sorted(map(tuple, got), key=str),
-        })
-        print(f"# {name}: {dt:.3f}s spill mem={mem/2**20:.1f}MB "
-              f"disk={disk/2**20:.1f}MB ({len(got)} rows)", file=sys.stderr)
-
-    spark.stop()
-
-    # unconstrained comparison pass in the same process (new JVM is not
-    # possible in-process; driver.memory for THIS session was set at
-    # launch of the first context — so run the baseline as a subprocess
-    # only when invoked standalone; here we re-collect under the tight
-    # session is pointless, so the baseline comes from the caller's
-    # bench JSONs).  Correctness: compare against the DuckDB oracle
-    # instead — stronger than a same-engine re-run.
-    import duckdb
-
-    con = duckdb.connect()
-    for t in ("region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"):
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
-            )
-    n_checked = n_green = 0
-    for r in rows:
-        if "error" in r:
-            continue
-        oracle = reg[r["query"]].oracle
-        if oracle is None:
+        }
+        rows.append(r)
+        if q.oracle is None:
             r["oracle"] = "none"
             continue
-        if "VALUES" in oracle.split("FROM", 1)[-1][:40] or \
-                oracle.lstrip().startswith("-- generated"):
+        if "gen_values_oracles" in q.oracle:
             # VALUES-pin oracles encode captured outputs for the DRIVER
             # testdata; they are data-dependent and meaningless on
-            # generator data — rows-only here
+            # generator data
             r["oracle"] = "values-pin (driver-data only)"
             continue
-        want = sorted(map(tuple, con.execute(oracle).fetchall()), key=str)
-        got = r.pop("result")
-        ok = len(want) == len(got) and all(
-            str(a) == str(b) or _feq(a, b) for a, b in zip(got, want)
-        )
-        r["oracle"] = "green" if ok else "RED"
         n_checked += 1
-        n_green += ok
-        if not ok:
-            print(f"# {r['query']}: ORACLE MISMATCH under memory pressure!",
+        try:
+            compare_rows_to_oracle(got["df"].columns, got["rows"], q.oracle, sf_dir)
+        except AssertionError as exc:
+            r["oracle"] = "RED"
+            print(f"# {name}: ORACLE MISMATCH under memory pressure! {exc}",
                   file=sys.stderr)
-            print(f"#   got {got[:2]}", file=sys.stderr)
-            print(f"#   want {want[:2]}", file=sys.stderr)
-    for r in rows:
-        r.pop("result", None)
+            continue
+        r["oracle"] = "green"
+        n_green += 1
 
+    spark.stop()
     print(json.dumps({
         "metric": "spill_probe",
         "sf_dir": sf_dir,
@@ -206,18 +167,6 @@ def main() -> None:
         "oracles_green": f"{n_green}/{n_checked}",
         "queries": rows,
     }))
-
-
-def _feq(a: tuple, b: tuple, tol: float = 1e-9) -> bool:
-    if len(a) != len(b):
-        return False
-    for x, y in zip(a, b):
-        if isinstance(x, float) and isinstance(y, (int, float)):
-            if abs(x - y) > tol * max(1.0, abs(x), abs(y)):
-                return False
-        elif str(x) != str(y):
-            return False
-    return True
 
 
 if __name__ == "__main__":

@@ -17,8 +17,11 @@ not folklore:
   no_aqe    — adaptive execution off (static plans)
 
 Prints ONE JSON line: {"metric": "tuning_report", "variants":
-{name: {query: sec}}, "sf": N}.  All variants run in one JVM; every
-knob used is runtime-settable.
+{name: {query: sec, "total": sec}}, "rows_equal": {query: bool},
+"sf": N}.  All variants run in one JVM (every knob used is
+runtime-settable), interleaved per query by ``testing.ab``: min of
+SPARK_GRAFT_BENCH_ITERATIONS blocks, rows compared exactly across
+variants.
 """
 
 from __future__ import annotations
@@ -26,7 +29,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -56,43 +58,33 @@ ITERATIONS = int(os.environ.get("SPARK_GRAFT_BENCH_ITERATIONS", "3"))
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    try:
-        sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
-    except ValueError:
-        sf = -1.0
 
     from datafusion_comet_spark.queries import load_all
     from datafusion_comet_spark.session import get_session
+    from datafusion_comet_spark.testing import ab, scale_factor
 
     registry = load_all()
     spark = get_session(app_name="dcs-tuning-report")
-    registry[QUERIES[0]].fn(spark, sf_dir).collect()  # warm JVM
 
-    out: dict[str, dict[str, float]] = {}
-    for variant, conf in VARIANTS.items():
-        saved = {}
-        for k, v in conf.items():
-            saved[k] = spark.conf.get(k, None)
-            spark.conf.set(k, v)
-        per: dict[str, float] = {}
-        for name in QUERIES:
-            best = None
-            for _ in range(ITERATIONS):
-                t0 = time.perf_counter()
-                registry[name].fn(spark, sf_dir).collect()
-                el = time.perf_counter() - t0
-                best = el if best is None else min(best, el)
-            per[name] = round(best, 3)
+    out: dict[str, dict[str, float]] = {v: {} for v in VARIANTS}
+    rows_equal: dict[str, bool] = {}
+    for name in QUERIES:
+        best, rows_equal[name] = ab(
+            spark, lambda: registry[name].fn(spark, sf_dir), VARIANTS, ITERATIONS, 1
+        )
+        for variant, sec in best.items():
+            out[variant][name] = round(sec, 3)
+        print(f"# {name}: rows_equal={rows_equal[name]}", file=sys.stderr)
+    for variant, per in out.items():
         per["total"] = round(sum(per.values()), 3)
-        out[variant] = per
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
         print(f"# {variant}: {per['total']:.3f}s", file=sys.stderr)
 
-    print(json.dumps({"metric": "tuning_report", "variants": out, "sf": sf}))
+    print(json.dumps({
+        "metric": "tuning_report",
+        "variants": out,
+        "rows_equal": rows_equal,
+        "sf": scale_factor(sf_dir),
+    }))
     spark.stop()
 
 

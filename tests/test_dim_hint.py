@@ -25,22 +25,13 @@ from contextlib import contextmanager
 
 from datafusion_comet_spark.catalog import _TABLE_BYTES_CACHE, table_bytes
 from datafusion_comet_spark.queries import load_all
+from datafusion_comet_spark.testing import conf_override
 
 
-@contextmanager
-def _no_auto_broadcast(spark):
-    saved = {}
-    for k in (
-        "spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold",
-    ):
-        saved[k] = spark.conf.get(k)
-        spark.conf.set(k, "-1")
-    try:
-        yield
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
+_NO_AUTO_BROADCAST = {
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+}
 
 
 @contextmanager
@@ -68,7 +59,7 @@ def test_dim_hint_flips_with_table_size(spark, sf_dir):
     reg = load_all()
     q14 = reg["q14_promo_revenue"].fn
 
-    with _no_auto_broadcast(spark):
+    with conf_override(spark, _NO_AUTO_BROADCAST):
         # small regime: only the hint can broadcast, and it does
         plan_small = _final_plan(q14(spark, sf_dir))
         assert "BroadcastHashJoin" in plan_small, plan_small[:1500]
@@ -91,7 +82,8 @@ def test_dim_hint_results_identical_across_regimes(spark, sf_dir):
     for name in ("q14_promo_revenue", "q17_small_quantity"):
         fn = reg[name].fn
         base = fn(spark, sf_dir).collect()
-        with _no_auto_broadcast(spark), _forged_bytes(sf_dir, "part", 1 << 30):
+        with conf_override(spark, _NO_AUTO_BROADCAST), \
+             _forged_bytes(sf_dir, "part", 1 << 30):
             large = fn(spark, sf_dir).collect()
         assert base == large, (name, base[:3], large[:3])
 
@@ -102,7 +94,7 @@ def test_fixed_dims_always_hinted(spark, sf_dir):
     FIXED_SIZE_DIMS first)."""
     reg = load_all()
     q5 = reg["q5_local_supplier"].fn
-    with _no_auto_broadcast(spark), \
+    with conf_override(spark, _NO_AUTO_BROADCAST), \
          _forged_bytes(sf_dir, "nation", 1 << 30), \
          _forged_bytes(sf_dir, "region", 1 << 30):
         plan = _final_plan(q5(spark, sf_dir))

@@ -1,0 +1,137 @@
+"""The measurement harness in ``testing.py`` and the contracts built on it.
+
+``timings`` is the one wall-clock timer of bench.py and the dev/
+scripts, ``conf_override`` the one scoped conf change and ``ab`` the
+one interleaved conf A/B.  These tests pin what their callers rely on
+(no cache survives a run, confs come back even when the body raises,
+the A/B row check sees real differences and only those), bench.py's
+one-JSON-line stdout, and that no script grows its own timer again.
+"""
+
+from __future__ import annotations
+
+import glob
+import json
+import os
+import re
+import subprocess
+import sys
+
+import pytest
+
+from datafusion_comet_spark.queries import load_all
+from datafusion_comet_spark.testing import ab, conf_override, scale_factor, timings
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+import bench  # noqa: E402
+
+
+def _cached_entries(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
+def test_timings_clears_cache_after_every_run(spark):
+    spark.catalog.clearCache()
+    seen = []
+
+    def run():
+        spark.range(100).persist().count()
+        seen.append(_cached_entries(spark))
+
+    secs = timings(spark, run, 2)
+    assert len(secs) == 2 and all(s > 0 for s in secs)
+    # each run sees only its own entry: the first run's was cleared
+    assert seen == [1, 1]
+    assert _cached_entries(spark) == 0
+
+
+def test_timings_clears_cache_when_the_run_raises(spark):
+    spark.catalog.clearCache()
+
+    def run():
+        spark.range(100).persist().count()
+        assert _cached_entries(spark) == 1
+        raise RuntimeError("boom")
+
+    with pytest.raises(RuntimeError, match="boom"):
+        timings(spark, run, 3)
+    assert _cached_entries(spark) == 0
+
+
+def test_conf_override_restores_and_unsets_when_the_body_raises(spark):
+    set_key, unset_key = "spark.sql.shuffle.partitions", "spark.graft.harness_probe"
+    before = spark.conf.get(set_key)
+    assert spark.conf.get(unset_key, None) is None
+    inside = str(int(before) + 1)
+    with pytest.raises(RuntimeError, match="boom"):
+        with conf_override(spark, {set_key: inside, unset_key: "on"}):
+            assert spark.conf.get(set_key) == inside
+            assert spark.conf.get(unset_key) == "on"
+            raise RuntimeError("boom")
+    assert spark.conf.get(set_key) == before
+    assert spark.conf.get(unset_key, None) is None
+
+
+def test_ab_sees_rows_that_differ_between_arms(spark):
+    key = "spark.graft.ab_probe"
+    best, rows_equal = ab(
+        spark,
+        lambda: spark.sql(f"SELECT '${{{key}}}' AS v"),
+        {"a": {key: "a"}, "b": {key: "b"}},
+        blocks=2,
+        runs=1,
+    )
+    assert set(best) == {"a", "b"} and all(s > 0 for s in best.values())
+    assert rows_equal is False
+    assert spark.conf.get(key, None) is None
+
+
+def test_ab_plan_only_conf_keeps_rows_equal(spark, sf_dir):
+    q1 = load_all()["q1_pricing_summary"].fn
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    best, rows_equal = ab(
+        spark,
+        lambda: q1(spark, sf_dir),
+        {"1": {key: "1"}, "4": {key: "4"}},
+        blocks=1,
+        runs=1,
+    )
+    assert set(best) == {"1", "4"}
+    assert rows_equal is True
+    assert spark.conf.get(key) == before
+
+
+def test_bench_prints_one_json_line_in_bench_order(sf_dir):
+    env = dict(
+        os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_BENCH_ITERATIONS="1"
+    )
+    proc = subprocess.run(
+        [sys.executable, os.path.join(REPO, "bench.py")],
+        env=env, capture_output=True, text=True, timeout=1200, check=False,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    lines = proc.stdout.splitlines()
+    assert len(lines) == 1, proc.stdout
+    out = json.loads(lines[0])
+    assert list(out) == ["metric", "value", "unit", "queries", "sf"], out
+    assert (out["metric"], out["unit"]) == ("bench_total", "sec")
+    assert list(out["queries"]) == bench.bench_names(load_all())
+    assert out["value"] == round(sum(out["queries"].values()), 3)
+    assert out["sf"] == scale_factor(sf_dir)
+
+
+def test_bench_and_dev_scripts_have_no_timer_of_their_own():
+    timer = re.compile(r"perf_counter|time\.time\(|monotonic")
+    paths = [os.path.join(REPO, "bench.py")]
+    paths += sorted(glob.glob(os.path.join(REPO, "dev", "*.py")))
+    hits = []
+    for p in paths:
+        with open(p) as f:
+            hits += [
+                f"{os.path.relpath(p, REPO)}:{i}: {line.strip()}"
+                for i, line in enumerate(f, 1)
+                if timer.search(line)
+            ]
+    assert not hits, "time through testing.timings instead:\n" + "\n".join(hits)

@@ -26,6 +26,7 @@ from datafusion_comet_spark.queries import load_all
 from datafusion_comet_spark.testing import (
     beyond_pinned_regime as _beyond_pinned_regime,
 )
+from datafusion_comet_spark.testing import conf_override
 from datafusion_comet_spark.testing import scale_regime as _scale_regime
 
 
@@ -156,7 +157,6 @@ def test_runtime_bloom_filter_injects_on_selective_join(spark, sf_dir):
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    saved = {k: spark.conf.get(k, None) for k in confs}
 
     def build():
         part = spark.read.parquet(f"{sf_dir}/part.parquet").filter(
@@ -171,20 +171,12 @@ def test_runtime_bloom_filter_injects_on_selective_join(spark, sf_dir):
         )
 
     baseline = build().collect()
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with conf_override(spark, confs):
         df = build()
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "bloom_filter_agg" in plan and "might_contain" in plan
         assert "ObjectHashAggregate" in plan
         assert df.collect() == baseline
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_bucketed_join_has_no_exchange_below_join(spark, sf_dir):
@@ -414,29 +406,16 @@ def test_aqe_splits_skewed_join_partition(spark, sf_dir):
     fix for the ones nobody predicted.  Thresholds are lowered here
     because the condition is physical partition BYTES, not row ratios
     — the 2 MB test partition must register as 'skewed'."""
-    conf = spark.conf
-    saved = {
-        k: conf.get(k)
-        for k in (
-            "spark.sql.adaptive.skewJoin.enabled",
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-            "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.autoBroadcastJoinThreshold",
-        )
-    }
-    try:
-        conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-        conf.set(
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-            "64KB",
-        )
-        conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1")
-        conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32KB")
+    skew_conf = {
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "64KB",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "1",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "32KB",
         # force a sort-merge join: skew split applies to shuffled joins
-        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+    }
+    with conf_override(spark, skew_conf):
         fact = (
             spark.range(0, 120_000)
             .select(
@@ -463,12 +442,6 @@ def test_aqe_splits_skewed_join_partition(spark, sf_dir):
         )
         joined.collect()  # materialize so AQE finalizes the plan
         assert skew_split_joins(joined), "AQE did not split the skewed join"
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                conf.unset(k)
-            else:
-                conf.set(k, v)
 
 
 def test_python_datasource_pushdown_prunes_partitions(spark, sf_dir):

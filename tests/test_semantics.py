@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from datafusion_comet_spark.plans import walk_plan
 from datafusion_comet_spark.queries import load_all
+from datafusion_comet_spark.testing import conf_override
 
 REGISTRY = load_all()
 
@@ -633,11 +634,10 @@ def test_dynamic_partition_pruning_on_partitioned_write(spark, sf_dir):
         "o_orderstatus string, label string",
     ).write.mode("overwrite").parquet(dim_path)
     dim = spark.read.parquet(dim_path).filter(F.col("label") == "finished")
-    saved = spark.conf.get("spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio", None)
-    spark.conf.set(
-        "spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio", "10000"
-    )
-    try:
+    with conf_override(
+        spark,
+        {"spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio": "10000"},
+    ):
         joined = fact.join(F.broadcast(dim), "o_orderstatus").groupBy(
             "label"
         ).count()
@@ -650,16 +650,6 @@ def test_dynamic_partition_pruning_on_partitioned_write(spark, sf_dir):
             .count()
         )
         assert rows == {"finished": expected}
-    finally:
-        if saved is None:
-            spark.conf.unset(
-                "spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio"
-            )
-        else:
-            spark.conf.set(
-                "spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio",
-                saved,
-            )
 
 
 def test_ivf_multiprobe_recall_dominates_single_probe(spark, sf_dir):
@@ -958,20 +948,13 @@ def test_ignore_corrupt_files_skips_bad_parquet(spark, sf_dir, tmp_path):
         type(ei.value)
     )
 
-    saved = spark.conf.get("spark.sql.files.ignoreCorruptFiles", None)
-    try:
-        spark.conf.set("spark.sql.files.ignoreCorruptFiles", "true")
+    with conf_override(spark, {"spark.sql.files.ignoreCorruptFiles": "true"}):
         n = (
             spark.read.schema("r_regionkey BIGINT, r_name STRING")
             .parquet(str(d))
             .count()
         )
         assert n == good_rows
-    finally:
-        if saved is None:
-            spark.conf.unset("spark.sql.files.ignoreCorruptFiles")
-        else:
-            spark.conf.set("spark.sql.files.ignoreCorruptFiles", saved)
 
 
 def test_random_projection_ann_distances_and_recall(spark, sf_dir):
@@ -1094,14 +1077,8 @@ def test_rocksdb_state_store_provider_matches_default(spark, sf_dir):
     }
 
     def run_stream(provider: str | None):
-        saved = spark.conf.get(
-            "spark.sql.streaming.stateStore.providerClass", None
-        )
-        if provider:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", provider
-            )
-        try:
+        key = "spark.sql.streaming.stateStore.providerClass"
+        with conf_override(spark, {key: provider} if provider else {}):
             stream = (
                 spark.readStream.schema(ev.schema)
                 .format("parquet")
@@ -1129,17 +1106,6 @@ def test_rocksdb_state_store_provider_matches_default(spark, sf_dir):
             return {
                 (r["w"], r["n"]) for r in spark.table(name).collect()
             }
-        finally:
-            if provider:
-                if saved is None:
-                    spark.conf.unset(
-                        "spark.sql.streaming.stateStore.providerClass"
-                    )
-                else:
-                    spark.conf.set(
-                        "spark.sql.streaming.stateStore.providerClass",
-                        saved,
-                    )
 
     rocks = run_stream(
         "org.apache.spark.sql.execution.streaming.state."

@@ -19,30 +19,10 @@ and advisoryPartitionSizeInBytes scale together (the former must stay
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import functions as F
 
 from datafusion_comet_spark.plans import skew_split_joins
-
-
-@contextmanager
-def _conf(spark, settings: dict[str, str]):
-    saved = {}
-    for k, v in settings.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+from datafusion_comet_spark.testing import conf_override
 
 
 def test_aqe_splits_skewed_join_partition(spark):
@@ -69,7 +49,7 @@ def test_aqe_splits_skewed_join_partition(spark):
         # keep AQE from coalescing everything into one partition first
         "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
     }
-    with _conf(spark, settings):
+    with conf_override(spark, settings):
         # Aggregate ON the join output and read THAT DataFrame's own
         # executed plan: df.count() executes a different QueryExecution,
         # whose AQE final plan this test would never see.  min(lpad/rpad)

@@ -45,6 +45,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 from datafusion_comet_spark.catalog import _TABLE_BYTES_CACHE
 from datafusion_comet_spark.plans import skew_split_joins, walk_plan
 from datafusion_comet_spark.queries import load_all
+from datafusion_comet_spark.testing import conf_override
 
 SKEW_SF = 0.5
 SKEW_S = 1.2
@@ -77,25 +78,6 @@ def skew_dir():
     finally:
         gsd.SKEW = None
     return out
-
-
-@contextmanager
-def _conf(spark, settings: dict[str, str]):
-    saved = {}
-    for k, v in settings.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 # the same byte regime test_skew_aqe.py uses (1 MB thresholds on a
@@ -166,12 +148,12 @@ def test_custkey_zipf_join_is_split_and_correct(spark, skew_dir):
     reg = load_all()
     fn = reg["tpcds_net_after_returns"].fn
     with _forged_bytes(skew_dir, "customer", 1 << 30):
-        with _conf(spark, _SKEW_CONF):
+        with conf_override(spark, _SKEW_CONF):
             joins, n_split = _executed_joins(fn(spark, skew_dir))
         assert "SortMergeJoinExec" in joins, joins
         # partitioning-reuse suppression: no split without force
         assert n_split == 0, joins
-        with _conf(
+        with conf_override(
             spark,
             {**_SKEW_CONF, "spark.sql.adaptive.forceOptimizeSkewedJoin": "true"},
         ):
@@ -179,7 +161,7 @@ def test_custkey_zipf_join_is_split_and_correct(spark, skew_dir):
             _, n_split = _executed_joins(df)
             split_rows = df.collect()
         assert n_split, "AQE did not split the Zipf custkey join under force"
-        with _conf(
+        with conf_override(
             spark, {**_SKEW_CONF, "spark.sql.adaptive.skewJoin.enabled": "false"}
         ):
             unsplit_rows = fn(spark, skew_dir).collect()
@@ -198,13 +180,13 @@ def test_partkey_zipf_join_is_split_and_correct(spark, skew_dir):
     reg = load_all()
     fn = reg["tpcds_above_avg_discount"].fn
     with _forged_bytes(skew_dir, "part", 1 << 30):
-        with _conf(spark, _SKEW_CONF):
+        with conf_override(spark, _SKEW_CONF):
             df = fn(spark, skew_dir)
             joins, n_split = _executed_joins(df)
             split_rows = df.collect()
         assert joins, "no shuffled join in the executed plan"
         assert n_split, "AQE did not split the Zipf partkey join"
-        with _conf(
+        with conf_override(
             spark, {**_SKEW_CONF, "spark.sql.adaptive.skewJoin.enabled": "false"}
         ):
             unsplit_rows = fn(spark, skew_dir).collect()
