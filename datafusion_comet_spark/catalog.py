@@ -38,6 +38,20 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def parquet_files(sf_dir: str, name: str) -> list[str]:
+    """The parquet file of a table, or every ``*.parquet`` part under a
+    directory-shaped one."""
+    path = table_path(sf_dir, name)
+    if not os.path.isdir(path):
+        return [path]
+    return [
+        os.path.join(root, f)
+        for root, _dirs, files in os.walk(path)
+        for f in files
+        if f.endswith(".parquet")
+    ]
+
+
 def parquet_num_rows(sf_dir: str, name: str) -> int:
     """Exact table row count from Parquet FOOTER metadata — no scan.
 
@@ -49,15 +63,9 @@ def parquet_num_rows(sf_dir: str, name: str) -> int:
     """
     import pyarrow.parquet as pq
 
-    path = table_path(sf_dir, name)
-    if os.path.isdir(path):
-        return sum(
-            pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-            for root, _dirs, files in os.walk(path)
-            for f in files
-            if f.endswith(".parquet")
-        )
-    return pq.ParquetFile(path).metadata.num_rows
+    return sum(
+        pq.ParquetFile(f).metadata.num_rows for f in parquet_files(sf_dir, name)
+    )
 
 
 _TABLE_ROW_GROUPS_CACHE: dict[tuple[str, str], int] = {}
@@ -73,21 +81,12 @@ def parquet_row_groups(sf_dir: str, name: str) -> int:
     import pyarrow.parquet as pq
 
     key = (sf_dir, name)
-    cached = _TABLE_ROW_GROUPS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    path = table_path(sf_dir, name)
-    if os.path.isdir(path):
-        n = sum(
-            pq.ParquetFile(os.path.join(root, f)).metadata.num_row_groups
-            for root, _dirs, files in os.walk(path)
-            for f in files
-            if f.endswith(".parquet")
+    if key not in _TABLE_ROW_GROUPS_CACHE:
+        _TABLE_ROW_GROUPS_CACHE[key] = sum(
+            pq.ParquetFile(f).metadata.num_row_groups
+            for f in parquet_files(sf_dir, name)
         )
-    else:
-        n = pq.ParquetFile(path).metadata.num_row_groups
-    _TABLE_ROW_GROUPS_CACHE[key] = n
-    return n
+    return _TABLE_ROW_GROUPS_CACHE[key]
 
 
 _TABLE_BYTES_CACHE: dict[tuple[str, str], int] = {}
@@ -96,25 +95,15 @@ _TABLE_BYTES_CACHE: dict[tuple[str, str], int] = {}
 def table_bytes(sf_dir: str, name: str) -> int:
     """On-disk size of a table (file or directory-shaped) — a pure
     filesystem-metadata operation, cached per (sf_dir, table).  Used by
-    the size-aware broadcast-hint policy (queries/_shared._dim_hint)
-    and mirrors testing.lineitem_bytes, which keys the plan-regime bit.
-    """
+    the size-aware broadcast-hint policy (queries/_shared._dim_hint);
+    testing.lineitem_bytes, which keys the plan-regime bit, is the
+    same sum uncached."""
     key = (sf_dir, name)
-    cached = _TABLE_BYTES_CACHE.get(key)
-    if cached is not None:
-        return cached
-    p = table_path(sf_dir, name)
-    if os.path.isdir(p):
-        n = sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _dirs, files in os.walk(p)
-            for f in files
-            if f.endswith(".parquet")
+    if key not in _TABLE_BYTES_CACHE:
+        _TABLE_BYTES_CACHE[key] = sum(
+            os.path.getsize(f) for f in parquet_files(sf_dir, name)
         )
-    else:
-        n = os.path.getsize(p)
-    _TABLE_BYTES_CACHE[key] = n
-    return n
+    return _TABLE_BYTES_CACHE[key]
 
 
 # (applicationId, sf_dir, name) -> DataFrame.  The star-schema dirs are

@@ -6,21 +6,24 @@ spark/src/test/scala/org/apache/spark/sql/CometTestBase.scala:225-268)
 and commits approved plans per query in its plan-stability suite
 (test/.../CometPlanStabilitySuite.scala:78-125).  Every plan count and
 lookup here walks Spark's own physical plan over py4j (``walk_plan``),
-scalar subqueries and cached sub-plans included; only ``plan_string``
-and ``operators_in_plan`` render text (``Engine.explain``, the goldens).
+scalar subqueries and cached sub-plans included.  ``operators_in_plan``
+labels the same walk for the plan goldens (one label per node), and
+only ``plan_string`` renders explain text (``Engine.explain``, and
+tests that read expressions or scan metadata).
 """
 
 from __future__ import annotations
 
-import re
 from collections.abc import Iterator
 
 from pyspark import SparkContext
 from pyspark.sql import DataFrame
 
-_OP_LINE = re.compile(r"^\s*(?:[+:*!\-(\d)\s]*)([A-Za-z][A-Za-z0-9]+)")
-
 _REUSED = frozenset({"ReusedExchangeExec", "ReusedSubqueryExec"})
+
+_SHUFFLES = frozenset(
+    {"ShuffleExchangeExec HashPartitioning", "ShuffleExchangeExec RangePartitioning"}
+)
 
 
 def plan_string(df: DataFrame, mode: str = "formatted") -> str:
@@ -29,17 +32,6 @@ def plan_string(df: DataFrame, mode: str = "formatted") -> str:
     jvm = df.sparkSession._jvm
     jmode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
     return qe.explainString(jmode)
-
-
-def operators_in_plan(df: DataFrame) -> list[str]:
-    """Physical operator names appearing in the simple plan, in order."""
-    text = plan_string(df, "simple")
-    ops = []
-    for line in text.splitlines():
-        m = _OP_LINE.match(line)
-        if m:
-            ops.append(m.group(1))
-    return ops
 
 
 def walk_plan(plan) -> Iterator[tuple[str, object]]:
@@ -74,9 +66,25 @@ def walk_plan(plan) -> Iterator[tuple[str, object]]:
             if key not in seen_cached:
                 seen_cached.add(key)
                 stack.append(cached)
+        # pushed last-first, so the walk is pre-order: each node, then
+        # its children left to right, its subqueries, its cached plan
         for seq in (node.subqueries(), node.children()):
-            for i in range(seq.size()):
+            for i in reversed(range(seq.size())):
                 stack.append(seq.apply(i))
+
+
+def operators_in_plan(df: DataFrame) -> list[str]:
+    """One label per node of ``walk_plan(df)``, in walk order: the
+    class simple name, and for a ``ShuffleExchangeExec`` also its
+    partitioning class (``ShuffleExchangeExec HashPartitioning``).
+    The plan goldens are these lists."""
+    ops = []
+    for cls, node in walk_plan(df):
+        if cls == "ShuffleExchangeExec":
+            part = node.outputPartitioning().getClass().getSimpleName()
+            cls = f"{cls} {part.rstrip('$')}"
+        ops.append(cls)
+    return ops
 
 
 def scan_table(scan) -> str:
@@ -99,13 +107,7 @@ def pushed_filters(df: DataFrame) -> list[str]:
 def shuffle_count(df: DataFrame) -> int:
     """Number of hash/range shuffle exchanges in the plan — the scale
     metric to minimize."""
-    return sum(
-        1
-        for cls, node in walk_plan(df)
-        if cls == "ShuffleExchangeExec"
-        and node.outputPartitioning().getClass().getSimpleName()
-        in ("HashPartitioning", "RangePartitioning")
-    )
+    return sum(1 for op in operators_in_plan(df) if op in _SHUFFLES)
 
 
 def broadcast_join_count(df: DataFrame) -> int:

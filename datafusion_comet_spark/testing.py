@@ -10,6 +10,8 @@ Measurement: ``timings`` is the one wall-clock timer of bench.py and
 the dev/ scripts (the reference's single benchmarks/tpc/tpcbench.py
 methodology), ``conf_override`` the one scoped conf change, and ``ab``
 the one interleaved same-process conf A/B with an exact row check.
+``forged_sizes`` is the one scoped change of the catalog's cached
+table sizes.
 """
 
 from __future__ import annotations
@@ -24,7 +26,14 @@ from typing import Any
 
 import duckdb
 
-from .catalog import TABLES, table_path
+from .catalog import (
+    _TABLE_BYTES_CACHE,
+    _TABLE_ROW_GROUPS_CACHE,
+    FIXED_SIZE_DIMS,
+    TABLES,
+    parquet_files,
+    table_path,
+)
 
 
 def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -195,16 +204,39 @@ def ab(
     return best, all(m == multisets[0] for m in multisets)
 
 
+@contextmanager
+def forged_sizes(
+    sf_dir: str,
+    table_bytes: dict[str, int] | None = None,
+    row_groups: dict[str, int] | None = None,
+):
+    """For the body, ``catalog.table_bytes`` / ``parquet_row_groups``
+    answer the forged value of each named table of ``sf_dir``.  On
+    exit, exception included, each cache entry is restored, or removed
+    if it was absent."""
+    forged = [
+        (_TABLE_BYTES_CACHE, table_bytes or {}),
+        (_TABLE_ROW_GROUPS_CACHE, row_groups or {}),
+    ]
+    saved = [(c, {t: c.get((sf_dir, t)) for t in vals}) for c, vals in forged]
+    try:
+        for cache, vals in forged:
+            cache.update({(sf_dir, t): v for t, v in vals.items()})
+        yield
+    finally:
+        for cache, old in saved:
+            for t, v in old.items():
+                if v is None:
+                    cache.pop((sf_dir, t), None)
+                else:
+                    cache[(sf_dir, t)] = v
+
+
 def lineitem_bytes(sf_dir: str) -> int:
-    """On-disk size of the lineitem table (file or directory-shaped)."""
-    p = table_path(sf_dir, "lineitem")
-    if os.path.isdir(p):
-        return sum(
-            os.path.getsize(os.path.join(p, f))
-            for f in os.listdir(p)
-            if f.endswith(".parquet")
-        )
-    return os.path.getsize(p)
+    """On-disk size of the lineitem table (file or directory-shaped).
+    Uncached, unlike ``catalog.table_bytes``: the sizes
+    ``asymptotic_mode`` forges never flip ``scale_regime``."""
+    return sum(os.path.getsize(f) for f in parquet_files(sf_dir, "lineitem"))
 
 
 # Exact plan expectations are pinned for TWO regime windows; beyond
@@ -258,29 +290,15 @@ def asymptotic_mode(spark, sf_dir: str):
     stage at execution; the static plan pinned here is the strategy
     Catalyst commits to before those runtime stats exist.
     """
-    from .catalog import (
-        _TABLE_BYTES_CACHE,
-        _TABLE_ROW_GROUPS_CACHE,
-        FIXED_SIZE_DIMS,
-        TABLES,
-    )
-
     scaling = [t for t in TABLES if t not in FIXED_SIZE_DIMS]
     # 100 TB layouts carry far more row groups than any cluster has
     # cores, so the scan-starvation rebalance (_spread_scan) must be a
     # no-op in the asymptotic plans
-    forged = [(_TABLE_BYTES_CACHE, 1 << 40), (_TABLE_ROW_GROUPS_CACHE, 1 << 20)]
-    saved = [(c, {t: c.get((sf_dir, t)) for t in scaling}) for c, _ in forged]
-    with conf_override(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
-        try:
-            for cache, value in forged:
-                for t in scaling:
-                    cache[(sf_dir, t)] = value
-            yield
-        finally:
-            for cache, old in saved:
-                for t, v in old.items():
-                    if v is None:
-                        cache.pop((sf_dir, t), None)
-                    else:
-                        cache[(sf_dir, t)] = v
+    with conf_override(
+        spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}
+    ), forged_sizes(
+        sf_dir,
+        table_bytes=dict.fromkeys(scaling, 1 << 40),
+        row_groups=dict.fromkeys(scaling, 1 << 20),
+    ):
+        yield

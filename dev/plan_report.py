@@ -4,9 +4,10 @@
 The reference proves operator coverage by asserting which Comet operators
 served each query (checkSparkAnswerAndOperator) and by committing approved
 plans (CometPlanStabilitySuite).  This report is the inventory-wide rollup:
-for every registered (non-streaming) query, extract the physical operator
-names from the executed plan and aggregate — which Spark operators the
-engine exercises, and how many queries hit each.
+for every registered (non-streaming) query, label the nodes of its physical
+plan with ``plans.operators_in_plan`` (the labels the goldens hold) and
+aggregate — which Spark operators the engine exercises, and how many
+queries hit each.
 
 Run: python dev/plan_report.py   (rewrites PLANS.md at the repo root)
 """
@@ -53,10 +54,12 @@ def main() -> None:
         "Generated by `dev/plan_report.py` (rerun after adding queries).",
         f"Spark physical operators appearing across the {n_queries}",
         "non-streaming registered queries, with how many queries exercise",
-        "each.  The streaming queries execute through the incremental",
-        "planner and are excluded here; their operator assertions live in",
-        "`tests/` directly.  Per-query approved operator sequences are the",
-        "plan-stability goldens (`tests/goldens/plans/`).",
+        "each.  Labels are `plans.operators_in_plan`'s: the walked plan's",
+        "class names, shuffles with their partitioning, subqueries and",
+        "cached plans included.  The streaming queries execute through the",
+        "incremental planner and are excluded here; their operator",
+        "assertions live in `tests/` directly.  Per-query approved label",
+        "sequences are the plan-stability goldens (`tests/goldens/plans/`).",
         "",
         "| Physical operator | queries | examples |",
         "|---|---|---|",

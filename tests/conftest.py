@@ -27,3 +27,34 @@ def sf_dir() -> str:
 @pytest.fixture(scope="session")
 def oracle_sf_dir() -> str:
     return SF_DIR_ORACLE
+
+
+GOLDEN_DIR = os.path.join(os.path.dirname(__file__), "goldens", "plans")
+REGEN_GOLDENS = os.environ.get("SPARK_GRAFT_REGEN_GOLDENS") == "1"
+
+
+def assert_matches_golden(ops: list[str], filename: str) -> None:
+    """Assert ``ops`` equals the committed golden ``filename`` (one
+    label per line) under ``GOLDEN_DIR``.
+
+    With SPARK_GRAFT_REGEN_GOLDENS=1 the golden is rewritten and the
+    test skips.  A missing golden fails: creating it here would compare
+    the plan against itself."""
+    path = os.path.join(GOLDEN_DIR, filename)
+    if REGEN_GOLDENS:
+        with open(path, "w") as f:
+            f.write("\n".join(ops) + "\n")
+        pytest.skip(f"golden regenerated: {path}")
+    if not os.path.exists(path):
+        pytest.fail(
+            f"no committed golden at {path}; generate one with "
+            "SPARK_GRAFT_REGEN_GOLDENS=1 and commit it"
+        )
+    with open(path) as f:
+        golden = f.read().splitlines()
+    assert ops == golden, (
+        f"physical plan shape changed ({filename}):\n"
+        f"  golden : {golden}\n"
+        f"  current: {ops}\n"
+        "If intentional, regenerate with SPARK_GRAFT_REGEN_GOLDENS=1."
+    )

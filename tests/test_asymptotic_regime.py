@@ -43,6 +43,7 @@ import os
 import re
 
 import pytest
+from conftest import GOLDEN_DIR, assert_matches_golden
 
 from datafusion_comet_spark.catalog import FIXED_SIZE_DIMS
 from datafusion_comet_spark.plans.introspect import (
@@ -53,8 +54,6 @@ from datafusion_comet_spark.queries import load_all
 from datafusion_comet_spark.testing import asymptotic_mode
 
 REGISTRY = load_all()
-GOLDEN_DIR = os.path.join(os.path.dirname(__file__), "goldens", "plans")
-REGEN = os.environ.get("SPARK_GRAFT_REGEN_GOLDENS") == "1"
 
 # The headline set: every TPC-H shape, the bench family, and the
 # scale-critical pipeline/ANN/dedup/retrieval queries whose asymptotic
@@ -154,7 +153,9 @@ def test_asymptotic_policy():
         assert len(reason) >= 40, f"opt-out {name!r} needs a real reason"
     # and every pinned name has its golden committed
     missing_goldens = [
-        n for n in ASYMPTOTIC_PINNED if not os.path.exists(_golden_path(n))
+        n
+        for n in ASYMPTOTIC_PINNED
+        if not os.path.exists(os.path.join(GOLDEN_DIR, f"{n}.asymptotic.txt"))
     ]
     assert not missing_goldens, (
         f"pinned without committed goldens: {missing_goldens}; "
@@ -162,35 +163,12 @@ def test_asymptotic_policy():
     )
 
 
-def _golden_path(name: str) -> str:
-    return os.path.join(GOLDEN_DIR, f"{name}.asymptotic.txt")
-
-
 @pytest.mark.parametrize("name", ASYMPTOTIC_PINNED)
 def test_asymptotic_plan_golden(spark, sf_dir, name):
-    spark.catalog.clearCache()  # see test_tpcds_exchange_budgets
+    spark.catalog.clearCache()  # see test_plan_stability
     with asymptotic_mode(spark, sf_dir):
-        df = REGISTRY[name].fn(spark, sf_dir)
-        ops = operators_in_plan(df)
-    path = _golden_path(name)
-    if REGEN:
-        os.makedirs(GOLDEN_DIR, exist_ok=True)
-        with open(path, "w") as f:
-            f.write("\n".join(ops) + "\n")
-        pytest.skip(f"golden regenerated: {path}")
-    if not os.path.exists(path):
-        pytest.fail(
-            f"no committed asymptotic golden for {name!r} at {path}; "
-            "generate one with SPARK_GRAFT_REGEN_GOLDENS=1 and commit it"
-        )
-    with open(path) as f:
-        golden = f.read().splitlines()
-    assert ops == golden, (
-        f"asymptotic (100 TB regime) plan shape changed for {name!r}:\n"
-        f"  golden : {golden}\n"
-        f"  current: {ops}\n"
-        "If intentional, regenerate with SPARK_GRAFT_REGEN_GOLDENS=1."
-    )
+        ops = operators_in_plan(REGISTRY[name].fn(spark, sf_dir))
+    assert_matches_golden(ops, f"{name}.asymptotic.txt")
 
 
 # The broadcast CONTRACT at the asymptote: which scaling-table scans

@@ -21,11 +21,10 @@ source of a broadcast join:
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
-from datafusion_comet_spark.catalog import _TABLE_BYTES_CACHE, table_bytes
+from datafusion_comet_spark.catalog import table_bytes
+from datafusion_comet_spark.plans import operators_in_plan
 from datafusion_comet_spark.queries import load_all
-from datafusion_comet_spark.testing import conf_override
+from datafusion_comet_spark.testing import conf_override, forged_sizes
 
 
 _NO_AUTO_BROADCAST = {
@@ -34,23 +33,9 @@ _NO_AUTO_BROADCAST = {
 }
 
 
-@contextmanager
-def _forged_bytes(sf_dir: str, name: str, nbytes: int):
-    key = (sf_dir, name)
-    saved = _TABLE_BYTES_CACHE.get(key)
-    _TABLE_BYTES_CACHE[key] = nbytes
-    try:
-        yield
-    finally:
-        if saved is None:
-            _TABLE_BYTES_CACHE.pop(key, None)
-        else:
-            _TABLE_BYTES_CACHE[key] = saved
-
-
-def _final_plan(df) -> str:
+def _final_ops(df) -> list[str]:
     df.collect()
-    return df._jdf.queryExecution().executedPlan().toString()
+    return operators_in_plan(df)
 
 
 def test_dim_hint_flips_with_table_size(spark, sf_dir):
@@ -61,18 +46,18 @@ def test_dim_hint_flips_with_table_size(spark, sf_dir):
 
     with conf_override(spark, _NO_AUTO_BROADCAST):
         # small regime: only the hint can broadcast, and it does
-        plan_small = _final_plan(q14(spark, sf_dir))
-        assert "BroadcastHashJoin" in plan_small, plan_small[:1500]
+        ops_small = _final_ops(q14(spark, sf_dir))
+        assert "BroadcastHashJoinExec" in ops_small, ops_small
 
         # forged 1 GB part: the hint is withheld; with auto-broadcast
         # off the join must fall back to a shuffle strategy
-        with _forged_bytes(sf_dir, "part", 1 << 30):
-            plan_large = _final_plan(q14(spark, sf_dir))
-            assert "BroadcastHashJoin" not in plan_large, plan_large[:1500]
+        with forged_sizes(sf_dir, table_bytes={"part": 1 << 30}):
+            ops_large = _final_ops(q14(spark, sf_dir))
+            assert "BroadcastHashJoinExec" not in ops_large, ops_large
             assert (
-                "SortMergeJoin" in plan_large
-                or "ShuffledHashJoin" in plan_large
-            ), plan_large[:1500]
+                "SortMergeJoinExec" in ops_large
+                or "ShuffledHashJoinExec" in ops_large
+            ), ops_large
 
 
 def test_dim_hint_results_identical_across_regimes(spark, sf_dir):
@@ -83,7 +68,7 @@ def test_dim_hint_results_identical_across_regimes(spark, sf_dir):
         fn = reg[name].fn
         base = fn(spark, sf_dir).collect()
         with conf_override(spark, _NO_AUTO_BROADCAST), \
-             _forged_bytes(sf_dir, "part", 1 << 30):
+             forged_sizes(sf_dir, table_bytes={"part": 1 << 30}):
             large = fn(spark, sf_dir).collect()
         assert base == large, (name, base[:3], large[:3])
 
@@ -94,11 +79,11 @@ def test_fixed_dims_always_hinted(spark, sf_dir):
     FIXED_SIZE_DIMS first)."""
     reg = load_all()
     q5 = reg["q5_local_supplier"].fn
-    with conf_override(spark, _NO_AUTO_BROADCAST), \
-         _forged_bytes(sf_dir, "nation", 1 << 30), \
-         _forged_bytes(sf_dir, "region", 1 << 30):
-        plan = _final_plan(q5(spark, sf_dir))
-    assert "BroadcastHashJoin" in plan, plan[:1500]
+    with conf_override(spark, _NO_AUTO_BROADCAST), forged_sizes(
+        sf_dir, table_bytes={"nation": 1 << 30, "region": 1 << 30}
+    ):
+        ops = _final_ops(q5(spark, sf_dir))
+    assert "BroadcastHashJoinExec" in ops, ops
 
 
 def test_table_bytes_is_positive_and_cached(sf_dir):

@@ -8,25 +8,44 @@ contract, not an accident — a regression that swaps a broadcast join
 for a shuffled one, or drops TakeOrderedAndProject for a global sort,
 changes no rows at test scale but is a cliff at 100 TB.
 
-Goldens store the ordered physical operator-name sequence (names only,
-as `plans.introspect` extracts them — formatting and expression ids
-vary across Spark versions, operator sequences don't).  Regenerate
-after an intentional plan change with:
+Goldens store ``plans.operators_in_plan``: one label per node of the
+walked physical plan (scalar subqueries and cached sub-plans
+included), with each shuffle's partitioning — formatting and
+expression ids vary across Spark versions, operator sequences don't.
+A query's hash/range shuffle count is the number of
+``ShuffleExchangeExec HashPartitioning`` / ``RangePartitioning`` lines
+in its golden.  Regenerate after an intentional plan change with:
 
     SPARK_GRAFT_REGEN_GOLDENS=1 python -m pytest tests/test_plan_stability.py
+
+A golden is the STATIC plan, built from a clean cache.  What it cannot
+show, per query:
+
+- q11_important_stock / q15_top_supplier: the per-part (per-supplier)
+  aggregate's hash exchange appears in both the detail branch and the
+  1-row re-aggregation; ReuseExchange collapses the two to ONE physical
+  fact exchange at runtime (test_plans.test_q11_threshold_reuses_fact_exchange).
+- tpcds_date_intersect_returns: the INTERSECT legs repeat the orders
+  aggregate statically; at runtime AQE reuse leaves one orders pass
+  (test_plans.test_date_intersect_returns_single_orders_pass).
+- tpcds_return_ratio_rank: the persisted candidate aggregate's plan is
+  listed once, however many InMemoryTableScans read it.
+- tpcds_cross_channel_rollup: round 11 dropped it from 4 to 3 shuffles
+  when the 2-channel key set's count_distinct became summed
+  max(status == ch) presence bits, removing the (partkey, status)-keyed
+  distinct level and its exchange.
 """
 
 from __future__ import annotations
 
-import os
-
 import pytest
+from conftest import assert_matches_golden
 
 from datafusion_comet_spark.plans import operators_in_plan
 from datafusion_comet_spark.queries import load_all
+from datafusion_comet_spark.testing import beyond_pinned_regime, scale_regime
 
 REGISTRY = load_all()
-GOLDEN_DIR = os.path.join(os.path.dirname(__file__), "goldens", "plans")
 
 # Queries whose plan shape is pinned: the TPC-H headliners exercising
 # each join/agg strategy plus the scale-critical pipeline operators.
@@ -108,10 +127,9 @@ PINNED += sorted(
 # Round 8: extend the same discipline to EVERY statically-plannable
 # registry query — the round-8 rotation made the last of them
 # driver-proven, and their plan shapes are part of that claim.  The
-# exclusions mirror the exchange-budget map's: streaming queries run
-# a full availableNow execution on construction and sources write
-# files on construction, so their "plan" is a post-hoc artifact, not
-# a stable pre-execution contract.
+# exclusions: streaming queries run a full availableNow execution on
+# construction and sources write files on construction, so their
+# "plan" is a post-hoc artifact, not a stable pre-execution contract.
 _EXCLUDED_MODULES = {"sources", "streaming", "streaming_fast"}
 PINNED += sorted(
     n
@@ -120,15 +138,17 @@ PINNED += sorted(
     and q.fn.__module__.rsplit(".", 1)[-1] not in _EXCLUDED_MODULES
 )
 
-REGEN = os.environ.get("SPARK_GRAFT_REGEN_GOLDENS") == "1"
-
 # Queries whose plan LEGITIMATELY changes in the large-scale regime
 # (broadcast->shuffle flips once lineitem's pruned-size estimate
 # crosses the 32 MB static threshold — the correct adaptive behavior
-# at scale; see test_plans.TPCH_EXCHANGE_BUDGET_LARGE).  These carry a
-# SECOND golden, `<name>.large.txt`, pinned at dev/gen_scale_data.py
-# sf1; the other 286 goldens are byte-identical across regimes
-# (verified at sf1, round 9) and keep one file.
+# at scale; SCALE.md round-9 ladder note).  These carry a SECOND
+# golden, `<name>.large.txt`, pinned at dev/gen_scale_data.py sf1
+# (lineitem 150 MB / orders 28 MB).  Verified shapes at sf1: q3's
+# orders⋈lineitem becomes an SMJ while the 3 MB customer stays
+# broadcast; q21's l3 anti self-join becomes an SMJ while the
+# 2-column-pruned l2 semi (pruned estimate ~19 MB) stays broadcast.
+# The other goldens were byte-identical across regimes (verified at
+# sf1, round 9) and keep one file.
 LARGE_REGIME_PINNED = {
     "q3_shipping_priority",
     "q5_local_supplier",
@@ -141,16 +161,8 @@ LARGE_REGIME_PINNED = {
 }
 
 
-def _golden_path(name: str, large: bool = False) -> str:
-    return os.path.join(
-        GOLDEN_DIR, f"{name}.large.txt" if large else f"{name}.txt"
-    )
-
-
 @pytest.mark.parametrize("name", PINNED)
 def test_plan_matches_golden(spark, sf_dir, name):
-    from datafusion_comet_spark.testing import beyond_pinned_regime, scale_regime
-
     if beyond_pinned_regime(sf_dir):
         pytest.skip(
             "lineitem beyond the pinned plan-regime windows (> 200 MB): "
@@ -161,30 +173,8 @@ def test_plan_matches_golden(spark, sf_dir, name):
     # goldens are pinned from a CLEAN cache — a lingering persisted
     # subtree (e.g. tpcds_return_ratio_rank's candidate aggregate)
     # would rewrite matching plans into InMemoryRelation and the
-    # operator sequence would drift (see test_tpcds_exchange_budgets)
+    # operator sequence would drift
     spark.catalog.clearCache()
-    df = REGISTRY[name].fn(spark, sf_dir)
-    ops = operators_in_plan(df)
+    ops = operators_in_plan(REGISTRY[name].fn(spark, sf_dir))
     large = name in LARGE_REGIME_PINNED and scale_regime(sf_dir)
-    path = _golden_path(name, large)
-    if REGEN:
-        os.makedirs(GOLDEN_DIR, exist_ok=True)
-        with open(path, "w") as f:
-            f.write("\n".join(ops) + "\n")
-        pytest.skip(f"golden regenerated: {path}")
-    if not os.path.exists(path):
-        # a missing golden must FAIL, not self-green: auto-creating it
-        # here would compare the plan against itself and silently pass
-        # for a query whose golden was never committed (round-8 advice)
-        pytest.fail(
-            f"no committed golden for {name!r} at {path}; generate one "
-            "with SPARK_GRAFT_REGEN_GOLDENS=1 and commit it"
-        )
-    with open(path) as f:
-        golden = f.read().splitlines()
-    assert ops == golden, (
-        f"physical plan shape changed for {name!r}:\n"
-        f"  golden : {golden}\n"
-        f"  current: {ops}\n"
-        "If intentional, regenerate with SPARK_GRAFT_REGEN_GOLDENS=1."
-    )
+    assert_matches_golden(ops, f"{name}.large.txt" if large else f"{name}.txt")

@@ -15,37 +15,36 @@ from pyspark.sql import functions as F
 
 from datafusion_comet_spark.plans import (
     broadcast_join_count,
+    operators_in_plan,
     plan_string,
     pushed_filters,
     scan_table,
-    shuffle_count,
     skew_split_joins,
     walk_plan,
 )
 from datafusion_comet_spark.queries import load_all
-from datafusion_comet_spark.testing import (
-    beyond_pinned_regime as _beyond_pinned_regime,
-)
 from datafusion_comet_spark.testing import conf_override
-from datafusion_comet_spark.testing import scale_regime as _scale_regime
-
-
-def _skip_if_beyond_pinned_regime(sf_dir):
-    if _beyond_pinned_regime(sf_dir):
-        pytest.skip(
-            "lineitem beyond the pinned plan-regime windows (> 200 MB): "
-            "the broadcast-flip ladder continues with scale (SCALE.md "
-            "round-9 ladder note); exact exchange/golden pins cover the "
-            "small and sf1-large windows only"
-        )
-
 
 REGISTRY = load_all()
 
 
-def _ops(df) -> list[str]:
-    """Class names of every node of ``df``'s physical plan (walk_plan)."""
-    return [cls for cls, _ in walk_plan(df)]
+def _shuffles(ops: list[str]) -> int:
+    """Shuffle exchanges of any partitioning among ``ops`` labels."""
+    return sum(op.startswith("ShuffleExchangeExec") for op in ops)
+
+
+def _python_evals(ops: list[str]) -> list[str]:
+    """Python UDF evaluation operators among ``ops`` labels."""
+    return [op for op in ops if op.startswith(("BatchEvalPython", "ArrowEvalPython"))]
+
+
+def _join_types(df) -> set[str]:
+    """Join type of every join node (``Inner``, ``LeftSemi``, ...)."""
+    return {
+        node.joinType().toString()
+        for cls, node in walk_plan(df)
+        if cls.endswith("JoinExec")
+    }
 
 
 @pytest.fixture(scope="module")
@@ -71,12 +70,12 @@ def test_q5_broadcasts_dimension_tables(spark, sf_dir):
 def test_q1_is_two_phase_hash_aggregate(spark, sf_dir):
     df = REGISTRY["q1_pricing_summary"].fn(spark, sf_dir)
     # partial + final aggregation around a single exchange
-    assert _ops(df).count("HashAggregateExec") >= 2
+    assert operators_in_plan(df).count("HashAggregateExec") >= 2
 
 
 def test_topk_uses_take_ordered(spark, sf_dir):
     df = REGISTRY["q3_shipping_priority"].fn(spark, sf_dir)
-    assert "TakeOrderedAndProject" in plan_string(df, "simple")
+    assert "TakeOrderedAndProjectExec" in operators_in_plan(df)
 
 
 def test_no_python_udf_in_registered_queries(registry_plans):
@@ -89,8 +88,7 @@ def test_no_python_udf_in_registered_queries(registry_plans):
     for name, df in registry_plans.items():
         if "udtf" in REGISTRY[name].tags:
             continue
-        plan = plan_string(df, "simple")
-        if "BatchEvalPython" in plan or "ArrowEvalPython" in plan:
+        if _python_evals(operators_in_plan(df)):
             offenders.append(name)
     assert not offenders, f"Python in hot path: {offenders}"
 
@@ -110,12 +108,12 @@ def test_scan_prunes_columns(spark, sf_dir):
 
 def test_semi_join_planned_for_exists(spark, sf_dir):
     df = REGISTRY["q4_order_priority"].fn(spark, sf_dir)
-    assert "LeftSemi" in plan_string(df, "simple")
+    assert "LeftSemi" in _join_types(df)
 
 
 def test_anti_join_planned_for_not_exists(spark, sf_dir):
     df = REGISTRY["q22_sales_opportunity"].fn(spark, sf_dir)
-    assert "LeftAnti" in plan_string(df, "simple")
+    assert "LeftAnti" in _join_types(df)
 
 
 def test_minhash_self_join_reuses_exchange(spark, sf_dir):
@@ -124,13 +122,13 @@ def test_minhash_self_join_reuses_exchange(spark, sf_dir):
     (without it the whole interpreted shingle computation runs twice)."""
     df = REGISTRY["dedup_minhash_lsh"].fn(spark, sf_dir)
     df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "ReusedExchange" in plan or "reused" in plan.lower(), plan[:2000]
+    ops = operators_in_plan(df)
+    assert "ReusedExchangeExec" in ops, ops
 
 
 def test_range_partition_plans_range_exchange(spark, sf_dir):
     df = REGISTRY["shuffle_range_partition"].fn(spark, sf_dir)
-    assert "rangepartitioning" in plan_string(df, "simple").lower()
+    assert "ShuffleExchangeExec RangePartitioning" in operators_in_plan(df)
 
 
 def test_salted_join_spreads_key(spark, sf_dir):
@@ -143,7 +141,7 @@ def test_salted_join_spreads_key(spark, sf_dir):
 
 def test_merge_hint_plans_sort_merge_join(spark, sf_dir):
     df = REGISTRY["join_sort_merge"].fn(spark, sf_dir)
-    assert "SortMergeJoin" in plan_string(df, "simple")
+    assert "SortMergeJoinExec" in operators_in_plan(df)
 
 
 def test_runtime_bloom_filter_injects_on_selective_join(spark, sf_dir):
@@ -175,7 +173,7 @@ def test_runtime_bloom_filter_injects_on_selective_join(spark, sf_dir):
         df = build()
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "bloom_filter_agg" in plan and "might_contain" in plan
-        assert "ObjectHashAggregate" in plan
+        assert "ObjectHashAggregateExec" in operators_in_plan(df)
         assert df.collect() == baseline
 
 
@@ -184,10 +182,12 @@ def test_bucketed_join_has_no_exchange_below_join(spark, sf_dir):
     subtree must contain no Exchange (the only shuffle allowed in the
     whole plan is the final groupBy's)."""
     df = REGISTRY["join_bucketed_colocated"].fn(spark, sf_dir)
+    joins = [node for cls, node in walk_plan(df) if cls == "SortMergeJoinExec"]
+    assert joins, operators_in_plan(df)
+    for join in joins:
+        below = [cls for cls, _ in walk_plan(join) if "Exchange" in cls]
+        assert not below, below
     plan = plan_string(df, "simple")
-    assert "SortMergeJoin" in plan, plan[:2000]
-    join_subtree = plan[plan.index("SortMergeJoin"):]
-    assert "Exchange" not in join_subtree, join_subtree[:2000]
     assert "SelectedBucketsCount" in plan or "Bucketed: true" in plan, plan[:2000]
 
 
@@ -206,7 +206,7 @@ def test_topk_per_group_pushes_window_group_limit(spark, sf_dir):
     per-partition top-k pruning Spark inserts before the full window
     sort — the window analog of TakeOrderedAndProject)."""
     df = REGISTRY["window_topk_per_group"].fn(spark, sf_dir)
-    assert "WindowGroupLimit" in plan_string(df, "simple")
+    assert "WindowGroupLimitExec" in operators_in_plan(df)
 
 
 def test_funnel_single_pass_over_events(spark, sf_dir):
@@ -214,7 +214,7 @@ def test_funnel_single_pass_over_events(spark, sf_dir):
     conditional-min collapse replaces the naive one-self-join-per-stage
     shape."""
     df = REGISTRY["events_funnel"].fn(spark, sf_dir)
-    ops = _ops(df)
+    ops = operators_in_plan(df)
     assert ops.count("FileSourceScanExec") == 1, ops
 
 
@@ -222,8 +222,8 @@ def test_higher_order_lambdas_stay_jvm_side(spark, sf_dir):
     """Array lambdas (filter/aggregate/exists) must evaluate as
     Catalyst expressions, not Python UDFs."""
     df = REGISTRY["expr_higher_order"].fn(spark, sf_dir)
+    assert not _python_evals(operators_in_plan(df))
     plan = plan_string(df, "simple")
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "aggregate(" in plan or "transform(" in plan or "exists(" in plan, plan[:2000]
 
 
@@ -231,7 +231,7 @@ def test_theta_join_plans_broadcast_nested_loop(spark, sf_dir):
     """A pure-inequality join must broadcast the dimension side and run
     as BroadcastNestedLoopJoin — never a shuffled cartesian."""
     df = REGISTRY["join_theta_nested_loop"].fn(spark, sf_dir)
-    assert "BroadcastNestedLoopJoin" in plan_string(df, "simple")
+    assert "BroadcastNestedLoopJoinExec" in operators_in_plan(df)
 
 
 def test_vocab_topk_uses_take_ordered(spark, sf_dir):
@@ -239,15 +239,14 @@ def test_vocab_topk_uses_take_ordered(spark, sf_dir):
     heap + merge) — a full global sort of the vocabulary would shuffle
     every distinct token at 100 TB."""
     df = REGISTRY["vocab_top_tokens"].fn(spark, sf_dir)
-    assert "TakeOrderedAndProject" in plan_string(df, "simple")
+    assert "TakeOrderedAndProjectExec" in operators_in_plan(df)
 
 
 def test_variant_extract_stays_jvm_side(spark, sf_dir):
     """parse_json/variant_get must evaluate as JVM expressions (no
     Python UDF stage) so the scan-side projection stays in codegen."""
     df = REGISTRY["expr_variant"].fn(spark, sf_dir)
-    plan = plan_string(df, "simple")
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert not _python_evals(operators_in_plan(df))
 
 
 def test_retention_reuses_user_exchange(spark, sf_dir):
@@ -256,7 +255,7 @@ def test_retention_reuses_user_exchange(spark, sf_dir):
     the two the pattern needs (one per side of the self-join)."""
     df = REGISTRY["events_retention"].fn(spark, sf_dir)
     # events is scanned once per side but never more
-    assert _ops(df).count("FileSourceScanExec") <= 2
+    assert operators_in_plan(df).count("FileSourceScanExec") <= 2
 
 
 def test_analyze_table_records_cbo_statistics(spark, sf_dir):
@@ -320,9 +319,9 @@ def test_shuffle_hash_hint_plans_shuffled_hash_join(spark, sf_dir):
     (hash build, no per-side sort) — the join-strategy lever behind
     the reference's replaceSortMergeJoin tuning (BASELINE.md)."""
     df = REGISTRY["join_shuffle_hash_hint"].fn(spark, sf_dir)
-    plan = plan_string(df, "simple")
-    assert "ShuffledHashJoin" in plan, plan[:2000]
-    assert "SortMergeJoin" not in plan, plan[:2000]
+    ops = operators_in_plan(df)
+    assert "ShuffledHashJoinExec" in ops, ops
+    assert "SortMergeJoinExec" not in ops, ops
 
 
 def test_cache_table_plans_in_memory_scan(spark, sf_dir):
@@ -335,21 +334,17 @@ def test_cache_table_plans_in_memory_scan(spark, sf_dir):
         "dcs_cache_nation"
     )
     spark.catalog.cacheTable("dcs_cache_nation")
+
+    def ops():
+        return operators_in_plan(
+            spark.table("dcs_cache_nation").groupBy("n_regionkey").count()
+        )
+
     try:
-        plan = plan_string(
-            spark.table("dcs_cache_nation").groupBy("n_regionkey").count(),
-            "simple",
-        )
-        assert "In-memory table" in plan or "InMemoryTableScan" in plan, (
-            plan[:1500]
-        )
+        assert "InMemoryTableScanExec" in ops(), ops()
     finally:
         spark.catalog.uncacheTable("dcs_cache_nation")
-    plan = plan_string(
-        spark.table("dcs_cache_nation").groupBy("n_regionkey").count(),
-        "simple",
-    )
-    assert "In-memory table" not in plan and "InMemoryTableScan" not in plan
+    assert "InMemoryTableScanExec" not in ops(), ops()
 
 
 def test_many_shard_union_flattens_to_single_union(spark, sf_dir):
@@ -377,8 +372,8 @@ def test_curation_pipeline_v2_exchange_budget(spark, sf_dir):
     rollup; the eval-shingle side must be a BroadcastExchange, never a
     shuffled join input)."""
     df = REGISTRY["pipeline_corpus_curation_v2"].fn(spark, sf_dir)
-    ops = _ops(df)
-    assert ops.count("ShuffleExchangeExec") <= 5, ops
+    ops = operators_in_plan(df)
+    assert _shuffles(ops) <= 5, ops
     assert "BroadcastExchangeExec" in ops, ops
 
 
@@ -388,8 +383,8 @@ def test_doc_pack_greedy_two_exchanges(spark, sf_dir):
     pin it: at most 3 non-broadcast exchanges including the final
     orderBy's range partition."""
     df = REGISTRY["doc_pack_greedy"].fn(spark, sf_dir)
-    ops = _ops(df)
-    assert ops.count("ShuffleExchangeExec") <= 3, ops
+    ops = operators_in_plan(df)
+    assert _shuffles(ops) <= 3, ops
 
 
 def test_aqe_splits_skewed_join_partition(spark, sf_dir):
@@ -476,95 +471,6 @@ def test_python_datasource_pushdown_prunes_partitions(spark, sf_dir):
     assert len(rows) == 1 and rows[0]["kind"] == "click"
 
 
-# Non-broadcast exchange budget per TPC-H query — the scale metric to
-# hold the line on (every entry is a full shuffle of its subtree's
-# output at 100 TB; a regression that adds one is a silent 2x on the
-# cluster bill).  Counts are identical at sf0.001/0.01/0.1 because the
-# dimension joins broadcast at every test scale; budgets are exact,
-# not upper bounds, so an accidental IMPROVEMENT also shows up (and
-# should be ratified by updating the table).
-TPCH_EXCHANGE_BUDGET = {
-    "q1_pricing_summary": 2,
-    "q2_min_cost_supplier": 3,
-    "q3_shipping_priority": 1,
-    "q4_order_priority": 2,
-    "q5_local_supplier": 2,
-    "q6_forecast_revenue": 0,
-    "q7_volume_shipping": 2,
-    "q8_market_share": 2,
-    "q9_product_profit": 2,
-    "q10_returned_items": 1,
-    # q11: the per-part aggregate's exchange appears in BOTH the
-    # detail branch and the 1-row threshold re-aggregation, plus the
-    # final sort — statically 3, but ReuseExchange collapses the two
-    # aggregate branches at runtime to ONE physical fact exchange
-    # (executed-plan ReusedExchange verified when the round-3 rewrite
-    # replaced the single-reducer window)
-    "q11_important_stock": 3,
-    "q12_late_shipments": 2,
-    "q13_customer_distribution": 3,
-    "q14_promo_revenue": 0,
-    # q15: like q11, the per-supplier aggregate exchange shows in both
-    # the detail and 1-row-max branches (ReuseExchange collapses them
-    # at runtime) + the final sort
-    "q15_top_supplier": 3,
-    "q16_parts_supplier": 3,
-    "q17_small_quantity": 1,
-    "q18_large_volume": 2,
-    "q19_discounted_revenue": 0,
-    "q20_part_promotion": 2,
-    "q21_waiting_supplier": 1,
-    "q21_scale_rewrite": 3,
-    "q22_sales_opportunity": 2,
-}
-
-# Large-scale regime (round 9): when lineitem outgrows the 32 MB
-# static broadcast threshold (session.py), Catalyst correctly flips
-# the joins whose PRUNED-SIZE estimate crosses it from broadcast to
-# shuffle — each flip adds exchanges.  These overlays pin the
-# EXPECTED large-regime counts (measured at dev/gen_scale_data.py
-# sf1: lineitem 150 MB / orders 28 MB), so running this suite against
-# a scale dataset asserts the flips happen — and nothing else drifts.
-# Verified shapes at sf1: q3 orders⋈lineitem → SMJ while the 3 MB
-# customer stays broadcast; q21's l3 anti self-join → SMJ while the
-# 2-column-pruned l2 semi (pruned estimate ~19 MB < 32 MB) stays
-# broadcast.  Regime bit = lineitem file size vs the threshold; the
-# small-regime tables stay exact for every driver sf (≤ sf0.1,
-# lineitem ≤ 11 MB).
-TPCH_EXCHANGE_BUDGET_LARGE = {
-    "q3_shipping_priority": 2,
-    "q5_local_supplier": 4,
-    "q10_returned_items": 3,
-    "q21_waiting_supplier": 3,
-    "q21_scale_rewrite": 4,
-}
-
-def _assert_exchange_budgets(spark, sf_dir, budgets: dict) -> None:
-    """Every query's static hash/range shuffle count equals its budget.
-
-    Static budgets are pinned from a CLEAN cache: a lingering
-    CacheManager entry (tpcds_return_ratio_rank persists its candidate
-    aggregate; the single-fact-pass pin test materializes it) rewrites
-    matching subtrees into InMemoryRelation on the NEXT construction and
-    the exchange count changes — so the cache is cleared before every
-    query, not once per table."""
-    diffs = {}
-    for name, budget in budgets.items():
-        spark.catalog.clearCache()
-        n = shuffle_count(REGISTRY[name].fn(spark, sf_dir))
-        if n != budget:
-            diffs[name] = (budget, n)
-    assert not diffs, f"exchange budget drift (expected, actual): {diffs}"
-
-
-def test_tpch_exchange_budgets(spark, sf_dir):
-    _skip_if_beyond_pinned_regime(sf_dir)
-    budgets = dict(TPCH_EXCHANGE_BUDGET)
-    if _scale_regime(sf_dir):
-        budgets.update(TPCH_EXCHANGE_BUDGET_LARGE)
-    _assert_exchange_budgets(spark, sf_dir, budgets)
-
-
 def test_or_of_and_predicate_pushed_to_scan(spark, sf_dir):
     """TPC-DS q41 shape: the whole OR-of-AND attribute disjunction
     must reach the parquet reader as one pushed filter tree (an Or(...)
@@ -573,8 +479,8 @@ def test_or_of_and_predicate_pushed_to_scan(spark, sf_dir):
     df = REGISTRY["tpcds_attribute_combo_parts"].fn(spark, sf_dir)
     pf = pushed_filters(df)
     assert any("Or(" in f for f in pf), f"OR tree not pushed: {pf}"
-    ops = _ops(df)
-    assert "ShuffleExchangeExec" in ops  # only the rollup shuffles
+    ops = operators_in_plan(df)
+    assert _shuffles(ops)  # only the rollup shuffles
     assert ops.count("FileSourceScanExec") == 1, ops
 
 
@@ -583,10 +489,10 @@ def test_monthly_pivot_wide_single_exchange(spark, sf_dir):
     two-phase aggregate — a single fact exchange, no Expand, no
     per-month re-aggregation."""
     df = REGISTRY["tpcds_monthly_pivot_wide"].fn(spark, sf_dir)
-    ops = _ops(df)
+    ops = operators_in_plan(df)
     # one hash exchange for the aggregate + one range exchange for the
     # final ORDER BY over the |nations|-sized result; nothing else
-    assert ops.count("ShuffleExchangeExec") == 2, ops
+    assert _shuffles(ops) == 2, ops
     assert "ExpandExec" not in ops, ops
     assert ops.count("FileSourceScanExec") == 3, ops  # lineitem + two broadcast dims
 
@@ -597,7 +503,7 @@ def test_multi_distinct_uses_expand(spark, sf_dir):
     scan — the single-pass alternative to q28's literal six-subquery
     cross join."""
     df = REGISTRY["tpcds_price_band_distincts"].fn(spark, sf_dir)
-    ops = _ops(df)
+    ops = operators_in_plan(df)
     assert "ExpandExec" in ops, ops
     assert ops.count("FileSourceScanExec") == 1, ops
 
@@ -707,7 +613,7 @@ def test_q11_threshold_reuses_fact_exchange(spark, sf_dir):
     # aggregate DOES shuffle
     df = REGISTRY["q11_important_stock"].fn(spark, "/root/testdata/sf0.01")
     df.collect()
-    ops = _ops(df)
+    ops = operators_in_plan(df)
     assert "ReusedExchangeExec" in ops, ops
     assert not any("Window" in cls for cls in ops), ops
 
@@ -722,8 +628,8 @@ def test_temperature_mixture_shuffle_budget(spark, sf_dir):
     that duplicates the whole count subtree (its branches differ by a
     join-null filter, so ReuseExchange cannot merge them)."""
     df = REGISTRY["sample_temperature_mixture"].fn(spark, sf_dir)
-    ops = _ops(df)
-    assert ops.count("ShuffleExchangeExec") <= 4, ops
+    ops = operators_in_plan(df)
+    assert _shuffles(ops) <= 4, ops
     assert "BroadcastExchangeExec" in ops, ops
     assert ops.count("FileSourceScanExec") <= 2, ops
 
@@ -735,7 +641,7 @@ def test_epoch_repetition_never_shuffles_by_doc_id(spark, sf_dir):
     df = REGISTRY["corpus_epoch_repetition"].fn(spark, sf_dir)
     keys = _hash_exchange_keys(df)
     assert keys and not any("doc_id" in k for k in keys), keys
-    ops = _ops(df)
+    ops = operators_in_plan(df)
     assert "BroadcastExchangeExec" in ops, ops
     # the fan-out is a Generate (explode) node, map-side
     assert "GenerateExec" in ops, ops
@@ -853,128 +759,6 @@ def test_return_ratio_rank_single_fact_pass(spark, sf_dir):
     assert n == 1, f"{n} lineitem passes"
 
 
-# Non-broadcast exchange budget per TPC-DS-shape query — the TPC-H
-# budget table's counterpart for the second benchmark surface.  Exact
-# static counts (shuffle_count: hash/range exchanges in the walked
-# plan, a cached sub-plan counted once however many scans read it),
-# identical at sf0.001 and sf0.1 (verified at both before pinning).
-# Three design notes the counts encode:
-# - tpcds_return_ratio_rank's candidate aggregate is persist()ed
-#   (exchange reuse does not survive per-branch column pruning —
-#   SCALE.md round-7 entry), so its 4 exchanges include the cached
-#   plan's once.  The explain-text count was 14: the simple plan
-#   prints the cached lineage again under each InMemoryTableScan.
-#   The runtime single-fact-pass is separately pinned.
-# - tpcds_date_intersect_returns is statically exchange-rich because
-#   the INTERSECT legs repeat the orders aggregate subtree; at runtime
-#   AQE ReusedExchange collapses them to ONE orders pass (pinned by
-#   test_date_intersect_returns_single_orders_pass).  Static budgets
-#   guard against ACCIDENTAL new shuffles; runtime scan pins guard the
-#   physical pass count.
-# - tpcds_time_band_counts / tpcds_union_channel_item_topk /
-#   tpcds_frequent_best_combo keep documented multi-pass shapes (q88 /
-#   q33-union / q23) — see their docstrings for the trade.
-TPCDS_EXCHANGE_BUDGET = {
-    "tpcds_above_avg_discount": 1,
-    "tpcds_above_avg_returners": 3,
-    "tpcds_acctbal_band_priority": 2,
-    "tpcds_active_part_band": 1,
-    "tpcds_am_pm_ratio": 0,
-    "tpcds_attribute_combo_parts": 2,
-    "tpcds_best_visit_per_customer": 2,
-    "tpcds_best_worst_performers": 2,
-    "tpcds_brand_year_topk": 1,
-    "tpcds_bucket_battery": 0,
-    "tpcds_buy_return_rebuy": 1,
-    "tpcds_channel_exclusive_customers": 3,
-    "tpcds_channel_growth_compare": 2,
-    "tpcds_channel_pnl": 2,
-    "tpcds_channel_rollup": 4,
-    "tpcds_class_revenue_ratio": 3,
-    "tpcds_cross_border_brand_revenue": 2,
-    # round 11: the 2-channel key set's count_distinct became summed
-    # max(status == ch) presence bits — the (partkey, status)-keyed
-    # distinct level and its exchange dropped out (4 -> 3)
-    "tpcds_cross_channel_rollup": 3,
-    "tpcds_cross_nation_orders": 1,
-    "tpcds_cumulative_compare": 4,
-    "tpcds_customer_cohort_setops": 6,
-    "tpcds_date_intersect_returns": 7,
-    "tpcds_delay_buckets": 2,
-    "tpcds_demand_variability": 2,
-    "tpcds_dimension_chain_lookup": 0,
-    "tpcds_disjunct_subquery": 4,
-    "tpcds_disjunctive_bands": 0,
-    "tpcds_domestic_brand_share": 3,
-    "tpcds_except_chain_count": 1,
-    "tpcds_excess_discount": 1,
-    "tpcds_followon_revenue_histogram": 4,
-    "tpcds_frequent_best_combo": 5,
-    "tpcds_frequent_buyer_semi": 3,
-    "tpcds_half_year_balance": 2,
-    "tpcds_hour_band_count": 0,
-    "tpcds_meal_time_channel_revenue": 2,
-    "tpcds_mfgr_brand_december": 1,
-    "tpcds_mfgr_month_deviation": 3,
-    "tpcds_monthly_deviation": 2,
-    "tpcds_monthly_pivot_wide": 2,
-    "tpcds_multi_exists_demographics": 2,
-    "tpcds_multi_supplier_clean": 2,
-    "tpcds_multi_supplier_returned": 3,
-    "tpcds_multi_supplier_unreturned": 3,
-    "tpcds_name_suffix_disjunct_revenue": 2,
-    "tpcds_nation_set_revenue": 5,
-    "tpcds_net_after_returns": 2,
-    "tpcds_or_band_averages": 0,
-    "tpcds_party_size_band": 2,
-    "tpcds_pivot_date_ratio": 2,
-    "tpcds_pivot_return_matrix": 2,
-    "tpcds_price_band_distincts": 1,
-    "tpcds_pricey_item_buyers_per_nation": 5,
-    "tpcds_promo_ratio": 0,
-    "tpcds_purchase_overlap": 1,
-    "tpcds_quantity_moment_stats": 2,
-    "tpcds_quarterly_share_growth": 5,
-    "tpcds_rank_in_category": 3,
-    "tpcds_repeat_purchase_chain": 3,
-    "tpcds_return_lag_histogram": 2,
-    "tpcds_return_ratio_rank": 4,
-    "tpcds_returner_nation_outlier": 3,
-    "tpcds_returns_demographic_loss": 2,
-    "tpcds_rolling_brand_deviation": 3,
-    "tpcds_rollup_averages": 2,
-    "tpcds_rollup_rank_hierarchy": 3,
-    "tpcds_segment_item_averages": 2,
-    "tpcds_supplier_weekday_matrix": 1,
-    "tpcds_time_band_counts": 0,
-    "tpcds_top_nations_rollup": 4,
-    "tpcds_underperforming_pairs": 4,
-    "tpcds_union_channel_item_topk": 3,
-    "tpcds_union_null_placeholders": 2,
-    "tpcds_week_offset_join": 2,
-    "tpcds_week_yoy_align": 2,
-    "tpcds_weekday_pivot_ratio": 2,
-    "tpcds_yoy_channel_ratio": 3,
-    "tpcds_yoy_decline_net_returns": 3,
-    "tpcds_yoy_preference_shift": 2,
-}
-
-
-def test_tpcds_exchange_budgets(spark, sf_dir):
-    _skip_if_beyond_pinned_regime(sf_dir)
-    budgets = dict(TPCDS_EXCHANGE_BUDGET)
-    if _scale_regime(sf_dir):
-        # measured at gen_scale_data sf1 — see TPCH_EXCHANGE_BUDGET_LARGE
-        budgets.update(
-            {
-                "tpcds_cross_nation_orders": 2,
-                "tpcds_net_after_returns": 3,
-                "tpcds_underperforming_pairs": 5,
-            }
-        )
-    _assert_exchange_budgets(spark, sf_dir, budgets)
-
-
 def test_scd2_single_dimension_pass(spark, sf_dir):
     """scd2_dimension_update promises ONE pass over the dimension: a
     single LEFT join + struct-array explode replaces the naive
@@ -987,236 +771,8 @@ def test_scd2_single_dimension_pass(spark, sf_dir):
     assert n == 2, f"{n} customer scans (dimension + update batch)"
 
 
-# Exchange budgets for the remaining non-benchmark families
-# (datapipe / similarity / windows / temporal / aggregates /
-# relational / expressions / multimodal) — with the TPC-H and TPC-DS
-# tables above this pins the static shuffle count of 294 of the 326
-# registry queries (the 32 exclusions execute on construction:
-# streaming runs a full availableNow pass, sources write files;
-# tpch_extended_q1 was added round 8, completing every
-# statically-plannable query).  Exact counts, verified identical at
-# sf0.001 and sf0.1 before pinning.
-REGISTRY_EXCHANGE_BUDGET = {
-    "agg_approx_count_distinct": 3,
-    "agg_bitwise": 2,
-    "agg_bool": 2,
-    "agg_collect_set": 2,
-    "agg_corr_covar": 2,
-    "agg_count_min_sketch": 1,
-    "agg_distinct_forms": 3,
-    "agg_filter_clause": 2,
-    "agg_first_last_sorted": 2,
-    "agg_hll_sketch": 4,
-    "agg_listagg_sorted": 2,
-    "agg_minby_maxby": 2,
-    "agg_minmax_types": 2,
-    "agg_percentiles": 2,
-    "agg_variance_stddev": 2,
-    "ann_bruteforce_topk": 2,
-    "ann_ivf_kmeans": 2,
-    "ann_ivf_multiprobe": 4,
-    "ann_ivf_pq_adc": 3,
-    "ann_lsh_bucketed": 0,
-    "ann_ml_random_projection": 1,
-    "ann_quantized_rerank": 2,
-    "arrow_native_udf": 2,
-    "boilerplate_prefix_strip": 4,
-    "cdc_apply_changes": 2,
-    "collation_group_caseless": 3,
-    "corpus_deterministic_shuffle": 0,
-    "corpus_epoch_repetition": 3,
-    "corpus_snapshot_diff": 4,
-    "correlated_scalar_subquery": 4,
-    "decontaminate_ngram_overlap": 4,
-    # winnow decontamination: eval-fp distinct + hit (doc,source) agg +
-    # per-source rollup + final sort; the eval index is broadcast
-    "decontaminate_winnow_spans": 4,
-    "dedup_cluster_components": 2,
-    # round 11: +1 — round-robin rebalance of the probe side before
-    # the pair join (2-file scan partitioning starved the interpreted
-    # pair stream; see the query's comment)
-    "dedup_embedding_cosine": 1,
-    "dedup_exact": 2,
-    "dedup_incremental_vs_corpus": 3,
-    "dedup_keep_best": 2,
-    # round 9: sorted-neighborhood rewrite — 1 window hash + 1 final
-    # sort range exchange (measured; was 1: broadcast join + sort)
-    "dedup_levenshtein": 2,
-    "dedup_minhash_lsh": 6,
-    "dedup_minhash_ml": 1,
-    "dedup_ngram_jaccard": 0,
-    "dedup_normalized_text": 3,
-    "dedup_paragraph_boilerplate": 4,
-    "dedup_paragraph_reassemble": 3,
-    "dedup_simhash": 3,
-    "dedup_window_first": 2,
-    # winnowing: fp-count window + doc aggregate + final sort — the
-    # fingerprint thinning itself is all map-side array expressions
-    "dedup_winnow_fingerprint": 3,
-    "df_lateral_join_tvf": 2,
-    "df_transpose": 1,
-    "distinct_flags": 2,
-    "doc_chunk_sliding": 1,
-    "doc_fingerprint": 1,
-    "doc_length_approx_cuts": 2,
-    "doc_length_ntile": 2,
-    "doc_pack_greedy": 2,
-    "doc_quality_filter": 2,
-    "doc_repetition_ratio": 2,
-    "embedding_centroid_per_label": 2,
-    "embedding_norm_stats": 2,
-    "embedding_quantize_int8": 1,
-    "events_anomaly_zscore": 3,
-    "events_funnel": 1,
-    "events_hourly_gapfill": 3,
-    "events_props_json_extract": 2,
-    "events_retention": 3,
-    "events_session_window_batch": 2,
-    "events_sessionize": 2,
-    "events_tumbling_window": 2,
-    "events_value_histogram": 2,
-    "expand_cube": 2,
-    "expand_grouping_flags": 2,
-    "expand_grouping_sets": 2,
-    "expand_rollup": 2,
-    "explode_tokens": 1,
-    "expr_array_lambda": 1,
-    "expr_array_ops": 1,
-    "expr_bitwise": 1,
-    "expr_cast_matrix": 1,
-    "expr_cast_narrowing": 1,
-    "expr_cast_string_parsing": 1,
-    "expr_cast_temporal": 1,
-    "expr_conditional": 1,
-    "expr_csv_struct": 1,
-    "expr_datetime_arith": 1,
-    "expr_datetime_fields": 1,
-    "expr_datetime_format": 1,
-    "expr_decimal_arith": 1,
-    "expr_hash_portable": 1,
-    "expr_hash_spark_native": 1,
-    "expr_higher_order": 1,
-    "expr_interval": 2,
-    "expr_json": 1,
-    "expr_map_lambda": 3,
-    "expr_map_struct": 1,
-    "expr_math_basics": 1,
-    "expr_math_trig": 1,
-    "expr_nondeterministic": 0,
-    "expr_predicates": 1,
-    "expr_regex": 1,
-    "expr_string_basics": 1,
-    "expr_string_search": 1,
-    "expr_try_arithmetic": 1,
-    "expr_url_misc": 1,
-    "expr_variant": 2,
-    "fingerprint_table_maintain": 2,
-    "generator_inline": 1,
-    "global_index_assignment": 5,
-    "join_asof": 2,
-    "join_asof_forward_tolerance": 2,
-    "join_bucketed_colocated": 2,
-    "join_cross": 1,
-    "join_full_outer": 3,
-    "join_null_safe_eq": 3,
-    "join_range": 3,
-    "join_range_bucketed": 1,
-    "join_right_outer": 2,
-    "join_shuffle_hash_hint": 4,
-    "join_skew_salted": 3,
-    "join_sort_merge": 4,
-    "join_theta_nested_loop": 2,
-    "lang_id_heuristic": 2,
-    "lateral_column_alias": 0,
-    "limit_offset_orders": 0,
-    "local_table_scan": 2,
-    "merge_upsert": 4,
-    "multimodal_audio_framing": 1,
-    "multimodal_decode_stub": 2,
-    "multimodal_embed_ann": 2,
-    "multimodal_format_sniff": 2,
-    "multimodal_frame_sample": 1,
-    "multimodal_metadata": 2,
-    "multimodal_ppm_real_decode": 1,
-    "multimodal_resize_stub": 2,
-    "multimodal_wav_real_decode": 1,
-    "ngram_bigram_counts": 1,
-    "pandas_api_on_spark": 2,
-    "pipeline_corpus_curation": 4,
-    "pipeline_corpus_curation_v2": 5,
-    "pipeline_mixture_assembly": 5,
-    "pivot_linestatus": 3,
-    "posexplode_tokens": 1,
-    "quality_linear_scorer": 2,
-    "quality_scorer_weight_table": 2,
-    "quality_topp_per_language": 3,
-    "range_generator": 0,
-    "recursive_cte_month_spine": 2,
-    "rollup_incremental_update": 3,
-    "rollup_reaggregate": 3,
-    "sample_bernoulli_seeded": 2,
-    "sample_hash_deterministic": 2,
-    "sample_stratified_exact_k": 2,
-    "sample_temperature_mixture": 3,
-    "sample_weighted_mixture": 2,
-    "scalar_subquery_api": 2,
-    "scd2_dimension_update": 1,
-    "setop_except": 2,
-    "setop_except_all": 2,
-    "setop_intersect": 2,
-    "setop_intersect_all": 2,
-    "setop_union_all": 2,
-    "setop_union_by_name": 2,
-    "setop_union_distinct": 2,
-    "setop_union_missing_columns": 1,
-    "shuffle_range_partition": 1,
-    "sql_group_order_by_all": 2,
-    "sql_parameterized": 2,
-    "sql_pipe_syntax": 2,
-    "sql_registered_pandas_udf": 2,
-    "sql_scripting_block": 0,
-    "stat_crosstab": 3,
-    # bm25: (doc,tok) tf aggregate + per-doc sum — df rides the 1-row
-    # stats broadcast (array_contains per literal term), and the top-k
-    # window runs single-partition (not hash-counted)
-    "text_bm25_topk": 2,
-    "text_regex_scrub": 2,
-    "text_stats": 1,
-    "text_tfidf_topk": 5,
-    "token_count_arrow": 2,
-    "token_count_regex": 1,
-    # worst-case hash-aggregate kernel (group count == row count):
-    # one hash exchange for the groupBy, one range for the sort —
-    # verified identical at sf0.001 and sf0.1 (round 8; previously the
-    # one pure relational query missing from this map)
-    "tpch_extended_q1": 2,
-    "udaf_cogroup_pandas": 4,
-    "udaf_grouped_arrow": 2,
-    "udaf_grouped_ols": 2,
-    "udaf_pandas_grouped_agg": 2,
-    "udtf_lateral_tokenize": 3,
-    "unpivot_charges": 1,
-    "vocab_top_tokens": 2,
-    "window_distribution": 2,
-    "window_distribution_global": 5,
-    "window_first_last_nth": 2,
-    "window_interval_range_frame": 2,
-    "window_lag_lead": 2,
-    "window_moving_avg": 2,
-    "window_range_frame": 2,
-    "window_ranking": 2,
-    "window_running_sum": 2,
-    "window_topk_per_group": 3,
-    "zorder_cluster_sort": 0,
-}
-
-
-def test_registry_exchange_budgets(spark, sf_dir):
-    _assert_exchange_budgets(spark, sf_dir, REGISTRY_EXCHANGE_BUDGET)
-
-
-# Scan-width budgets for the bench set (round 8): the exchange
-# budgets above pin HOW MANY shuffles a plan does; these pin HOW WIDE
+# Scan-width budgets for the bench set (round 8): the plan goldens
+# (test_plan_stability.py) pin HOW MANY shuffles a plan does; these pin HOW WIDE
 # each parquet scan reads — the column-pruning half of the scale
 # contract (a regression that selects extra columns before a join
 # keeps the exchange count but multiplies scanned and shuffled bytes;
@@ -1260,7 +816,7 @@ SCAN_WIDTH_BUDGET = {
 def test_bench_scan_width_budgets(spark, sf_dir):
     diffs = {}
     for name, budget in SCAN_WIDTH_BUDGET.items():
-        spark.catalog.clearCache()  # see _assert_exchange_budgets
+        spark.catalog.clearCache()  # see test_plan_stability
         widths = sorted(
             node.requiredSchema().size()
             for cls, node in walk_plan(REGISTRY[name].fn(spark, sf_dir))

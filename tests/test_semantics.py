@@ -448,8 +448,8 @@ def test_rebalance_hint_plans_rebalance_partitions(spark, sf_dir):
     from pyspark.sql import functions as F
 
     df = spark.read.parquet(f"{sf_dir}/orders.parquet").hint("rebalance")
-    optimized = df._jdf.queryExecution().optimizedPlan().toString()
-    assert "RebalancePartitions" in optimized, optimized[:1000]
+    optimized = df._jdf.queryExecution().optimizedPlan()
+    assert optimized.nodeName() == "RebalancePartitions", optimized.toString()
     assert df.count() == spark.read.parquet(f"{sf_dir}/orders.parquet").count()
 
 
