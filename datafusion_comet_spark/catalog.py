@@ -8,11 +8,13 @@ module is the table registry used by every query in the inventory.
 
 from __future__ import annotations
 
+import json
 import os
 from types import SimpleNamespace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLES: tuple[str, ...] = (
     "region",
@@ -106,6 +108,135 @@ def table_bytes(sf_dir: str, name: str) -> int:
     return _TABLE_BYTES_CACHE[key]
 
 
+# Spark type per parquet (physical type, bit width, signed) of an INT
+# logical type, as Spark's ParquetToSparkSchemaConverter maps it;
+# UINT_64 becomes a decimal there and is left to inference.
+_INT_TYPES: dict[tuple[str, int, bool], T.DataType] = {
+    ("INT32", 8, True): T.ByteType(),
+    ("INT32", 16, True): T.ShortType(),
+    ("INT32", 32, True): T.IntegerType(),
+    ("INT32", 8, False): T.ShortType(),
+    ("INT32", 16, False): T.IntegerType(),
+    ("INT32", 32, False): T.LongType(),
+    ("INT64", 64, True): T.LongType(),
+}
+# Spark type per parquet physical type without a logical type (BYTE_ARRAY
+# and INT96 depend on session confs, see _leaf_type).
+_PLAIN_TYPES: dict[str, T.DataType] = {
+    "BOOLEAN": T.BooleanType(),
+    "INT32": T.IntegerType(),
+    "INT64": T.LongType(),
+    "FLOAT": T.FloatType(),
+    "DOUBLE": T.DoubleType(),
+    "FIXED_LEN_BYTE_ARRAY": T.BinaryType(),
+}
+# written by Spark: when present, Spark reads its schema from this footer
+# entry instead of converting the parquet types
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _leaf_type(col, conf) -> T.DataType | None:
+    """The Spark type of one parquet leaf column, from its physical and
+    logical type (not its Arrow type: INT96 and INT64 TIMESTAMP(NANOS)
+    are both ``timestamp[ns]`` in Arrow, but Spark reads the first as a
+    timestamp and the second as a long).  None when the mapping does not
+    cover the type.  ``conf(key)`` reads a boolean session conf."""
+    phys = col.physical_type
+    logical = json.loads(col.logical_type.to_json())
+    kind = logical["Type"]
+    if kind == "None":
+        if phys == "BYTE_ARRAY":
+            binary_as_string = conf("spark.sql.parquet.binaryAsString")
+            return T.StringType() if binary_as_string else T.BinaryType()
+        if phys == "INT96":
+            int96 = conf("spark.sql.parquet.int96AsTimestamp")
+            return T.TimestampType() if int96 else None
+        return _PLAIN_TYPES.get(phys)
+    if kind in ("String", "Enum") and phys == "BYTE_ARRAY":
+        return T.StringType()
+    if kind == "Date" and phys == "INT32":
+        return T.DateType()
+    if kind == "Int":
+        return _INT_TYPES.get((phys, logical["bitWidth"], logical["isSigned"]))
+    if kind == "Timestamp" and phys == "INT64":
+        if logical["timeUnit"] == "nanoseconds":
+            nanos_as_long = conf("spark.sql.legacy.parquet.nanosAsLong")
+            return T.LongType() if nanos_as_long else None
+        if logical["isAdjustedToUTC"] or not conf(
+            "spark.sql.parquet.inferTimestampNTZ.enabled"
+        ):
+            return T.TimestampType()
+        return T.TimestampNTZType()
+    return None
+
+
+def _file_schema(path: str, conf) -> T.StructType | None:
+    """The schema Spark infers for one parquet file, or None.  Covers
+    top-level primitive columns and standard 3-level lists of them; the
+    Arrow schema is read only for the column tree, the types come from
+    the parquet leaves.  Every field is nullable, as Spark makes a file
+    source's schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pf = pq.ParquetFile(path)
+    if _SPARK_SCHEMA_KEY in (pf.metadata.metadata or {}):
+        return None
+    leaves = pf.schema
+    if len(leaves) != len(pf.schema_arrow):
+        return None  # a struct or map: more leaves than columns
+    fields = []
+    for i, field in enumerate(pf.schema_arrow):
+        col = leaves.column(i)
+        if col.max_repetition_level == 0 and col.path == field.name:
+            dtype = _leaf_type(col, conf)
+        elif (
+            pa.types.is_list(field.type)
+            and col.max_repetition_level == 1
+            and col.path == f"{field.name}.list.element"
+        ):
+            elem = _leaf_type(col, conf)
+            dtype = None if elem is None else T.ArrayType(elem, True)
+        else:
+            dtype = None
+        if dtype is None:
+            return None
+        fields.append(T.StructField(field.name, dtype, True))
+    return T.StructType(fields)
+
+
+def footer_schema(spark: SparkSession, sf_dir: str, name: str) -> T.StructType | None:
+    """The schema ``spark.read.parquet`` would infer for a table, built
+    from its parquet footers in Python, so no Spark job runs.  None —
+    infer instead — when a column type is not covered (``_leaf_type``),
+    when a part was written by Spark, when a directory-shaped table has
+    parts below subdirectories (partition columns) or none at all, when
+    its parts disagree, and when a footer cannot be read (Spark then
+    raises its own error for a missing or corrupt file)."""
+    import pyarrow as pa
+
+    memo: dict[str, bool] = {}
+
+    def conf(key: str) -> bool:
+        if key not in memo:
+            memo[key] = str(spark.conf.get(key)).lower() == "true"
+        return memo[key]
+
+    path = table_path(sf_dir, name)
+    files = parquet_files(sf_dir, name)
+    if not files or (
+        os.path.isdir(path) and any(os.path.dirname(f) != path for f in files)
+    ):
+        return None
+    try:
+        first = _file_schema(files[0], conf)
+        if first is None or any(_file_schema(f, conf) != first for f in files[1:]):
+            return None
+    except (OSError, pa.ArrowException):
+        return None
+    return first
+
+
 # (applicationId, sf_dir, name) -> DataFrame.  The star-schema dirs are
 # read-only, so a resolved DataFrame (file listing + footer schema) can be
 # reused across queries within one SparkContext — the single-engine analog
@@ -123,7 +254,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # The driver may hand us a session without our defaults; the
         # TIMESTAMP(NANOS) column is unreadable without this conf.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, name))
+    # The schema comes from the parquet footers (footer_schema): with it
+    # Spark skips its schema-inference job, one per table.  Where the
+    # footer mapping gives up, Spark infers as before.
+    schema = footer_schema(spark, sf_dir, name)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(table_path(sf_dir, name))
     if name == "events":
         # Normalize events.ts to a µs TimestampType regardless of how the
         # generator wrote it: TIMESTAMP(NANOS) arrives as a ns long (see

@@ -29,6 +29,42 @@ def oracle_sf_dir() -> str:
     return SF_DIR_ORACLE
 
 
+def jobs_in_group(spark, group: str) -> int:
+    """Spark jobs started so far under job group ``group``."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+def plant_stale_cds_archive(environ: dict[str, str]) -> str | None:
+    """Put an archive with a valid header but another class path (dumped
+    by a JVM that ran only Spark's launcher jar) where a session started
+    with ``environ`` looks for its CDS archive; returns its path, or
+    None where that session skips CDS."""
+    import glob
+    import subprocess
+
+    from pyspark.find_spark_home import _find_spark_home
+
+    from datafusion_comet_spark import session
+
+    plan = session.cds_plan(
+        session.cds_cache_dir(environ), _find_spark_home(), session._java_home(environ),
+        session.session_conf(), environ,
+    )
+    if plan is None:
+        return None
+    launcher = glob.glob(os.path.join(_find_spark_home(), "jars", "spark-launcher*.jar"))
+    java = os.path.join(session._java_home(environ), "bin", "java")
+    subprocess.run(
+        [java, f"-XX:ArchiveClassesAtExit={plan.archive}", "-cp", launcher[0],
+         "org.apache.spark.launcher.Main"],
+        capture_output=True, check=False, timeout=120,
+    )
+    with open(plan.archive, "rb") as f:
+        assert f.read(4) == session._DYNAMIC_ARCHIVE_MAGIC
+    return plan.archive
+
+
 GOLDEN_DIR = os.path.join(os.path.dirname(__file__), "goldens", "plans")
 REGEN_GOLDENS = os.environ.get("SPARK_GRAFT_REGEN_GOLDENS") == "1"
 

@@ -21,6 +21,7 @@ import threading
 from contextlib import contextmanager
 
 import pytest
+from conftest import jobs_in_group
 from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
@@ -185,11 +186,6 @@ def _fields(schema):
     return [(f.name, f.dataType, f.nullable) for f in schema]
 
 
-def _jobs_in(spark, group: str) -> int:
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("partition_by", [["o_orderpriority"], None])
 def test_parquet_read_back_schema_parity_without_a_job(
     spark, sf_dir, tmp_path, monkeypatch, partition_by
@@ -216,8 +212,8 @@ def test_parquet_read_back_schema_parity_without_a_job(
         )
     finally:
         sc._jsc.clearJobGroup()
-    assert _jobs_in(spark, write_group) >= 1
-    assert _jobs_in(spark, read_group) == 0
+    assert jobs_in_group(spark, write_group) >= 1
+    assert jobs_in_group(spark, read_group) == 0
     inferred = spark.read.parquet(path)
     assert _fields(back.schema) == _fields(inferred.schema)
     assert back.count() == inferred.count() == orders.count()

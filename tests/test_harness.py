@@ -19,6 +19,7 @@ import sys
 
 import pytest
 
+from conftest import plant_stale_cds_archive
 from datafusion_comet_spark.queries import load_all
 from datafusion_comet_spark.testing import ab, conf_override, scale_factor, timings
 
@@ -103,10 +104,15 @@ def test_ab_plan_only_conf_keeps_rows_equal(spark, sf_dir):
     assert spark.conf.get(key) == before
 
 
-def test_bench_prints_one_json_line_in_bench_order(sf_dir):
+def test_bench_prints_one_json_line_in_bench_order(sf_dir, tmp_path):
+    """Also with a stale CDS archive where bench's session looks for
+    one: the JVM's warning when it rejects an archive goes to stdout
+    unless CDS logging is off, and it must not reach bench's line."""
     env = dict(
-        os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_BENCH_ITERATIONS="1"
+        os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_BENCH_ITERATIONS="1",
+        XDG_CACHE_HOME=str(tmp_path),
     )
+    plant_stale_cds_archive(env)
     proc = subprocess.run(
         [sys.executable, os.path.join(REPO, "bench.py")],
         env=env, capture_output=True, text=True, timeout=1200, check=False,
