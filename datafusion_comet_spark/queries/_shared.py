@@ -65,11 +65,6 @@ def _dim_hint(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def _dim(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load table `name` with the size-gated broadcast hint applied."""
-    return _dim_hint(load_table(spark, sf_dir, name), sf_dir, name)
-
-
 def _stats_join_back(
     rows: DataFrame,
     stats: DataFrame,

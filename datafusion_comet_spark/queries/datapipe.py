@@ -2414,9 +2414,9 @@ def fingerprint_table_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta = fps.filter(F.crc32(F.col("fp")) % 4 == 0)
 
     path = scratch_dir(sf_dir, "fingerprint_table")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     (
         hist.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket")
         .parquet(path)
     )

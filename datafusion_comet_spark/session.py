@@ -117,7 +117,6 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.python.sql.dataFrameDebugging.enabled": "false",
     # --- misc --------------------------------------------------------------
     "spark.ui.enabled": "false",
-    "spark.sql.shuffle.partitions": "32",
 }
 
 

@@ -73,7 +73,51 @@ def run_to_memory(
     shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Execute a streaming DataFrame to completion into a memory sink;
-    return the sink contents as a batch DataFrame.
+    return the sink contents as a batch DataFrame (``run_to_checkpoint``
+    has the run's semantics)."""
+    run_to_checkpoint(df, name, output_mode, shuffle_partitions)
+    return df.sparkSession.table(name)
+
+
+def run_to_state(
+    df: DataFrame,
+    name: str,
+    output_mode: str,
+    shuffle_partitions: int | None = None,
+) -> DataFrame:
+    """Execute a stateful streaming DataFrame to completion, then read
+    the committed STATE STORE back through Spark's built-in state data
+    source (``spark.read.format("statestore")`` — core since 4.0) and
+    return it as a batch DataFrame of (key struct, value struct,
+    partition_id) rows.
+
+    This is the operational introspection path at 100 TB: debugging a
+    stateful pipeline's accumulated state (is a key stuck? how big is
+    each aggregation buffer?) reads ONLY the checkpoint's state files
+    — zero replay of the (unbounded) input.  The state source scans
+    the latest committed snapshot per partition, so its cost is
+    O(state), not O(history).
+
+    Same shuffle-partition pin and fresh-checkpoint semantics as
+    ``run_to_checkpoint`` (the partition count is baked into the
+    checkpoint at first batch; state correctness must be — and is —
+    invariant to it).
+    """
+    ckpt = run_to_checkpoint(df, name, output_mode, shuffle_partitions)
+    return df.sparkSession.read.format("statestore").load(ckpt)
+
+
+def run_to_checkpoint(
+    df: DataFrame,
+    name: str,
+    output_mode: str,
+    shuffle_partitions: int | None = None,
+) -> str:
+    """Execute a streaming DataFrame to completion into a memory sink
+    named ``name`` and return the CHECKPOINT path — for callers that
+    need to read the state store with non-default options (e.g.
+    ``joinSide`` for stream-stream join state, which keeps one store
+    per side).
 
     A FRESH checkpoint dir per run makes the query reprocess the full
     input (a reused checkpoint would see zero new files and emit
@@ -98,65 +142,6 @@ def run_to_memory(
     is introduced, scope the setting to a per-query session clone
     (``spark.newSession()`` shares the SparkContext but isolates SQL
     conf) instead of set/restore."""
-    ckpt = tempfile.mkdtemp(prefix=f"dcs_ckpt_{name}_")
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name)
-
-
-def run_to_state(
-    df: DataFrame,
-    name: str,
-    output_mode: str,
-    shuffle_partitions: int | None = None,
-) -> DataFrame:
-    """Execute a stateful streaming DataFrame to completion, then read
-    the committed STATE STORE back through Spark's built-in state data
-    source (``spark.read.format("statestore")`` — core since 4.0) and
-    return it as a batch DataFrame of (key struct, value struct,
-    partition_id) rows.
-
-    This is the operational introspection path at 100 TB: debugging a
-    stateful pipeline's accumulated state (is a key stuck? how big is
-    each aggregation buffer?) reads ONLY the checkpoint's state files
-    — zero replay of the (unbounded) input.  The state source scans
-    the latest committed snapshot per partition, so its cost is
-    O(state), not O(history).
-
-    Same shuffle-partition pin and fresh-checkpoint semantics as
-    ``run_to_memory`` (the partition count is baked into the
-    checkpoint at first batch; state correctness must be — and is —
-    invariant to it).
-    """
-    ckpt = run_to_checkpoint(df, name, output_mode, shuffle_partitions)
-    return df.sparkSession.read.format("statestore").load(ckpt)
-
-
-def run_to_checkpoint(
-    df: DataFrame,
-    name: str,
-    output_mode: str,
-    shuffle_partitions: int | None = None,
-) -> str:
-    """Execute a streaming DataFrame to completion into a memory sink
-    and return the CHECKPOINT path — for callers that need to read the
-    state store with non-default options (e.g. ``joinSide`` for
-    stream-stream join state, which keeps one store per side)."""
     ckpt = tempfile.mkdtemp(prefix=f"dcs_ckpt_{name}_")
     spark = df.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")

@@ -19,6 +19,22 @@ def spark():
     yield s
 
 
+@pytest.fixture(autouse=True)
+def _clear_sql_cache():
+    """Clear the SQL cache after every test, so no test starts with
+    another's persisted subtrees: a lingering one (e.g.
+    tpcds_return_ratio_rank's candidate aggregate) rewrites matching
+    plans into InMemoryRelation scans and the plan goldens drift.
+    Without a running session there is nothing to clear, and a
+    pure-Python test still starts no JVM."""
+    yield
+    from pyspark.sql import SparkSession
+
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        active.catalog.clearCache()
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR

@@ -113,13 +113,10 @@ def test_dataframe_debugging_is_off(spark):
 @pytest.mark.parametrize("name", sorted(BUILD_CEILINGS))
 def test_bench_query_build_py4j_budget(spark, sf_dir, name):
     fn = REGISTRY[name].fn
-    try:
+    fn(spark, sf_dir)
+    gc.collect()
+    with _py4j_commands(spark) as count:
         fn(spark, sf_dir)
-        gc.collect()
-        with _py4j_commands(spark) as count:
-            fn(spark, sf_dir)
-    finally:
-        spark.catalog.clearCache()
     assert count[0] <= BUILD_CEILINGS[name], (name, count[0])
 
 

@@ -36,26 +36,22 @@ def test_session_enables_cached_plan_repartitioning():
 
 
 def test_cached_subtree_gets_aqe_shuffle_read(spark, sf_dir):
-    spark.catalog.clearCache()  # the cache must materialize under test
-    try:
-        df = REGISTRY["tpcds_return_ratio_rank"].fn(spark, sf_dir)
-        df.collect()
-        cached = [
-            node.relation().cachedPlan()
-            for cls, node in walk_plan(df)
-            if cls == "InMemoryTableScanExec"
-        ]
-        assert cached, "query lost its persist()"
-        # Flag ON: the cached plan's final aggregate reads its
-        # ShuffleQueryStage through an AQEShuffleRead (size-adapted
-        # partitions).  Flag OFF (the default): no AQEShuffleRead — the
-        # raw |shuffle.partitions| layout, the structural diff between
-        # plans/r12/tpcds_return_ratio_rank_{before,after}.txt.
-        reads = [
-            node.child().getClass().getSimpleName()
-            for cls, node in walk_plan(cached[0])
-            if cls == "AQEShuffleReadExec"
-        ]
-        assert "ShuffleQueryStageExec" in reads, reads
-    finally:
-        spark.catalog.clearCache()
+    df = REGISTRY["tpcds_return_ratio_rank"].fn(spark, sf_dir)
+    df.collect()
+    cached = [
+        node.relation().cachedPlan()
+        for cls, node in walk_plan(df)
+        if cls == "InMemoryTableScanExec"
+    ]
+    assert cached, "query lost its persist()"
+    # Flag ON: the cached plan's final aggregate reads its
+    # ShuffleQueryStage through an AQEShuffleRead (size-adapted
+    # partitions).  Flag OFF (the default): no AQEShuffleRead — the
+    # raw |shuffle.partitions| layout, the structural diff between
+    # plans/r12/tpcds_return_ratio_rank_{before,after}.txt.
+    reads = [
+        node.child().getClass().getSimpleName()
+        for cls, node in walk_plan(cached[0])
+        if cls == "AQEShuffleReadExec"
+    ]
+    assert "ShuffleQueryStageExec" in reads, reads

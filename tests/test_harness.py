@@ -33,7 +33,6 @@ def _cached_entries(spark) -> int:
 
 
 def test_timings_clears_cache_after_every_run(spark):
-    spark.catalog.clearCache()
     seen = []
 
     def run():
@@ -48,8 +47,6 @@ def test_timings_clears_cache_after_every_run(spark):
 
 
 def test_timings_clears_cache_when_the_run_raises(spark):
-    spark.catalog.clearCache()
-
     def run():
         spark.range(100).persist().count()
         assert _cached_entries(spark) == 1

@@ -191,10 +191,5 @@ def test_plan_matches_golden(spark, sf_dir, name):
             "round-9 ladder note)"
         )
 
-    # goldens are pinned from a CLEAN cache — a lingering persisted
-    # subtree (e.g. tpcds_return_ratio_rank's candidate aggregate)
-    # would rewrite matching plans into InMemoryRelation and the
-    # operator sequence would drift
-    spark.catalog.clearCache()
     ops = operators_in_plan(REGISTRY[name].fn(spark, sf_dir))
     assert_matches_golden(ops, _golden(spark, sf_dir, name))

@@ -5,12 +5,15 @@ comet/CometPlanStabilitySuite.scala:78-125).
 
 Correctness says the rows match; these tests say the *plan* is the one
 we want at 100 TB: filters pushed to the scan, dimension joins
-broadcast, no Python (BatchEvalPython) in any hot path.
+broadcast, exchanges reused.  Each test pins one query's plan.  The
+invariants every registry query must keep (no Python UDF evaluation,
+no unpartitioned window over unbounded input, scalar outputs, no
+leaked session conf) are checked in tests/test_queries_oracle.py, on
+the same build that is compared with the oracle.
 """
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from datafusion_comet_spark.plans import (
@@ -33,11 +36,6 @@ def _shuffles(ops: list[str]) -> int:
     return sum(op.startswith("ShuffleExchangeExec") for op in ops)
 
 
-def _python_evals(ops: list[str]) -> list[str]:
-    """Python UDF evaluation operators among ``ops`` labels."""
-    return [op for op in ops if op.startswith(("BatchEvalPython", "ArrowEvalPython"))]
-
-
 def _join_types(df) -> set[str]:
     """Join type of every join node (``Inner``, ``LeftSemi``, ...)."""
     return {
@@ -45,14 +43,6 @@ def _join_types(df) -> set[str]:
         for cls, node in walk_plan(df)
         if cls.endswith("JoinExec")
     }
-
-
-@pytest.fixture(scope="module")
-def registry_plans(spark, sf_dir):
-    """Every registry query built once for the inventory-wide guards:
-    building all of them (streaming runs included) is most of this
-    file's wall time."""
-    return {name: q.fn(spark, sf_dir) for name, q in REGISTRY.items()}
 
 
 def test_q6_filters_reach_parquet_scan(spark, sf_dir):
@@ -76,21 +66,6 @@ def test_q1_is_two_phase_hash_aggregate(spark, sf_dir):
 def test_topk_uses_take_ordered(spark, sf_dir):
     df = REGISTRY["q3_shipping_priority"].fn(spark, sf_dir)
     assert "TakeOrderedAndProjectExec" in operators_in_plan(df)
-
-
-def test_no_python_udf_in_registered_queries(registry_plans):
-    """Hot paths stay JVM-side: no BatchEvalPython / ArrowEvalPython
-    operator may appear in any registered query plan.  Queries tagged
-    ``udtf`` are exempt — they exist to exercise the Python UDTF
-    surface itself (the plan legitimately contains
-    BatchEvalPythonUDTF)."""
-    offenders = []
-    for name, df in registry_plans.items():
-        if "udtf" in REGISTRY[name].tags:
-            continue
-        if _python_evals(operators_in_plan(df)):
-            offenders.append(name)
-    assert not offenders, f"Python in hot path: {offenders}"
 
 
 def test_scan_prunes_columns(spark, sf_dir):
@@ -220,9 +195,9 @@ def test_funnel_single_pass_over_events(spark, sf_dir):
 
 def test_higher_order_lambdas_stay_jvm_side(spark, sf_dir):
     """Array lambdas (filter/aggregate/exists) must evaluate as
-    Catalyst expressions, not Python UDFs."""
+    Catalyst expressions (test_queries_oracle checks that no Python
+    UDF runs)."""
     df = REGISTRY["expr_higher_order"].fn(spark, sf_dir)
-    assert not _python_evals(operators_in_plan(df))
     plan = plan_string(df, "simple")
     assert "aggregate(" in plan or "transform(" in plan or "exists(" in plan, plan[:2000]
 
@@ -240,13 +215,6 @@ def test_vocab_topk_uses_take_ordered(spark, sf_dir):
     every distinct token at 100 TB."""
     df = REGISTRY["vocab_top_tokens"].fn(spark, sf_dir)
     assert "TakeOrderedAndProjectExec" in operators_in_plan(df)
-
-
-def test_variant_extract_stays_jvm_side(spark, sf_dir):
-    """parse_json/variant_get must evaluate as JVM expressions (no
-    Python UDF stage) so the scan-side projection stays in codegen."""
-    df = REGISTRY["expr_variant"].fn(spark, sf_dir)
-    assert not _python_evals(operators_in_plan(df))
 
 
 def test_retention_reuses_user_exchange(spark, sf_dir):
@@ -506,99 +474,6 @@ def test_multi_distinct_uses_expand(spark, sf_dir):
     ops = operators_in_plan(df)
     assert "ExpandExec" in ops, ops
     assert ops.count("FileSourceScanExec") == 1, ops
-
-
-# Queries whose single-partition window input is bounded BY
-# CONSTRUCTION — the justification strings are the audit trail; a new
-# entry here needs the same scrutiny the originals got in round 3.
-_SINGLE_WINDOW_BOUNDED = {
-    "tpcds_quarterly_share_growth": (
-        "window input is the world rollup keyed by quarter(date) — "
-        "<=4 rows by schema domain, invariant to data scale"
-    ),
-    "tpcds_weekday_pivot_ratio": (
-        "window input is the month pivot over a 6-month constant "
-        "range — <=6 rows, invariant to data scale"
-    ),
-    "range_generator": (
-        "input is a constant 1000-row literal Range; a global running "
-        "sum IS the declared semantics"
-    ),
-    "global_index_assignment": (
-        "window input is the per-partition count rollup — |partitions| "
-        "rows, bounded by cluster layout, not data size"
-    ),
-    "window_distribution_global": (
-        "window input is the per-partition count rollup — |partitions| "
-        "rows (distributed zipWithIndex idiom)"
-    ),
-    "sample_temperature_mixture": (
-        "window input is the per-source count aggregate — |sources| "
-        "rows; windowing it (vs a scalar-subquery crossJoin) keeps a "
-        "single corpus count pass in the plan"
-    ),
-    "pipeline_mixture_assembly": (
-        "same bounded normalizer window as sample_temperature_mixture "
-        "(per-source count aggregate, |sources| rows), composed into "
-        "the assembly pipeline"
-    ),
-}
-
-
-def _single_partition_feed(window) -> bool:
-    """Whether a WindowExec is fed by a SinglePartition exchange with
-    no WindowGroupLimit on the path.
-
-    Follows the Window's direct input spine — unary child after unary
-    child — to the first exchange: that exchange, however many
-    Project/Filter/Sort nodes away, is what partitions the Window's
-    input.  The walk stops without a verdict at the first non-unary
-    node (a join or union partitions only its own inputs) and a
-    WindowGroupLimit on the path means rank-limit pruning already
-    bounds the feed."""
-    node = window.child()
-    while True:
-        cls = node.getClass().getSimpleName()
-        if "Exchange" in cls:
-            partitioning = node.outputPartitioning().getClass().getSimpleName()
-            return partitioning == "SinglePartition$"
-        if cls == "WindowGroupLimitExec" or node.children().size() != 1:
-            return False
-        node = node.children().apply(0)
-
-
-def test_no_unpartitioned_window_over_unbounded_input(registry_plans):
-    """Inventory-wide guard (round-3 verdict item 1): no registered
-    query may plan an unpartitioned WindowExec over unbounded-
-    cardinality input — the single reducer that holds 100 TB.
-
-    Detection: a ``Window`` operator whose immediate subtree contains
-    ``Exchange SinglePartition``.  Exemptions:
-      * a ``WindowGroupLimit`` between the Window and the exchange —
-        rank()<=k pruning sends each upstream partition's top-k only
-        (no current query needs it — q15's protected rank was
-        retired for a broadcast-max in round 3 — but any future
-        rank()<=k top-k stays legal);
-      * the ``_SINGLE_WINDOW_BOUNDED`` allowlist, where the windowed
-        relation is bounded by construction (schema domain, query
-        constant, or |partitions|) with a written justification.
-
-    q11_important_stock's threshold window and
-    tpcds_return_ratio_rank's global ranks were retired in round 3 in
-    favor of broadcast-scalar / TakeOrdered+count-rank spellings; this
-    test keeps them retired.
-    """
-    offenders = []
-    for name, df in registry_plans.items():
-        if name in _SINGLE_WINDOW_BOUNDED:
-            continue
-        for cls, node in walk_plan(df):
-            if cls == "WindowExec" and _single_partition_feed(node):
-                offenders.append(name)
-                break
-    assert not offenders, (
-        f"unpartitioned WindowExec over unbounded input: {offenders}"
-    )
 
 
 def test_q11_threshold_reuses_fact_exchange(spark, sf_dir):
