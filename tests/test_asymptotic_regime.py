@@ -237,40 +237,47 @@ ALLOWED_BOUNDED_BROADCASTS: dict[str, list[str]] = {
 }
 
 
+# One asymptotic-mode build per query, shared by the golden and the
+# broadcast-contract tests below: (operator labels, scaling-table scans
+# under a BroadcastExchange).
+_ASYMPTOTIC_PLANS: dict[str, tuple[list[str], list[str]]] = {}
+
+
+def _asymptotic_plan(spark, sf_dir, name):
+    if name not in _ASYMPTOTIC_PLANS:
+        with asymptotic_mode(spark, sf_dir):
+            df = REGISTRY[name].fn(spark, sf_dir)
+            ops = operators_in_plan(df)
+            scanned = scans_under_broadcast(df)
+        offenders = sorted(t for t in scanned if t not in FIXED_SIZE_DIMS)
+        _ASYMPTOTIC_PLANS[name] = (ops, offenders)
+    return _ASYMPTOTIC_PLANS[name]
+
+
 @pytest.mark.parametrize("name", ASYMPTOTIC_PINNED)
 def test_asymptotic_plan_golden(spark, sf_dir, name):
-    """Both contracts on one build of the query in asymptotic mode:
-    its operator sequence is the committed ``.asymptotic.txt`` golden,
-    and nothing under a BroadcastExchange scans a scaling table — the
-    'pinned broadcast on a growing table' OOM class — except the
-    adjudicated bounded derivations in ALLOWED_BOUNDED_BROADCASTS,
-    pinned exactly (test_dim_hint.py asserts the size gates
-    per-helper; this asserts the composed plans at the ladder's
-    endpoint).  When both drift, both are reported."""
-    with asymptotic_mode(spark, sf_dir):
-        df = REGISTRY[name].fn(spark, sf_dir)
-        ops = operators_in_plan(df)
-        scanned = scans_under_broadcast(df)
-    offenders = sorted(t for t in scanned if t not in FIXED_SIZE_DIMS)
+    ops, _ = _asymptotic_plan(spark, sf_dir, name)
+    assert_matches_golden(ops, f"{name}.asymptotic.txt")
+
+
+@pytest.mark.parametrize("name", ASYMPTOTIC_PINNED)
+def test_no_scaling_broadcast_at_asymptote(spark, sf_dir, name):
+    """Nothing under a BroadcastExchange may scan a scaling table once
+    broadcasts are forced off — the 'pinned broadcast on a growing
+    table' OOM class — except the adjudicated bounded derivations in
+    ALLOWED_BOUNDED_BROADCASTS, pinned exactly (test_dim_hint.py
+    asserts the size gates per-helper; this asserts the composed
+    plans at the ladder's endpoint)."""
+    _, offenders = _asymptotic_plan(spark, sf_dir, name)
     expected = sorted(ALLOWED_BOUNDED_BROADCASTS.get(name, []))
-    drift = []
-    if offenders != expected:
-        drift.append(
-            f"{name!r} asymptotic broadcast contract drift:\n"
-            f"  allowed (bounded derivations): {expected}\n"
-            f"  actual scaling scans under broadcast: {offenders}\n"
-            "A NEW entry means a scaling table's rows are being broadcast "
-            "at 100 TB scale — gate it (_dim_hint) or bound it, and only "
-            "then extend the allowlist with the adjudication comment."
-        )
-    try:
-        assert_matches_golden(ops, f"{name}.asymptotic.txt")
-    except AssertionError as e:
-        drift.append(str(e))
-    finally:
-        # also when regenerating goldens skips the test: a broadcast
-        # drift still fails it
-        assert not drift, "\n\n".join(drift)
+    assert offenders == expected, (
+        f"{name!r} asymptotic broadcast contract drift:\n"
+        f"  allowed (bounded derivations): {expected}\n"
+        f"  actual scaling scans under broadcast: {offenders}\n"
+        "A NEW entry means a scaling table's rows are being broadcast "
+        "at 100 TB scale — gate it (_dim_hint) or bound it, and only "
+        "then extend the allowlist with the adjudication comment."
+    )
 
 
 def test_asymptotic_mode_restores_state(spark, sf_dir):
