@@ -32,7 +32,6 @@ class Query:
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None  # DuckDB SQL, or None for non-SQL-expressible ops
     tags: tuple[str, ...] = field(default_factory=tuple)
-    doc: str = ""
 
 
 REGISTRY: dict[str, Query] = {}
@@ -42,14 +41,13 @@ def register(
     name: str,
     oracle: str | None = None,
     tags: tuple[str, ...] = (),
-    doc: str = "",
 ):
     """Decorator: declare a query in the inventory."""
 
     def wrap(fn: Callable[[SparkSession, str], DataFrame]):
         if name in REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
-        REGISTRY[name] = Query(name=name, fn=fn, oracle=oracle, tags=tags, doc=doc or (fn.__doc__ or ""))
+        REGISTRY[name] = Query(name=name, fn=fn, oracle=oracle, tags=tags)
         return fn
 
     return wrap

@@ -31,38 +31,45 @@ from ..catalog import (
     parquet_row_groups,
     table_bytes,
 )
+from ..session import BROADCAST_THRESHOLD_BYTES
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-# A broadcast HINT is honored unconditionally by Catalyst — on a table
-# that grows with the scale factor it is the classic OOM-at-scale bug
-# (SCALE.md, plan-regime ladder): at sf0.1 `part` is 1 MB and the hint
-# is free performance; at sf1000 it is 30 GB and the hint is a driver
-# OOM.  Hints on SCALING tables therefore go through this size gate:
-# hint only while the table's on-disk footprint fits the broadcast
-# budget (the session's 32 MB autoBroadcastJoinThreshold; snappy
-# parquet under-states in-memory size ~2-3x, so this is deliberately
-# the same number, not a multiple of it — beyond it Catalyst/AQE pick
-# the join strategy from its own pruned estimates, including flipping
-# back to broadcast when runtime stats turn out small).  region/nation
-# are fixed-cardinality at every SF and stay unconditionally hinted.
-_DIM_HINT_MAX_BYTES = 32 << 20
+def _small(sf_dir: str, name: str) -> bool:
+    """True while base table `name` fits the session's broadcast budget
+    on disk (always for the fixed-cardinality region/nation).  Snappy
+    parquet under-states in-memory size ~2-3x, so the gate uses the
+    same number as autoBroadcastJoinThreshold, not a multiple of it."""
+    return (
+        name in FIXED_SIZE_DIMS
+        or table_bytes(sf_dir, name) <= BROADCAST_THRESHOLD_BYTES
+    )
 
 
 def _dim_hint(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
-    """Broadcast-hint a dimension(-derived) DataFrame while the BASE
-    table `name` is small on disk; above the budget return it unhinted.
+    """Broadcast-hint a dimension-derived DataFrame while the BASE table
+    `name` is small on disk; above the budget return it unhinted.
 
-    For derived frames (filters/projections/aggregates keyed by the
-    dimension), pass the base table whose cardinality bounds the
-    result — a per-partkey aggregate can never exceed |part|.
+    Ordinary dimension joins take no hint: the session's
+    autoBroadcastJoinThreshold broadcasts them from Catalyst's own
+    estimate, and a user-lowered threshold is respected.  A hint
+    ignores that threshold, so a call is warranted only where
+    Catalyst's plan differs from the one the gate wants, that is where
+    (1) Catalyst's estimate of `df` exceeds the on-disk bytes of its
+    base table (an aggregate or filter it cannot bound, so the
+    threshold under-broadcasts), or (2) Catalyst picks the other side
+    of the join as the build side.  SCALE.md lists each kept call with
+    its estimate-to-bytes ratio or the golden that changes without it.
+
+    Pass the base table whose cardinality bounds `df`: a per-partkey
+    aggregate can never exceed |part|.  Without the gate a hint on a
+    table that grows with the scale factor is the classic OOM-at-scale
+    bug (SCALE.md, plan-regime ladder).
     """
-    if name in FIXED_SIZE_DIMS or table_bytes(sf_dir, name) <= _DIM_HINT_MAX_BYTES:
-        return F.broadcast(df)
-    return df
+    return F.broadcast(df) if _small(sf_dir, name) else df
 
 
 def _stats_join_back(
@@ -92,7 +99,7 @@ def _stats_join_back(
     restores the bare-stage shape, after which AQE splits the skewed
     probe partition (`isSkewJoin`, pinned in tests/test_skew_stress.py).
     """
-    if name in FIXED_SIZE_DIMS or table_bytes(sf_dir, name) <= _DIM_HINT_MAX_BYTES:
+    if _small(sf_dir, name):
         return rows.join(F.broadcast(stats), key, how)
     npart = int(rows.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return rows.join(stats.repartition(npart), key, how)

@@ -25,15 +25,11 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from . import register
-from ._shared import _dim_hint, _spread_scan
+from ._shared import _t
 from ._values_oracles import VALUES_ORACLES
 from .similarity import _unroll_pairs
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on", "for", "with")
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # --------------------------------------------------------------------------
@@ -1479,7 +1475,7 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     train_sh = sh.filter(F.col("doc_id") % 25 != 0)
     hits = (
-        train_sh.join(_dim_hint(eval_sh, sf_dir, "documents"), "s")
+        train_sh.join(eval_sh, "s")
         .groupBy("doc_id", "source")
         .agg(F.count(F.lit(1)).alias("n_overlap"))
         .filter(F.col("n_overlap") >= 3)
@@ -2230,7 +2226,7 @@ def pipeline_corpus_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     clean = (
         kept.select("doc_id", "source", "n", F.explode_outer(sh).alias("s"))
-        .join(_dim_hint(eval_sh, sf_dir, "documents"), "s", "left")
+        .join(eval_sh, "s", "left")
         .groupBy("doc_id")
         .agg(
             F.first("source").alias("source"),

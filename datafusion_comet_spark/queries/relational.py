@@ -18,10 +18,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from . import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
+from ._shared import _t
 
 
 # --------------------------------------------------------------------------

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from . import register
-from ._shared import _dim_hint, _spread_scan
+from ._shared import _spread_scan
 
 # Winnowing parameters: k tokens per gram, w grams per window.  Any
 # shared token run of length >= K + WIN - 1 (the paper's guarantee
@@ -660,9 +660,10 @@ def decontaminate_winnow_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~2/(WIN+1) of the eval corpus's grams by the winnowing density
     bound, so the thing broadcast is a FRACTION of what the 5-gram
     variant ships — and the training side joins against it with no
-    shuffle of the corpus (the broadcast is size-gated the same way:
-    eval suites are fixed-size in production, this fixture's grows
-    with the corpus, so _dim_hint keys on the documents table).
+    shuffle of the corpus (eval suites are fixed-size in production;
+    this fixture's grows with the corpus, and the session's broadcast
+    threshold turns the join into a shuffle join once the eval
+    fingerprint set outgrows it).
     Per-doc hit counts aggregate (doc_id, source) pairs, never text.
     """
     fps = winnow_fingerprints(
@@ -674,7 +675,7 @@ def decontaminate_winnow_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval_fps = fps.filter(F.col("doc_id") % 25 == 0).select("fp").distinct()
     hits = (
         fps.filter(F.col("doc_id") % 25 != 0)
-        .join(_dim_hint(eval_fps, sf_dir, "documents"), "fp")
+        .join(eval_fps, "fp")
         .groupBy("doc_id", "source")
         .agg(F.count(F.lit(1)).alias("n_spans"))
     )

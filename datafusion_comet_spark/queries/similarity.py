@@ -16,12 +16,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, parquet_num_rows
 from . import register
-from ._shared import _spread_scan
+from ._shared import _spread_scan, _t
 from ._values_oracles import VALUES_ORACLES
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:

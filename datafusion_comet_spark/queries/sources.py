@@ -26,10 +26,7 @@ from ..sources import (
     write_read_xml,
 )
 from . import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
+from ._shared import _t
 
 
 @register(
@@ -712,9 +709,10 @@ def python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     committed slice).  The reference rejects every streaming plan
     (CometExecRule.scala:548-550); here a replayable custom stream
     source is ~40 lines of Python and the downstream aggregation is
-    the ordinary codegen'd rollup.  The oracle regenerates the same
-    rows with generate_series — pinning that offset-sliced microbatch
-    delivery loses/duplicates nothing."""
+    the ordinary codegen'd rollup.  The availableNow run reads all 1200
+    rows as ONE microbatch of four offset slices; the oracle
+    regenerates the same rows with generate_series — pinning that the
+    slicing loses/duplicates nothing."""
     from ..sources.python_datasource import register_synthetic_stream_source
     from ..streaming import run_to_memory
 

@@ -13,7 +13,7 @@ is the same plan with a continuous trigger on a landing directory.
 
 from __future__ import annotations
 
-from typing import Any, Iterator
+from typing import Iterator
 
 import pandas as pd
 
@@ -21,7 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..streaming import read_events_stream, run_to_memory
+from ..sources import scratch_dir
+from ..streaming import fresh_checkpoint, read_events_stream, run_to_memory
 from . import register
 
 
@@ -342,16 +343,10 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     idempotent-by-construction pattern for sinks without transactional
     support.  The read-back aggregate over every landed directory must
     equal the batch aggregate over the source, which the oracle checks."""
-    import shutil
-    import tempfile
     import os
+    import shutil
 
-    from ..streaming import read_events_stream
-
-    out_dir = os.path.join(
-        tempfile.gettempdir(), "dcs_io", os.path.basename(sf_dir.rstrip("/")),
-        "foreach_batch_sink",
-    )
+    out_dir = scratch_dir(sf_dir, "foreach_batch_sink")
     shutil.rmtree(out_dir, ignore_errors=True)
 
     def land(batch_df: DataFrame, batch_id: int) -> None:
@@ -361,7 +356,7 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     ev = read_events_stream(spark, sf_dir).select("event_type", "value")
-    ckpt = tempfile.mkdtemp(prefix="dcs_ckpt_foreach_batch_")
+    ckpt = fresh_checkpoint("foreach_batch")
     q = (
         ev.writeStream.foreachBatch(land)
         .option("checkpointLocation", ckpt)
@@ -461,14 +456,8 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     (1 h of stream), independent of stream length."""
     import os
     import shutil
-    import tempfile
 
-    src_dir = os.path.join(
-        tempfile.gettempdir(),
-        "dcs_io",
-        os.path.basename(sf_dir.rstrip("/")),
-        "sstream_outer_src",
-    )
+    src_dir = scratch_dir(sf_dir, "sstream_outer_src")
     shutil.rmtree(src_dir, ignore_errors=True)
     os.makedirs(src_dir)
 
@@ -587,14 +576,8 @@ def stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     of stream length."""
     import os
     import shutil
-    import tempfile
 
-    src_dir = os.path.join(
-        tempfile.gettempdir(),
-        "dcs_io",
-        os.path.basename(sf_dir.rstrip("/")),
-        "sstream_fullouter_src",
-    )
+    src_dir = scratch_dir(sf_dir, "sstream_fullouter_src")
     shutil.rmtree(src_dir, ignore_errors=True)
     os.makedirs(src_dir)
 

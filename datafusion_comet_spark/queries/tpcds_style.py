@@ -15,13 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
 from . import register
-from ._shared import SQL_REV, _dec, _dim_hint, _drev, _money
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
+from ._shared import SQL_REV, _dec, _drev, _money, _t
 
 
 @register(
@@ -66,7 +61,7 @@ def tpcds_channel_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     orders_leg = (
         _t(spark, sf_dir, "orders")
-        .join(_dim_hint(cust, sf_dir, "customer"), F.col("o_custkey") == F.col("c_custkey"))
+        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy(F.col("n_name").alias("nation"))
         .agg(_money(F.sum(_dec("o_totalprice"))).alias("amount"))
@@ -76,7 +71,7 @@ def tpcds_channel_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     returns_leg = (
         _t(spark, sf_dir, "lineitem")
         .filter(F.col("l_returnflag") == "R")
-        .join(_dim_hint(supp, sf_dir, "supplier"), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
         .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy(F.col("n_name").alias("nation"))
         .agg(_money(F.sum(_drev())).alias("amount"))
@@ -192,7 +187,7 @@ def tpcds_rank_in_category(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_partkey", "l_extendedprice", "l_discount"
     )
     agg = (
-        li.join(_dim_hint(part, sf_dir, "part"), F.col("l_partkey") == F.col("p_partkey"))
+        li.join(part, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy(
             F.col("p_brand").alias("brand"),
             F.col("p_type").alias("container"),

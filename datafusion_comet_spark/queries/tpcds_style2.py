@@ -22,7 +22,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
 from . import register
 from ._shared import (
     SPARK_SQL_REV,
@@ -32,12 +31,9 @@ from ._shared import (
     _drev,
     _money,
     _stats_join_back,
+    _t,
     _ts,
 )
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # --------------------------------------------------------------------------
@@ -88,7 +84,7 @@ def tpcds_net_after_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero = F.lit(0).cast("decimal(18,2)")
     return (
         orders.join(ret, orders.o_orderkey == ret.l_orderkey, "left")
-        .join(_dim_hint(cust, sf_dir, "customer"), orders.o_custkey == cust.c_custkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy("c_custkey", "c_name")
         .agg(
             _money(F.sum(_dec("o_totalprice"))).alias("gross"),
@@ -426,7 +422,7 @@ def tpcds_rolling_brand_deviation(
     li = _t(spark, sf_dir, "lineitem")
     part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
     monthly = (
-        li.join(_dim_hint(part, sf_dir, "part"), F.col("l_partkey") == F.col("p_partkey"))
+        li.join(part, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy(
             "p_brand",
             F.year("l_shipdate").cast("int").alias("yr"),
@@ -508,7 +504,7 @@ def tpcds_class_revenue_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p_partkey", "p_type", "p_brand"
     )
     per = (
-        li.join(_dim_hint(part, sf_dir, "part"), F.col("l_partkey") == F.col("p_partkey"))
+        li.join(part, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("p_type", "p_brand")
         .agg(F.sum(_drev()).alias("rev"))
     )
@@ -577,7 +573,7 @@ def tpcds_quarterly_share_growth(
     cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     nq = (
-        orders.join(_dim_hint(cust, sf_dir, "customer"), F.col("o_custkey") == F.col("c_custkey"))
+        orders.join(cust, F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("n_name", F.quarter("o_orderdate").cast("int").alias("qtr"))
         .agg(F.sum(_dec("o_totalprice")).alias("rev"))
@@ -813,7 +809,7 @@ def tpcds_above_avg_returners(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     per_cust = (
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(_dim_hint(cust, sf_dir, "customer"), F.col("o_custkey") == F.col("c_custkey"))
+        .join(cust, F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("c_custkey", "c_name", "n_name")
         .agg(F.sum(_drev()).alias("ret_amt"))
@@ -915,8 +911,8 @@ def tpcds_above_avg_discount(spark: SparkSession, sf_dir: str) -> DataFrame:
     division result is ever compared.
 
     Round 10 replaced the Window.partitionBy(l_partkey) spelling with
-    a per-part groupBy joined back to the rows (stats side behind the
-    _dim_hint size gate).  The window form shuffles the ENTIRE fact on
+    a per-part groupBy joined back to the rows (stats side behind
+    _stats_join_back's size gate).  The window form shuffles the ENTIRE fact on
     the part key and serializes each key on one task — un-splittable
     by AQE, the one skew shape AQE cannot rescue; Zipf(1.2) partkeys
     measured it at 2.053s vs 0.833s for this form (min-of-5, generator
@@ -1144,7 +1140,7 @@ def tpcds_monthly_pivot_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
         for m in range(1, 13)
     ]
     return (
-        li.join(_dim_hint(supp, sf_dir, "supplier"), F.col("l_suppkey") == F.col("s_suppkey"))
+        li.join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
         .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy("n_name")
         .agg(*month_cols, _money(F.sum(_drev())).alias("total"))
@@ -1196,7 +1192,7 @@ def tpcds_channel_pnl(spark: SparkSession, sf_dir: str) -> DataFrame:
     gross = F.sum(_drev())
     tax = F.sum(_drev() * _dec("l_tax", 4, 2))
     return (
-        li.join(_dim_hint(supp, sf_dir, "supplier"), F.col("l_suppkey") == F.col("s_suppkey"))
+        li.join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
         .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy("n_name")
         .agg(
@@ -1342,7 +1338,7 @@ def tpcds_acctbal_band_priority(
         )
     )
     return (
-        orders.join(_dim_hint(cust, sf_dir, "customer"), F.col("o_custkey") == F.col("c_custkey"))
+        orders.join(cust, F.col("o_custkey") == F.col("c_custkey"))
         .groupBy("o_orderpriority")
         .agg(
             F.sum(F.when(F.col("c_acctbal") < 0, 1).otherwise(0))
@@ -1625,7 +1621,7 @@ def tpcds_yoy_decline_net_returns(
         F.when(F.col("l_returnflag") != "R", _drev()).otherwise(zero)
     ) - F.sum(F.when(F.col("l_returnflag") == "R", _drev()).otherwise(zero))
     yearly = (
-        li.join(_dim_hint(part, sf_dir, "part"), F.col("l_partkey") == F.col("p_partkey"))
+        li.join(part, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("p_brand", F.year("l_shipdate").cast("int").alias("yr"))
         .agg(net.alias("net"))
     )
@@ -1768,9 +1764,9 @@ def tpcds_cross_nation_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("s_nationkey") != F.col("c_nationkey"), 1
     ).otherwise(0)
     lines = (
-        orders.join(_dim_hint(cust, sf_dir, "customer"), F.col("o_custkey") == F.col("c_custkey"))
+        orders.join(cust, F.col("o_custkey") == F.col("c_custkey"))
         .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(_dim_hint(supp, sf_dir, "supplier"), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
         .select(
             "o_orderkey",
             "o_custkey",
@@ -1855,7 +1851,7 @@ def tpcds_best_visit_per_customer(
         F.col("rn") == 1
     )
     return (
-        best.join(_dim_hint(cust, sf_dir, "customer"), F.col("o_custkey") == F.col("c_custkey"))
+        best.join(cust, F.col("o_custkey") == F.col("c_custkey"))
         .select("c_name", "o_orderkey", _money(F.col("rev")).alias("best_rev"))
         .orderBy(F.col("best_rev").desc(), "o_orderkey")
         .limit(30)

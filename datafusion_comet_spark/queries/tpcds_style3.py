@@ -26,13 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
 from . import register
-from ._shared import SQL_REV, _dim_hint, _drev, _ts
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
+from ._shared import SQL_REV, _dim_hint, _drev, _t, _ts
 
 
 @register(
@@ -104,7 +99,7 @@ def tpcds_repeat_purchase_chain(
         .filter((F.col("qty_y1") > 0) & (F.col("qty_y2") > 0))
     )
     return (
-        per_pair.join(_dim_hint(part, sf_dir, "part"), per_pair.l_partkey == part.p_partkey)
+        per_pair.join(part, per_pair.l_partkey == part.p_partkey)
         .groupBy("p_brand")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_repeat_pairs"),

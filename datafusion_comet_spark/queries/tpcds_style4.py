@@ -43,13 +43,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import load_table
 from . import register
-from ._shared import SQL_REV, _dim_hint, _drev, _ts
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
+from ._shared import SQL_REV, _drev, _t, _ts
 
 
 # --------------------------------------------------------------------------
@@ -296,9 +291,9 @@ def tpcds_pivot_date_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     pivot = _ts("1998-06-15 00:00:00")
     qty = F.col("l_quantity").cast("bigint")
     agg = (
-        li.join(_dim_hint(sup, sf_dir, "supplier"), li.l_suppkey == sup.s_suppkey)
+        li.join(sup, li.l_suppkey == sup.s_suppkey)
         .join(F.broadcast(nat), sup.s_nationkey == nat.n_nationkey)
-        .join(_dim_hint(part, sf_dir, "part"), li.l_partkey == part.p_partkey)
+        .join(part, li.l_partkey == part.p_partkey)
         .groupBy("n_name", "p_brand")
         .agg(
             F.sum(
@@ -372,9 +367,7 @@ def tpcds_excess_discount(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = _t(spark, sf_dir, "part").filter(F.col("p_size") < 10).select(
         "p_partkey"
     )
-    pruned = li.join(
-        _dim_hint(part, sf_dir, "part"), li.l_partkey == part.p_partkey, "left_semi"
-    )
+    pruned = li.join(part, li.l_partkey == part.p_partkey, "left_semi")
     # window avg must see ALL lines of each part, not just the pruned
     # subset?  No: the subquery in the oracle also scopes to the same
     # part (semi-join keeps every line OF surviving parts — pruning is
@@ -622,7 +615,7 @@ def tpcds_union_null_placeholders(spark: SparkSession, sf_dir: str) -> DataFrame
     null_s = F.lit(None).cast("string")
     open_b = (
         orders.filter(F.col("o_orderstatus") == "O")
-        .join(_dim_hint(cust, sf_dir, "customer"), orders.o_custkey == cust.c_custkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
         .select(
             F.lit("open").alias("channel"),
             F.year("o_orderdate").cast("int").alias("yr"),
@@ -746,7 +739,7 @@ def tpcds_monthly_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_brand").isin("Brand#11", "Brand#22", "Brand#33")
     ).select("p_partkey", "p_brand")
     monthly = (
-        li.join(_dim_hint(part, sf_dir, "part"), li.l_partkey == part.p_partkey)
+        li.join(part, li.l_partkey == part.p_partkey)
         .groupBy(
             F.col("p_brand").alias("brand"),
             F.year("l_shipdate").cast("int").alias("yr"),

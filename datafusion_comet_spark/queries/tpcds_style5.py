@@ -33,13 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
 from . import register
-from ._shared import SPARK_SQL_REV, SQL_REV, _dim_hint, _spread_scan
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
+from ._shared import SPARK_SQL_REV, SQL_REV, _dim_hint, _spread_scan, _t
 
 
 # --------------------------------------------------------------------------
@@ -154,7 +149,7 @@ def tpcds_cross_channel_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(round(l_extendedprice * 100) AS DECIMAL(38,0)) * n_all"
             " > sum_cents"
         )
-        .join(_dim_hint(part, sf_dir, "part"), F.col("l_partkey") == part.p_partkey)
+        .join(part, F.col("l_partkey") == part.p_partkey)
         .withColumn("yr", F.expr("CAST(year(l_shipdate) AS INT)"))
     )
     return (
@@ -217,7 +212,7 @@ def tpcds_rollup_averages(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nat = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     joined = (
-        orders.join(_dim_hint(cust, sf_dir, "customer"), orders.o_custkey == cust.c_custkey)
+        orders.join(cust, orders.o_custkey == cust.c_custkey)
         .join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey)
         .withColumn("yr", F.year("o_orderdate").cast("int"))
     )
@@ -294,7 +289,7 @@ def tpcds_disjunct_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("l_partkey").alias("fp"), F.lit(1).alias("fp_marker"))
     )
     joined = (
-        li.join(_dim_hint(sup, sf_dir, "supplier"), li.l_suppkey == sup.s_suppkey)
+        li.join(sup, li.l_suppkey == sup.s_suppkey)
         .join(F.broadcast(nat), sup.s_nationkey == nat.n_nationkey)
         .join(_dim_hint(freq, sf_dir, "part"), li.l_partkey == freq.fp, "left")
         .filter(
@@ -519,10 +514,10 @@ def tpcds_week_offset_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(ord_wk, li.l_orderkey == ord_wk.o_orderkey)
         .filter(wk_seq("l_shipdate") == F.col("ord_wk") + 2)
         .join(
-            _dim_hint(part.select("p_partkey", "p_brand"), sf_dir, "part"),
+            part.select("p_partkey", "p_brand"),
             li.l_partkey == F.col("p_partkey"),
         )
-        .join(_dim_hint(promo, sf_dir, "part"), li.l_partkey == promo.promo_key, "left")
+        .join(promo, li.l_partkey == promo.promo_key, "left")
     )
     return (
         joined.groupBy("p_brand")

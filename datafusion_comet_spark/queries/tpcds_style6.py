@@ -62,13 +62,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import load_table
 from . import register
-from ._shared import SQL_REV, _dim_hint, _drev
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
+from ._shared import SQL_REV, _drev, _t
 
 
 # --------------------------------------------------------------------------
@@ -119,7 +114,7 @@ def tpcds_returner_nation_outlier(spark: SparkSession, sf_dir: str) -> DataFrame
         .groupBy("o_custkey")
         .agg(F.sum(_drev()).alias("ret_rev"))
     )
-    j = ret.join(_dim_hint(cust, sf_dir, "customer"), ret.o_custkey == cust.c_custkey)
+    j = ret.join(cust, ret.o_custkey == cust.c_custkey)
     w = Window.partitionBy("c_nationkey")
     j = j.withColumn("nat_sum", F.sum("ret_rev").over(w)).withColumn(
         "nat_n", F.count(F.lit(1)).over(w)
@@ -291,10 +286,10 @@ def tpcds_pricey_item_buyers_per_nation(
         F.col("price_c") * F.col("cat_n") > F.col("cat_sum")
     ).select("p_partkey")
     return (
-        li.join(_dim_hint(pricey, sf_dir, "part"), li.l_partkey == pricey.p_partkey)
+        li.join(pricey, li.l_partkey == pricey.p_partkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
         .filter(F.year("o_orderdate") == 1997)
-        .join(_dim_hint(cust, sf_dir, "customer"), orders.o_custkey == cust.c_custkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy(F.col("c_nationkey").cast("int").alias("c_nationkey"))
         .agg(F.count_distinct("c_custkey").alias("n_buyers"))
         .filter(F.col("n_buyers") >= 3)
@@ -345,9 +340,9 @@ def tpcds_segment_item_averages(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     joined = (
-        li.join(_dim_hint(part, sf_dir, "part"), li.l_partkey == part.p_partkey)
+        li.join(part, li.l_partkey == part.p_partkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(_dim_hint(cust, sf_dir, "customer"), orders.o_custkey == cust.c_custkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
         .filter(
             (F.col("c_mktsegment") == "BUILDING")
             & (F.year("o_orderdate") == 1997)
@@ -426,7 +421,7 @@ def tpcds_nation_set_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wanted = rich.intersect(literal)
     return (
-        li.join(_dim_hint(supp, sf_dir, "supplier"), li.l_suppkey == supp.s_suppkey)
+        li.join(supp, li.l_suppkey == supp.s_suppkey)
         .join(F.broadcast(wanted), supp.s_nationkey == wanted.nk, "semi")
         .groupBy(F.col("s_nationkey").cast("int").alias("s_nationkey"))
         .agg(F.round(F.sum(_drev()), 2).cast("double").alias("revenue"))
@@ -496,7 +491,7 @@ def tpcds_or_band_averages(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     joined = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(_dim_hint(cust, sf_dir, "customer"), orders.o_custkey == cust.c_custkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
         .filter(arm1 | arm2 | arm3)
     )
     return joined.agg(
@@ -569,7 +564,7 @@ def tpcds_quantity_moment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = F.col("l_returnflag") != "R"
     q = F.col("l_quantity").cast("long")
     m = (
-        li.join(_dim_hint(part, sf_dir, "part"), li.l_partkey == part.p_partkey)
+        li.join(part, li.l_partkey == part.p_partkey)
         .groupBy("p_brand")
         .agg(
             F.count(F.when(kept, 1)).cast("long").alias("n_kept"),
@@ -642,11 +637,11 @@ def tpcds_cross_border_brand_revenue(
     )
     cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     joined = (
-        li.join(_dim_hint(part, sf_dir, "part"), li.l_partkey == part.p_partkey)
-        .join(_dim_hint(supp, sf_dir, "supplier"), li.l_suppkey == supp.s_suppkey)
+        li.join(part, li.l_partkey == part.p_partkey)
+        .join(supp, li.l_suppkey == supp.s_suppkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
         .filter(F.year("o_orderdate") == 1997)
-        .join(_dim_hint(cust, sf_dir, "customer"), orders.o_custkey == cust.c_custkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
         .filter(F.col("c_nationkey") != F.col("s_nationkey"))
     )
     return (
@@ -704,10 +699,10 @@ def tpcds_domestic_brand_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     pair = (
-        li.join(_dim_hint(part, sf_dir, "part"), li.l_partkey == part.p_partkey)
-        .join(_dim_hint(supp, sf_dir, "supplier"), li.l_suppkey == supp.s_suppkey)
+        li.join(part, li.l_partkey == part.p_partkey)
+        .join(supp, li.l_suppkey == supp.s_suppkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(_dim_hint(cust, sf_dir, "customer"), orders.o_custkey == cust.c_custkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
         .filter(F.col("c_nationkey") == F.col("s_nationkey"))
         .groupBy(F.col("c_nationkey").alias("nk"), F.col("p_brand"))
         .agg(F.sum(_drev()).alias("rev"))
@@ -778,7 +773,7 @@ def tpcds_pivot_return_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("double")
 
     return (
-        li.join(_dim_hint(supp, sf_dir, "supplier"), li.l_suppkey == supp.s_suppkey)
+        li.join(supp, li.l_suppkey == supp.s_suppkey)
         .groupBy(F.col("s_nationkey").cast("int").alias("s_nationkey"))
         .agg(
             cell(before & kept).alias("kept_before"),
@@ -821,7 +816,7 @@ def tpcds_brand_year_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
     orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     return (
-        li.join(_dim_hint(part, sf_dir, "part"), li.l_partkey == part.p_partkey)
+        li.join(part, li.l_partkey == part.p_partkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
         .filter(F.month("o_orderdate") == 12)
         .groupBy(
@@ -882,7 +877,7 @@ def tpcds_return_lag_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = (
         li.filter(F.col("l_returnflag") == "R")
         .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(_dim_hint(supp, sf_dir, "supplier"), li.l_suppkey == supp.s_suppkey)
+        .join(supp, li.l_suppkey == supp.s_suppkey)
         .withColumn("lag_d", lag)
     )
 
@@ -1010,7 +1005,7 @@ def tpcds_top_nations_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     nat = _t(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
     nat_rev = (
-        li.join(_dim_hint(supp, sf_dir, "supplier"), li.l_suppkey == supp.s_suppkey)
+        li.join(supp, li.l_suppkey == supp.s_suppkey)
         .join(F.broadcast(nat), supp.s_nationkey == nat.n_nationkey)
         .groupBy("n_regionkey", "s_nationkey")
         .agg(F.sum(_drev()).alias("rev"))
@@ -1122,7 +1117,7 @@ def tpcds_date_intersect_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
             li.l_shipdate.cast("date") == dates.d,
             "semi",
         )
-        .join(_dim_hint(part, sf_dir, "part"), li.l_partkey == part.p_partkey)
+        .join(part, li.l_partkey == part.p_partkey)
         .groupBy("p_brand")
         .agg(F.sum(F.col("l_quantity").cast("long")).alias("ret_qty"))
     )

@@ -51,13 +51,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import load_table
 from . import register
-from ._shared import SQL_REV, _dim_hint, _drev, _money
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
+from ._shared import SQL_REV, _dim_hint, _drev, _money, _t
 
 
 # --------------------------------------------------------------------------
@@ -100,7 +95,7 @@ def tpcds_mfgr_brand_december(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     return (
-        li.join(_dim_hint(part, sf_dir, "part"), li.l_partkey == part.p_partkey)
+        li.join(part, li.l_partkey == part.p_partkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
         .filter(F.month("o_orderdate") == 12)
         .groupBy(
@@ -159,7 +154,7 @@ def tpcds_name_suffix_disjunct_revenue(
         orders.filter(
             (F.quarter("o_orderdate") == 2) & (F.year("o_orderdate") == 1997)
         )
-        .join(_dim_hint(cust, sf_dir, "customer"), orders.o_custkey == cust.c_custkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
         .filter(
             zip2.isin("11", "13", "15", "17", "19")
             | F.col("c_mktsegment").isin("BUILDING", "AUTOMOBILE")
@@ -233,7 +228,7 @@ def tpcds_supplier_weekday_matrix(spark: SparkSession, sf_dir: str) -> DataFrame
 
     return (
         li.filter(F.year("l_shipdate") == 1997)
-        .join(_dim_hint(supp, sf_dir, "supplier"), li.l_suppkey == supp.s_suppkey)
+        .join(supp, li.l_suppkey == supp.s_suppkey)
         .groupBy("s_name")
         .agg(
             day(1).alias("sun_rev"),
@@ -310,12 +305,8 @@ def tpcds_mfgr_month_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (
         li.filter(F.year("l_shipdate") == 1997)
         .join(
-            _dim_hint(
-                part.filter(arm1 | arm2).withColumn(
-                    "p_mfgr", F.substring("p_brand", 1, 7)
-                ),
-                sf_dir,
-                "part",
+            part.filter(arm1 | arm2).withColumn(
+                "p_mfgr", F.substring("p_brand", 1, 7)
             ),
             li.l_partkey == part.p_partkey,
         )
@@ -479,7 +470,7 @@ def tpcds_returns_demographic_loss(
     )
     return (
         li.filter(F.col("l_returnflag") == "R")
-        .join(_dim_hint(supp, sf_dir, "supplier"), li.l_suppkey == supp.s_suppkey)
+        .join(supp, li.l_suppkey == supp.s_suppkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
         .join(_dim_hint(cust, sf_dir, "customer"), orders.o_custkey == cust.c_custkey)
         .groupBy("s_name", "c_mktsegment")
@@ -557,7 +548,7 @@ def tpcds_multi_supplier_unreturned(
         )
         .join(orders, li.l_orderkey == orders.o_orderkey)
         .filter(F.col("o_orderpriority") == "1-URGENT")
-        .join(_dim_hint(cust, sf_dir, "customer"), orders.o_custkey == cust.c_custkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
         .filter(F.col("c_nationkey") < 10)
     )
     return lines.join(
@@ -640,7 +631,7 @@ def tpcds_multi_supplier_returned(
         )
         .join(orders, li.l_orderkey == orders.o_orderkey)
         .filter(F.col("o_orderpriority") == "2-HIGH")
-        .join(_dim_hint(cust, sf_dir, "customer"), orders.o_custkey == cust.c_custkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
         .filter(F.col("c_nationkey") == 10)
     )
     return lines.join(

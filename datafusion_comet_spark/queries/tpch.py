@@ -24,7 +24,7 @@ the exact result back to double for a stable cross-engine hash.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import register
@@ -41,7 +41,6 @@ from ._shared import (  # noqa: F401  (re-exported)
     _drev,
     _money,
     _rev_cents,
-    _dim_hint,
     _stats_join_back,
     _sum_rev_money,
     _t,
@@ -251,7 +250,7 @@ def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust.join(orders, cust.c_custkey == orders.o_custkey)
         .join(li, li.l_orderkey == orders.o_orderkey)
         .join(
-            _dim_hint(supp, sf_dir, "supplier"),
+            supp,
             (li.l_suppkey == supp.s_suppkey)
             & (cust.c_nationkey == supp.s_nationkey),
         )
@@ -646,7 +645,7 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = _t(spark, sf_dir, "part")
     zero = F.expr("CAST(0 AS DECIMAL(18,2))")
     promo = F.when(F.col("p_type") == "PROMO", _drev()).otherwise(zero)
-    return li.join(_dim_hint(part, sf_dir, "part"), li.l_partkey == part.p_partkey).agg(
+    return li.join(part, li.l_partkey == part.p_partkey).agg(
         F.round(
             100.0 * F.sum(promo).cast("double") / F.sum(_drev()).cast("double"), 4
         ).alias("promo_revenue")
@@ -735,7 +734,7 @@ def q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact FIRST (per-part stats stay complete — pruning is
     part-granular), then the per-part average is computed as a
     PARTIAL-AGGREGATING groupBy joined back to the rows, with the
-    part-bounded stats side behind the _dim_hint size gate.
+    part-bounded stats side behind _stats_join_back's size gate.
 
     Round 10 replaced the earlier Window.partitionBy(l_partkey) avg:
     an unbounded-frame window over raw FACT rows serializes each key
@@ -750,7 +749,7 @@ def q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     part = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#3")
     branded = li.join(
-        _dim_hint(part.select("p_partkey"), sf_dir, "part"),
+        part.select("p_partkey"),
         li.l_partkey == F.col("p_partkey"),
         "left_semi",
     )
@@ -835,7 +834,7 @@ def q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19: OR of conjunctive range predicates across both join sides."""
     li = _t(spark, sf_dir, "lineitem")
     part = _t(spark, sf_dir, "part")
-    j = li.join(_dim_hint(part, sf_dir, "part"), li.l_partkey == part.p_partkey)
+    j = li.join(part, li.l_partkey == part.p_partkey)
     q = F.col("l_quantity")
     cond = (
         (
@@ -1033,9 +1032,9 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # window exchange on l_partkey.
     from pyspark.sql import Window as _W
 
-    joined = li.join(
-        _dim_hint(part, sf_dir, "part"), li.l_partkey == part.p_partkey
-    ).join(regional_supp, li.l_suppkey == F.col("s_suppkey"))
+    joined = li.join(part, li.l_partkey == part.p_partkey).join(
+        regional_supp, li.l_suppkey == F.col("s_suppkey")
+    )
     w = _W.partitionBy("p_partkey")
     return (
         joined.withColumn(
@@ -1151,7 +1150,7 @@ def q16_parts_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("s_suppkey")
     )
     return (
-        li.join(_dim_hint(part, sf_dir, "part"), li.l_partkey == part.p_partkey)
+        li.join(part, li.l_partkey == part.p_partkey)
         .join(bad_supp, li.l_suppkey == bad_supp.s_suppkey, "left_anti")
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
@@ -1314,7 +1313,7 @@ def q21_scale_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_suppkey")
     )
     return (
-        qualified.join(_dim_hint(supp, sf_dir, "supplier"), qualified.l_suppkey == supp.s_suppkey)
+        qualified.join(supp, qualified.l_suppkey == supp.s_suppkey)
         .groupBy("s_name")
         .agg(F.count(F.lit(1)).alias("numwait"))
         .orderBy(F.col("numwait").desc(), "s_name")

@@ -16,13 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
 from . import register
-from ._shared import _dim_hint
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
+from ._shared import _t
 
 
 @register(
@@ -378,9 +373,9 @@ def window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
             2,
         ).cast("double").alias("revenue")
     )
-    joined = rev.join(
-        _dim_hint(supp, sf_dir, "supplier"), supp.s_suppkey == rev.l_suppkey
-    ).join(F.broadcast(nat), F.col("n_nationkey") == F.col("s_nationkey"))
+    joined = rev.join(supp, supp.s_suppkey == rev.l_suppkey).join(
+        F.broadcast(nat), F.col("n_nationkey") == F.col("s_nationkey")
+    )
     w = W.partitionBy("n_name").orderBy(F.col("revenue").desc(), "s_suppkey")
     return (
         joined.select(

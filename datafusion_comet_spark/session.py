@@ -67,6 +67,11 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
+# The static broadcast budget: autoBroadcastJoinThreshold, the
+# on-disk gate of the size-gated hints (queries/_shared._dim_hint) and
+# the small/large plan-regime split (testing.scale_regime).
+BROADCAST_THRESHOLD_BYTES = 32 << 20
+
 DEFAULT_CONF: dict[str, str] = {
     # --- adaptive execution: the scale story -------------------------------
     "spark.sql.adaptive.enabled": "true",
@@ -88,7 +93,7 @@ DEFAULT_CONF: dict[str, str] = {
     # Prefer hash join when a side is small post-AQE; mirrors the
     # reference's biggest tuned win (replaceSortMergeJoin, BASELINE.md).
     "spark.sql.adaptive.autoBroadcastJoinThreshold": "64m",
-    "spark.sql.autoBroadcastJoinThreshold": "32m",
+    "spark.sql.autoBroadcastJoinThreshold": f"{BROADCAST_THRESHOLD_BYTES >> 20}m",
     # --- scan / pushdown ---------------------------------------------------
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.parquet.aggregatePushdown": "true",
@@ -336,9 +341,7 @@ def session_conf(extra_conf: dict[str, str] | None = None) -> dict[str, str]:
     """The conf ``get_session`` launches with: the defaults, sized from
     the env, then ``extra_conf``."""
     conf = dict(DEFAULT_CONF)
-    conf["spark.sql.shuffle.partitions"] = str(
-        int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", default_parallelism()))
-    )
+    conf["spark.sql.shuffle.partitions"] = str(default_parallelism())
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
     conf.setdefault("spark.driver.memory", driver_mem)
     if extra_conf:

@@ -35,21 +35,33 @@ class _Slice(InputPartition):
         self.end = end
 
 
+def _slices(lo: int, hi: int, n_parts: int) -> list[_Slice]:
+    """Metadata-only planning: ids [lo, hi) as contiguous slices of
+    (hi - lo) // n_parts ids each."""
+    step = max(1, (hi - lo) // n_parts)
+    bounds = list(range(lo, hi, step)) + [hi]
+    return [_Slice(a, b) for a, b in zip(bounds, bounds[1:])]
+
+
+def _rows(partition: _Slice, kinds: set | None = None):
+    """The rows of one slice: a pure function of the row id."""
+    for i in range(partition.start, partition.end):
+        h = (i * _MIX) % (1 << 32)
+        kind = KINDS[h % 3]
+        if kinds is None or kind in kinds:
+            yield (i, h % 97, kind, h % 1000)
+
+
 class SyntheticEventsReader(DataSourceReader):
     def __init__(self, options):
         self.n_rows = int(options.get("n_rows", 1000))
         self.n_parts = int(options.get("n_partitions", 8))
 
     def partitions(self):
-        # Metadata-only planning: contiguous id slices, one per partition.
-        step = max(1, self.n_rows // self.n_parts)
-        bounds = list(range(0, self.n_rows, step)) + [self.n_rows]
-        return [_Slice(a, b) for a, b in zip(bounds, bounds[1:])]
+        return _slices(0, self.n_rows, self.n_parts)
 
     def read(self, partition: _Slice):
-        for i in range(partition.start, partition.end):
-            h = (i * _MIX) % (1 << 32)
-            yield (i, h % 97, KINDS[h % 3], h % 1000)
+        return _rows(partition)
 
 
 class SyntheticEventsDataSource(DataSource):
@@ -70,16 +82,6 @@ def register_synthetic_source(spark) -> None:
     spark.dataSource.register(SyntheticEventsDataSource)
 
 
-# DuckDB rebuild of read(): the same pure function over generate_series.
-ORACLE_GENERATOR_SQL = """
-SELECT i AS id,
-       (i * 2654435761) % 4294967296 % 97 AS user_id,
-       ['view', 'click', 'purchase'][CAST((i * 2654435761) % 4294967296 % 3 AS INT) + 1] AS kind,
-       (i * 2654435761) % 4294967296 % 1000 AS points
-FROM (SELECT unnest(generate_series(0, {max_id})) AS i)
-"""
-
-
 # --------------------------------------------------------------------------
 # Streaming variant: the same deterministic generator exposed through the
 # Python DataSource STREAM reader protocol (initialOffset → latestOffset →
@@ -98,27 +100,21 @@ from pyspark.sql.datasource import DataSourceStreamReader  # noqa: E402
 class SyntheticEventsStreamReader(DataSourceStreamReader):
     def __init__(self, options):
         self.n_rows = int(options.get("n_rows", 1000))
-        self.batch_rows = int(options.get("batch_rows", 400))
         self.n_parts = int(options.get("n_partitions", 4))
 
     def initialOffset(self):
         return {"row": 0}
 
     def latestOffset(self):
-        # Advance at most batch_rows per microbatch, capped at n_rows —
-        # the rate-limit knob (maxOffsetsPerTrigger analogue).
+        # All n_rows are available at once: an availableNow run reads
+        # them as one microbatch.
         return {"row": self.n_rows}
 
     def partitions(self, start: dict, end: dict):
-        lo, hi = start["row"], end["row"]
-        step = max(1, (hi - lo) // self.n_parts)
-        bounds = list(range(lo, hi, step)) + [hi]
-        return [_Slice(a, b) for a, b in zip(bounds, bounds[1:])]
+        return _slices(start["row"], end["row"], self.n_parts)
 
     def read(self, partition: _Slice):
-        for i in range(partition.start, partition.end):
-            h = (i * _MIX) % (1 << 32)
-            yield (i, h % 97, KINDS[h % 3], h % 1000)
+        return _rows(partition)
 
     def commit(self, end: dict) -> None:
         # Offsets below `end` are durably processed; a real source
@@ -167,6 +163,36 @@ class _PartFile(WriterCommitMessage):
         self.n_rows = n_rows
 
 
+class _JsonlPartWriter:
+    """The task side shared by the batch and stream JSONL writers: each
+    task writes one part file under a task-unique name, invisible to
+    readers until a committed manifest lists it; abort removes them."""
+
+    _PREFIX = "part"
+
+    def __init__(self, options):
+        self.path = options.get("path")
+        if not self.path:
+            raise ValueError(f"{self._FORMAT} requires option 'path'")
+
+    def write(self, iterator):
+        _os.makedirs(self.path, exist_ok=True)
+        part = _os.path.join(
+            self.path, f"{self._PREFIX}-{_uuid.uuid4().hex}.jsonl"
+        )
+        n = 0
+        with open(part, "w") as f:
+            for row in iterator:
+                f.write(_json.dumps(row.asDict()) + "\n")
+                n += 1
+        return _PartFile(part, n)
+
+    def abort(self, messages, batchId: int | None = None) -> None:
+        for m in messages:
+            if m is not None and _os.path.exists(m.path):
+                _os.remove(m.path)
+
+
 def _publish_json(obj, dest: str) -> None:
     """Atomic manifest publication: write to a same-directory temp
     file, then os.replace() onto the final name.  A truncating
@@ -183,25 +209,10 @@ def _publish_json(obj, dest: str) -> None:
     _os.replace(tmp, dest)
 
 
-class JsonlDirWriter(DataSourceWriter):
+class JsonlDirWriter(_JsonlPartWriter, DataSourceWriter):
     """Append-only JSONL part files + manifest commit."""
 
-    def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("jsonl_dir writer requires option 'path'")
-
-    def write(self, iterator):
-        _os.makedirs(self.path, exist_ok=True)
-        # task-unique temp name: invisible to readers until the
-        # manifest lists it (readers must consult the manifest)
-        part = _os.path.join(self.path, f"part-{_uuid.uuid4().hex}.jsonl")
-        n = 0
-        with open(part, "w") as f:
-            for row in iterator:
-                f.write(_json.dumps(row.asDict()) + "\n")
-                n += 1
-        return _PartFile(part, n)
+    _FORMAT = "jsonl_dir writer"
 
     def commit(self, messages) -> None:
         manifest = {
@@ -212,11 +223,6 @@ class JsonlDirWriter(DataSourceWriter):
             "total_rows": sum(m.n_rows for m in messages),
         }
         _publish_json(manifest, _os.path.join(self.path, "_MANIFEST.json"))
-
-    def abort(self, messages) -> None:
-        for m in messages:
-            if m is not None and _os.path.exists(m.path):
-                _os.remove(m.path)
 
 
 class JsonlDirDataSource(DataSource):
@@ -289,24 +295,17 @@ class SyntheticEventsPushdownReader(SyntheticEventsReader):
                 yield f  # residual: Spark evaluates it post-scan
 
     def partitions(self):
-        # Partition pruning: plan slices over the PUSHED id range only.
-        lo, hi = self.id_lo, max(self.id_lo, self.id_hi)
-        step = max(1, self.n_rows // self.n_parts)
-        out = []
-        for a in range(0, self.n_rows, step):
-            b = min(a + step, self.n_rows)
-            a2, b2 = max(a, lo), min(b, hi)
-            if a2 < b2:
-                out.append(_Slice(a2, b2))
+        # Partition pruning: the unpushed slices, clipped to the PUSHED
+        # id range; slices outside it are never planned.
+        out = [
+            _Slice(max(s.start, self.id_lo), min(s.end, self.id_hi))
+            for s in super().partitions()
+            if max(s.start, self.id_lo) < min(s.end, self.id_hi)
+        ]
         return out or [_Slice(0, 0)]
 
     def read(self, partition: _Slice):
-        for i in range(partition.start, partition.end):
-            h = (i * _MIX) % (1 << 32)
-            kind = KINDS[h % 3]
-            if self.kinds is not None and kind not in self.kinds:
-                continue
-            yield (i, h % 97, kind, h % 1000)
+        return _rows(partition, self.kinds)
 
 
 class SyntheticEventsPushdownDataSource(DataSource):
@@ -343,23 +342,9 @@ def register_synthetic_pushdown_source(spark) -> None:
 from pyspark.sql.datasource import DataSourceStreamWriter  # noqa: E402
 
 
-class JsonlDirStreamWriter(DataSourceStreamWriter):
-    def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("jsonl_stream_dir requires option 'path'")
-
-    def write(self, iterator):
-        _os.makedirs(self.path, exist_ok=True)
-        part = _os.path.join(
-            self.path, f"stream-part-{_uuid.uuid4().hex}.jsonl"
-        )
-        n = 0
-        with open(part, "w") as f:
-            for row in iterator:
-                f.write(_json.dumps(row.asDict()) + "\n")
-                n += 1
-        return _PartFile(part, n)
+class JsonlDirStreamWriter(_JsonlPartWriter, DataSourceStreamWriter):
+    _FORMAT = "jsonl_stream_dir"
+    _PREFIX = "stream-part"
 
     def commit(self, messages, batchId: int) -> None:
         manifest = {
@@ -373,11 +358,6 @@ class JsonlDirStreamWriter(DataSourceStreamWriter):
         _publish_json(
             manifest, _os.path.join(self.path, f"manifest-{batchId:08d}.json")
         )
-
-    def abort(self, messages, batchId: int) -> None:
-        for m in messages:
-            if m is not None and _os.path.exists(m.path):
-                _os.remove(m.path)
 
 
 class JsonlDirStreamDataSource(DataSource):

@@ -21,6 +21,8 @@ continuous trigger is the production deployment shape.
 
 from __future__ import annotations
 
+import atexit
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -49,6 +51,23 @@ EVENTS_SCHEMA = StructType(
         StructField("props", StringType()),
     ]
 )
+
+
+_CKPT_ROOT: str | None = None
+
+
+def fresh_checkpoint(name: str) -> str:
+    """A new, empty checkpoint dir for one streaming run.
+
+    Every run of the process gets its own subdirectory of one
+    checkpoint root, created on first use and removed when the process
+    exits, so a checkpoint outlives its run (callers read the state
+    store from it afterwards) but not the process."""
+    global _CKPT_ROOT
+    if _CKPT_ROOT is None:
+        _CKPT_ROOT = tempfile.mkdtemp(prefix="dcs_ckpt_")
+        atexit.register(shutil.rmtree, _CKPT_ROOT, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=f"{name}_", dir=_CKPT_ROOT)
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -119,9 +138,10 @@ def run_to_checkpoint(
     ``joinSide`` for stream-stream join state, which keeps one store
     per side).
 
-    A FRESH checkpoint dir per run makes the query reprocess the full
-    input (a reused checkpoint would see zero new files and emit
-    nothing — the deterministic-replay analogue of exactly-once).
+    A FRESH checkpoint dir per run (``fresh_checkpoint``) makes the
+    query reprocess the full input (a reused checkpoint would see zero
+    new files and emit nothing — the deterministic-replay analogue of
+    exactly-once).
 
     ``shuffle_partitions`` pins the stateful-operator partition count
     for THIS query (Structured Streaming bakes the value into the
@@ -142,7 +162,7 @@ def run_to_checkpoint(
     is introduced, scope the setting to a per-query session clone
     (``spark.newSession()`` shares the SparkContext but isolates SQL
     conf) instead of set/restore."""
-    ckpt = tempfile.mkdtemp(prefix=f"dcs_ckpt_{name}_")
+    ckpt = fresh_checkpoint(name)
     spark = df.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     if shuffle_partitions is not None:

@@ -34,6 +34,7 @@ from .catalog import (
     parquet_files,
     table_path,
 )
+from .session import BROADCAST_THRESHOLD_BYTES
 
 
 def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -249,16 +250,16 @@ def lineitem_bytes(sf_dir: str) -> int:
 PINNED_LARGE_MAX_BYTES = 200 << 20
 
 
-def scale_regime(sf_dir: str, threshold_bytes: int = 32 << 20) -> bool:
+def scale_regime(sf_dir: str) -> bool:
     """True when lineitem's on-disk size exceeds the static broadcast
-    threshold (session.py pins 32 MB), i.e. the dataset is in the
-    LARGE plan regime where Catalyst correctly flips the joins whose
-    pruned-size estimate crosses the threshold from broadcast to
+    threshold (session.BROADCAST_THRESHOLD_BYTES), i.e. the dataset is
+    in the LARGE plan regime where Catalyst correctly flips the joins
+    whose pruned-size estimate crosses the threshold from broadcast to
     shuffle.  Plan tests key their expectations on this bit so both
     regimes are asserted (small: driver testdata <= sf0.1; large:
     dev/gen_scale_data.py sf1, where the flips were measured).
     """
-    return lineitem_bytes(sf_dir) > threshold_bytes
+    return lineitem_bytes(sf_dir) > BROADCAST_THRESHOLD_BYTES
 
 
 def beyond_pinned_regime(sf_dir: str) -> bool:

@@ -42,7 +42,7 @@ BUILD_CEILINGS = {
     "q1_pricing_summary": 187,
     "q3_shipping_priority": 99,
     "q4_order_priority": 60,
-    "q5_local_supplier": 102,
+    "q5_local_supplier": 99,
     "q6_forecast_revenue": 61,
     "q7_volume_shipping": 172,
     "q8_market_share": 182,
@@ -50,11 +50,11 @@ BUILD_CEILINGS = {
     "q10_returned_items": 118,
     "q12_late_shipments": 77,
     "q13_customer_distribution": 68,
-    "q14_promo_revenue": 73,
+    "q14_promo_revenue": 70,
     "q15_top_supplier": 109,
-    "q17_small_quantity": 91,
+    "q17_small_quantity": 88,
     "q18_large_volume": 117,
-    "q19_discounted_revenue": 76,
+    "q19_discounted_revenue": 73,
     "q21_waiting_supplier": 137,
     "q22_sales_opportunity": 94,
     "ann_bruteforce_topk": 234,
@@ -66,7 +66,7 @@ BUILD_CEILINGS = {
     "text_bm25_multiquery": 215,
     "text_bm25_topk": 138,
     "text_stats": 151,
-    "tpcds_cross_channel_rollup": 167,
+    "tpcds_cross_channel_rollup": 164,
     "tpcds_return_ratio_rank": 245,
 }
 

@@ -1,12 +1,12 @@
 """Size-gated broadcast hints on scaling tables (_shared._dim_hint).
 
 A broadcast HINT is honored by Catalyst unconditionally, so a hard
-``F.broadcast(part)`` is free performance at sf0.1 (part = 1 MB) and a
-driver OOM at sf1000 (part = 30 GB) — the exact "hint pinning broadcast
-on a growing table" bug the plan-regime ladder in SCALE.md names as the
-classic OOM-at-scale failure.  Round 10 moved every hint on a table
-that grows with the scale factor (part / supplier / customer /
-documents-derived) behind ``_dim_hint``, which applies the hint only
+``F.broadcast(supplier)`` is free performance at sf0.1 (supplier = 22
+kB) and a driver OOM at sf1000 — the exact "hint pinning broadcast on
+a growing table" bug the plan-regime ladder in SCALE.md names as the
+classic OOM-at-scale failure.  Ordinary dimension joins carry no hint
+(the session's autoBroadcastJoinThreshold decides them); the few hints
+that remain go through ``_dim_hint``, which applies the hint only
 while the base table's on-disk footprint fits the broadcast budget.
 
 These tests pin the mechanism in BOTH directions with the session's
@@ -22,7 +22,7 @@ source of a broadcast join:
 from __future__ import annotations
 
 from datafusion_comet_spark.catalog import table_bytes
-from datafusion_comet_spark.plans import operators_in_plan
+from datafusion_comet_spark.plans import operators_in_plan, scans_under_broadcast
 from datafusion_comet_spark.queries import load_all
 from datafusion_comet_spark.testing import conf_override, forged_sizes
 
@@ -32,28 +32,42 @@ _NO_AUTO_BROADCAST = {
     "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
 }
 
+# A query that keeps a _dim_hint: tpcds_best_worst_performers hints
+# supplier in its name join, where Catalyst's own estimate would build
+# on the ranked aggregate instead (SCALE.md, hint census).
+HINTED = "tpcds_best_worst_performers"
+
 
 def _final_ops(df) -> list[str]:
     df.collect()
     return operators_in_plan(df)
 
 
+def _hinted_broadcasts(df) -> int:
+    """Broadcasts of the hinted join only: those that build on the
+    supplier scan."""
+    return scans_under_broadcast(df).count("supplier")
+
+
 def test_dim_hint_flips_with_table_size(spark, sf_dir):
-    """q14 (lineitem ⋈ part on l_partkey): hinted-broadcast while part
-    is small, shuffle join once part's size is past the budget."""
-    reg = load_all()
-    q14 = reg["q14_promo_revenue"].fn
+    """tpcds_best_worst_performers (ranked ⋈ supplier on l_suppkey):
+    hinted-broadcast while supplier is small, shuffle join once
+    supplier's size is past the budget."""
+    fn = load_all()[HINTED].fn
 
     with conf_override(spark, _NO_AUTO_BROADCAST):
         # small regime: only the hint can broadcast, and it does
-        ops_small = _final_ops(q14(spark, sf_dir))
+        small = fn(spark, sf_dir)
+        ops_small = _final_ops(small)
         assert "BroadcastHashJoinExec" in ops_small, ops_small
+        assert _hinted_broadcasts(small) > 0, ops_small
 
-        # forged 1 GB part: the hint is withheld; with auto-broadcast
+        # forged 1 GB supplier: the hint is withheld; with auto-broadcast
         # off the join must fall back to a shuffle strategy
-        with forged_sizes(sf_dir, table_bytes={"part": 1 << 30}):
-            ops_large = _final_ops(q14(spark, sf_dir))
-            assert "BroadcastHashJoinExec" not in ops_large, ops_large
+        with forged_sizes(sf_dir, table_bytes={"supplier": 1 << 30}):
+            large = fn(spark, sf_dir)
+            ops_large = _final_ops(large)
+            assert _hinted_broadcasts(large) == 0, ops_large
             assert (
                 "SortMergeJoinExec" in ops_large
                 or "ShuffledHashJoinExec" in ops_large
@@ -61,14 +75,16 @@ def test_dim_hint_flips_with_table_size(spark, sf_dir):
 
 
 def test_dim_hint_results_identical_across_regimes(spark, sf_dir):
-    """The gate changes join STRATEGY only — q14/q17 values must be
-    identical with the hint applied and withheld."""
+    """The gate changes join STRATEGY only — the hinted query's and
+    q17's (_stats_join_back) values must be identical with the hint
+    applied and withheld."""
     reg = load_all()
-    for name in ("q14_promo_revenue", "q17_small_quantity"):
+    forged = {"part": 1 << 30, "supplier": 1 << 30}
+    for name in (HINTED, "q17_small_quantity"):
         fn = reg[name].fn
         base = fn(spark, sf_dir).collect()
         with conf_override(spark, _NO_AUTO_BROADCAST), \
-             forged_sizes(sf_dir, table_bytes={"part": 1 << 30}):
+             forged_sizes(sf_dir, table_bytes=forged):
             large = fn(spark, sf_dir).collect()
         assert base == large, (name, base[:3], large[:3])
 

@@ -513,6 +513,51 @@ def test_parquet_write_emits_bloom_filters_and_sorted_stats(spark, sf_dir):
     )
 
 
+def test_streaming_checkpoints_removed_at_exit(sf_dir, tmp_path):
+    """Every streaming run checkpoints into a fresh subdirectory of one
+    per-process root, and the root is removed when the process exits:
+    a process that runs two streaming queries (one of them reads its
+    state store back from the checkpoint after the run) leaves none of
+    its checkpoint directories behind."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import json, os\n"
+        "from datafusion_comet_spark import streaming\n"
+        "from datafusion_comet_spark.queries import load_all\n"
+        "from datafusion_comet_spark.session import get_session\n"
+        "spark = get_session(app_name='dcs-ckpt-exit', master='local[2]')\n"
+        "reg = load_all()\n"
+        "for name in ('python_datasource_stream', 'stream_state_store_reader'):\n"
+        f"    assert reg[name].fn(spark, {sf_dir!r}).collect()\n"
+        "root = streaming._CKPT_ROOT\n"
+        "print(json.dumps([root, sorted(os.listdir(root))]))\n"
+    )
+    # the checkpoint root is made under TMPDIR; the Python workers of
+    # the data source import the package through PYTHONPATH
+    env = dict(
+        os.environ,
+        TMPDIR=str(tmp_path),
+        PYTHONPATH=os.pathsep.join(
+            p for p in (repo, os.environ.get("PYTHONPATH")) if p
+        ),
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", script], env=env, cwd=str(tmp_path),
+        capture_output=True, text=True, timeout=600, check=False,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    root, runs = json.loads(proc.stdout.splitlines()[-1])
+    assert os.path.dirname(root) == str(tmp_path), root
+    assert len(runs) == 2, runs
+    assert not os.path.exists(root), os.listdir(root)
+    assert not [p for p in os.listdir(tmp_path) if p.startswith("dcs_ckpt_")]
+
+
 def test_streaming_observed_metrics_report_per_batch(spark, sf_dir):
     """Streaming observability: metrics attached with df.observe()
     surface in StreamingQueryProgress.observedMetrics per microbatch —
@@ -1059,9 +1104,9 @@ def test_rocksdb_state_store_provider_matches_default(spark, sf_dir):
     executor heap) as under the default HDFS-backed in-memory one.
     The container ships rocksdbjni, so this runs for real; results
     are also checked against the batch aggregation oracle."""
-    import tempfile
-
     from pyspark.sql import functions as F
+
+    from datafusion_comet_spark.streaming import fresh_checkpoint
 
     ev = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -1093,7 +1138,7 @@ def test_rocksdb_state_store_provider_matches_default(spark, sf_dir):
                 .select(F.col("win.start").alias("w"), "n")
             )
             name = f"rocksdb_pin_{'rdb' if provider else 'dflt'}"
-            ckpt = tempfile.mkdtemp(prefix=f"dcs_ckpt_{name}_")
+            ckpt = fresh_checkpoint(name)
             q = (
                 stream.writeStream.format("memory")
                 .queryName(name)

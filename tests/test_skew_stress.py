@@ -19,9 +19,10 @@ asserted is therefore the MECHANISM on real plans + real skewed data:
 
 - AQE marks and splits the oversized partition (``isSkewJoin`` on the
   executed join) for the fact-fact joins the round-9 verdict named: customer ⋈
-  orders on Zipf o_custkey (q10 shape) and part ⋈ lineitem on Zipf
-  l_partkey (q14 shape, with the _dim_hint size gate flipped large so
-  the hint is withheld — the same composition a true 100 TB run hits);
+  orders on Zipf o_custkey (q10 shape) and part stats ⋈ lineitem on
+  Zipf l_partkey (q92 shape, with the _stats_join_back size gate
+  flipped large so the hint is withheld — the same composition a true
+  100 TB run hits);
 - splitting does not change results: each query collects identically
   with skewJoin disabled.
 
@@ -123,8 +124,8 @@ def _executed_joins(df) -> tuple[list[str], int]:
 
 def test_custkey_zipf_join_is_split_and_correct(spark, skew_dir):
     """tpcds_net_after_returns: UNFILTERED orders ⋈ customer INNER on
-    Zipf(1.2) o_custkey, with customer's _dim_hint forged LARGE so the
-    size gate withholds the broadcast hint — the hottest customer
+    Zipf(1.2) o_custkey, a shuffle join with auto-broadcast off (the
+    join carries no hint) — the hottest customer
     holds ~20% of all orders, one shuffle partition dwarfs the median,
     and AQE must split it.  (An INNER join is used advisedly:
     OptimizeSkewedJoin can split the probe side of inner joins and the
@@ -144,31 +145,30 @@ def test_custkey_zipf_join_is_split_and_correct(spark, skew_dir):
     "Skewed keys under joins")."""
     reg = load_all()
     fn = reg["tpcds_net_after_returns"].fn
-    with forged_sizes(skew_dir, table_bytes={"customer": 1 << 30}):
-        with conf_override(spark, _SKEW_CONF):
-            joins, n_split = _executed_joins(fn(spark, skew_dir))
-        assert "SortMergeJoinExec" in joins, joins
-        # partitioning-reuse suppression: no split without force
-        assert n_split == 0, joins
-        with conf_override(
-            spark,
-            {**_SKEW_CONF, "spark.sql.adaptive.forceOptimizeSkewedJoin": "true"},
-        ):
-            df = fn(spark, skew_dir)
-            _, n_split = _executed_joins(df)
-            split_rows = df.collect()
-        assert n_split, "AQE did not split the Zipf custkey join under force"
-        with conf_override(
-            spark, {**_SKEW_CONF, "spark.sql.adaptive.skewJoin.enabled": "false"}
-        ):
-            unsplit_rows = fn(spark, skew_dir).collect()
+    with conf_override(spark, _SKEW_CONF):
+        joins, n_split = _executed_joins(fn(spark, skew_dir))
+    assert "SortMergeJoinExec" in joins, joins
+    # partitioning-reuse suppression: no split without force
+    assert n_split == 0, joins
+    with conf_override(
+        spark,
+        {**_SKEW_CONF, "spark.sql.adaptive.forceOptimizeSkewedJoin": "true"},
+    ):
+        df = fn(spark, skew_dir)
+        _, n_split = _executed_joins(df)
+        split_rows = df.collect()
+    assert n_split, "AQE did not split the Zipf custkey join under force"
+    with conf_override(
+        spark, {**_SKEW_CONF, "spark.sql.adaptive.skewJoin.enabled": "false"}
+    ):
+        unsplit_rows = fn(spark, skew_dir).collect()
     assert split_rows == unsplit_rows
 
 
 def test_partkey_zipf_join_is_split_and_correct(spark, skew_dir):
     """tpcds_above_avg_discount (q92 shape): per-part discount stats
     joined back to the FULL fact on Zipf(1.2) l_partkey, with the
-    _dim_hint size gate forged LARGE so the broadcast hint is withheld
+    _stats_join_back size gate forged LARGE so the broadcast hint is withheld
     — the exact composition a 100 TB run reaches naturally (part past
     the broadcast budget -> shuffle join -> Zipf key -> skew split).
     This is also the round-10 agg+join-back rewrite's skew story
