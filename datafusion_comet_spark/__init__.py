@@ -20,4 +20,15 @@ strategy.  Structure:
                   which explicitly falls back on streaming plans)
 """
 
+import sys
+
+from pyspark import cloudpickle
+
 __version__ = "0.1.0"
+
+# Python workers unpickle the package's data sources and pandas
+# functions.  Pickled by reference, they would import
+# ``datafusion_comet_spark``, which a worker finds only under its cwd or
+# on its PYTHONPATH; pickled by value they carry their code, in any
+# session, also one another program built.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])

@@ -3,7 +3,9 @@
 The reference's scan layer (NativeScan / CsvScan / IcebergScan,
 reference: native/proto/src/proto/operator.proto:99-151) reduces in a
 single-engine build to ``spark.read`` with pushdown enabled; this
-module is the table registry used by every query in the inventory.
+module is the table registry used by every query in the inventory,
+and ``table_facts`` the one record of each table's size facts (bytes,
+rows, row groups) that the plan's size gates read.
 """
 
 from __future__ import annotations
@@ -11,6 +13,7 @@ from __future__ import annotations
 import json
 import os
 from types import SimpleNamespace
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,58 +57,54 @@ def parquet_files(sf_dir: str, name: str) -> list[str]:
     ]
 
 
+class TableFacts(NamedTuple):
+    """The size facts of one table, summed over its part files."""
+
+    bytes: int  # on disk
+    rows: int
+    row_groups: int
+
+
+# (sf_dir, table) -> its facts.  The star-schema dirs are read-only, so
+# the facts are read once per process, on first use; testing.forged_sizes
+# is the one other writer.
+_TABLE_FACTS: dict[tuple[str, str], TableFacts] = {}
+
+
+def table_facts(sf_dir: str, name: str) -> TableFacts:
+    """A table's on-disk bytes, rows and row groups, from one pass over
+    its part files' sizes and parquet footers (every footer records
+    num_rows and its row groups; the reference reads the same fields
+    for its scan statistics).  Pure metadata, no data pass, so the
+    sizing decisions cost nothing even at 100 TB.  Cached per
+    (sf_dir, table).
+
+    Every size gate reads this record: bytes the broadcast hints
+    (queries/_shared._dim_hint, _stats_join_back) and the plan regime
+    (testing.scale_regime); row groups, the hard ceiling on scan-task
+    parallelism since a split cannot subdivide one (bench.py's q1
+    note), the scan-starvation rebalance (_shared._spread_scan); rows
+    the pair-arithmetic spelling and the IVF training reservoir
+    (queries/similarity)."""
+    import pyarrow.parquet as pq
+
+    key = (sf_dir, name)
+    facts = _TABLE_FACTS.get(key)
+    if facts is None:
+        files = parquet_files(sf_dir, name)
+        footers = [pq.ParquetFile(f).metadata for f in files]
+        facts = _TABLE_FACTS[key] = TableFacts(
+            bytes=sum(os.path.getsize(f) for f in files),
+            rows=sum(m.num_rows for m in footers),
+            row_groups=sum(m.num_row_groups for m in footers),
+        )
+    return facts
+
+
 def parquet_num_rows(sf_dir: str, name: str) -> int:
-    """Exact table row count from Parquet FOOTER metadata — no scan.
-
-    Every Parquet footer records num_rows (the reference reads the
-    same field for its scan statistics); summing footers over the
-    part files of a directory-shaped table is a pure metadata
-    operation, so sizing decisions (e.g. the IVF training-reservoir
-    fraction, similarity.py) cost zero data passes even at 100 TB.
-    """
-    import pyarrow.parquet as pq
-
-    return sum(
-        pq.ParquetFile(f).metadata.num_rows for f in parquet_files(sf_dir, name)
-    )
-
-
-_TABLE_ROW_GROUPS_CACHE: dict[tuple[str, str], int] = {}
-
-
-def parquet_row_groups(sf_dir: str, name: str) -> int:
-    """Row-group count across a table's parquet files — the hard
-    ceiling on scan-task parallelism (a split cannot subdivide a row
-    group; bench.py documents the q1 measurement).  Pure footer
-    metadata, cached per (sf_dir, table).  Keys the scan-starvation
-    gate (queries/_shared._spread_scan): at 100 TB row groups vastly
-    outnumber cores and the gate is a no-op."""
-    import pyarrow.parquet as pq
-
-    key = (sf_dir, name)
-    if key not in _TABLE_ROW_GROUPS_CACHE:
-        _TABLE_ROW_GROUPS_CACHE[key] = sum(
-            pq.ParquetFile(f).metadata.num_row_groups
-            for f in parquet_files(sf_dir, name)
-        )
-    return _TABLE_ROW_GROUPS_CACHE[key]
-
-
-_TABLE_BYTES_CACHE: dict[tuple[str, str], int] = {}
-
-
-def table_bytes(sf_dir: str, name: str) -> int:
-    """On-disk size of a table (file or directory-shaped) — a pure
-    filesystem-metadata operation, cached per (sf_dir, table).  Used by
-    the size-aware broadcast-hint policy (queries/_shared._dim_hint);
-    testing.lineitem_bytes, which keys the plan-regime bit, is the
-    same sum uncached."""
-    key = (sf_dir, name)
-    if key not in _TABLE_BYTES_CACHE:
-        _TABLE_BYTES_CACHE[key] = sum(
-            os.path.getsize(f) for f in parquet_files(sf_dir, name)
-        )
-    return _TABLE_BYTES_CACHE[key]
+    """``table_facts(sf_dir, name).rows``, under the name the perfbench
+    harness imports."""
+    return table_facts(sf_dir, name).rows
 
 
 # Spark type per parquet (physical type, bit width, signed) of an INT

@@ -25,12 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import (
-    FIXED_SIZE_DIMS,
-    load_table,
-    parquet_row_groups,
-    table_bytes,
-)
+from ..catalog import FIXED_SIZE_DIMS, load_table, table_facts
 from ..session import BROADCAST_THRESHOLD_BYTES
 
 
@@ -40,12 +35,13 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _small(sf_dir: str, name: str) -> bool:
     """True while base table `name` fits the session's broadcast budget
-    on disk (always for the fixed-cardinality region/nation).  Snappy
-    parquet under-states in-memory size ~2-3x, so the gate uses the
-    same number as autoBroadcastJoinThreshold, not a multiple of it."""
+    on disk (catalog.table_facts; always for the fixed-cardinality
+    region/nation).  Snappy parquet under-states in-memory size ~2-3x,
+    so the gate uses the same number as autoBroadcastJoinThreshold, not
+    a multiple of it."""
     return (
         name in FIXED_SIZE_DIMS
-        or table_bytes(sf_dir, name) <= BROADCAST_THRESHOLD_BYTES
+        or table_facts(sf_dir, name).bytes <= BROADCAST_THRESHOLD_BYTES
     )
 
 
@@ -78,9 +74,8 @@ def _stats_join_back(
     key: str,
     sf_dir: str,
     name: str,
-    how: str = "inner",
 ) -> DataFrame:
-    """Join a per-key aggregate back to its rows — the skew-safe form
+    """Inner-join a per-key aggregate back to its rows — the skew-safe form
     of an unbounded window aggregate over a fact key (q17 /
     tpcds_above_avg_discount, round 10).
 
@@ -100,9 +95,9 @@ def _stats_join_back(
     probe partition (`isSkewJoin`, pinned in tests/test_skew_stress.py).
     """
     if _small(sf_dir, name):
-        return rows.join(F.broadcast(stats), key, how)
+        return rows.join(F.broadcast(stats), key)
     npart = int(rows.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return rows.join(stats.repartition(npart), key, how)
+    return rows.join(stats.repartition(npart), key)
 
 
 def _spread_scan(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
@@ -117,15 +112,15 @@ def _spread_scan(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
     pipelines (tokenize + gram hashing) that is the dominant cost:
     measured at sf0.1 (1 row group, 32 cores, min-of-6 interleaved)
     the winnow fingerprint pipelines drop 1.54→0.63 s / 1.18→0.60 s
-    when rebalanced.  The gate keys on FOOTER row-group counts (zero
-    data passes, cached): at 100 TB every table carries orders of
-    magnitude more row groups than the cluster has cores, the gate
-    declines, and no corpus-wide exchange is ever added — the
-    rebalance exists exactly and only where the layout starves the
-    scan."""
+    when rebalanced.  The gate keys on the footer row-group count
+    (catalog.table_facts: zero data passes, cached): at 100 TB every
+    table carries orders of magnitude more row groups than the
+    cluster has cores, the gate declines, and no corpus-wide exchange
+    is ever added — the rebalance exists exactly and only where the
+    layout starves the scan."""
     sc = df.sparkSession.sparkContext
     cores = sc.defaultParallelism
-    if parquet_row_groups(sf_dir, name) < cores:
+    if table_facts(sf_dir, name).row_groups < cores:
         return df.repartition(cores)
     return df
 
@@ -160,16 +155,10 @@ def _drev() -> Column:
     return F.expr(SPARK_SQL_REV)
 
 
-def _money(col: Column, n: int = 2) -> Column:
-    """Round an exact decimal aggregate and emit double for hashing."""
-    return F.round(col, n).cast("double")
-
-
-def _rev_cents() -> Column:
-    """Exact revenue as a 64-bit cents·1e2 product — the scaled-integer
-    kernel of q1 (see its docstring), reusable wherever a query's only
-    money aggregate is round(sum(revenue), 2)."""
-    return F.expr(_REV_CENTS)
+def _money(col: Column) -> Column:
+    """Round an exact decimal aggregate to cents and emit double for
+    hashing."""
+    return F.round(col, 2).cast("double")
 
 
 def _sum_rev_money() -> Column:

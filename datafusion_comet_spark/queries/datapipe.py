@@ -133,8 +133,9 @@ def _shingle_hashes(tokens: str) -> str:
     )
 
 
-def minhash_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """doc_id → minhash signature array<int> of length N_HASHES.
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """doc_id → minhash signature array<int> of length N_HASHES, over
+    the ``text`` column.
 
     Each shingle string is murmur3-hashed ONCE (F.hash, Spark-native —
     the same kernel the reference implements natively in
@@ -165,7 +166,7 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
     # SQL fragments, not Column calls: the 16 family members alone cost
     # 304 py4j commands per build as Column calls, ~50 as F.expr.
     exploded = (
-        docs.selectExpr("doc_id", f"{text_col} AS _text")
+        docs.selectExpr("doc_id", "text AS _text")
         .repartition(n_parts, "doc_id")
         .selectExpr("doc_id", "split(lower(_text), ' ') AS toks")
         .selectExpr("doc_id", f"explode({_shingle_hashes('toks')}) AS h")
@@ -1133,23 +1134,26 @@ def dedup_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def connected_components(
-    edges: DataFrame, src: str = "a", dst: str = "b", max_iter: int = 20
-) -> DataFrame:
-    """Connected components by iterative min-label propagation:
-    ``(node) -> component`` where component = min node id reachable.
+def connected_components(edges: DataFrame) -> DataFrame:
+    """Connected components of the ``(a, b)`` edges by iterative
+    min-label propagation, at most 20 rounds: ``(node) -> component``
+    where component = min node id reachable.
 
     The dedup endgame: candidate near-dup PAIRS (from LSH/jaccard/
     cosine) must collapse into duplicate CLUSTERS with one canonical
     survivor each.  Each iteration is a join + min-aggregate — pure
     DataFrame ops, O(diameter) rounds (near-dup clusters are shallow;
-    typical corpora converge in 3-5).  At 100 TB every round is one
+    typical corpora converge in 3-5).  Pointer doubling
+    (comp(u) <- comp(comp(u)), O(log diameter) rounds) costs a second
+    keyed shuffle per round and wins only when the diameter is much
+    larger than twice the rounds, so it is not used for these shallow
+    clusters.  At 100 TB every round is one
     keyed shuffle of the (nodes + edges) relation; the loop runs on
     the driver but touches no data there (the fixpoint check is a
     1-row aggregate).  The reference has nothing iterative at all —
     its IR is a straight-line operator tree (reference:
     native/proto/src/proto/operator.proto:31-57)."""
-    sym = edges.selectExpr(f"{src} AS n", f"{dst} AS m")
+    sym = edges.selectExpr("a AS n", "b AS m")
     sym = sym.union(sym.selectExpr("m AS n", "n AS m"))
     # The edge relation is re-read every round and the label frontier is
     # rebuilt on top of the previous round's result: without lineage
@@ -1168,7 +1172,7 @@ def connected_components(
         .selectExpr("node", "node AS comp")
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iter):
+    for _ in range(20):
         # candidate label per node: min over neighbours' labels and own
         neigh = (
             sym.selectExpr("n AS dst_node", "m AS nbr")
@@ -1190,74 +1194,6 @@ def connected_components(
             .count()
         )
         labels = new_labels
-        if changed == 0:
-            break
-    return labels
-
-
-def connected_components_doubling(
-    edges: DataFrame, src: str = "a", dst: str = "b", max_iter: int = 12
-) -> DataFrame:
-    """Connected components with pointer doubling (path halving):
-    the O(log diameter) variant of `connected_components` for graphs
-    whose components are NOT shallow (long chains from transitive
-    near-dup candidates, co-citation graphs).
-
-    Each round does the min-label propagation through EDGES, then
-    shortcuts labels through the LABEL TABLE itself —
-    comp(u) <- comp(comp(u)) — so label paths halve every round:
-    a 64-node chain converges in ~6 rounds where pure propagation
-    needs 63.  Cost per round is two keyed shuffles (one join on the
-    edge relation, one self-join of the label table) against the
-    naive version's one — the trade only wins when diameter >> 2×
-    rounds, exactly the regime it exists for.  Same fixpoint, same
-    output contract: (node, comp=min reachable node id)."""
-    sym = edges.selectExpr(f"{src} AS n", f"{dst} AS m")
-    sym = sym.union(sym.selectExpr("m AS n", "n AS m")).persist()
-    labels = (
-        sym.selectExpr("n AS node")
-        .distinct()
-        .selectExpr("node", "node AS comp")
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        neigh = (
-            sym.selectExpr("n AS dst_node", "m AS nbr")
-            .join(labels.selectExpr("node AS nbr", "comp"), "nbr")
-            .selectExpr("dst_node AS node", "comp")
-        )
-        propagated = (
-            labels.select("node", "comp")
-            .union(neigh)
-            .groupBy("node")
-            .agg(F.min("comp").alias("comp"))
-        )
-        # pointer doubling: follow the label's label.  comp ids are
-        # themselves node ids, so one self-join shortcuts every path
-        # of length 2 — applied once per round, path length halves.
-        shortcut = (
-            propagated.alias("l1")
-            .join(
-                propagated.selectExpr(
-                    "node AS comp", "comp AS comp2"
-                ).alias("l2"),
-                "comp",
-                "left",
-            )
-            .select(
-                F.col("node"),
-                F.coalesce("comp2", "comp").alias("comp"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            shortcut.selectExpr("node", "comp AS comp_new")
-            .join(labels, "node")
-            .filter(F.col("comp_new") != F.col("comp"))
-            .limit(1)
-            .count()
-        )
-        labels = shortcut
         if changed == 0:
             break
     return labels

@@ -1465,7 +1465,6 @@ def sql_scripting_block(spark: SparkSession, sf_dir: str) -> DataFrame:
     The threshold works out identically on both paths because the
     avg is computed over the SAME exact-decimal cast the oracle
     uses."""
-    spark.conf.set("spark.sql.scripting.enabled", "true")
     _t(spark, sf_dir, "orders").createOrReplaceTempView("dcs_script_orders")
     return spark.sql("""
         BEGIN

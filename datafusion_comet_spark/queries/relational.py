@@ -1551,7 +1551,7 @@ def df_lateral_join_tvf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Z-order clustering — multi-dimensional sort-key interleaving
 # --------------------------------------------------------------------------
-_Z_BITS = 10
+# the low 10 bits of a and b, interleaved
 _Z_FRAG = "(((a >> 0) & 1) << 0) | (((b >> 0) & 1) << 1) | (((a >> 1) & 1) << 2) | (((b >> 1) & 1) << 3) | (((a >> 2) & 1) << 4) | (((b >> 2) & 1) << 5) | (((a >> 3) & 1) << 6) | (((b >> 3) & 1) << 7) | (((a >> 4) & 1) << 8) | (((b >> 4) & 1) << 9) | (((a >> 5) & 1) << 10) | (((b >> 5) & 1) << 11) | (((a >> 6) & 1) << 12) | (((b >> 6) & 1) << 13) | (((a >> 7) & 1) << 14) | (((b >> 7) & 1) << 15) | (((a >> 8) & 1) << 16) | (((b >> 8) & 1) << 17) | (((a >> 9) & 1) << 18) | (((b >> 9) & 1) << 19)"
 
 

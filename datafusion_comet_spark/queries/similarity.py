@@ -14,7 +14,7 @@ import json
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..catalog import load_table, parquet_num_rows
+from ..catalog import load_table, table_facts
 from . import register
 from ._shared import _spread_scan, _t
 from ._values_oracles import VALUES_ORACLES
@@ -145,25 +145,26 @@ def cosine_unrolled(a, b, dim: int = EMB_DIM) -> Column:
 _UNROLL_MIN_ROWS = 100_000
 
 
-def _unroll_pairs(sf_dir: str, table: str = "embeddings") -> bool:
-    return parquet_num_rows(sf_dir, table) >= _UNROLL_MIN_ROWS
+def _unroll_pairs(sf_dir: str, table: str) -> bool:
+    return table_facts(sf_dir, table).rows >= _UNROLL_MIN_ROWS
 
 
-def pair_dot(sf_dir: str, table: str = "embeddings"):
-    """Σ aᵢ·bᵢ for per-PAIR hot paths: interpreted fold below the scale
-    gate (cheap plans win at bench scale), unrolled codegen above it
-    (megamorphic-safe at corpus scale).  Value-identical either way."""
-    return dot_unrolled if _unroll_pairs(sf_dir, table) else dot
+def pair_dot(sf_dir: str):
+    """Σ aᵢ·bᵢ for per-PAIR hot paths over the embeddings: interpreted
+    fold below the scale gate (cheap plans win at bench scale), unrolled
+    codegen above it (megamorphic-safe at corpus scale).
+    Value-identical either way."""
+    return dot_unrolled if _unroll_pairs(sf_dir, "embeddings") else dot
 
 
-def row_norm(sf_dir: str, table: str = "embeddings"):
+def row_norm(sf_dir: str):
     """|a| for per-ROW norm hoists, same gate as pair_dot."""
-    return l2_norm_unrolled if _unroll_pairs(sf_dir, table) else l2_norm
+    return l2_norm_unrolled if _unroll_pairs(sf_dir, "embeddings") else l2_norm
 
 
-def pair_cosine(sf_dir: str, table: str = "embeddings"):
+def pair_cosine(sf_dir: str):
     """cosine(a, b) for per-pair reranks, same gate as pair_dot."""
-    return cosine_unrolled if _unroll_pairs(sf_dir, table) else cosine
+    return cosine_unrolled if _unroll_pairs(sf_dir, "embeddings") else cosine
 
 
 @register(
@@ -525,7 +526,7 @@ def _lloyd_grouped(
 
     ``train_total_rows`` is the caller-supplied corpus row count used
     to size the reservoir fraction.  Callers reading a Parquet table
-    should pass ``catalog.parquet_num_rows(...)`` — footer metadata,
+    should pass ``catalog.table_facts(...).rows`` — footer metadata,
     zero data passes (round-8 verdict, What's wrong #2); when omitted,
     a one-time column-pruned ``count()`` sizes it (one extra scan at
     corpus scale).  The fraction only needs ~1 significant digit, so
@@ -756,7 +757,7 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_max_rows=COARSE_TRAIN_MAX_ROWS,
         # footer-metadata row count — sizing the reservoir fraction
         # costs zero data passes (round-8 verdict, What's wrong #2)
-        train_total_rows=parquet_num_rows(sf_dir, "embeddings"),
+        train_total_rows=table_facts(sf_dir, "embeddings").rows,
     )
     # Norm per ROW (O(n)), never per pair: cosine's |a|·|b| recomputed
     # inside the cell join costs O(pairs·dim) — and above the scale
@@ -827,7 +828,7 @@ def ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_max_rows=COARSE_TRAIN_MAX_ROWS,
         # footer-metadata row count — sizing the reservoir fraction
         # costs zero data passes (round-8 verdict, What's wrong #2)
-        train_total_rows=parquet_num_rows(sf_dir, "embeddings"),
+        train_total_rows=table_facts(sf_dir, "embeddings").rows,
     )
     # per-ROW norms + scale-gated pair-dot spelling, as in
     # ann_ivf_kmeans (the interpreted-fold-per-pair fix; bit-identical
@@ -1063,7 +1064,7 @@ def ann_quantized_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # interpreted-eval hot path (round-11 finding, see pair_dot);
     # integer sums are order-exact, and the unrolled form keeps the
     # fold's exact shape anyway: 0L + (q₀·c₀)L + (q₁·c₁)L + ...
-    if _unroll_pairs(sf_dir):
+    if _unroll_pairs(sf_dir, "embeddings"):
         int_dot: Column = F.lit(0).cast("long")
         for _i in range(EMB_DIM):
             int_dot = int_dot + (
@@ -1145,7 +1146,7 @@ def ann_ivf_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_max_rows=COARSE_TRAIN_MAX_ROWS,
         # footer-metadata row count — sizing the reservoir fraction
         # costs zero data passes (round-8 verdict, What's wrong #2)
-        train_total_rows=parquet_num_rows(sf_dir, "embeddings"),
+        train_total_rows=table_facts(sf_dir, "embeddings").rows,
     )
     subs = emb.select(
         "vec_id",
@@ -1164,7 +1165,7 @@ def ann_ivf_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         # inactive below 100k vectors (every pinned corpus), and keeps
         # the trainer's one collected pass bounded at 100 TB
         train_max_rows=COARSE_TRAIN_MAX_ROWS,
-        train_total_rows=parquet_num_rows(sf_dir, "embeddings") * M,
+        train_total_rows=table_facts(sf_dir, "embeddings").rows * M,
     )
     df = emb.select(
         "vec_id",

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..session import conf_override
 from ..sources import (
     scratch_dir,
     write_read_csv,
@@ -532,11 +533,11 @@ def parquet_field_id_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ]
     )
-    saved_w = spark.conf.get("spark.sql.parquet.fieldId.write.enabled")
-    saved_r = spark.conf.get("spark.sql.parquet.fieldId.read.enabled")
-    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    try:
+    field_ids = {
+        "spark.sql.parquet.fieldId.write.enabled": "true",
+        "spark.sql.parquet.fieldId.read.enabled": "true",
+    }
+    with conf_override(spark, field_ids):
         stamped.write.mode("overwrite").parquet(path)
         # the scan must run while fieldId.read is on — the file's
         # physical names (n_*) never match the renamed read schema, so
@@ -548,9 +549,6 @@ def parquet_field_id_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("nation_id")
             .collect()
         )
-    finally:
-        spark.conf.set("spark.sql.parquet.fieldId.write.enabled", saved_w)
-        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", saved_r)
     assert rows and rows[0]["nation_name"] is not None, (
         "field-id matching returned no data — id binding failed"
     )
@@ -652,15 +650,10 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     # split with the default 4 MB per-file open cost guarantees >= 32
     # read splits for 64 files at ANY parallelism; the coalesce target
     # stays the only file-count decision.
-    key = "spark.sql.files.maxPartitionBytes"
-    saved = spark.conf.get(key)
-    spark.conf.set(key, "8m")
-    try:
+    with conf_override(spark, {"spark.sql.files.maxPartitionBytes": "8m"}):
         spark.read.parquet(frag).coalesce(4).write.mode(
             "overwrite"
         ).parquet(compacted)
-    finally:
-        spark.conf.set(key, saved)
     files_before = (
         spark.read.parquet(frag)
         .select(F.input_file_name().alias("f"))

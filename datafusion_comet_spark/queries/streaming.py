@@ -408,6 +408,87 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
+def _replay_click_purchase_join(
+    spark: SparkSession,
+    sf_dir: str,
+    how: str,
+    cols: tuple[str, ...],
+    src_name: str,
+    sink: str,
+) -> DataFrame:
+    """Run the watermarked click-to-purchase stream-stream join ``how``
+    over a chunked replay of the events table; return the columns
+    ``cols`` of the memory sink ``sink``.  The replay writes four
+    time-ordered single-file chunks (one per microbatch) and two
+    sentinel files under the reserved key -1 into
+    ``scratch_dir(sf_dir, src_name)``; ``stream_stream_left_outer``
+    says why.  Callers drop the sentinel key."""
+    import os
+    import shutil
+
+    from ..catalog import load_table
+
+    src_dir = scratch_dir(sf_dir, src_name)
+    shutil.rmtree(src_dir, ignore_errors=True)
+    os.makedirs(src_dir)
+
+    def write_chunk(df: DataFrame, i: int) -> None:
+        tmp = os.path.join(src_dir, f"_tmp{i}")
+        df.coalesce(1).write.mode("overwrite").parquet(tmp)
+        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
+        os.rename(
+            os.path.join(tmp, part),
+            os.path.join(src_dir, f"chunk-{i:02d}.parquet"),
+        )
+        shutil.rmtree(tmp)
+
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id", "ts", "event_type"
+    )
+    mn, mx = ev.agg(F.min("ts"), F.max("ts")).first()
+    span_us = int((mx - mn).total_seconds() * 1_000_000) + 1
+    step_us = span_us // 4 + 1
+    # four time-ordered chunks, one file each (chunk-NN ordering keeps
+    # the file-stream source replaying them as separate microbatches)
+    for i in range(4):
+        lo = F.lit(mn) + F.expr(f"INTERVAL {i * step_us} MICROSECOND")
+        hi = F.lit(mn) + F.expr(f"INTERVAL {(i + 1) * step_us} MICROSECOND")
+        write_chunk(ev.filter((F.col("ts") >= lo) & (F.col("ts") < hi)), i)
+    # sentinel rows: reserved key, 3 h past the end — written TWICE so
+    # the second file's batch runs cleanup against the advanced watermark
+    sentinel = spark.createDataFrame(
+        [(-1, None, "click"), (-1, None, "purchase")],
+        "user_id BIGINT, ts TIMESTAMP, event_type STRING",
+    ).withColumn("ts", F.lit(mx) + F.expr("INTERVAL 3 HOURS"))
+    for j in (4, 5):
+        write_chunk(sentinel, j)
+
+    stream = (
+        spark.readStream.schema("user_id BIGINT, ts TIMESTAMP, event_type STRING")
+        .format("parquet")
+        .option("maxFilesPerTrigger", "1")
+        .load(src_dir)
+    )
+    clicks = (
+        stream.filter(F.col("event_type") == "click")
+        .select("user_id", F.col("ts").alias("c_ts"))
+        .withWatermark("c_ts", "1 hour")
+    )
+    purchases = (
+        stream.filter(F.col("event_type") == "purchase")
+        .select(F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts"))
+        .withWatermark("p_ts", "1 hour")
+    )
+    pairs = clicks.join(
+        purchases,
+        (F.col("p_user") == F.col("user_id"))
+        & (F.col("p_ts") > F.col("c_ts"))
+        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 1 HOUR")),
+        how,
+    )
+    return run_to_memory(pairs.select(*cols), sink, "append", shuffle_partitions=8)
+
+
 @register(
     "stream_stream_left_outer",
     oracle="""
@@ -454,79 +535,9 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     With the flush, the streamed result equals the batch LEFT JOIN the
     oracle spells.  State per key stays bounded by watermark + range
     (1 h of stream), independent of stream length."""
-    import os
-    import shutil
-
-    src_dir = scratch_dir(sf_dir, "sstream_outer_src")
-    shutil.rmtree(src_dir, ignore_errors=True)
-    os.makedirs(src_dir)
-
-    from ..catalog import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_type"
-    )
-    mn, mx = ev.agg(F.min("ts"), F.max("ts")).first()
-    span_us = int((mx - mn).total_seconds() * 1_000_000) + 1
-    step_us = span_us // 4 + 1
-    # four time-ordered chunks, one file each (chunk-NN ordering keeps
-    # the file-stream source replaying them as separate microbatches)
-    for i in range(4):
-        lo = F.lit(mn) + F.expr(f"INTERVAL {i * step_us} MICROSECOND")
-        hi = F.lit(mn) + F.expr(f"INTERVAL {(i + 1) * step_us} MICROSECOND")
-        chunk = ev.filter((F.col("ts") >= lo) & (F.col("ts") < hi))
-        tmp = os.path.join(src_dir, f"_tmp{i}")
-        chunk.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        os.rename(
-            os.path.join(tmp, part),
-            os.path.join(src_dir, f"chunk-{i:02d}.parquet"),
-        )
-        shutil.rmtree(tmp)
-    # sentinel rows: reserved key, 3 h past the end — written TWICE so
-    # the second file's batch runs cleanup against the advanced watermark
-    sentinel = spark.createDataFrame(
-        [(-1, None, "click"), (-1, None, "purchase")],
-        "user_id BIGINT, ts TIMESTAMP, event_type STRING",
-    ).withColumn("ts", F.lit(mx) + F.expr("INTERVAL 3 HOURS"))
-    for j in (4, 5):
-        tmp = os.path.join(src_dir, f"_tmp{j}")
-        sentinel.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        os.rename(
-            os.path.join(tmp, part),
-            os.path.join(src_dir, f"chunk-{j:02d}.parquet"),
-        )
-        shutil.rmtree(tmp)
-
-    stream = (
-        spark.readStream.schema("user_id BIGINT, ts TIMESTAMP, event_type STRING")
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(src_dir)
-    )
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .select("user_id", F.col("ts").alias("c_ts"))
-        .withWatermark("c_ts", "1 hour")
-    )
-    purchases = (
-        stream.filter(F.col("event_type") == "purchase")
-        .select(F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-    )
-    pairs = clicks.join(
-        purchases,
-        (F.col("p_user") == F.col("user_id"))
-        & (F.col("p_ts") > F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 1 HOUR")),
-        "left_outer",
-    )
-    out = run_to_memory(
-        pairs.select("user_id", "c_ts", "p_ts"),
-        "stream_stream_outer_sink",
-        "append",
-        shuffle_partitions=8,
+    out = _replay_click_purchase_join(
+        spark, sf_dir, "left_outer", ("user_id", "c_ts", "p_ts"),
+        "sstream_outer_src", "stream_stream_outer_sink",
     )
     return (
         out.filter(F.col("user_id") >= 0)  # drop the sentinel key
@@ -574,81 +585,9 @@ def stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     the streamed result equals the batch FULL JOIN the oracle spells.
     State per key stays bounded by watermark + join range regardless
     of stream length."""
-    import os
-    import shutil
-
-    src_dir = scratch_dir(sf_dir, "sstream_fullouter_src")
-    shutil.rmtree(src_dir, ignore_errors=True)
-    os.makedirs(src_dir)
-
-    from ..catalog import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_type"
-    )
-    mn, mx = ev.agg(F.min("ts"), F.max("ts")).first()
-    span_us = int((mx - mn).total_seconds() * 1_000_000) + 1
-    step_us = span_us // 4 + 1
-    for i in range(4):
-        lo = F.lit(mn) + F.expr(f"INTERVAL {i * step_us} MICROSECOND")
-        hi = F.lit(mn) + F.expr(
-            f"INTERVAL {(i + 1) * step_us} MICROSECOND"
-        )
-        chunk = ev.filter((F.col("ts") >= lo) & (F.col("ts") < hi))
-        tmp = os.path.join(src_dir, f"_tmp{i}")
-        chunk.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        os.rename(
-            os.path.join(tmp, part),
-            os.path.join(src_dir, f"chunk-{i:02d}.parquet"),
-        )
-        shutil.rmtree(tmp)
-    sentinel = spark.createDataFrame(
-        [(-1, None, "click"), (-1, None, "purchase")],
-        "user_id BIGINT, ts TIMESTAMP, event_type STRING",
-    ).withColumn("ts", F.lit(mx) + F.expr("INTERVAL 3 HOURS"))
-    for j in (4, 5):
-        tmp = os.path.join(src_dir, f"_tmp{j}")
-        sentinel.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        os.rename(
-            os.path.join(tmp, part),
-            os.path.join(src_dir, f"chunk-{j:02d}.parquet"),
-        )
-        shutil.rmtree(tmp)
-
-    stream = (
-        spark.readStream.schema(
-            "user_id BIGINT, ts TIMESTAMP, event_type STRING"
-        )
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(src_dir)
-    )
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .select("user_id", F.col("ts").alias("c_ts"))
-        .withWatermark("c_ts", "1 hour")
-    )
-    purchases = (
-        stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts")
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    pairs = clicks.join(
-        purchases,
-        (F.col("p_user") == F.col("user_id"))
-        & (F.col("p_ts") > F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 1 HOUR")),
-        "full_outer",
-    )
-    out = run_to_memory(
-        pairs.select("user_id", "p_user", "c_ts", "p_ts"),
-        "stream_stream_fullouter_sink",
-        "append",
-        shuffle_partitions=8,
+    out = _replay_click_purchase_join(
+        spark, sf_dir, "full_outer", ("user_id", "p_user", "c_ts", "p_ts"),
+        "sstream_fullouter_src", "stream_stream_fullouter_sink",
     )
     live = out.filter(
         (F.coalesce(F.col("user_id"), F.col("p_user")) >= 0)

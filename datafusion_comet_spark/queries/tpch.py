@@ -40,7 +40,6 @@ from ._shared import (  # noqa: F401  (re-exported)
     _dec,
     _drev,
     _money,
-    _rev_cents,
     _stats_join_back,
     _sum_rev_money,
     _t,

@@ -333,6 +333,24 @@ def _stop_active_context() -> None:
         SparkContext._active_spark_context.stop()
 
 
+@contextlib.contextmanager
+def conf_override(spark: SparkSession, settings: dict[str, str]):
+    """Set session confs for the body; on exit, exception included,
+    restore each key's earlier value, or unset it if it was unset.
+    The package's one scoped conf change."""
+    saved = {k: spark.conf.get(k, None) for k in settings}
+    try:
+        for k, v in settings.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 

@@ -45,20 +45,12 @@ def scratch_dir(sf_dir: str, leaf: str) -> str:
     return os.path.join(tempfile.gettempdir(), "dcs_io", sf_name, leaf)
 
 
-def write_read_csv(
-    spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    options: dict[str, str] | None = None,
-) -> DataFrame:
+def write_read_csv(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     """Round-trip a DataFrame through CSV with the reference's option
     surface.  Reading back uses the written schema explicitly — schema
     inference is a 2-pass scan and is never the 100 TB plan."""
-    opts = dict(CSV_OPTIONS)
-    if options:
-        opts.update(options)
-    df.write.mode("overwrite").options(**opts).csv(path)
-    return spark.read.schema(df.schema).options(**opts).csv(path)
+    df.write.mode("overwrite").options(**CSV_OPTIONS).csv(path)
+    return spark.read.schema(df.schema).options(**CSV_OPTIONS).csv(path)
 
 
 def write_read_json(
@@ -68,18 +60,13 @@ def write_read_json(
     return spark.read.schema(df.schema).options(**JSON_OPTIONS).json(path)
 
 
-def write_read_orc(
-    spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    codec: str = "zstd",
-) -> DataFrame:
-    """ORC write → read-back.  The reference has no ORC operator (its
+def write_read_orc(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
+    """zstd ORC write → read-back.  The reference has no ORC operator (its
     scan oneof is Parquet/CSV/Iceberg only, operator.proto:38-56); ORC
     comes free from Spark's vectorized ORC reader with the same
     pushdown/pruning machinery as Parquet — a strict superset of the
     reference's format surface."""
-    df.write.mode("overwrite").option("compression", codec).orc(path)
+    df.write.mode("overwrite").option("compression", "zstd").orc(path)
     return spark.read.orc(path)
 
 

@@ -36,6 +36,8 @@ from pyspark.sql.types import (
     TimestampNTZType,
 )
 
+from ..session import conf_override
+
 # Explicit schema: streaming file sources never infer (inference is a
 # second listing+scan).  events.ts is parquet TIMESTAMP(MICROS,
 # isAdjustedToUTC=false) → TIMESTAMP_NTZ, normalized below to a
@@ -163,11 +165,11 @@ def run_to_checkpoint(
     (``spark.newSession()`` shares the SparkContext but isolates SQL
     conf) instead of set/restore."""
     ckpt = fresh_checkpoint(name)
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
+    pin = (
+        {} if shuffle_partitions is None
+        else {"spark.sql.shuffle.partitions": str(shuffle_partitions)}
+    )
+    with conf_override(df.sparkSession, pin):
         q = (
             df.writeStream.format("memory")
             .queryName(name)
@@ -177,7 +179,4 @@ def run_to_checkpoint(
             .start()
         )
         q.awaitTermination()
-    finally:
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
     return ckpt

@@ -8,10 +8,11 @@ value comparison, floats with tolerance, NaN/-0.0 canonicalized.
 
 Measurement: ``timings`` is the one wall-clock timer of bench.py and
 the dev/ scripts (the reference's single benchmarks/tpc/tpcbench.py
-methodology), ``conf_override`` the one scoped conf change, and ``ab``
-the one interleaved same-process conf A/B with an exact row check.
-``forged_sizes`` is the one scoped change of the catalog's cached
-table sizes.
+methodology), and ``ab`` the one interleaved same-process conf A/B with
+an exact row check.  The one scoped conf change, ``conf_override``,
+lives in ``session`` so that queries can use it without importing
+DuckDB.  ``forged_sizes`` is the one scoped change of the catalog's
+cached table facts (``catalog.table_facts``).
 """
 
 from __future__ import annotations
@@ -26,15 +27,8 @@ from typing import Any
 
 import duckdb
 
-from .catalog import (
-    _TABLE_BYTES_CACHE,
-    _TABLE_ROW_GROUPS_CACHE,
-    FIXED_SIZE_DIMS,
-    TABLES,
-    parquet_files,
-    table_path,
-)
-from .session import BROADCAST_THRESHOLD_BYTES
+from .catalog import _TABLE_FACTS, FIXED_SIZE_DIMS, TABLES, table_facts, table_path
+from .session import BROADCAST_THRESHOLD_BYTES, conf_override
 
 
 def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -158,23 +152,6 @@ def timings(spark, thunk, n: int) -> list[float]:
     return out
 
 
-@contextmanager
-def conf_override(spark, settings: dict[str, str]):
-    """Set session confs for the body; on exit, exception included,
-    restore each key's earlier value, or unset it if it was unset."""
-    saved = {k: spark.conf.get(k, None) for k in settings}
-    try:
-        for k, v in settings.items():
-            spark.conf.set(k, v)
-        yield
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
 def ab(
     spark, build, arms: dict[str, dict[str, str]], blocks: int, runs: int
 ) -> tuple[dict[str, float], bool]:
@@ -210,34 +187,32 @@ def forged_sizes(
     sf_dir: str,
     table_bytes: dict[str, int] | None = None,
     row_groups: dict[str, int] | None = None,
+    rows: dict[str, int] | None = None,
 ):
-    """For the body, ``catalog.table_bytes`` / ``parquet_row_groups``
-    answer the forged value of each named table of ``sf_dir``.  On
-    exit, exception included, each cache entry is restored, or removed
-    if it was absent."""
-    forged = [
-        (_TABLE_BYTES_CACHE, table_bytes or {}),
-        (_TABLE_ROW_GROUPS_CACHE, row_groups or {}),
-    ]
-    saved = [(c, {t: c.get((sf_dir, t)) for t in vals}) for c, vals in forged]
+    """For the body, ``catalog.table_facts`` answers the forged value of
+    each named fact of each named table of ``sf_dir``; the facts not
+    named keep their real values.  On exit, exception included, each
+    forged table's record is restored, or dropped if it was not cached."""
+    forged = {
+        "bytes": table_bytes or {},
+        "row_groups": row_groups or {},
+        "rows": rows or {},
+    }
+    names = {t for vals in forged.values() for t in vals}
+    saved = {t: _TABLE_FACTS.get((sf_dir, t)) for t in names}
     try:
-        for cache, vals in forged:
-            cache.update({(sf_dir, t): v for t, v in vals.items()})
+        for t in names:
+            real = table_facts(sf_dir, t)
+            _TABLE_FACTS[(sf_dir, t)] = real._replace(
+                **{fact: vals[t] for fact, vals in forged.items() if t in vals}
+            )
         yield
     finally:
-        for cache, old in saved:
-            for t, v in old.items():
-                if v is None:
-                    cache.pop((sf_dir, t), None)
-                else:
-                    cache[(sf_dir, t)] = v
-
-
-def lineitem_bytes(sf_dir: str) -> int:
-    """On-disk size of the lineitem table (file or directory-shaped).
-    Uncached, unlike ``catalog.table_bytes``: the sizes
-    ``asymptotic_mode`` forges never flip ``scale_regime``."""
-    return sum(os.path.getsize(f) for f in parquet_files(sf_dir, "lineitem"))
+        for t, old in saved.items():
+            if old is None:
+                _TABLE_FACTS.pop((sf_dir, t), None)
+            else:
+                _TABLE_FACTS[(sf_dir, t)] = old
 
 
 # Exact plan expectations are pinned for TWO regime windows; beyond
@@ -259,7 +234,7 @@ def scale_regime(sf_dir: str) -> bool:
     regimes are asserted (small: driver testdata <= sf0.1; large:
     dev/gen_scale_data.py sf1, where the flips were measured).
     """
-    return lineitem_bytes(sf_dir) > BROADCAST_THRESHOLD_BYTES
+    return table_facts(sf_dir, "lineitem").bytes > BROADCAST_THRESHOLD_BYTES
 
 
 def beyond_pinned_regime(sf_dir: str) -> bool:
@@ -267,7 +242,7 @@ def beyond_pinned_regime(sf_dir: str) -> bool:
     (lineitem > PINNED_LARGE_MAX_BYTES) — exact plan tests should skip
     with a pointer at the regime ladder instead of failing on the
     next legitimate flip rung."""
-    return lineitem_bytes(sf_dir) > PINNED_LARGE_MAX_BYTES
+    return table_facts(sf_dir, "lineitem").bytes > PINNED_LARGE_MAX_BYTES
 
 
 @contextmanager

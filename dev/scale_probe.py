@@ -61,7 +61,7 @@ def probe(df) -> str:
 def main() -> None:
     from datafusion_comet_spark.queries import load_all
     from datafusion_comet_spark.session import get_session
-    from datafusion_comet_spark.testing import conf_override
+    from datafusion_comet_spark.session import conf_override
 
     spark = get_session(app_name="dcs-scale-probe")
     spark.sparkContext.setLogLevel("ERROR")

@@ -283,15 +283,15 @@ def test_no_scaling_broadcast_at_asymptote(spark, sf_dir, name):
 def test_asymptotic_mode_restores_state(spark, sf_dir):
     """The context manager must not leak the forced regime into later
     tests: threshold and forged byte counts restored on exit."""
-    from datafusion_comet_spark.catalog import _TABLE_BYTES_CACHE, table_bytes
+    from datafusion_comet_spark.catalog import table_facts
 
     before_threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    real_bytes = table_bytes(sf_dir, "lineitem")
+    real_bytes = table_facts(sf_dir, "lineitem").bytes
     with asymptotic_mode(spark, sf_dir):
         assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == "-1"
-        assert _TABLE_BYTES_CACHE[(sf_dir, "lineitem")] == 1 << 40
+        assert table_facts(sf_dir, "lineitem").bytes == 1 << 40
     assert (
         spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         == before_threshold
     )
-    assert table_bytes(sf_dir, "lineitem") == real_bytes
+    assert table_facts(sf_dir, "lineitem").bytes == real_bytes

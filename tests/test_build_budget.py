@@ -131,7 +131,7 @@ def _coarse_centroids(spark, sf_dir):
         emb, "vec_id", "emb", k=8, iters=10, seed=42,
         cache_key=f"{sf_dir}|coarse-8-10-42-ff", init="farthest",
         train_max_rows=similarity.COARSE_TRAIN_MAX_ROWS,
-        train_total_rows=similarity.parquet_num_rows(sf_dir, "embeddings"),
+        train_total_rows=similarity.table_facts(sf_dir, "embeddings").rows,
     )
     return emb, cents
 

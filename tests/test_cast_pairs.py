@@ -42,6 +42,8 @@ from decimal import ROUND_DOWN, Decimal
 import duckdb
 import pytest
 
+from datafusion_comet_spark.session import conf_override
+
 # ---------------------------------------------------------------------------
 # Type tables
 # ---------------------------------------------------------------------------
@@ -599,14 +601,9 @@ def _spark_batch(spark, frm, targets, mode):
 
     cols = ", ".join(col(i, t) for i, t in enumerate(targets))
     sql = f"SELECT ix, {cols} FROM (VALUES {rows_sql}) AS t(ix, x)"
-    saved = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set(
-        "spark.sql.ansi.enabled", "false" if mode == "LEGACY" else saved
-    )
-    try:
+    legacy = {"spark.sql.ansi.enabled": "false"} if mode == "LEGACY" else {}
+    with conf_override(spark, legacy):
         rows = sorted(spark.sql(sql).collect(), key=lambda r: r["ix"])
-    finally:
-        spark.conf.set("spark.sql.ansi.enabled", saved)
     return [
         [_canon(rows[r][f"c{i}"]) for r in range(len(vals))]
         for i, t in enumerate(targets)

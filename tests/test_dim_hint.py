@@ -15,16 +15,17 @@ source of a broadcast join:
 
 - small regime: the hint is applied -> BroadcastHashJoin even with
   autoBroadcastJoinThreshold = -1;
-- forged large regime (table_bytes cache poked to 1 GB): the hint is
+- forged large regime (table bytes forged to 1 GB): the hint is
   withheld -> the same query plans a shuffle join.
 """
 
 from __future__ import annotations
 
-from datafusion_comet_spark.catalog import table_bytes
+from datafusion_comet_spark.catalog import table_facts
 from datafusion_comet_spark.plans import operators_in_plan, scans_under_broadcast
 from datafusion_comet_spark.queries import load_all
-from datafusion_comet_spark.testing import conf_override, forged_sizes
+from datafusion_comet_spark.session import conf_override
+from datafusion_comet_spark.testing import forged_sizes
 
 
 _NO_AUTO_BROADCAST = {
@@ -103,6 +104,6 @@ def test_fixed_dims_always_hinted(spark, sf_dir):
 
 
 def test_table_bytes_is_positive_and_cached(sf_dir):
-    a = table_bytes(sf_dir, "lineitem")
-    assert a > 0
-    assert table_bytes(sf_dir, "lineitem") == a
+    a = table_facts(sf_dir, "lineitem")
+    assert a.bytes > 0
+    assert table_facts(sf_dir, "lineitem") is a

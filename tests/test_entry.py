@@ -81,7 +81,6 @@ def test_coverage_doc_names_match_registry():
     }
     # allow documented non-query identifiers (helpers, configs)
     allowed = {
-        "connected_components_doubling",  # helper fn, documented by name
         "events_anomaly",  # prose fragment guard (none expected)
     }
     stale = lookalikes - allowed

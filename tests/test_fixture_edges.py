@@ -17,6 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from datafusion_comet_spark import fixtures
+from datafusion_comet_spark.session import conf_override
 
 
 @pytest.fixture(scope="module")
@@ -74,12 +75,9 @@ def test_long_sum_overflow_all_eval_modes(spark, agg):
     with pytest.raises(Exception, match="(?i)overflow"):
         edge.agg(F.sum("l").alias("s")).collect()
     assert edge.agg(F.expr("try_sum(l)").alias("s")).collect()[0].s is None
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    try:
+    with conf_override(spark, {"spark.sql.ansi.enabled": "false"}):
         wrapped = edge.agg(F.sum("l").alias("s")).collect()[0].s
         assert wrapped == 2 * (2**63 - 1) - 2**64  # = -2
-    finally:
-        spark.conf.set("spark.sql.ansi.enabled", "true")
 
 
 def test_integral_bounds_roundtrip(spark, prim):
@@ -108,8 +106,7 @@ def test_string_to_int_cast_edges(spark, prim):
     assert got == {" 5 ": 5, "abc": None, "42": 42, "-7": -7, "": None}
     with pytest.raises(Exception, match="(?i)cast|invalid"):
         sel.select(F.col("c_str").cast("int")).collect()
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    try:
+    with conf_override(spark, {"spark.sql.ansi.enabled": "false"}):
         legacy = {
             r.c_str: r.as_int
             for r in sel.select(
@@ -117,8 +114,6 @@ def test_string_to_int_cast_edges(spark, prim):
             ).distinct().collect()
         }
         assert legacy == {" 5 ": 5, "abc": None, "42": 42, "-7": -7, "": None}
-    finally:
-        spark.conf.set("spark.sql.ansi.enabled", "true")
 
 
 def test_timestamp_pre_epoch_date_cast(spark, prim):

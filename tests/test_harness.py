@@ -1,11 +1,13 @@
 """The measurement harness in ``testing.py`` and the contracts built on it.
 
 ``timings`` is the one wall-clock timer of bench.py and the dev/
-scripts, ``conf_override`` the one scoped conf change and ``ab`` the
-one interleaved conf A/B.  These tests pin what their callers rely on
-(no cache survives a run, confs come back even when the body raises,
-the A/B row check sees real differences and only those), bench.py's
-one-JSON-line stdout, and that no script grows its own timer again.
+scripts, ``session.conf_override`` the one scoped conf change, ``ab``
+the one interleaved conf A/B and ``forged_sizes`` the one forge of the
+catalog's table facts.  These tests pin what their callers rely on (no
+cache survives a run, confs and facts come back even when the body
+raises, the A/B row check sees real differences and only those),
+bench.py's one-JSON-line stdout, and that no script grows its own
+timer, nor the package its own conf save/restore, again.
 """
 
 from __future__ import annotations
@@ -20,8 +22,10 @@ import sys
 import pytest
 
 from conftest import plant_stale_cds_archive
+from datafusion_comet_spark.catalog import table_facts
 from datafusion_comet_spark.queries import load_all
-from datafusion_comet_spark.testing import ab, conf_override, scale_factor, timings
+from datafusion_comet_spark.session import conf_override
+from datafusion_comet_spark.testing import ab, forged_sizes, scale_factor, timings
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -69,6 +73,16 @@ def test_conf_override_restores_and_unsets_when_the_body_raises(spark):
             raise RuntimeError("boom")
     assert spark.conf.get(set_key) == before
     assert spark.conf.get(unset_key, None) is None
+
+
+def test_forged_sizes_forges_only_the_named_fact_and_restores(sf_dir):
+    real = {t: table_facts(sf_dir, t) for t in ("lineitem", "orders")}
+    with pytest.raises(RuntimeError, match="boom"):
+        with forged_sizes(sf_dir, rows={"lineitem": 7}):
+            assert table_facts(sf_dir, "lineitem") == real["lineitem"]._replace(rows=7)
+            assert table_facts(sf_dir, "orders") == real["orders"]
+            raise RuntimeError("boom")
+    assert {t: table_facts(sf_dir, t) for t in real} == real
 
 
 def test_ab_sees_rows_that_differ_between_arms(spark):
@@ -138,3 +152,31 @@ def test_bench_and_dev_scripts_have_no_timer_of_their_own():
                 if timer.search(line)
             ]
     assert not hits, "time through testing.timings instead:\n" + "\n".join(hits)
+
+
+# The two confs a package module sets and leaves set, each where a
+# session the package did not create needs it: events.ts is unreadable
+# without nanosAsLong, and Python DataSource filter pushdown is decided
+# when the returned DataFrame is planned.
+_PERMANENT_CONF_SETTERS = {
+    "catalog.py": "spark.sql.legacy.parquet.nanosAsLong",
+    os.path.join("queries", "sources.py"): "spark.sql.python.filterPushdown.enabled",
+}
+
+
+def test_package_changes_confs_only_through_conf_override():
+    setter = re.compile(r"\.conf\.(set|unset)\(")
+    pkg = os.path.join(REPO, "datafusion_comet_spark")
+    hits = []
+    for p in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(p, pkg)
+        if rel == "session.py":
+            continue
+        permanent = _PERMANENT_CONF_SETTERS.get(rel)
+        with open(p) as f:
+            hits += [
+                f"datafusion_comet_spark/{rel}:{i}: {line.strip()}"
+                for i, line in enumerate(f, 1)
+                if setter.search(line) and not (permanent and permanent in line)
+            ]
+    assert not hits, "scope conf changes with session.conf_override:\n" + "\n".join(hits)

@@ -31,6 +31,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from datafusion_comet_spark.plans import pushed_filters, walk_plan
+from datafusion_comet_spark.session import conf_override
 
 ROW_GROUP_SIZE = 8000
 SRC = "/root/testdata/sf0.01/lineitem.parquet"
@@ -54,11 +55,8 @@ def mrg_path(tmp_path_factory):
 def small_split(spark):
     """Clamp maxPartitionBytes below the file size so the scan splits,
     restoring the session default afterwards."""
-    key = "spark.sql.files.maxPartitionBytes"
-    saved = spark.conf.get(key)
-    spark.conf.set(key, str(256 * 1024))
-    yield
-    spark.conf.set(key, saved)
+    with conf_override(spark, {"spark.sql.files.maxPartitionBytes": str(256 * 1024)}):
+        yield
 
 
 def test_multi_rowgroup_file_splits_into_tasks(spark, mrg_path, small_split):

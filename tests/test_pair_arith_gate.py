@@ -9,7 +9,8 @@ it the fold's CodegenFallback eval sites degrade megamorphically in
 long-lived JVMs (dev/dupskew_r11/embcos_ab.json: 5.7 s → 70-83 s for
 one unchanged plan) and the unrolled codegen form is the only safe
 spelling.  ``pair_dot`` / ``row_norm`` / ``pair_cosine`` pick the shape
-from the footer row count; BOTH shapes share the exact left-associated
+from the footer row count (``catalog.table_facts``, forged here with
+``testing.forged_sizes``); BOTH shapes share the exact left-associated
 fold order, so every double they produce is bit-identical.
 
 These tests pin (1) that bit-identity, element-for-element, on real
@@ -24,22 +25,23 @@ from pyspark.sql import functions as F
 from datafusion_comet_spark.catalog import load_table
 from datafusion_comet_spark.queries import load_all
 from datafusion_comet_spark.queries import similarity as sim
+from datafusion_comet_spark.testing import forged_sizes
 
 SF = "/root/testdata/sf0.001"
+# a corpus-scale row count for both gated corpora
+CORPUS_SCALE = dict.fromkeys(("embeddings", "documents"), 10**9)
 
 
-def test_gate_picks_fold_below_and_unrolled_above(monkeypatch):
+def test_gate_picks_fold_below_and_unrolled_above():
     # the real sf0.001 corpus is far below the threshold
     assert sim.pair_dot(SF) is sim.dot
     assert sim.row_norm(SF) is sim.l2_norm
     assert sim.pair_cosine(SF) is sim.cosine
     # forged corpus-scale row count flips every helper to the unrolled form
-    monkeypatch.setattr(
-        sim, "parquet_num_rows", lambda sf_dir, name: 10**9
-    )
-    assert sim.pair_dot(SF) is sim.dot_unrolled
-    assert sim.row_norm(SF) is sim.l2_norm_unrolled
-    assert sim.pair_cosine(SF) is sim.cosine_unrolled
+    with forged_sizes(SF, rows=CORPUS_SCALE):
+        assert sim.pair_dot(SF) is sim.dot_unrolled
+        assert sim.row_norm(SF) is sim.l2_norm_unrolled
+        assert sim.pair_cosine(SF) is sim.cosine_unrolled
 
 
 def test_spellings_bit_identical_on_corpus_vectors(spark):
@@ -73,31 +75,27 @@ def test_spellings_bit_identical_on_corpus_vectors(spark):
             assert r["c_fold"] == r["c_unr"], (r["a"], r["b"])
 
 
-def test_gated_query_identical_rows_both_sides(spark, monkeypatch):
+def test_gated_query_identical_rows_both_sides(spark):
     """ann_bruteforce_topk collects the same rows whichever side of the
     gate builds it — the end-to-end pin that flipping the spelling at
     corpus scale cannot change answers."""
     reg = load_all()
     below = reg["ann_bruteforce_topk"].fn(spark, SF).collect()
-    monkeypatch.setattr(
-        sim, "parquet_num_rows", lambda sf_dir, name: 10**9
-    )
-    assert sim.pair_dot(SF) is sim.dot_unrolled  # the flip is active
-    above = reg["ann_bruteforce_topk"].fn(spark, SF).collect()
+    with forged_sizes(SF, rows=CORPUS_SCALE):
+        assert sim.pair_dot(SF) is sim.dot_unrolled  # the flip is active
+        above = reg["ann_bruteforce_topk"].fn(spark, SF).collect()
     assert [tuple(r) for r in below] == [tuple(r) for r in above]
 
 
 # --- the LSH signature-match count shares the same gate --------------------
 
 
-def test_sig_match_gate_flip(monkeypatch):
+def test_sig_match_gate_flip():
     from datafusion_comet_spark.queries import datapipe as dp
 
     assert dp.sig_match_count(SF) is dp._sig_match_fold
-    monkeypatch.setattr(
-        sim, "parquet_num_rows", lambda sf_dir, name: 10**9
-    )
-    assert dp.sig_match_count(SF) is dp._sig_match_unrolled
+    with forged_sizes(SF, rows=CORPUS_SCALE):
+        assert dp.sig_match_count(SF) is dp._sig_match_unrolled
 
 
 def test_sig_match_spellings_identical_on_real_signatures(spark):
@@ -127,7 +125,7 @@ def test_sig_match_spellings_identical_on_real_signatures(spark):
         assert r["m_fold"] == r["m_unr"], (r["a"], r["b"])
 
 
-def test_lsh_queries_identical_rows_both_sides(spark, monkeypatch):
+def test_lsh_queries_identical_rows_both_sides(spark):
     """dedup_minhash_lsh and dedup_lsh_star_cluster collect the same
     rows whichever side of the gate builds the match count."""
     from datafusion_comet_spark.queries import datapipe as dp
@@ -137,10 +135,8 @@ def test_lsh_queries_identical_rows_both_sides(spark, monkeypatch):
         n: [tuple(r) for r in reg[n].fn(spark, SF).collect()]
         for n in ("dedup_minhash_lsh", "dedup_lsh_star_cluster")
     }
-    monkeypatch.setattr(
-        sim, "parquet_num_rows", lambda sf_dir, name: 10**9
-    )
-    assert dp.sig_match_count(SF) is dp._sig_match_unrolled
-    for n, rows in below.items():
-        above = [tuple(r) for r in reg[n].fn(spark, SF).collect()]
-        assert rows == above, n
+    with forged_sizes(SF, rows=CORPUS_SCALE):
+        assert dp.sig_match_count(SF) is dp._sig_match_unrolled
+        for n, rows in below.items():
+            above = [tuple(r) for r in reg[n].fn(spark, SF).collect()]
+            assert rows == above, n

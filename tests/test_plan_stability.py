@@ -41,7 +41,7 @@ from __future__ import annotations
 import pytest
 from conftest import assert_matches_golden
 
-from datafusion_comet_spark.catalog import parquet_row_groups
+from datafusion_comet_spark.catalog import table_facts
 from datafusion_comet_spark.plans import operators_in_plan
 from datafusion_comet_spark.queries import load_all
 from datafusion_comet_spark.testing import beyond_pinned_regime, scale_regime
@@ -177,7 +177,7 @@ def _golden(spark, sf_dir: str, name: str) -> str:
         return f"{name}.large.txt"
     table = SPREAD_SCAN_PINNED.get(name)
     cores = spark.sparkContext.defaultParallelism
-    if table and parquet_row_groups(sf_dir, table) >= cores:
+    if table and table_facts(sf_dir, table).row_groups >= cores:
         return f"{name}.unspread.txt"
     return f"{name}.txt"
 

@@ -26,7 +26,7 @@ from datafusion_comet_spark.plans import (
     walk_plan,
 )
 from datafusion_comet_spark.queries import load_all
-from datafusion_comet_spark.testing import conf_override
+from datafusion_comet_spark.session import conf_override
 
 REGISTRY = load_all()
 

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from datafusion_comet_spark.plans import walk_plan
 from datafusion_comet_spark.queries import load_all
-from datafusion_comet_spark.testing import conf_override
+from datafusion_comet_spark.session import conf_override
 
 REGISTRY = load_all()
 
@@ -238,38 +238,6 @@ def test_connected_components_known_graph(spark):
         (20, 20), (21, 20), (22, 20),
     }
     assert got == want
-
-
-def test_pointer_doubling_components_match_min_label(spark, sf_dir):
-    """connected_components_doubling must reach the same fixpoint as
-    min-label propagation on the real candidate-pair graph, AND
-    converge on a 64-node chain within ~log2 rounds (naive propagation
-    would need 63 rounds — the budget of 12 proves the shortcutting
-    works, not just the fixpoint)."""
-    from datafusion_comet_spark.queries.datapipe import (
-        connected_components,
-        connected_components_doubling,
-        dedup_levenshtein,
-    )
-
-    pairs = dedup_levenshtein(spark, sf_dir).select("a", "b")
-    naive = {
-        (r.node, r.comp) for r in connected_components(pairs).collect()
-    }
-    fast = {
-        (r.node, r.comp)
-        for r in connected_components_doubling(pairs).collect()
-    }
-    assert naive == fast
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(63)], "a long, b long"
-    )
-    got = connected_components_doubling(chain, max_iter=12).collect()
-    assert len(got) == 64
-    assert all(r.comp == 0 for r in got), sorted(
-        (r.node, r.comp) for r in got
-    )[:10]
 
 
 def test_seeded_sample_reproducible_and_unbiased(spark, sf_dir):
@@ -513,6 +481,40 @@ def test_parquet_write_emits_bloom_filters_and_sorted_stats(spark, sf_dir):
     )
 
 
+def test_python_workers_get_package_code_from_any_cwd(spark, sf_dir, tmp_path):
+    """A program that puts the repo on its own sys.path, from a cwd
+    outside it and with no PYTHONPATH, runs the queries whose data
+    sources and pandas functions execute in Python workers, and gets
+    the rows this process gets: the workers cannot import the package,
+    so its code must reach them by value."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    names = ("python_datasource_scan", "python_datasource_stream", "multimodal_decode_stub")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import json, sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "from datafusion_comet_spark.queries import load_all\n"
+        "from datafusion_comet_spark.session import get_session\n"
+        "spark = get_session(app_name='dcs-worker-import', master='local[2]')\n"
+        "reg = load_all()\n"
+        f"print(json.dumps({{n: sorted(map(repr, reg[n].fn(spark, {sf_dir!r}).collect()))\n"
+        f"                  for n in {names!r}}}))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", script], env=env, cwd=str(tmp_path),
+        capture_output=True, text=True, timeout=600, check=False,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    got = json.loads(proc.stdout.splitlines()[-1])
+    want = {n: sorted(map(repr, REGISTRY[n].fn(spark, sf_dir).collect())) for n in names}
+    assert got == want
+
+
 def test_streaming_checkpoints_removed_at_exit(sf_dir, tmp_path):
     """Every streaming run checkpoints into a fresh subdirectory of one
     per-process root, and the root is removed when the process exits:
@@ -526,7 +528,8 @@ def test_streaming_checkpoints_removed_at_exit(sf_dir, tmp_path):
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     script = (
-        "import json, os\n"
+        "import json, os, sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
         "from datafusion_comet_spark import streaming\n"
         "from datafusion_comet_spark.queries import load_all\n"
         "from datafusion_comet_spark.session import get_session\n"
@@ -537,15 +540,8 @@ def test_streaming_checkpoints_removed_at_exit(sf_dir, tmp_path):
         "root = streaming._CKPT_ROOT\n"
         "print(json.dumps([root, sorted(os.listdir(root))]))\n"
     )
-    # the checkpoint root is made under TMPDIR; the Python workers of
-    # the data source import the package through PYTHONPATH
-    env = dict(
-        os.environ,
-        TMPDIR=str(tmp_path),
-        PYTHONPATH=os.pathsep.join(
-            p for p in (repo, os.environ.get("PYTHONPATH")) if p
-        ),
-    )
+    # the checkpoint root is made under TMPDIR
+    env = dict(os.environ, TMPDIR=str(tmp_path))
     proc = subprocess.run(
         [sys.executable, "-c", script], env=env, cwd=str(tmp_path),
         capture_output=True, text=True, timeout=600, check=False,
@@ -1272,7 +1268,7 @@ def test_lloyd_train_sample_partition_invariant(spark, sf_dir):
 def test_lloyd_footer_rowcount_sizing_and_cache_key(spark, sf_dir):
     """Round-9 hardening of the train-on-sample path:
 
-    1. `parquet_num_rows` (footer metadata, zero data passes) must
+    1. the footer row count (`catalog.table_facts`, zero data passes) must
        equal the scanned count — the reservoir fraction sized from it
        is then byte-identical to the old `base.count()` sizing, so the
        pinned IVF oracles cannot move.
@@ -1286,7 +1282,7 @@ def test_lloyd_footer_rowcount_sizing_and_cache_key(spark, sf_dir):
     """
     from pyspark.sql import functions as F
 
-    from datafusion_comet_spark.catalog import parquet_num_rows
+    from datafusion_comet_spark.catalog import table_facts
     from datafusion_comet_spark.queries.similarity import (
         _as_double,
         _lloyd_centroids,
@@ -1299,7 +1295,7 @@ def test_lloyd_footer_rowcount_sizing_and_cache_key(spark, sf_dir):
     n = emb.count()
     # 1: footer count == scanned count; sizing via the hint matches
     # sizing via count() exactly (same `total`, same filter literal)
-    assert parquet_num_rows(sf_dir, "embeddings") == n
+    assert table_facts(sf_dir, "embeddings").rows == n
     bound = max(1, n // 4)
     via_count = _lloyd_centroids(
         emb, "vec_id", "emb", k=4, iters=3, seed=7,
@@ -1308,7 +1304,7 @@ def test_lloyd_footer_rowcount_sizing_and_cache_key(spark, sf_dir):
     via_footer = _lloyd_centroids(
         emb, "vec_id", "emb", k=4, iters=3, seed=7,
         init="farthest", train_max_rows=bound,
-        train_total_rows=parquet_num_rows(sf_dir, "embeddings"),
+        train_total_rows=table_facts(sf_dir, "embeddings").rows,
     )
     assert via_count == via_footer
 
@@ -1332,17 +1328,17 @@ def test_lloyd_footer_rowcount_sizing_and_cache_key(spark, sf_dir):
 
 
 def test_parquet_num_rows_directory_shape(spark, sf_dir, tmp_path):
-    """catalog.parquet_num_rows must sum footers across a
+    """catalog.table_facts must sum footers across a
     directory-shaped table (the real cluster layout: many part files),
     not just read a single file — at 100 TB every table is a directory
     and the reservoir sizing depends on this path."""
-    from datafusion_comet_spark.catalog import load_table, parquet_num_rows
+    from datafusion_comet_spark.catalog import load_table, table_facts
 
     li = load_table(spark, sf_dir, "lineitem")
     n = li.count()
     out = str(tmp_path / "lineitem.parquet")
     li.repartition(5).write.mode("overwrite").parquet(out)
-    assert parquet_num_rows(str(tmp_path), "lineitem") == n
+    assert table_facts(str(tmp_path), "lineitem").rows == n
 
 
 def test_join_constraint_propagation_bounds_state(spark, sf_dir):

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from datafusion_comet_spark.plans import skew_split_joins
-from datafusion_comet_spark.testing import conf_override
+from datafusion_comet_spark.session import conf_override
 
 
 def test_aqe_splits_skewed_join_partition(spark):

@@ -48,7 +48,8 @@ from datafusion_comet_spark.plans import (
     walk_plan,
 )
 from datafusion_comet_spark.queries import load_all
-from datafusion_comet_spark.testing import conf_override, forged_sizes
+from datafusion_comet_spark.session import conf_override
+from datafusion_comet_spark.testing import forged_sizes
 
 SKEW_SF = 0.5
 SKEW_S = 1.2

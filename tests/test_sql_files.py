@@ -48,6 +48,8 @@ from pathlib import Path
 import duckdb
 import pytest
 
+from datafusion_comet_spark.session import conf_override
+
 SQL_DIR = Path(__file__).parent / "sql"
 
 # Spark -> DuckDB type-name rewrites applied to `statement` blocks only
@@ -224,95 +226,84 @@ def duck():
 )
 def test_sql_file(spark, duck, path):
     configs, blocks = parse_sql_file(path)
-    saved = {}
     tables: list[str] = []
-    for k, v in configs.items():
+    with conf_override(spark, configs):
         try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
-        n_queries = 0
-        for blk in blocks:
-            if blk.kind == "statement":
-                tables.extend(_tables_in(blk.sql))
-                spark.sql(blk.sql)
-                duck.execute(_duckify(blk.sql))
-                continue
-            n_queries += 1
-            if "expect_error" in blk.args:
-                with pytest.raises(Exception) as ei:
-                    spark.sql(blk.sql).collect()
-                pat = blk.args["expect_error"]
-                if pat:
-                    assert re.search(pat, str(ei.value), re.I), (
-                        f"{path.name}: error did not match /{pat}/i:\n"
-                        f"{ei.value}\nquery: {blk.sql}"
+            n_queries = 0
+            for blk in blocks:
+                if blk.kind == "statement":
+                    tables.extend(_tables_in(blk.sql))
+                    spark.sql(blk.sql)
+                    duck.execute(_duckify(blk.sql))
+                    continue
+                n_queries += 1
+                if "expect_error" in blk.args:
+                    with pytest.raises(Exception) as ei:
+                        spark.sql(blk.sql).collect()
+                    pat = blk.args["expect_error"]
+                    if pat:
+                        assert re.search(pat, str(ei.value), re.I), (
+                            f"{path.name}: error did not match /{pat}/i:\n"
+                            f"{ei.value}\nquery: {blk.sql}"
+                        )
+                    else:
+                        # A bare `expect_error` accepts any RUNTIME error,
+                        # but a typo'd table/column or bad syntax must not
+                        # make the block pass for the wrong reason.
+                        unrelated = (
+                            "TABLE_OR_VIEW_NOT_FOUND",
+                            "UNRESOLVED_COLUMN",
+                            "UNRESOLVED_ROUTINE",
+                            "PARSE_SYNTAX_ERROR",
+                            "COLUMN_NOT_FOUND",
+                        )
+                        msg = str(ei.value)
+                        assert not any(u in msg for u in unrelated), (
+                            f"{path.name}: bare expect_error caught an "
+                            f"analysis/parse failure (fix the query or "
+                            f"give an explicit pattern):\n{msg}\n"
+                            f"query: {blk.sql}"
+                        )
+                    continue
+                srows = [
+                    tuple(_canon(v) for v in r)
+                    for r in spark.sql(blk.sql).collect()
+                ]
+                if blk.args.get("spark_only"):
+                    exp = blk.args.get("expect_rows")
+                    assert exp is not None, (
+                        f"{path.name}: spark_only query needs -- expect-rows"
                     )
-                else:
-                    # A bare `expect_error` accepts any RUNTIME error,
-                    # but a typo'd table/column or bad syntax must not
-                    # make the block pass for the wrong reason.
-                    unrelated = (
-                        "TABLE_OR_VIEW_NOT_FOUND",
-                        "UNRESOLVED_COLUMN",
-                        "UNRESOLVED_ROUTINE",
-                        "PARSE_SYNTAX_ERROR",
-                        "COLUMN_NOT_FOUND",
+                    assert len(srows) == exp, (
+                        f"{path.name}: expected {exp} rows, got {len(srows)}"
                     )
-                    msg = str(ei.value)
-                    assert not any(u in msg for u in unrelated), (
-                        f"{path.name}: bare expect_error caught an "
-                        f"analysis/parse failure (fix the query or "
-                        f"give an explicit pattern):\n{msg}\n"
-                        f"query: {blk.sql}"
-                    )
-                continue
-            srows = [
-                tuple(_canon(v) for v in r)
-                for r in spark.sql(blk.sql).collect()
-            ]
-            if blk.args.get("spark_only"):
-                exp = blk.args.get("expect_rows")
-                assert exp is not None, (
-                    f"{path.name}: spark_only query needs -- expect-rows"
-                )
-                assert len(srows) == exp, (
-                    f"{path.name}: expected {exp} rows, got {len(srows)}"
-                )
-                continue
-            orows = [
-                tuple(_canon(v) for v in r)
-                for r in duck.execute(blk.sql).fetchall()
-            ]
-            ordered = re.search(r"\border\s+by\b", blk.sql, re.I)
-            if not ordered:
-                srows = sorted(srows, key=_row_key)
-                orows = sorted(orows, key=_row_key)
-            assert len(srows) == len(orows), (
-                f"{path.name}: row count {len(srows)} vs {len(orows)}\n"
-                f"query: {blk.sql}"
-            )
-            tol = blk.args.get("tolerance")
-            for i, (sr, orow) in enumerate(zip(srows, orows)):
-                assert _rows_equal(sr, orow, tol), (
-                    f"{path.name} row {i}: spark={sr!r} duck={orow!r}\n"
+                    continue
+                orows = [
+                    tuple(_canon(v) for v in r)
+                    for r in duck.execute(blk.sql).fetchall()
+                ]
+                ordered = re.search(r"\border\s+by\b", blk.sql, re.I)
+                if not ordered:
+                    srows = sorted(srows, key=_row_key)
+                    orows = sorted(orows, key=_row_key)
+                assert len(srows) == len(orows), (
+                    f"{path.name}: row count {len(srows)} vs {len(orows)}\n"
                     f"query: {blk.sql}"
                 )
-        assert n_queries > 0, f"{path.name}: no query blocks"
-    finally:
-        for t in tables:
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-            try:
-                duck.execute(f"DROP TABLE IF EXISTS {t}")
-            except Exception:
-                pass
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+                tol = blk.args.get("tolerance")
+                for i, (sr, orow) in enumerate(zip(srows, orows)):
+                    assert _rows_equal(sr, orow, tol), (
+                        f"{path.name} row {i}: spark={sr!r} duck={orow!r}\n"
+                        f"query: {blk.sql}"
+                    )
+            assert n_queries > 0, f"{path.name}: no query blocks"
+        finally:
+            for t in tables:
+                spark.sql(f"DROP TABLE IF EXISTS {t}")
+                try:
+                    duck.execute(f"DROP TABLE IF EXISTS {t}")
+                except Exception:
+                    pass
 
 
 def test_corpus_is_seeded():
