@@ -68,8 +68,9 @@ BENCH_QUERIES = [
 # shapes so the scan-count wins stay wall-clock-guarded:
 # tpcds_cross_channel_rollup (q14 INTERSECT+ROLLUP, 2 fact passes),
 # tpcds_return_ratio_rank (persist-based single fact pass), and
-# ann_ivf_kmeans.  Queries tagged "warm_by_design" memoize per session
-# on purpose (main() names them on stderr): their min-of-N is probe
+# ann_ivf_kmeans.  Queries tagged "warm_by_design" read the IVF index
+# that queries/similarity.py trains once per session and dataset
+# (_ivf_memo; main() names them on stderr): their min-of-N is probe
 # time against the memoized index, iteration 1 pays the build, and
 # the build cost itself is characterized in SCALE.md's train-on-sample
 # table.

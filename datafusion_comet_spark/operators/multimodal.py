@@ -8,12 +8,11 @@ decode / feature-extraction runs as Arrow-batched Python over
 (partitioning, pushdown on metadata, batch shape) is identical
 whether the payload is a JPEG or a synthetic blob.
 
-The actual codec step is STUBBED: image/audio libraries are not in
-this container, so ``decode_image_batch`` raises ``NotImplementedError``
-unless ``fake=True``, in which case a clearly-marked deterministic
-fake (byte statistics standing in for pixel statistics) exercises the
-full Spark-side plumbing — schema, batching, partition parallelism —
-which is the part that must be right at scale.
+The compressed-codec step is a stand-in: no image/audio codec library
+ships with the engine, so ``decode_image_batch`` computes
+deterministic byte statistics in place of pixel statistics.  That
+exercises the full Spark-side plumbing — schema, batching, partition
+parallelism — which is the part that must be right at scale.
 """
 
 from __future__ import annotations
@@ -59,18 +58,9 @@ def attach_payload(docs: DataFrame) -> DataFrame:
     )
 
 
-def decode_image_batch(payload: bytes, fmt: str, fake: bool) -> dict:
-    """Decode one payload → pixel statistics.
-
-    STUB: real decoding needs an image library not present in this
-    container.  ``fake=True`` substitutes deterministic byte statistics
-    (documented stand-in, NOT a real decode)."""
-    if not fake:
-        raise NotImplementedError(
-            "image decode requires an imaging library not present in "
-            "this environment; run with fake=True for the deterministic "
-            "plumbing stand-in"
-        )
+def decode_image_batch(payload: bytes) -> dict:
+    """Byte statistics of one payload, standing in for the pixel
+    statistics of a real decode (NOT a real decode)."""
     n = len(payload)
     return {
         "n_bytes": n,
@@ -79,7 +69,7 @@ def decode_image_batch(payload: bytes, fmt: str, fake: bool) -> dict:
     }
 
 
-def decode_features(frames: DataFrame, fake: bool = True) -> DataFrame:
+def decode_features(frames: DataFrame) -> DataFrame:
     """mapInPandas decode/feature-extract over multimodal frames.
 
     Arrow delivers columnar batches to Python; each batch is decoded
@@ -91,10 +81,7 @@ def decode_features(frames: DataFrame, fake: bool = True) -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            stats = [
-                decode_image_batch(p, f, fake)
-                for p, f in zip(pdf["payload"], pdf["fmt"])
-            ]
+            stats = [decode_image_batch(p) for p in pdf["payload"]]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],

@@ -228,9 +228,9 @@ def _sig_match_fold(a, b):
     )
 
 
-def _sig_match_unrolled(a, b, n: int = N_HASHES):
+def _sig_match_unrolled(a, b):
     acc = F.when(a.getItem(0) == b.getItem(0), 1).otherwise(0)
-    for i in range(1, n):
+    for i in range(1, N_HASHES):
         acc = acc + F.when(a.getItem(i) == b.getItem(i), 1).otherwise(0)
     return acc
 

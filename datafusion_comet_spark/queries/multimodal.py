@@ -80,7 +80,7 @@ def multimodal_decode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     codec, deterministic fake — operators/multimodal.py): returns
     per-format feature aggregates.  The Spark-side contract (schema,
     batching, partition parallelism) is the part under test."""
-    feats = decode_features(_frames(spark, sf_dir), fake=True)
+    feats = decode_features(_frames(spark, sf_dir))
     return (
         feats.groupBy("format")
         .agg(

@@ -100,10 +100,8 @@ def _guarded_grams(min_toks: int) -> str:
     )
 
 
-def winnow_fingerprint_positions(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, fp, pos) rows: winnowing fingerprints WITH the gram start
+def winnow_fingerprint_positions(docs: DataFrame) -> DataFrame:
+    """(doc_id, fp, pos) rows: winnowing fingerprints WITH the gram start
     index of each selected minimum carried through the window-min
     selection — pos covers tokens [pos, pos+K-1], which is what lets a
     consumer reconstruct the matched SPAN EXTENTS instead of just
@@ -112,9 +110,9 @@ def winnow_fingerprint_positions(
     the DuckDB oracles; distinct (fp, pos) pairs replace the flag
     variant's array_distinct (one fp selected at two positions is two
     matchable span instances)."""
-    toked = docs.selectExpr(id_col, "split(lower(text), ' ') AS toks")
+    toked = docs.selectExpr("doc_id", "split(lower(text), ' ') AS toks")
     hashed = toked.selectExpr(
-        id_col, f"{_guarded_grams(K + WIN - 1)} AS hashes"
+        "doc_id", f"{_guarded_grams(K + WIN - 1)} AS hashes"
     )
     # array_distinct BEFORE the explode: adjacent windows re-select the
     # same minimum constantly (that's the winnowing rule working), and
@@ -143,15 +141,15 @@ def winnow_fingerprint_positions(
         f"'pos', cast(s - 1 as bigint) + array_position(sl, m)))[0])[0])) "
         f"ELSE array() END"
     )
-    return hashed.selectExpr(id_col, f"explode({win}) AS w").select(
-        id_col, "w.fp", "w.pos"
+    return hashed.selectExpr("doc_id", f"explode({win}) AS w").select(
+        "doc_id", "w.fp", "w.pos"
     )
 
 
 def winnow_fingerprints(
-    docs: DataFrame, id_col: str = "doc_id", carry: tuple[str, ...] = ()
+    docs: DataFrame, carry: tuple[str, ...] = ()
 ) -> DataFrame:
-    """(id, *carry, fp) rows: the winnowing fingerprint set of each
+    """(doc_id, *carry, fp) rows: the winnowing fingerprint set of each
     document's ``text`` column — K-token-gram md5-prefix hashes,
     window-min selected, deduplicated map-side by array_distinct.  The
     selection guarantee (Schleimer et al. §2): two documents sharing
@@ -159,7 +157,7 @@ def winnow_fingerprints(
     fingerprint (pinned by tests/test_retrieval_semantics.py).  Pure
     per-row array expressions until the final explode of the
     already-thinned set."""
-    keep = [id_col, *carry]
+    keep = ["doc_id", *carry]
     toked = docs.select(
         *keep, F.split(F.lower("text"), " ").alias("toks")
     )

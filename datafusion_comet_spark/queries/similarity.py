@@ -55,7 +55,7 @@ def dot(a, b) -> Column:
 EMB_DIM = 64
 
 
-def dot_unrolled(a, b, dim: int = EMB_DIM) -> Column:
+def dot_unrolled(a, b) -> Column:
     """Σ aᵢ·bᵢ unrolled to straight-line codegen arithmetic.
 
     Round-11 finding: the zip_with+aggregate fold spelling is
@@ -77,7 +77,7 @@ def dot_unrolled(a, b, dim: int = EMB_DIM) -> Column:
     sum (the fold tolerates ragged arrays; callers on variable-width
     data must keep `dot`)."""
     acc: Column = F.lit(0.0)
-    for i in range(dim):
+    for i in range(EMB_DIM):
         acc = acc + a.getItem(i) * b.getItem(i)
     return acc
 
@@ -90,7 +90,7 @@ def l2_norm(a) -> Column:
     )
 
 
-def l2_norm_unrolled(a, dim: int = EMB_DIM) -> Column:
+def l2_norm_unrolled(a) -> Column:
     """|a| unrolled to straight-line codegen arithmetic — same
     left-associated 0.0 + a₀² + a₁² + ... fold order as ``l2_norm``'s
     transform+aggregate spelling, so doubles are bit-identical (see
@@ -98,7 +98,7 @@ def l2_norm_unrolled(a, dim: int = EMB_DIM) -> Column:
     interpreted eval sites degrade megamorphically in shared JVMs).
     Fixed-width arrays only."""
     acc: Column = F.lit(0.0)
-    for i in range(dim):
+    for i in range(EMB_DIM):
         acc = acc + a.getItem(i) * a.getItem(i)
     return F.sqrt(acc)
 
@@ -107,16 +107,14 @@ def cosine(a, b) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def cosine_unrolled(a, b, dim: int = EMB_DIM) -> Column:
+def cosine_unrolled(a, b) -> Column:
     """cosine(a, b) as pure codegen arithmetic: unrolled dot and norms
     with the exact fold orders of the HOF spellings — bit-identical
     doubles, no interpreted ZipWith/ArrayAggregate in the per-pair hot
     path (round-11 finding, see dot_unrolled).  Callers that can hoist
     the norms per ROW should do that instead and divide by the product;
     this form is for bounded-row reranks where hoisting buys nothing."""
-    return dot_unrolled(a, b, dim) / (
-        l2_norm_unrolled(a, dim) * l2_norm_unrolled(b, dim)
-    )
+    return dot_unrolled(a, b) / (l2_norm_unrolled(a) * l2_norm_unrolled(b))
 
 
 # --- scale gate for the pair-arithmetic SPELLING (round 11) ---------------
@@ -416,9 +414,6 @@ def _centroid_literal(centroids: list[list[float]]) -> Column:
     )
 
 
-_LLOYD_CACHE: dict[tuple, dict[int, list[list[float]]]] = {}
-
-
 def _lloyd_grouped(
     df: DataFrame,
     id_col: str,
@@ -428,7 +423,6 @@ def _lloyd_grouped(
     k: int,
     iters: int,
     seed: int,
-    cache_key: str | None = None,
     init: str = "hash",
     train_max_rows: int | None = None,
     train_total_rows: int | None = None,
@@ -489,20 +483,9 @@ def _lloyd_grouped(
     Centroids are driver-side by construction — they ARE the index,
     k×dim floats, broadcast back as literals (reference predates any
     vector-search operator; architecture per Jegou et al. TPAMI 2011).
-
-    ``cache_key`` memoizes the build per (SparkSession, key): the
-    three IVF queries share one coarse quantizer — the real-world
-    index-reuse pattern, and the output is a pure deterministic
-    function of the data+params so the cache cannot change answers.
-    The session's applicationId is part of the memo key so a fresh
-    probe session (the partition-independence gate) always recomputes,
-    and every behavior-affecting parameter (k, iters, seed, init,
-    train_max_rows) is folded in HERE rather than trusted to the
-    caller's string — a caller reusing a key under different params
-    can never get stale centroids (round-8 advice).  Every registry
-    query that passes a ``cache_key`` carries the ``warm_by_design``
-    tag: its warm executions probe the index its first execution
-    built (pinned by tests/test_build_budget.py).
+    The trainer keeps no state: every call trains.  The IVF queries
+    share one index per session and dataset, trained through _ivf_memo
+    by _ivf_index and _pq_codebooks.
 
     ``train_max_rows`` bounds QUANTIZER TRAINING cost at corpus scale
     (round-7 verdict, What's wrong #2): each Lloyd iteration is a full
@@ -524,48 +507,27 @@ def _lloyd_grouped(
     pinned VALUES oracles see identical behavior; the sampled path's
     recall cost is measured in SCALE.md (round-8 entry).
 
-    ``train_total_rows`` is the caller-supplied corpus row count used
-    to size the reservoir fraction.  Callers reading a Parquet table
-    should pass ``catalog.table_facts(...).rows`` — footer metadata,
-    zero data passes (round-8 verdict, What's wrong #2); when omitted,
-    a one-time column-pruned ``count()`` sizes it (one extra scan at
-    corpus scale).  The fraction only needs ~1 significant digit, so
-    any honest estimate is acceptable."""
-    if cache_key is not None:
-        full_key = (
-            df.sparkSession.sparkContext.applicationId,
-            cache_key,
-            n_groups,
-            k,
-            iters,
-            seed,
-            init,
-            train_max_rows,
-        )
-        hit = _LLOYD_CACHE.get(full_key)
-        if hit is not None:
-            return hit
+    ``train_total_rows`` is the corpus row count that sizes the
+    reservoir fraction; it is required with ``train_max_rows``.  Pass
+    ``catalog.table_facts(...).rows``: footer metadata, zero data
+    passes (round-8 verdict, What's wrong #2).  The fraction only needs
+    ~1 significant digit, so any honest estimate is acceptable."""
     base = df.select(
         F.col(id_col).alias("_id"),
         gid_col.cast("int").alias("_g"),
         F.col(vec_col).alias("_v"),
     )
-    if train_max_rows is not None:
-        total = (
-            train_total_rows if train_total_rows is not None else base.count()
+    if train_max_rows is not None and train_total_rows > train_max_rows * n_groups:
+        # keep a global train_max_rows*n_groups/train_total_rows
+        # fraction (see docstring): hash-mod filter is map-side (no
+        # shuffle) and a pure function of the id, so the training set
+        # — hence the centroids — is identical under any partitioning
+        den = 1_000_000
+        num = max(1, (train_max_rows * n_groups * den) // train_total_rows)
+        base = base.filter(
+            F.pmod(F.xxhash64(F.col("_id"), F.lit(seed ^ 0x5EED)), F.lit(den))
+            < F.lit(num)
         )
-        if total > train_max_rows * n_groups:
-            # keep a global train_max_rows*n_groups/total fraction
-            # (see docstring): hash-mod filter is map-side (no
-            # shuffle) and a pure function of the id, so the training
-            # set — hence the centroids — is identical under any
-            # partitioning
-            den = 1_000_000
-            num = max(1, (train_max_rows * n_groups * den) // total)
-            base = base.filter(
-                F.pmod(F.xxhash64(F.col("_id"), F.lit(seed ^ 0x5EED)), F.lit(den))
-                < F.lit(num)
-            )
     # ONE distributed pass: the reservoir filter + a collect of the
     # bounded training set (with the seed-order hash computed by
     # Spark's own xxhash64 so ordering semantics cannot drift).
@@ -696,28 +658,7 @@ def _lloyd_grouped(
         if new == cents:
             break
         cents = new
-    if cache_key is not None:
-        _LLOYD_CACHE[full_key] = cents
     return cents
-
-
-def _lloyd_centroids(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int,
-    iters: int,
-    seed: int,
-    cache_key: str | None = None,
-    init: str = "hash",
-    train_max_rows: int | None = None,
-    train_total_rows: int | None = None,
-) -> list[list[float]]:
-    """Single-space deterministic Lloyd (see _lloyd_grouped)."""
-    return _lloyd_grouped(
-        df, id_col, F.lit(0), 1, vec_col, k, iters, seed, cache_key, init,
-        train_max_rows, train_total_rows,
-    )[0]
 
 
 # Coarse-quantizer training bound for corpus-scale index builds: far
@@ -727,6 +668,98 @@ def _lloyd_centroids(
 # SCALE.md round-8 entry.
 COARSE_TRAIN_MAX_ROWS = 100_000
 
+# Product-quantizer shape of ann_ivf_pq_adc: PQ_M subspaces of
+# PQ_SUBDIM dims, each with a PQ_CODES-centroid codebook.
+PQ_M, PQ_SUBDIM, PQ_CODES = 4, 16, 16
+
+# The IVF family's trained index per (session applicationId, sf_dir):
+# the two things that identify its training data.  The builders below
+# fix every training parameter, so no caller can pair a key with other
+# parameters.  The applicationId keeps a fresh session (the
+# partition-independence probe of dev/gen_values_oracles.py) from
+# reading another session's index.
+_IVF_INDEX: dict[tuple[str, str], dict[str, object]] = {}
+
+
+def _ivf_memo(spark: SparkSession, sf_dir: str, part: str, train):
+    """``train()``'s result for ``part`` of the dataset's index, trained
+    once per session.  The result is a pure function of the data, so
+    the memo cannot change answers.  Every registry query that reads
+    it carries the ``warm_by_design`` tag: its warm executions probe
+    the index its first execution built (pinned by
+    tests/test_build_budget.py)."""
+    index = _IVF_INDEX.setdefault(
+        (spark.sparkContext.applicationId, sf_dir), {}
+    )
+    if part not in index:
+        index[part] = train()
+    return index[part]
+
+
+def _ivf_index(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, list[list[float]]]:
+    """The IVF family's embeddings projection (vec_id, emb) and its
+    coarse quantizer: 8 centroids from a farthest-first Lloyd (seed 42,
+    10 iterations; see _lloyd_grouped), trained on at most
+    COARSE_TRAIN_MAX_ROWS vectors.  The footer row count sizes the
+    training reservoir, so sizing costs no data pass (round-8 verdict,
+    What's wrong #2)."""
+    emb = _emb(spark, sf_dir).select(
+        "vec_id", _as_double("embedding").alias("emb")
+    )
+    coarse = _ivf_memo(spark, sf_dir, "coarse", lambda: _lloyd_grouped(
+        emb, "vec_id", F.lit(0), 1, "emb", k=8, iters=10, seed=42,
+        init="farthest", train_max_rows=COARSE_TRAIN_MAX_ROWS,
+        train_total_rows=table_facts(sf_dir, "embeddings").rows,
+    )[0])
+    return emb, coarse
+
+
+def _pq_codebooks(
+    spark: SparkSession, sf_dir: str, emb: DataFrame
+) -> dict[int, list[list[float]]]:
+    """The PQ_M sub-codebooks of ann_ivf_pq_adc, trained in LOCKSTEP as
+    one grouped Lloyd over the PQ_SUBDIM-wide slices of ``emb`` (hash
+    init, seed 43, 10 iterations), memoized like the coarse quantizer.
+    Training is bounded like the coarse quantizer's: the reservoir
+    keys on vec_id, so a vector's PQ_M slices are kept or dropped
+    TOGETHER and the groups stay perfectly balanced."""
+
+    def train():
+        subs = emb.select(
+            "vec_id",
+            F.posexplode(
+                F.array(*[
+                    F.slice("emb", m * PQ_SUBDIM + 1, PQ_SUBDIM)
+                    for m in range(PQ_M)
+                ])
+            ).alias("m", "sub"),
+        )
+        return _lloyd_grouped(
+            subs, "vec_id", F.col("m"), PQ_M, "sub", k=PQ_CODES, iters=10,
+            seed=43, train_max_rows=COARSE_TRAIN_MAX_ROWS,
+            train_total_rows=table_facts(sf_dir, "embeddings").rows * PQ_M,
+        )
+
+    return _ivf_memo(spark, sf_dir, "pq", train)
+
+
+def _cells(sf_dir: str, emb: DataFrame, cents: list[list[float]]) -> DataFrame:
+    """(vec_id, emb, nrm, cell): each vector with its norm and its
+    coarse cell.  Norm per ROW (O(n)), never per pair: cosine's |a|·|b|
+    recomputed inside the cell join costs O(pairs·dim) — and above the
+    scale gate those folds run interpreted and degrade megamorphically
+    (round-11 finding, see pair_dot).  q_nrm·nrm is IEEE-commutative
+    with the original l2_norm(a)·l2_norm(b) product, so sims are
+    bit-identical."""
+    return emb.select(
+        "vec_id",
+        "emb",
+        row_norm(sf_dir)(F.col("emb")).alias("nrm"),
+        _nearest(F.col("emb"), cents).alias("cell"),
+    )
+
 
 @register(
     "ann_ivf_kmeans",
@@ -735,12 +768,13 @@ COARSE_TRAIN_MAX_ROWS = 100_000
 )
 def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style ANN: a k-means coarse quantizer (deterministic
-    distributed Lloyd, see _lloyd_grouped) assigns every vector to a
+    Lloyd, see _ivf_index) assigns every vector to a
     cell; each query searches ONLY its own cell — the inverted-file
     structure that turns brute-force O(n) per query into O(n/k).
 
-    Scale shape: the index build is iters tiny keyed aggregates over
-    the corpus (centroids are k×dim floats, literal-broadcast);
+    Scale shape: the index build is one collect of a bounded training
+    sample, trained on the driver once per session (centroids are
+    k×dim floats, literal-broadcast);
     assignment is pure map-side arithmetic; search is an equi-join on
     cell id.  At 100 TB the cell column is written back to the corpus
     as a partition key so a query touches one partition per probed
@@ -748,29 +782,8 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums made centroids partition-order-sensitive and this family
     unpinnable — with the decimal-exact Lloyd, making the output
     constant and VALUES-oracle-checked."""
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", _as_double("embedding").alias("emb")
-    )
-    cents = _lloyd_centroids(
-        emb, "vec_id", "emb", k=8, iters=10, seed=42,
-        cache_key=f"{sf_dir}|coarse-8-10-42-ff", init="farthest",
-        train_max_rows=COARSE_TRAIN_MAX_ROWS,
-        # footer-metadata row count — sizing the reservoir fraction
-        # costs zero data passes (round-8 verdict, What's wrong #2)
-        train_total_rows=table_facts(sf_dir, "embeddings").rows,
-    )
-    # Norm per ROW (O(n)), never per pair: cosine's |a|·|b| recomputed
-    # inside the cell join costs O(pairs·dim) — and above the scale
-    # gate those folds run interpreted and degrade megamorphically
-    # (round-11 finding, see pair_dot).  q_nrm·nrm is IEEE-commutative
-    # with the original l2_norm(a)·l2_norm(b) product, so sims are
-    # bit-identical.
-    assigned = emb.select(
-        "vec_id",
-        "emb",
-        row_norm(sf_dir)(F.col("emb")).alias("nrm"),
-        _nearest(F.col("emb"), cents).alias("cell"),
-    )
+    emb, cents = _ivf_index(spark, sf_dir)
+    assigned = _cells(sf_dir, emb, cents)
     queries = assigned.filter("vec_id < 3").selectExpr(
         "vec_id AS qid", "emb AS q_emb", "nrm AS q_nrm", "cell"
     )
@@ -819,26 +832,8 @@ def ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_id) before ranking.  Deterministic Lloyd quantizer (round 7,
     see _lloyd_grouped) — same build as ann_ivf_kmeans, so the two
     variants share cells and the probe-count/recall trade is isolated."""
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", _as_double("embedding").alias("emb")
-    )
-    cents = _lloyd_centroids(
-        emb, "vec_id", "emb", k=8, iters=10, seed=42,
-        cache_key=f"{sf_dir}|coarse-8-10-42-ff", init="farthest",
-        train_max_rows=COARSE_TRAIN_MAX_ROWS,
-        # footer-metadata row count — sizing the reservoir fraction
-        # costs zero data passes (round-8 verdict, What's wrong #2)
-        train_total_rows=table_facts(sf_dir, "embeddings").rows,
-    )
-    # per-ROW norms + scale-gated pair-dot spelling, as in
-    # ann_ivf_kmeans (the interpreted-fold-per-pair fix; bit-identical
-    # sims either side of the gate)
-    assigned = emb.select(
-        "vec_id",
-        "emb",
-        row_norm(sf_dir)(F.col("emb")).alias("nrm"),
-        _nearest(F.col("emb"), cents).alias("cell"),
-    )
+    emb, cents = _ivf_index(spark, sf_dir)
+    assigned = _cells(sf_dir, emb, cents)
     centroids = spark.createDataFrame(
         [(i, c) for i, c in enumerate(cents)],
         "cell int, ctr array<double>",
@@ -848,12 +843,8 @@ def ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("emb").alias("q_emb"),
         row_norm(sf_dir)(F.col("emb")).alias("q_nrm"),
     )
-    # nProbe=2 nearest centroids per query (squared L2 via fold)
-    dist2 = F.aggregate(
-        F.zip_with("q_emb", "ctr", lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    # nProbe=2 nearest centroids per query
+    dist2 = _sq_dist(F.col("q_emb"), F.col("ctr"))
     wp = W.partitionBy("qid").orderBy(F.col("d2").asc(), F.col("cell"))
     probes = (
         queries.crossJoin(F.broadcast(centroids))
@@ -1131,57 +1122,27 @@ def ann_ivf_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     then ONE (qid, vec_id) aggregate — never an all-pairs float
     computation.  The recall dial vs ann_ivf_kmeans's full-cell exact
     scan is the ADC candidate width (20 here).  Deterministic Lloyd
-    quantizers (round 7, see _lloyd_grouped): the coarse build is
-    IDENTICAL to ann_ivf_kmeans (same k/iters/seed — the rerank-
-    exactness pin depends on shared cells), and the 4 sub-codebooks
-    train in LOCKSTEP as one grouped Lloyd — one keyed aggregate per
-    iteration for all subspaces, not one fit per book."""
-    M, SUBDIM, CODES = 4, 16, 16
-    emb = _emb(spark, sf_dir).select(
-        "vec_id", _as_double("embedding").alias("emb")
-    )
-    coarse = _lloyd_centroids(
-        emb, "vec_id", "emb", k=8, iters=10, seed=42,
-        cache_key=f"{sf_dir}|coarse-8-10-42-ff", init="farthest",
-        train_max_rows=COARSE_TRAIN_MAX_ROWS,
-        # footer-metadata row count — sizing the reservoir fraction
-        # costs zero data passes (round-8 verdict, What's wrong #2)
-        train_total_rows=table_facts(sf_dir, "embeddings").rows,
-    )
-    subs = emb.select(
-        "vec_id",
-        F.posexplode(
-            F.array(
-                *[F.slice("emb", m * SUBDIM + 1, SUBDIM) for m in range(M)]
-            )
-        ).alias("m", "sub"),
-    )
-    books_cents = _lloyd_grouped(
-        subs, "vec_id", F.col("m"), M, "sub", k=CODES, iters=10, seed=43,
-        cache_key=f"{sf_dir}|pqbooks-4x16-10-43",
-        # bound sub-codebook training like the coarse quantizer's: the
-        # reservoir keys on vec_id, so a vector's M sub-slices are kept
-        # or dropped TOGETHER and the groups stay perfectly balanced;
-        # inactive below 100k vectors (every pinned corpus), and keeps
-        # the trainer's one collected pass bounded at 100 TB
-        train_max_rows=COARSE_TRAIN_MAX_ROWS,
-        train_total_rows=table_facts(sf_dir, "embeddings").rows * M,
-    )
+    quantizers (round 7): the coarse quantizer is ann_ivf_kmeans's
+    own (_ivf_index — the rerank-exactness pin depends on shared
+    cells), and the 4 sub-codebooks train in LOCKSTEP as one grouped
+    Lloyd (_pq_codebooks), not one fit per book."""
+    emb, coarse = _ivf_index(spark, sf_dir)
+    books_cents = _pq_codebooks(spark, sf_dir, emb)
     df = emb.select(
         "vec_id",
         "emb",
         _nearest(F.col("emb"), coarse).alias("cell"),
         *[
             _nearest(
-                F.slice("emb", m * SUBDIM + 1, SUBDIM), books_cents[m]
+                F.slice("emb", m * PQ_SUBDIM + 1, PQ_SUBDIM), books_cents[m]
             ).alias(f"c{m}")
-            for m in range(M)
+            for m in range(PQ_M)
         ],
     )
     books = [
         (m, code, books_cents[m][code])
-        for m in range(M)
-        for code in range(CODES)
+        for m in range(PQ_M)
+        for code in range(PQ_CODES)
     ]
     codebooks = spark.createDataFrame(
         books, "m int, code int, ctr array<double>"
@@ -1189,13 +1150,9 @@ def ann_ivf_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = df.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("qid"), F.col("emb").alias("q_emb"), "cell"
     )
-    # ADC lookup table: |queries| x M x CODES partial squared distances
-    qsub = F.slice("q_emb", F.col("m") * SUBDIM + 1, F.lit(SUBDIM))
-    d2 = F.aggregate(
-        F.zip_with(qsub, F.col("ctr"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    # ADC lookup table: |queries| x PQ_M x PQ_CODES partial squared distances
+    qsub = F.slice("q_emb", F.col("m") * PQ_SUBDIM + 1, F.lit(PQ_SUBDIM))
+    d2 = _sq_dist(qsub, F.col("ctr"))
     lut = (
         queries.crossJoin(F.broadcast(codebooks))
         .select("qid", "cell", "m", "code", d2.alias("d2"))
@@ -1204,7 +1161,7 @@ def ann_ivf_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes_long = df.select(
         "vec_id",
         "cell",
-        F.posexplode(F.array(*[f"c{m}" for m in range(M)])).alias(
+        F.posexplode(F.array(*[f"c{m}" for m in range(PQ_M)])).alias(
             "m", "code"
         ),
     )
@@ -1213,7 +1170,7 @@ def ann_ivf_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") != F.col("qid"))
         .groupBy("qid", "vec_id")
         .agg(F.sum("d2").alias("adc_d2"), F.count(F.lit(1)).alias("nm"))
-        .filter(F.col("nm") == M)  # all 4 subspace codes matched a LUT row
+        .filter(F.col("nm") == PQ_M)  # all 4 subspace codes matched a LUT row
     )
     wc = W.partitionBy("qid").orderBy(F.col("adc_d2").asc(), F.col("vec_id"))
     candidates = (

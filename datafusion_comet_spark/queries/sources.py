@@ -284,9 +284,7 @@ def xml_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     text column so character fidelity (entity escaping included) is
     part of what the hash-match proves."""
     nation = _t(spark, sf_dir, "nation")
-    back = write_read_xml(
-        spark, nation, scratch_dir(sf_dir, "nation_xml"), row_tag="nation"
-    )
+    back = write_read_xml(spark, nation, scratch_dir(sf_dir, "nation_xml"))
     return (
         back.groupBy("n_regionkey")
         .agg(

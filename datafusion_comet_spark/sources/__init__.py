@@ -102,12 +102,10 @@ def write_read_parquet(
     return spark.read.schema(df.schema).parquet(path)
 
 
-def write_read_xml(
-    spark: SparkSession, df: DataFrame, path: str, row_tag: str = "row"
-) -> DataFrame:
+def write_read_xml(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     """XML write → read-back (Spark 4 ships the XML source natively —
-    no external spark-xml module).  The reference has no XML operator
-    at all; entity escaping (&lt; &amp; ...) round-trips values
+    no external spark-xml module), one ``<row>`` element per row.  The
+    reference has no XML operator at all; entity escaping (&lt; &amp; ...) round-trips values
     losslessly, which the oracle hash-match proves.  Read-back passes
     the schema explicitly: XML inference is a full extra scan AND
     type-guesses, never the 100 TB plan."""
@@ -115,12 +113,12 @@ def write_read_xml(
         df.write.mode("overwrite")
         .format("xml")
         .option("rootTag", "rows")
-        .option("rowTag", row_tag)
+        .option("rowTag", "row")
         .save(path)
     )
     return (
         spark.read.format("xml")
-        .option("rowTag", row_tag)
+        .option("rowTag", "row")
         .schema(df.schema)
         .load(path)
     )

@@ -58,7 +58,7 @@ BUILD_CEILINGS = {
     "q21_waiting_supplier": 137,
     "q22_sales_opportunity": 94,
     "ann_bruteforce_topk": 234,
-    "ann_ivf_kmeans": 340,
+    "ann_ivf_kmeans": 337,
     "dedup_exact": 58,
     "dedup_minhash_lsh": 262,
     "dedup_winnow_cut": 109,
@@ -122,26 +122,12 @@ def test_bench_query_build_py4j_budget(spark, sf_dir, name):
 
 # --- the centroid literal ---------------------------------------------------
 
-def _coarse_centroids(spark, sf_dir):
-    """ann_ivf_kmeans's embeddings projection and coarse quantizer."""
-    emb = similarity._emb(spark, sf_dir).select(
-        "vec_id", similarity._as_double("embedding").alias("emb")
-    )
-    cents = similarity._lloyd_centroids(
-        emb, "vec_id", "emb", k=8, iters=10, seed=42,
-        cache_key=f"{sf_dir}|coarse-8-10-42-ff", init="farthest",
-        train_max_rows=similarity.COARSE_TRAIN_MAX_ROWS,
-        train_total_rows=similarity.table_facts(sf_dir, "embeddings").rows,
-    )
-    return emb, cents
-
-
 def _bits(rows) -> list[list[bytes]]:
     return [[struct.pack("<d", v) for v in row] for row in rows]
 
 
 def test_centroid_literal_folds_to_bit_exact_values(spark, sf_dir):
-    _, cents = _coarse_centroids(spark, sf_dir)
+    _, cents = similarity._ivf_index(spark, sf_dir)
     edge = [0.1, 1 / 3, -0.0, 0.0, -2.5, 5e-324, 2.2250738585072014e-308,
             1.7976931348623157e308, 123456789.12345679]
     for values in (cents, [edge]):
@@ -166,7 +152,7 @@ def _nearest_lit_array(vec_col, centroids):
 
 
 def test_nearest_cells_match_literal_array_spelling(spark, sf_dir):
-    emb, cents = _coarse_centroids(spark, sf_dir)
+    emb, cents = similarity._ivf_index(spark, sf_dir)
     got = emb.select(
         "vec_id", similarity._nearest(F.col("emb"), cents).alias("cell")
     ).orderBy("vec_id").collect()
@@ -225,18 +211,17 @@ class _Memoized(Exception):
 def test_warm_by_design_tag_marks_exactly_the_lloyd_memo_users(
     spark, sf_dir, monkeypatch
 ):
-    """A query is warm by design iff its build passes a cache_key to
-    the per-session Lloyd memo (similarity._lloyd_grouped)."""
-    signature = inspect.signature(similarity._lloyd_grouped)
+    """A query is warm by design iff its build reads the per-session
+    IVF index memo (similarity._ivf_memo, which both index builders
+    go through)."""
 
     def record(*args, **kwargs):
-        bound = signature.bind(*args, **kwargs).arguments
-        raise _Memoized(bound.get("cache_key"))
+        raise _Memoized
 
-    monkeypatch.setattr(similarity, "_lloyd_grouped", record)
+    monkeypatch.setattr(similarity, "_ivf_memo", record)
     callers = {
         m for m in {q.fn.__module__ for q in REGISTRY.values()}
-        if "_lloyd" in inspect.getsource(sys.modules[m])
+        if "_ivf_" in inspect.getsource(sys.modules[m])
     }
     memoizing = set()
     for name, q in REGISTRY.items():
@@ -244,10 +229,39 @@ def test_warm_by_design_tag_marks_exactly_the_lloyd_memo_users(
             continue
         try:
             q.fn(spark, sf_dir)
-        except _Memoized as hit:
-            if hit.args[0] is not None:
-                memoizing.add(name)
+        except _Memoized:
+            memoizing.add(name)
         finally:
             spark.catalog.clearCache()
     tagged = {n for n, q in REGISTRY.items() if "warm_by_design" in q.tags}
     assert memoizing and tagged == memoizing
+
+
+def test_ivf_index_trains_once_per_session(spark, sf_dir, monkeypatch):
+    """The IVF queries share one trained index per (session, dataset):
+    after the first ann_ivf_kmeans build, rebuilding it and building
+    ann_ivf_multiprobe start no job; ann_ivf_pq_adc's first build
+    trains only its codebooks and its second starts no job.  Another
+    session (applicationId) trains its own index."""
+    monkeypatch.setattr(similarity, "_IVF_INDEX", {})
+    sc = spark.sparkContext
+
+    def jobs(group, *names):
+        sc.setJobGroup(group, group)
+        try:
+            for name in names:
+                REGISTRY[name].fn(spark, sf_dir)
+        finally:
+            sc._jsc.clearJobGroup()
+        return jobs_in_group(spark, group)
+
+    assert jobs("ivf-first", "ann_ivf_kmeans") >= 1
+    assert jobs("ivf-warm", "ann_ivf_kmeans", "ann_ivf_multiprobe") == 0
+    assert jobs("ivf-pq-first", "ann_ivf_pq_adc") >= 1
+    assert jobs("ivf-pq-warm", "ann_ivf_pq_adc") == 0
+    coarse = similarity._ivf_index(spark, sf_dir)[1]
+    monkeypatch.setattr(
+        type(sc), "applicationId", property(lambda self: "another-session")
+    )
+    assert jobs("ivf-other-session", "ann_ivf_kmeans") >= 1
+    assert similarity._ivf_index(spark, sf_dir)[1] == coarse

@@ -10,7 +10,8 @@ long-lived JVMs (dev/dupskew_r11/embcos_ab.json: 5.7 s → 70-83 s for
 one unchanged plan) and the unrolled codegen form is the only safe
 spelling.  ``pair_dot`` / ``row_norm`` / ``pair_cosine`` pick the shape
 from the footer row count (``catalog.table_facts``, forged here with
-``testing.forged_sizes``); BOTH shapes share the exact left-associated
+``testing.forged_sizes`` on either side of the gate, so the tests do
+not depend on the size of the corpus under test); BOTH shapes share the exact left-associated
 fold order, so every double they produce is bit-identical.
 
 These tests pin (1) that bit-identity, element-for-element, on real
@@ -27,29 +28,29 @@ from datafusion_comet_spark.queries import load_all
 from datafusion_comet_spark.queries import similarity as sim
 from datafusion_comet_spark.testing import forged_sizes
 
-SF = "/root/testdata/sf0.001"
-# a corpus-scale row count for both gated corpora
-CORPUS_SCALE = dict.fromkeys(("embeddings", "documents"), 10**9)
+# row counts of both gated corpora just below and at the gate
+_GATED = ("embeddings", "documents")
+BELOW = dict.fromkeys(_GATED, sim._UNROLL_MIN_ROWS - 1)
+ABOVE = dict.fromkeys(_GATED, sim._UNROLL_MIN_ROWS)
 
 
-def test_gate_picks_fold_below_and_unrolled_above():
-    # the real sf0.001 corpus is far below the threshold
-    assert sim.pair_dot(SF) is sim.dot
-    assert sim.row_norm(SF) is sim.l2_norm
-    assert sim.pair_cosine(SF) is sim.cosine
-    # forged corpus-scale row count flips every helper to the unrolled form
-    with forged_sizes(SF, rows=CORPUS_SCALE):
-        assert sim.pair_dot(SF) is sim.dot_unrolled
-        assert sim.row_norm(SF) is sim.l2_norm_unrolled
-        assert sim.pair_cosine(SF) is sim.cosine_unrolled
+def test_gate_picks_fold_below_and_unrolled_above(sf_dir):
+    with forged_sizes(sf_dir, rows=BELOW):
+        assert sim.pair_dot(sf_dir) is sim.dot
+        assert sim.row_norm(sf_dir) is sim.l2_norm
+        assert sim.pair_cosine(sf_dir) is sim.cosine
+    with forged_sizes(sf_dir, rows=ABOVE):
+        assert sim.pair_dot(sf_dir) is sim.dot_unrolled
+        assert sim.row_norm(sf_dir) is sim.l2_norm_unrolled
+        assert sim.pair_cosine(sf_dir) is sim.cosine_unrolled
 
 
-def test_spellings_bit_identical_on_corpus_vectors(spark):
+def test_spellings_bit_identical_on_corpus_vectors(spark, sf_dir):
     """dot/norm/cosine folds vs unrolled forms: exact double equality
     (same left-associated accumulation order) on every pair drawn from
     real embedding vectors."""
     emb = (
-        load_table(spark, SF, "embeddings")
+        load_table(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") < 12)
         .select("vec_id", sim._as_double("embedding").alias("emb"))
     )
@@ -75,36 +76,39 @@ def test_spellings_bit_identical_on_corpus_vectors(spark):
             assert r["c_fold"] == r["c_unr"], (r["a"], r["b"])
 
 
-def test_gated_query_identical_rows_both_sides(spark):
+def test_gated_query_identical_rows_both_sides(spark, sf_dir):
     """ann_bruteforce_topk collects the same rows whichever side of the
     gate builds it — the end-to-end pin that flipping the spelling at
     corpus scale cannot change answers."""
     reg = load_all()
-    below = reg["ann_bruteforce_topk"].fn(spark, SF).collect()
-    with forged_sizes(SF, rows=CORPUS_SCALE):
-        assert sim.pair_dot(SF) is sim.dot_unrolled  # the flip is active
-        above = reg["ann_bruteforce_topk"].fn(spark, SF).collect()
+    with forged_sizes(sf_dir, rows=BELOW):
+        assert sim.pair_dot(sf_dir) is sim.dot
+        below = reg["ann_bruteforce_topk"].fn(spark, sf_dir).collect()
+    with forged_sizes(sf_dir, rows=ABOVE):
+        assert sim.pair_dot(sf_dir) is sim.dot_unrolled  # the flip is active
+        above = reg["ann_bruteforce_topk"].fn(spark, sf_dir).collect()
     assert [tuple(r) for r in below] == [tuple(r) for r in above]
 
 
 # --- the LSH signature-match count shares the same gate --------------------
 
 
-def test_sig_match_gate_flip():
+def test_sig_match_gate_flip(sf_dir):
     from datafusion_comet_spark.queries import datapipe as dp
 
-    assert dp.sig_match_count(SF) is dp._sig_match_fold
-    with forged_sizes(SF, rows=CORPUS_SCALE):
-        assert dp.sig_match_count(SF) is dp._sig_match_unrolled
+    with forged_sizes(sf_dir, rows=BELOW):
+        assert dp.sig_match_count(sf_dir) is dp._sig_match_fold
+    with forged_sizes(sf_dir, rows=ABOVE):
+        assert dp.sig_match_count(sf_dir) is dp._sig_match_unrolled
 
 
-def test_sig_match_spellings_identical_on_real_signatures(spark):
+def test_sig_match_spellings_identical_on_real_signatures(spark, sf_dir):
     """Fold vs unrolled equal-position counts on every real band-bucket
-    pair drawn from the sf0.001 corpus signatures: exact int equality
+    pair drawn from the corpus signatures: exact int equality
     (integer comparisons — no floating-point order concern at all)."""
     from datafusion_comet_spark.queries import datapipe as dp
 
-    docs = load_table(spark, SF, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     sigs = dp.minhash_signatures(docs)
     a = sigs.select(F.col("doc_id").alias("a"), F.col("sig").alias("sa"))
     b = sigs.select(F.col("doc_id").alias("b"), F.col("sig").alias("sb"))
@@ -120,23 +124,25 @@ def test_sig_match_spellings_identical_on_real_signatures(spark):
         )
     )
     rows = pairs.collect()
-    assert rows, "no signature pairs at sf0.001?"
+    assert rows, "no signature pairs in the corpus?"
     for r in rows:
         assert r["m_fold"] == r["m_unr"], (r["a"], r["b"])
 
 
-def test_lsh_queries_identical_rows_both_sides(spark):
+def test_lsh_queries_identical_rows_both_sides(spark, sf_dir):
     """dedup_minhash_lsh and dedup_lsh_star_cluster collect the same
     rows whichever side of the gate builds the match count."""
     from datafusion_comet_spark.queries import datapipe as dp
 
     reg = load_all()
-    below = {
-        n: [tuple(r) for r in reg[n].fn(spark, SF).collect()]
-        for n in ("dedup_minhash_lsh", "dedup_lsh_star_cluster")
-    }
-    with forged_sizes(SF, rows=CORPUS_SCALE):
-        assert dp.sig_match_count(SF) is dp._sig_match_unrolled
+    with forged_sizes(sf_dir, rows=BELOW):
+        assert dp.sig_match_count(sf_dir) is dp._sig_match_fold
+        below = {
+            n: [tuple(r) for r in reg[n].fn(spark, sf_dir).collect()]
+            for n in ("dedup_minhash_lsh", "dedup_lsh_star_cluster")
+        }
+    with forged_sizes(sf_dir, rows=ABOVE):
+        assert dp.sig_match_count(sf_dir) is dp._sig_match_unrolled
         for n, rows in below.items():
-            above = [tuple(r) for r in reg[n].fn(spark, SF).collect()]
+            above = [tuple(r) for r in reg[n].fn(spark, sf_dir).collect()]
             assert rows == above, n

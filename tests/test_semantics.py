@@ -174,16 +174,6 @@ def test_multimodal_decode_stub_matches_local(spark, sf_dir):
         assert got[fmt].total_frames == grp.n_frames.sum()
 
 
-def test_multimodal_real_decode_is_explicit_stub(spark, sf_dir):
-    """Without fake=True the decode must refuse loudly, not fabricate."""
-    import pytest as _pytest
-
-    from datafusion_comet_spark.operators.multimodal import decode_image_batch
-
-    with _pytest.raises(NotImplementedError):
-        decode_image_batch(b"\xff\xd8\xff", "jpeg", fake=False)
-
-
 def test_ivf_recall_vs_bruteforce(spark, sf_dir):
     """IVF cell-local search must recover a reasonable share of the
     exact top-5 (single-probe recall; the scale/recall dial is the
@@ -1239,85 +1229,54 @@ def test_lloyd_train_sample_partition_invariant(spark, sf_dir):
     full-corpus fit) so the threshold logic can't silently dead-code."""
     from pyspark.sql import functions as F
 
-    from datafusion_comet_spark.queries.similarity import (
-        _as_double,
-        _lloyd_centroids,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", _as_double("embedding").alias("emb")
-    )
-    n = emb.count()
-    bound = max(1, n // 4)  # force sampling: train on ~25% of the corpus
-
-    def build(df):
-        return _lloyd_centroids(
-            df, "vec_id", "emb", k=4, iters=3, seed=7,
-            init="farthest", train_max_rows=bound,
-        )
-
-    sampled_1part = build(emb.repartition(1))
-    sampled_7part = build(emb.repartition(7, F.col("vec_id")))
-    assert sampled_1part == sampled_7part
-    full = _lloyd_centroids(
-        emb, "vec_id", "emb", k=4, iters=3, seed=7, init="farthest",
-    )
-    assert sampled_1part != full, "sampling threshold never activated"
-
-
-def test_lloyd_footer_rowcount_sizing_and_cache_key(spark, sf_dir):
-    """Round-9 hardening of the train-on-sample path:
-
-    1. the footer row count (`catalog.table_facts`, zero data passes) must
-       equal the scanned count — the reservoir fraction sized from it
-       is then byte-identical to the old `base.count()` sizing, so the
-       pinned IVF oracles cannot move.
-    2. The _LLOYD_CACHE memo key now folds every behavior-affecting
-       parameter (round-8 advice: the caller strings were not updated
-       when train_max_rows changed behavior) — the same cache_key under
-       different k MUST NOT return stale centroids.
-    3. Group starvation (fewer than k init seeds — reachable only via
-       group skew under the global-fraction reservoir) raises instead
-       of fitting a degenerate codebook.
-    """
-    from pyspark.sql import functions as F
-
     from datafusion_comet_spark.catalog import table_facts
     from datafusion_comet_spark.queries.similarity import (
         _as_double,
-        _lloyd_centroids,
         _lloyd_grouped,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", _as_double("embedding").alias("emb")
     )
-    n = emb.count()
-    # 1: footer count == scanned count; sizing via the hint matches
-    # sizing via count() exactly (same `total`, same filter literal)
+    n = table_facts(sf_dir, "embeddings").rows
+    bound = max(1, n // 4)  # force sampling: train on ~25% of the corpus
+
+    def build(df):
+        return _lloyd_grouped(
+            df, "vec_id", F.lit(0), 1, "emb", k=4, iters=3, seed=7,
+            init="farthest", train_max_rows=bound, train_total_rows=n,
+        )[0]
+
+    sampled_1part = build(emb.repartition(1))
+    sampled_7part = build(emb.repartition(7, F.col("vec_id")))
+    assert sampled_1part == sampled_7part
+    full = _lloyd_grouped(
+        emb, "vec_id", F.lit(0), 1, "emb", k=4, iters=3, seed=7,
+        init="farthest",
+    )[0]
+    assert sampled_1part != full, "sampling threshold never activated"
+
+
+def test_lloyd_footer_rowcount_sizing_and_cache_key(spark, sf_dir):
+    """Round-9 hardening of the train-on-sample path:
+
+    1. the footer row count (`catalog.table_facts`, zero data passes),
+       which sizes the reservoir fraction, must equal the scanned
+       count.
+    2. Group starvation (fewer than k init seeds — reachable only via
+       group skew under the global-fraction reservoir) raises instead
+       of fitting a degenerate codebook.
+    """
+    from pyspark.sql import functions as F
+
+    from datafusion_comet_spark.catalog import table_facts
+    from datafusion_comet_spark.queries.similarity import _lloyd_grouped
+
+    # 1: footer count == scanned count
+    n = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
     assert table_facts(sf_dir, "embeddings").rows == n
-    bound = max(1, n // 4)
-    via_count = _lloyd_centroids(
-        emb, "vec_id", "emb", k=4, iters=3, seed=7,
-        init="farthest", train_max_rows=bound,
-    )
-    via_footer = _lloyd_centroids(
-        emb, "vec_id", "emb", k=4, iters=3, seed=7,
-        init="farthest", train_max_rows=bound,
-        train_total_rows=table_facts(sf_dir, "embeddings").rows,
-    )
-    assert via_count == via_footer
 
-    # 2: identical cache_key, different k — must not serve stale hits
-    k3 = _lloyd_centroids(
-        emb, "vec_id", "emb", k=3, iters=2, seed=7, cache_key="same-key"
-    )
-    k2 = _lloyd_centroids(
-        emb, "vec_id", "emb", k=2, iters=2, seed=7, cache_key="same-key"
-    )
-    assert len(k3) == 3 and len(k2) == 2
-
-    # 3: a 2-row group cannot seed k=4 — the free post-init guard fires
+    # 2: a 2-row group cannot seed k=4 — the free post-init guard fires
     tiny = spark.createDataFrame(
         [(i, [float(i), float(i * 2)]) for i in range(2)], "id BIGINT, v ARRAY<DOUBLE>"
     )
