@@ -1,13 +1,15 @@
-"""Source/sink round-trip queries: CSV scan, JSON scan, Parquet writer.
+"""Source/sink round-trip queries: file formats and Python connectors.
 
 Covers the reference's file-format operators (SURVEY.md §2.1 rows
 4 and 19): CsvScan with its full option set (reference:
 native/proto/src/proto/operator.proto:134-151) and ParquetWriter with
-codec + partitioned layout (operator.proto:320-338).  Every query
-writes from the canonical parquet tables into a scratch dir, reads
-back through the format under test, and aggregates — so the oracle
-(which only sees the canonical tables) verifies the round trip was
-lossless end-to-end.
+codec + partitioned layout (operator.proto:320-338), plus the formats
+and connectors it lacks (JSON, ORC, text, XML, binaryFile and the
+Python DataSource source and sink).  The file-format queries write
+from the canonical parquet tables into a scratch dir, read back
+through the format under test, and aggregate — so the oracle (which
+only sees the canonical tables) verifies the round trip was lossless
+end-to-end; the synthetic source's oracles regenerate its rows.
 """
 
 from __future__ import annotations
@@ -18,16 +20,47 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..session import conf_override
 from ..sources import (
+    CSV_OPTIONS,
+    JSON_OPTIONS,
+    XML_OPTIONS,
     scratch_dir,
-    write_read_csv,
-    write_read_json,
-    write_read_orc,
-    write_read_parquet,
-    write_read_text,
-    write_read_xml,
+    write_read,
+)
+from ..sources.python_datasource import (
+    SCHEMA_DDL,
+    generator_oracle_sql,
+    read_committed,
+    register_sources,
 )
 from . import register
 from ._shared import _t
+
+
+def _synthetic_events(spark: SparkSession) -> DataFrame:
+    """A batch read of 2000 synthetic events in 8 slices.  Its reader
+    implements ``pushFilters``, which Spark plans only with Python
+    DataSource filter pushdown on; that is decided when the returned
+    DataFrame is planned, after the query fn returns, and the flag
+    affects Python data sources only, so it stays on for the session."""
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    register_sources(spark)
+    return (
+        spark.read.format("synthetic_events")
+        .option("n_rows", "2000")
+        .option("n_partitions", "8")
+        .load()
+    )
+
+
+def _synthetic_events_stream(spark: SparkSession) -> DataFrame:
+    """A stream of 1200 synthetic events, 4 slices per microbatch."""
+    register_sources(spark)
+    return (
+        spark.readStream.format("synthetic_events")
+        .option("n_rows", "1200")
+        .option("n_partitions", "4")
+        .load()
+    )
 
 
 @register(
@@ -49,7 +82,9 @@ def csv_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     it back with an explicit schema, aggregate.  A hash-match against
     the parquet-side oracle proves the scan is lossless."""
     nation = _t(spark, sf_dir, "nation")
-    back = write_read_csv(spark, nation, scratch_dir(sf_dir, "nation_csv"))
+    back = write_read(
+        spark, nation, scratch_dir(sf_dir, "nation_csv"), "csv", CSV_OPTIONS
+    )
     return (
         back.groupBy(F.col("n_regionkey").alias("regionkey"))
         .agg(
@@ -75,7 +110,9 @@ def json_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema (inference is a second full scan — never the plan at
     100 TB), project."""
     region = _t(spark, sf_dir, "region")
-    back = write_read_json(spark, region, scratch_dir(sf_dir, "region_json"))
+    back = write_read(
+        spark, region, scratch_dir(sf_dir, "region_json"), "json", JSON_OPTIONS
+    )
     return back.select(
         "r_regionkey", "r_name", F.length("r_name").alias("name_len")
     ).orderBy("r_regionkey")
@@ -100,12 +137,13 @@ def parquet_write_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter must prune to one directory at planning time, which is the
     exact mechanism partition elimination uses at 100 TB."""
     orders = _t(spark, sf_dir, "orders")
-    back = write_read_parquet(
+    back = write_read(
         spark,
         orders,
         scratch_dir(sf_dir, "orders_part"),
+        "parquet",
+        {"compression": "zstd"},
         partition_by=["o_orderpriority"],
-        codec="zstd",
     )
     return (
         back.filter(F.col("o_orderpriority") == "1-URGENT")
@@ -134,8 +172,12 @@ def parquet_write_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     union the read-backs and verify identical totals under each."""
     orders = _t(spark, sf_dir, "orders")
     frames = [
-        write_read_parquet(
-            spark, orders, scratch_dir(sf_dir, f"orders_{codec}"), codec=codec
+        write_read(
+            spark,
+            orders,
+            scratch_dir(sf_dir, f"orders_{codec}"),
+            "parquet",
+            {"compression": codec},
         )
         for codec in ("zstd", "lz4", "snappy")
     ]
@@ -176,7 +218,13 @@ def orc_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     sees only the canonical parquet, so a hash match proves the ORC
     round trip is lossless."""
     supplier = _t(spark, sf_dir, "supplier")
-    back = write_read_orc(spark, supplier, scratch_dir(sf_dir, "supplier_orc"))
+    back = write_read(
+        spark,
+        supplier,
+        scratch_dir(sf_dir, "supplier_orc"),
+        "orc",
+        {"compression": "zstd"},
+    )
     return (
         back.groupBy("s_nationkey")
         .agg(
@@ -204,8 +252,12 @@ def text_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingestion shape of every LLM-corpus pipeline; splits parallelize on
     line boundaries at any scale)."""
     nation = _t(spark, sf_dir, "nation")
-    back = write_read_text(
-        spark, nation.select("n_name"), scratch_dir(sf_dir, "nation_txt")
+    back = write_read(
+        spark,
+        nation.select(F.col("n_name").alias("value")),
+        scratch_dir(sf_dir, "nation_txt"),
+        "text",
+        {},
     )
     return back.select(
         "value", F.length("value").alias("len")
@@ -214,14 +266,7 @@ def text_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "python_datasource_scan",
-    oracle="""
-WITH gen AS (
-  SELECT i AS id,
-         (i * 2654435761) % 4294967296 % 97 AS user_id,
-         ['view', 'click', 'purchase'][CAST((i * 2654435761) % 4294967296 % 3 AS INT) + 1] AS kind,
-         (i * 2654435761) % 4294967296 % 1000 AS points
-  FROM (SELECT unnest(generate_series(0, 1999)) AS i)
-)
+    oracle=generator_oracle_sql(0, 2000) + """
 SELECT kind,
        CAST(count(*) AS BIGINT) AS n,
        CAST(sum(points) AS BIGINT) AS sum_points,
@@ -242,17 +287,9 @@ def python_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition, deterministic rows recomputed by the DuckDB oracle.
     Aggregates downstream run in ordinary codegen — the source is just
     another leaf."""
-    from ..sources.python_datasource import register_synthetic_source
-
-    register_synthetic_source(spark)
-    df = (
-        spark.read.format("synthetic_events")
-        .option("n_rows", "2000")
-        .option("n_partitions", "8")
-        .load()
-    )
     return (
-        df.groupBy("kind")
+        _synthetic_events(spark)
+        .groupBy("kind")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
             F.sum("points").cast("bigint").alias("sum_points"),
@@ -284,7 +321,9 @@ def xml_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     text column so character fidelity (entity escaping included) is
     part of what the hash-match proves."""
     nation = _t(spark, sf_dir, "nation")
-    back = write_read_xml(spark, nation, scratch_dir(sf_dir, "nation_xml"))
+    back = write_read(
+        spark, nation, scratch_dir(sf_dir, "nation_xml"), "xml", XML_OPTIONS
+    )
     return (
         back.groupBy("n_regionkey")
         .agg(
@@ -351,14 +390,7 @@ def binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "python_datasource_pushdown",
-    oracle="""
-WITH gen AS (
-  SELECT i AS id,
-         (i * 2654435761) % 4294967296 % 97 AS user_id,
-         ['view', 'click', 'purchase'][CAST((i * 2654435761) % 4294967296 % 3 AS INT) + 1] AS kind,
-         (i * 2654435761) % 4294967296 % 1000 AS points
-  FROM (SELECT unnest(generate_series(300, 1499)) AS i)
-)
+    oracle=generator_oracle_sql(300, 1500) + """
 SELECT kind,
        CAST(count(*) AS BIGINT) AS n,
        CAST(sum(points) AS BIGINT) AS sum_points,
@@ -384,23 +416,11 @@ def python_datasource_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     for Spark to evaluate post-scan.  `test_python_datasource_pushdown_
     prunes_partitions` pins the planning-side effect; this query pins
     the three-way filter split's correctness."""
-    from ..sources.python_datasource import register_synthetic_pushdown_source
-
-    # planning-time flag for the Python DataSource pushdown protocol;
-    # scoped to Python sources only, so it stays on for the session
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    register_synthetic_pushdown_source(spark)
-    df = (
-        spark.read.format("synthetic_events_pushdown")
-        .option("n_rows", "2000")
-        .option("n_partitions", "8")
-        .load()
-        .filter(
-            (F.col("id") >= 300)
-            & (F.col("id") < 1500)
-            & (F.col("kind") == "click")
-            & (F.col("points") >= 100)
-        )
+    df = _synthetic_events(spark).filter(
+        (F.col("id") >= 300)
+        & (F.col("id") < 1500)
+        & (F.col("kind") == "click")
+        & (F.col("points") >= 100)
     )
     return (
         df.groupBy("kind")
@@ -674,14 +694,7 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "python_datasource_stream",
-    oracle="""
-WITH gen AS (
-  SELECT i AS id,
-         (i * 2654435761) % 4294967296 % 97 AS user_id,
-         ['view', 'click', 'purchase'][CAST((i * 2654435761) % 4294967296 % 3 AS INT) + 1] AS kind,
-         (i * 2654435761) % 4294967296 % 1000 AS points
-  FROM (SELECT unnest(generate_series(0, 1199)) AS i)
-)
+    oracle=generator_oracle_sql(0, 1200) + """
 SELECT kind,
        CAST(count(*) AS BIGINT) AS n,
        CAST(sum(points) AS BIGINT) AS sum_points,
@@ -704,17 +717,9 @@ def python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows as ONE microbatch of four offset slices; the oracle
     regenerates the same rows with generate_series — pinning that the
     slicing loses/duplicates nothing."""
-    from ..sources.python_datasource import register_synthetic_stream_source
     from ..streaming import run_to_memory
 
-    register_synthetic_stream_source(spark)
-    stream = (
-        spark.readStream.format("synthetic_events_stream")
-        .option("n_rows", "1200")
-        .option("n_partitions", "4")
-        .load()
-    )
-    agg = stream.groupBy("kind").agg(
+    agg = _synthetic_events_stream(spark).groupBy("kind").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("points").cast("bigint").alias("sum_points"),
         F.min("id").alias("min_id"),
@@ -748,17 +753,11 @@ def python_datasource_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     The query writes nation through the jsonl_dir sink, reads the
     manifest-listed files back, and aggregates — matching the direct
     SQL oracle proves the write→commit→read cycle is lossless."""
-    import json as _json
-    import os as _os
+    import shutil
 
-    from ..sources import scratch_dir
-    from ..sources.python_datasource import register_jsonl_sink
-
-    register_jsonl_sink(spark)
+    register_sources(spark)
     path = scratch_dir(sf_dir, "jsonl_sink_nation")
-    if _os.path.isdir(path):
-        for f in _os.listdir(path):
-            _os.remove(_os.path.join(path, f))
+    shutil.rmtree(path, ignore_errors=True)  # fresh run: no earlier commit
     nation = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -768,12 +767,9 @@ def python_datasource_write(spark: SparkSession, sf_dir: str) -> DataFrame:
         .mode("append")
         .save()
     )
-    with open(_os.path.join(path, "_MANIFEST.json")) as f:
-        manifest = _json.load(f)
-    files = [m["path"] for m in manifest["files"]]
-    back = spark.read.schema(
-        "n_nationkey BIGINT, n_name STRING, n_regionkey BIGINT"
-    ).json(files)
+    back = read_committed(
+        spark, path, "n_nationkey BIGINT, n_name STRING, n_regionkey BIGINT"
+    )
     return (
         back.groupBy("n_regionkey")
         .agg(
@@ -884,14 +880,7 @@ def iceberg_mor_deletes_emulation(
 
 @register(
     "python_datasource_stream_sink",
-    oracle="""
-WITH gen AS (
-  SELECT i AS id,
-         (i * 2654435761) % 4294967296 % 97 AS user_id,
-         ['view', 'click', 'purchase'][CAST((i * 2654435761) % 4294967296 % 3 AS INT) + 1] AS kind,
-         (i * 2654435761) % 4294967296 % 1000 AS points
-  FROM (SELECT unnest(generate_series(0, 1199)) AS i)
-)
+    oracle=generator_oracle_sql(0, 1200) + """
 SELECT kind,
        CAST(count(*) AS BIGINT) AS n,
        CAST(sum(points) AS BIGINT) AS sum_points,
@@ -918,35 +907,17 @@ def python_datasource_stream_sink(
     aggregates only manifest-listed files and must reproduce the
     deterministic source exactly — the oracle regenerates the same
     rows arithmetically."""
-    import glob as _glob
-    import json as _json
-    import os as _os
-    import shutil as _shutil
+    import shutil
 
-    from ..sources import scratch_dir
-    from ..sources.python_datasource import (
-        SCHEMA_DDL,
-        register_jsonl_stream_sink,
-        register_synthetic_stream_source,
-    )
+    from ..streaming import fresh_checkpoint
 
-    register_synthetic_stream_source(spark)
-    register_jsonl_stream_sink(spark)
     path = scratch_dir(sf_dir, "jsonl_stream_sink")
-    ckpt = path + "_ckpt"
-    for d in (path, ckpt):  # fresh run: clear parts, manifests, state
-        if _os.path.isdir(d):
-            _shutil.rmtree(d)
-    stream = (
-        spark.readStream.format("synthetic_events_stream")
-        .option("n_rows", "1200")
-        .option("n_partitions", "4")
-        .load()
-    )
+    shutil.rmtree(path, ignore_errors=True)  # fresh run: no earlier commit
     q = (
-        stream.writeStream.format("jsonl_stream_dir")
+        _synthetic_events_stream(spark)
+        .writeStream.format("jsonl_dir")
         .option("path", path)
-        .option("checkpointLocation", ckpt)
+        .option("checkpointLocation", fresh_checkpoint("python_ds_stream_sink"))
         .trigger(availableNow=True)
         .start()
     )
@@ -954,11 +925,7 @@ def python_datasource_stream_sink(
     assert finished, (
         f"stream did not finish within 120s; lastProgress={q.lastProgress}"
     )
-    files = []
-    for mpath in sorted(_glob.glob(_os.path.join(path, "manifest-*.json"))):
-        with open(mpath) as f:
-            files.extend(m["path"] for m in _json.load(f)["files"])
-    back = spark.read.schema(SCHEMA_DDL).json(files)
+    back = read_committed(spark, path, SCHEMA_DDL)
     return (
         back.groupBy("kind")
         .agg(

@@ -77,20 +77,14 @@ def _rows_to_canonical(
     return out
 
 
-def compare_to_oracle(
-    spark_df,
-    oracle_sql: str,
-    sf_dir: str,
-    float_round: int = 6,
-) -> None:
+def compare_to_oracle(spark_df, oracle_sql: str, sf_dir: str) -> None:
     """Assert the Spark DataFrame matches the DuckDB oracle result.
 
     Column-name sets must match (driver sorts columns by name before
-    hashing); rows are compared as canonicalized sorted multisets.
+    hashing); rows are compared as canonicalized sorted multisets,
+    floats rounded to 6 decimal places.
     """
-    compare_rows_to_oracle(
-        spark_df.columns, spark_df.collect(), oracle_sql, sf_dir, float_round
-    )
+    compare_rows_to_oracle(spark_df.columns, spark_df.collect(), oracle_sql, sf_dir)
 
 
 def compare_rows_to_oracle(
@@ -98,7 +92,6 @@ def compare_rows_to_oracle(
     spark_rows: list,
     oracle_sql: str,
     sf_dir: str,
-    float_round: int = 6,
 ) -> None:
     """``compare_to_oracle`` on rows already collected (for callers that
     must not run the query a second time)."""
@@ -117,8 +110,8 @@ def compare_rows_to_oracle(
     assert len(spark_rows) == len(oracle_rows), (
         f"row count mismatch: spark={len(spark_rows)} oracle={len(oracle_rows)}"
     )
-    a = _rows_to_canonical(spark_rows, spark_cols, float_round)
-    b = _rows_to_canonical(oracle_rows, oracle_cols, float_round)
+    a = _rows_to_canonical(spark_rows, spark_cols, 6)
+    b = _rows_to_canonical(oracle_rows, oracle_cols, 6)
     mismatches = [(x, y) for x, y in zip(a, b) if x != y]
     assert not mismatches, (
         f"{len(mismatches)}/{len(a)} rows differ; first 5: {mismatches[:5]}"

@@ -8,7 +8,6 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-SF_DIR_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
 
 @pytest.fixture(scope="session")
@@ -38,11 +37,6 @@ def _clear_sql_cache():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
-
-
-@pytest.fixture(scope="session")
-def oracle_sf_dir() -> str:
-    return SF_DIR_ORACLE
 
 
 def jobs_in_group(spark, group: str) -> int:

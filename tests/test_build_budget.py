@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from datafusion_comet_spark.catalog import load_table
 from datafusion_comet_spark.queries import load_all, similarity
-from datafusion_comet_spark.sources import write_read_parquet
+from datafusion_comet_spark.sources import write_read
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import bench  # noqa: E402
@@ -179,19 +179,20 @@ def test_parquet_read_back_schema_parity_without_a_job(
     sc = spark.sparkContext
     tag = "partitioned" if partition_by else "flat"
     write_group, read_group = f"wrp-write-{tag}", f"wrp-read-{tag}"
-    write = DataFrameWriter.parquet
+    write = DataFrameWriter.save
 
     def write_then_switch_group(self, *args, **kwargs):
         write(self, *args, **kwargs)
         sc.setJobGroup(read_group, "read-back")
 
-    monkeypatch.setattr(DataFrameWriter, "parquet", write_then_switch_group)
+    monkeypatch.setattr(DataFrameWriter, "save", write_then_switch_group)
     orders = load_table(spark, sf_dir, "orders")
     path = str(tmp_path / "orders")
     sc.setJobGroup(write_group, "write")
     try:
-        back = write_read_parquet(
-            spark, orders, path, partition_by=partition_by, codec="zstd"
+        back = write_read(
+            spark, orders, path, "parquet", {"compression": "zstd"},
+            partition_by=partition_by or (),
         )
     finally:
         sc._jsc.clearJobGroup()

@@ -7,12 +7,14 @@ catalog's table facts.  These tests pin what their callers rely on (no
 cache survives a run, confs and facts come back even when the body
 raises, the A/B row check sees real differences and only those),
 bench.py's one-JSON-line stdout, and that no script grows its own
-timer, nor the package its own conf save/restore, again.
+timer, nor the package its own conf save/restore or data-source
+registration, again.
 """
 
 from __future__ import annotations
 
 import glob
+import inspect
 import json
 import os
 import re
@@ -25,6 +27,7 @@ from conftest import plant_stale_cds_archive
 from datafusion_comet_spark.catalog import table_facts
 from datafusion_comet_spark.queries import load_all
 from datafusion_comet_spark.session import conf_override
+from datafusion_comet_spark.sources import python_datasource
 from datafusion_comet_spark.testing import ab, forged_sizes, scale_factor, timings
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -180,3 +183,22 @@ def test_package_changes_confs_only_through_conf_override():
                 if setter.search(line) and not (permanent and permanent in line)
             ]
     assert not hits, "scope conf changes with session.conf_override:\n" + "\n".join(hits)
+
+
+def test_package_registers_data_sources_only_in_register_sources():
+    """Every Python DataSource of the package is registered by the one
+    ``python_datasource.register_sources``, so a query that reads or
+    writes one calls that and never registers a class of its own."""
+    pkg = os.path.join(REPO, "datafusion_comet_spark")
+    hits = []
+    for p in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        with open(p) as f:
+            hits += [
+                (os.path.relpath(p, pkg), i)
+                for i, line in enumerate(f, 1)
+                if "dataSource.register(" in line
+            ]
+    lines, start = inspect.getsourcelines(python_datasource.register_sources)
+    rel = os.path.join("sources", "python_datasource.py")
+    allowed = {(rel, i) for i in range(start, start + len(lines))}
+    assert hits and set(hits) <= allowed, hits

@@ -414,10 +414,11 @@ def test_python_datasource_pushdown_prunes_partitions(spark, sf_dir):
     from pyspark.sql.datasource import EqualTo, GreaterThanOrEqual, LessThan
 
     from datafusion_comet_spark.sources.python_datasource import (
-        SyntheticEventsPushdownReader,
+        SyntheticEventsDataSource,
     )
 
-    r = SyntheticEventsPushdownReader({"n_rows": "2000", "n_partitions": "8"})
+    source = SyntheticEventsDataSource({"n_rows": "2000", "n_partitions": "8"})
+    r = source.reader(source.schema())
     residual = list(
         r.pushFilters(
             [

@@ -18,7 +18,7 @@ it runs) and checks the per-query invariants on that walk:
 Then it runs the query: against its DuckDB oracle at sf0.001 (the
 same gate the driver runs at sf0.01), or, for a query with no oracle,
 to a row count.  Last, no session conf may have changed under the
-query (``_CONF_SETTERS`` names the one deliberate exception).
+query (``_CONF_SETTERS`` names the deliberate exceptions).
 """
 
 from __future__ import annotations
@@ -71,13 +71,16 @@ _SINGLE_WINDOW_BOUNDED = {
 }
 
 # Session confs a query sets on purpose and leaves set, with why.
+_PUSHDOWN_FLAG = (
+    "spark.sql.python.filterPushdown.enabled",
+    "the synthetic_events reader implements pushFilters, which Spark "
+    "plans only with the flag on; the returned DataFrame is planned "
+    "after the query fn returns, and the flag only affects Python data "
+    "sources",
+)
 _CONF_SETTERS = {
-    "python_datasource_pushdown": (
-        "spark.sql.python.filterPushdown.enabled",
-        "the returned DataFrame is planned after the query fn returns, "
-        "and Python DataSource filter pushdown is decided at planning "
-        "time; the flag only affects Python data sources",
-    ),
+    "python_datasource_pushdown": _PUSHDOWN_FLAG,
+    "python_datasource_scan": _PUSHDOWN_FLAG,
 }
 
 _PYTHON_EVALS = ("BatchEvalPython", "ArrowEvalPython")

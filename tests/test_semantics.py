@@ -1051,11 +1051,11 @@ def test_stream_sink_manifest_commit_is_batch_idempotent(tmp_path):
     import os
 
     from datafusion_comet_spark.sources.python_datasource import (
-        JsonlDirStreamWriter,
+        JsonlDirDataSource,
         _PartFile,
     )
 
-    w = JsonlDirStreamWriter({"path": str(tmp_path)})
+    w = JsonlDirDataSource({"path": str(tmp_path)}).streamWriter(None, False)
     msgs = [_PartFile(str(tmp_path / "stream-part-a.jsonl"), 7)]
     w.commit(msgs, batchId=3)
     # replay with a different task's file set for the same batch
@@ -1067,6 +1067,28 @@ def test_stream_sink_manifest_commit_is_batch_idempotent(tmp_path):
     assert [m["path"] for m in listed["files"]] == [
         str(tmp_path / "stream-part-b.jsonl")
     ]
+
+
+def test_jsonl_dir_reads_back_only_committed_part_files(spark, tmp_path):
+    """``read_committed`` reads the files committed manifests list: a
+    part file that none lists (a failed task's, or one a crash left
+    before commit) is not read back."""
+    from datafusion_comet_spark.sources.python_datasource import (
+        read_committed,
+        register_sources,
+    )
+
+    register_sources(spark)
+    path = str(tmp_path / "sink")
+    schema = "k BIGINT, v STRING"
+    rows = [(1, "a"), (2, "b"), (3, "c")]
+    spark.createDataFrame(rows, schema).write.format("jsonl_dir").option(
+        "path", path
+    ).mode("append").save()
+    with open(tmp_path / "sink" / "part-stray.jsonl", "w") as f:
+        f.write('{"k": 99, "v": "uncommitted"}\n')
+    back = read_committed(spark, path, schema)
+    assert sorted(map(tuple, back.collect())) == rows
 
 
 def test_no_oracle_queries_are_rerun_deterministic(spark, sf_dir):
