@@ -16,6 +16,13 @@ configuration; the settings below are the 100 TB-posture defaults:
   reference's Arrow FFI boundary)
 - session timezone pinned to UTC (reference carries an explicit
   timezone in every temporal expression, expr.proto:374-396)
+- each distinct generated (whole-stage codegen) class compiled once per
+  driver JVM: a compiled-class cache that holds the working set, and
+  class names without the stage id, so one pipeline at two stage
+  positions shares a class.  The cache size is a static conf: a session
+  this module did not launch (``Engine(spark=...)``, another program's
+  own builder) keeps Spark's 100-entry cache.  The reference precompiles its kernels
+  and generates no code per query.
 
 Setup: the driver JVM's class-data-sharing (AppCDS) archive.  Launching
 the driver JVM and loading Spark's classes is most of the time before
@@ -120,6 +127,22 @@ DEFAULT_CONF: dict[str, str] = {
     # start the session with
     # extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}.
     "spark.python.sql.dataFrameDebugging.enabled": "false",
+    # --- generated code ----------------------------------------------------
+    # Static: it takes effect only in a JVM this module launches.
+    # Spark keeps compiled whole-stage classes in an LRU of 100, keyed by
+    # the generated source.  One pass over the 18 TPC-H bench queries
+    # needs about 210 classes and the 4 pipeline queries about 110, so
+    # every warm pass evicted and recompiled nearly all of them (243
+    # Janino compiles per tpch pass at sf0.01, 530 per pass over the 29
+    # bench queries).  4096 holds the 440 classes of the 29 bench queries
+    # and the ~3000 a whole-registry test run compiles; that run ends
+    # with ~20 MB more Metaspace in use (SCALE.md "Generated-code cache").
+    "spark.sql.codegen.cache.maxEntries": "4096",
+    # A session conf.  With the stage id in the class name, one pipeline
+    # generates a new source (and a new compile) at every stage position
+    # it occupies; without it they share one class (cold tpch pass
+    # 256 -> 212 compiles, cold pass over the 29 bench queries 534 -> 440).
+    "spark.sql.codegen.useIdInClassName": "false",
     # --- misc --------------------------------------------------------------
     "spark.ui.enabled": "false",
 }

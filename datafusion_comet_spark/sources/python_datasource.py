@@ -18,14 +18,16 @@ Two connectors, one class each, whatever the access path:
   coordinate), and any engine can recompute the same rows
   (``generator_oracle_sql`` is the DuckDB form of the same generator);
 * ``jsonl_dir`` writes JSONL part files in batch and per microbatch, each
-  commit publishing one manifest; ``read_committed`` reads back exactly the
-  manifest-listed files.
+  commit publishing one manifest (a batch overwrite then removes the
+  earlier manifests and their part files); ``read_committed`` reads back
+  exactly the manifest-listed files.
 
 ``register_sources`` registers both with a session.
 """
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import json
 import os
@@ -280,21 +282,46 @@ class _JsonlPartWriter:
             if m is not None and os.path.exists(m.path):
                 os.remove(m.path)
 
-    def _commit(self, messages, commit_id: str) -> None:
+    def _commit(self, messages, commit_id: str) -> str:
         manifest = {
             "files": [
                 {"path": m.path, "n_rows": m.n_rows}
                 for m in sorted(messages, key=lambda m: m.path)
             ],
         }
-        _publish_json(
-            manifest, os.path.join(self.path, f"manifest-{commit_id}.json")
-        )
+        dest = os.path.join(self.path, f"manifest-{commit_id}.json")
+        _publish_json(manifest, dest)
+        return dest
 
 
 class JsonlDirWriter(_JsonlPartWriter, DataSourceWriter):
+    """The batch writer.  An append commit adds its manifest to those
+    already in the directory.  An overwrite commit first publishes its
+    own manifest, then removes each earlier manifest and, after it, the
+    part files that manifest lists.  Publishing first means a reader
+    never finds the directory empty: one that lists the manifests
+    during an overwrite can read the earlier and the new rows together,
+    and one that opened an earlier manifest before its removal can fail
+    on a part file removed under it.  A reader that starts after the
+    commit returns reads only the new rows."""
+
+    def __init__(self, options, overwrite: bool):
+        super().__init__(options)
+        self.overwrite = overwrite
+
     def commit(self, messages) -> None:
-        self._commit(messages, uuid.uuid4().hex)
+        published = self._commit(messages, uuid.uuid4().hex)
+        if not self.overwrite:
+            return
+        for manifest in glob.glob(os.path.join(self.path, "manifest-*.json")):
+            if manifest == published:
+                continue
+            with open(manifest) as f:
+                parts = [m["path"] for m in json.load(f)["files"]]
+            os.remove(manifest)
+            for part in parts:
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(part)
 
 
 class JsonlDirStreamWriter(_JsonlPartWriter, DataSourceStreamWriter):
@@ -312,7 +339,7 @@ class JsonlDirDataSource(DataSource):
         return "jsonl_dir"
 
     def writer(self, schema: StructType, overwrite: bool) -> DataSourceWriter:
-        return JsonlDirWriter(self.options)
+        return JsonlDirWriter(self.options, overwrite)
 
     def streamWriter(
         self, schema: StructType, overwrite: bool

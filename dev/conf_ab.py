@@ -8,6 +8,8 @@ For each query, ``testing.ab`` over the two values: warmup once, then
 AB_BLOCKS interleaved (A,B) blocks, each arm timed min-of-AB_RUNS with
 the conf set before building the DataFrame, rows compared for exact
 multiset equality between arms.  Writes dev/conf_ab_<last key part>.json.
+A static conf (``spark.conf.isModifiable`` false) cannot change inside
+a session, so the script exits without running it.
 """
 from __future__ import annotations
 
@@ -35,6 +37,14 @@ def main() -> None:
     registry = load_all()
     names = sys.argv[2:] or bench_names(registry)
     spark = get_session(app_name="dcs-conf-ab")
+    if not spark.conf.isModifiable(key):
+        spark.stop()
+        sys.exit(
+            f"conf_ab: {key} is a static conf; it is fixed when the JVM starts, "
+            "so it cannot be A/B'd inside one session. Compare it with "
+            "alternating fresh-process runs instead, e.g. perfbench/spread.py "
+            "on two checkouts whose session.DEFAULT_CONF differ in it."
+        )
     arms = {val_a: {key: val_a}, val_b: {key: val_b}}
     out = {}
     for name in names:

@@ -1091,6 +1091,34 @@ def test_jsonl_dir_reads_back_only_committed_part_files(spark, tmp_path):
     assert sorted(map(tuple, back.collect())) == rows
 
 
+def test_jsonl_dir_overwrite_replaces_and_append_adds(spark, tmp_path):
+    """Two overwrites read back only the second write, and its commit
+    leaves one manifest and no part file of the first; two appends read
+    back both."""
+    import glob
+    import json
+
+    from datafusion_comet_spark.sources.python_datasource import (
+        read_committed,
+        register_sources,
+    )
+
+    register_sources(spark)
+    schema = "k BIGINT"
+    for mode, expected in (("overwrite", [(2,)]), ("append", [(1,), (2,)])):
+        path = str(tmp_path / mode)
+        for k in (1, 2):
+            spark.createDataFrame([(k,)], schema).write.format("jsonl_dir").option(
+                "path", path
+            ).mode(mode).save()
+        back = read_committed(spark, path, schema)
+        assert sorted(map(tuple, back.collect())) == expected, mode
+        manifests = glob.glob(f"{path}/manifest-*.json")
+        assert len(manifests) == len(expected), (mode, manifests)
+        listed = [m["path"] for f in manifests for m in json.load(open(f))["files"]]
+        assert sorted(listed) == sorted(glob.glob(f"{path}/part-*.jsonl")), mode
+
+
 def test_no_oracle_queries_are_rerun_deterministic(spark, sf_dir):
     """Name-level pin for the two no-oracle queries whose kernels are
     verified elsewhere (connected-components graph pin; murmur3/xxhash
