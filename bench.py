@@ -126,7 +126,9 @@ def main() -> None:
         # the timed region is build + collect(); collect() forces full
         # evaluation incl. the final projection (count() would let
         # Catalyst prune result expressions); all bench queries return
-        # small (aggregated / limited) results
+        # small (aggregated / limited) results.  Where a final sort runs
+        # in one task on that account, tests/test_queries_oracle.py
+        # _ONE_TASK_BOUNDED is where its bound is checked
         def run():
             counts.append(len(registry[name].fn(spark, sf_dir).collect()))
 

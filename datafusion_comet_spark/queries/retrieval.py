@@ -608,6 +608,7 @@ def text_bm25_multiquery(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("contrib_micros").cast("bigint").alias("bm25_micros"))
         .withColumn("rn", F.row_number().over(w).cast("int"))
         .filter(F.col("rn") <= 10)
+        .coalesce(1)  # |queries| x top 10: a one-task sort
         .orderBy("query_id", "rn")
     )
 

@@ -224,6 +224,7 @@ def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             " AS rn",
         )
         .filter("rn <= 5")
+        .coalesce(1)  # 3 queries x top 5: a one-task sort
         .orderBy("qid", "rn")
     )
 
@@ -808,6 +809,7 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
             " AS rn",
         )
         .filter("rn <= 5")
+        .coalesce(1)  # 3 queries x top 5: a one-task sort
         .orderBy("qid", "rn")
     )
 

@@ -268,11 +268,13 @@ def tpcds_return_ratio_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one conditional aggregate pass over the quarter's lines
     (two ratios from the same groupBy — never two fact scans), then
     top-10-by-rank WITHOUT any global window: TakeOrdered 10th-value
-    thresholds + broadcast inequality count-joins reconstruct exact
-    rank() (ties included) while no task ever sees more than its own
-    partition of the aggregate — see inline comments.  Ratios are
-    computed in exact decimal then divided as double on both engines
-    (identical IEEE bits), so rank ties are data-determined, not
+    thresholds select the kept items, and one broadcast inequality
+    join of the aggregate against them counts each kept item's exact
+    rank() (ties included) — see inline comments.  No task sees more
+    than its own partition of the aggregate, except the final sort's,
+    which sees the kept items' partial counts.  Ratios are computed in
+    exact decimal then divided as double on both engines (identical
+    IEEE bits), so rank ties are data-determined, not
     float-noise-determined."""
     li = _t(spark, sf_dir, "lineitem").filter(
         "l_shipdate >= CAST('1998-01-01 00:00:00' AS TIMESTAMP)"
@@ -317,14 +319,16 @@ def tpcds_return_ratio_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     #   2. keep aggregate rows at-or-above either broadcast threshold
     #      (≥ the 10th value ⟹ at most 9 strictly greater ⟹ rank ≤ 10,
     #      so this is exactly the top-10-by-rank set, ties included);
-    #   3. exact global rank of each survivor — including the OTHER
-    #      measure's possibly-large rank — as 1 + count(strictly
-    #      greater), via a broadcast inequality join against the
-    #      aggregate (rank() ≡ 1 + |{v : v > x}| under DESC order).
-    # Every branch reads the persisted aggregate (see the persist()
-    # note above — exchange reuse alone does NOT survive per-branch
-    # column pruning here); the fact is scanned once and no task ever
-    # holds more than its own aggregate partition.
+    #   3. exact global rank of each kept row in BOTH measures — the
+    #      other measure's rank may be large — as 1 + count(strictly
+    #      greater) (rank() ≡ 1 + |{v : v > x}| under DESC order), from
+    #      ONE broadcast inequality join of the aggregate against the
+    #      kept rows: every row strictly greater in either measure
+    #      matches, every kept row matches itself, so grouping by the
+    #      kept key loses none and count_if() counts each measure;
+    #   4. the grouped counts are partial-aggregated per map task, so
+    #      the final sort's input is at most |kept| rows per task and
+    #      it sorts in one task (coalesce(1)), without a range shuffle.
     th_amt = (
         cand.orderBy(F.desc("amt_ratio"))
         .limit(10)
@@ -338,35 +342,23 @@ def tpcds_return_ratio_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = (
         cand.join(F.broadcast(th_amt.join(th_qty)))
         .filter("amt_ratio >= th_amt OR qty_ratio >= th_qty")
-        .select("l_partkey", "amt_ratio", "qty_ratio")
-    )
-    ka = kept.selectExpr("l_partkey AS ka_key", "amt_ratio AS ka_v")
-    kq = kept.selectExpr("l_partkey AS kq_key", "qty_ratio AS kq_v")
-    amt_gt = (
-        cand.select("amt_ratio")
-        .join(F.broadcast(ka), F.expr("amt_ratio > ka_v"))
-        .groupBy("ka_key")
-        .agg(F.expr("count(1) AS amt_gt"))
-    )
-    qty_gt = (
-        cand.select("qty_ratio")
-        .join(F.broadcast(kq), F.expr("qty_ratio > kq_v"))
-        .groupBy("kq_key")
-        .agg(F.expr("count(1) AS qty_gt"))
+        .selectExpr("l_partkey AS k_key", "amt_ratio AS k_amt", "qty_ratio AS k_qty")
     )
     return (
-        kept.join(
-            _dim_hint(amt_gt, sf_dir, "part"), kept.l_partkey == F.col("ka_key"), "left"
+        cand.join(F.broadcast(kept), F.expr("amt_ratio >= k_amt OR qty_ratio >= k_qty"))
+        .groupBy("k_key", "k_amt", "k_qty")
+        .agg(
+            F.expr("count_if(amt_ratio > k_amt) AS amt_gt"),
+            F.expr("count_if(qty_ratio > k_qty) AS qty_gt"),
         )
-        .join(_dim_hint(qty_gt, sf_dir, "part"), kept.l_partkey == F.col("kq_key"), "left")
         .selectExpr(
-            "l_partkey",
-            "amt_ratio",
-            "qty_ratio",
-            "CAST(coalesce(amt_gt, 0) + 1 AS BIGINT) AS amt_rank",
-            "CAST(coalesce(qty_gt, 0) + 1 AS BIGINT) AS qty_rank",
+            "k_key AS l_partkey",
+            "k_amt AS amt_ratio",
+            "k_qty AS qty_ratio",
+            "amt_gt + 1 AS amt_rank",
+            "qty_gt + 1 AS qty_rank",
         )
-        .filter("amt_rank <= 10 OR qty_rank <= 10")
+        .coalesce(1)
         .orderBy("amt_rank", "qty_rank", "l_partkey")
     )
 

@@ -159,6 +159,7 @@ def tpcds_cross_channel_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("CAST(count(1) AS BIGINT) AS n_lines"),
             F.expr(f"CAST(round(sum({SPARK_SQL_REV}), 2) AS DOUBLE) AS revenue"),
         )
+        .coalesce(1)  # brands x years rollup levels: a one-task sort
         .orderBy(
             "lvl",
             F.col("p_brand").asc_nulls_first(),

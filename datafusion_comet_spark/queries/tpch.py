@@ -20,6 +20,19 @@ reference solves the same problem by forcing Decimal128 everywhere
 (reference: spark/src/main/scala/org/apache/comet/rules/CometExecRule.scala:180-182);
 we do the idiomatic equivalent with explicit decimal casts, then cast
 the exact result back to double for a stable cross-engine hash.
+
+A final sort over a result whose keys range over a fixed domain is
+spelled ``.coalesce(1).orderBy(...)``: Spark plans a bare ``orderBy``
+as a RangePartitioning exchange, which costs a sampling job and a
+shuffle stage even for a 4-row answer.  ``coalesce(1)`` does not
+shuffle, so the whole final-aggregate stage runs in one task; that is
+cheap only because its input is the partial aggregates, map tasks ×
+groups rows.  (DataFusion, the reference's engine, takes no sampling
+pass either: it sorts each partition and merges them,
+``SortPreservingMergeExec``.)  A sort over rows that grow with the
+data (q15's supplier join) keeps the range exchange.
+``tests/test_queries_oracle.py`` ``_ONE_TASK_BOUNDED`` lists every
+one-task sort with its bound and checks the rows entering it.
 """
 
 from __future__ import annotations
@@ -121,6 +134,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             n.alias("count_order"),
         )
+        .coalesce(1)  # returnflag x linestatus groups: a one-task sort
         .orderBy("l_returnflag", "l_linestatus")
     )
 
@@ -207,6 +221,7 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).alias("order_count"))
+        .coalesce(1)  # order priorities: a one-task sort
         .orderBy("o_orderpriority")
     )
 
@@ -257,6 +272,7 @@ def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
         .groupBy("n_name")
         .agg(_sum_rev_money().alias("revenue"))
+        .coalesce(1)  # nations of one region: a one-task sort
         .orderBy(F.col("revenue").desc(), "n_name")
     )
 
@@ -360,6 +376,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("supp_nation", "cust_nation", "l_year")
         .agg(_money(F.sum("volume")).alias("revenue"))
+        .coalesce(1)  # 2 x 2 nations x ship years: a one-task sort
         .orderBy("supp_nation", "cust_nation", "l_year")
     )
 
@@ -436,6 +453,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("mkt_share")
         )
+        .coalesce(1)  # order years: a one-task sort
         .orderBy("o_year")
     )
 
@@ -489,6 +507,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("nation", "o_year")
         .agg(_money(F.sum("amount")).alias("sum_profit"))
+        .coalesce(1)  # nations x order years: a one-task sort
         .orderBy("nation", F.col("o_year").desc())
     )
 
@@ -573,6 +592,7 @@ def q12_late_shipments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(late).cast("long").alias("late_count"),
             F.count(F.lit(1)).alias("line_count"),
         )
+        .coalesce(1)  # order priorities: a one-task sort
         .orderBy("o_orderpriority")
     )
 
@@ -614,6 +634,7 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         per_cust.groupBy("c_count")
         .agg(F.count(F.lit(1)).alias("custdist"))
+        .coalesce(1)  # distinct order counts: a one-task sort
         .orderBy(F.col("custdist").desc(), F.col("c_count").desc())
     )
 
@@ -972,6 +993,7 @@ def q22_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("numcust"),
             _money(F.sum(_dec("c_acctbal"))).alias("totacctbal"),
         )
+        .coalesce(1)  # market segments: a one-task sort
         .orderBy("c_mktsegment")
     )
 

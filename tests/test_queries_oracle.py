@@ -13,12 +13,17 @@ it runs) and checks the per-query invariants on that walk:
 - no ``WindowExec`` fed by a SinglePartition exchange (the single
   reducer that holds 100 TB), except the ``_SINGLE_WINDOW_BOUNDED``
   queries, whose windowed input is bounded by construction;
-- only scalar output columns (no array, map, struct or decimal).
+- only scalar output columns (no array, map, struct or decimal);
+- no one-partition ``CoalesceExec`` (a stage run in one task), except
+  the ``_ONE_TASK_BOUNDED`` queries, whose one-task input is bounded
+  by construction.
 
 Then it runs the query: against its DuckDB oracle at sf0.001 (the
 same gate the driver runs at sf0.01), or, for a query with no oracle,
-to a row count.  Last, no session conf may have changed under the
-query (``_CONF_SETTERS`` names the deliberate exceptions).
+to a row count.  After an oracle run, the rows entering each
+one-task coalesce may not exceed the query's ``_ONE_TASK_BOUNDED``
+bound.  Last, no session conf may have changed under the query
+(``_CONF_SETTERS`` names the deliberate exceptions).
 """
 
 from __future__ import annotations
@@ -70,6 +75,54 @@ _SINGLE_WINDOW_BOUNDED = {
     ),
 }
 
+# Queries that run a stage in ONE task (``.coalesce(1)``, a
+# one-partition CoalesceExec), with why its input is bounded and the
+# bound on the rows the coalesce receives.  coalesce(1) does not
+# shuffle, so the whole stage below it runs in that task: the bound
+# must hold for the rows entering the stage (the partial aggregates of
+# a fixed key domain, or a WindowGroupLimit's survivors), not only for
+# the result.  Most entries are a final sort that would otherwise plan
+# a RangePartitioning exchange: a sampling job and a shuffle stage.
+_ONE_TASK_BOUNDED = {
+    "q1_pricing_summary": ("returnflag × linestatus, ≤ 6 groups", 6),
+    "q4_order_priority": ("order priority, ≤ 5 groups", 5),
+    "q5_local_supplier": ("nations of one region, ≤ 5 groups", 5),
+    "q7_volume_shipping": (
+        "2 × 2 nations × ship years 1995-2001, ≤ 28 groups", 28
+    ),
+    "q8_market_share": ("order years 1995-2001, ≤ 7 groups", 7),
+    "q9_product_profit": ("25 nations × order years 1995-2001, ≤ 175 groups", 175),
+    "q12_late_shipments": ("order priority, ≤ 5 groups", 5),
+    "q13_customer_distribution": (
+        "c_count: orders of one customer, at most 26 up to generator "
+        "sf1, ≤ 64 groups",
+        64,
+    ),
+    "q22_sales_opportunity": ("market segment, ≤ 5 groups", 5),
+    "ann_bruteforce_topk": (
+        "3 query vectors × top 5 below a WindowGroupLimit, ≤ 15 rows", 15
+    ),
+    "ann_ivf_kmeans": (
+        "3 query vectors × top 5 below a WindowGroupLimit, ≤ 15 rows", 15
+    ),
+    "text_bm25_multiquery": (
+        "3 literal queries × top 10 below a WindowGroupLimit, ≤ 30 rows", 30
+    ),
+    "tpcds_cross_channel_rollup": (
+        "rollup of 25 brands × years 1995-2001, ≤ 25 × 8 + 1 groups", 201
+    ),
+    "tpcds_return_ratio_rank": (
+        "the kept items' rank counts: the top 10 per measure, plus rows "
+        "tied with a 10th value, ≤ 20 groups without such ties",
+        20,
+    ),
+    "expr_nondeterministic": (
+        "nation's 25 rows, coalesced so the partition-dependent "
+        "expressions are deterministic",
+        25,
+    ),
+}
+
 # Session confs a query sets on purpose and leaves set, with why.
 _PUSHDOWN_FLAG = (
     "spark.sql.python.filterPushdown.enabled",
@@ -109,6 +162,22 @@ def _single_partition_feed(window) -> bool:
         node = node.children().apply(0)
 
 
+def _one_task(cls: str, node) -> bool:
+    """A one-partition ``CoalesceExec``: the stage below it runs in one
+    task."""
+    return cls == "CoalesceExec" and node.numPartitions() == 1
+
+
+def _rows_into(coalesce) -> int:
+    """Rows a ``CoalesceExec`` received in the executed plan: the
+    ``numOutputRows`` of the first node down its input spine that
+    counts rows (codegen wrappers and projections do not)."""
+    node = coalesce.child()
+    while not node.metrics().contains("numOutputRows"):
+        node = node.children().apply(0)
+    return node.metrics().apply("numOutputRows").value()
+
+
 def _assert_plan_invariants(name: str, df) -> None:
     """Check the per-query invariants on one walk of ``df``'s static
     plan and on its schema.
@@ -130,12 +199,14 @@ def _assert_plan_invariants(name: str, df) -> None:
     Collections are serialized at the output boundary (array_join /
     '|'-joined casts) and decimal math ends in round(...)::double or
     scaled-integer cents (tpch.py _money)."""
-    python, single_window = [], False
+    python, single_window, one_task = [], False, False
     for cls, node in walk_plan(df):
         if cls.startswith(_PYTHON_EVALS):
             python.append(cls)
         elif cls == "WindowExec" and _single_partition_feed(node):
             single_window = True
+        elif _one_task(cls, node):
+            one_task = True
     problems = []
     if python and "udtf" not in REGISTRY[name].tags:
         problems.append(f"Python UDF evaluation in the plan: {python}")
@@ -146,6 +217,13 @@ def _assert_plan_invariants(name: str, df) -> None:
         )
     if name not in _SINGLE_WINDOW_BOUNDED and single_window:
         problems.append("unpartitioned WindowExec over unbounded input")
+    if name in _ONE_TASK_BOUNDED and not one_task:
+        problems.append(
+            "no one-task coalesce left in the plan: delete its "
+            "_ONE_TASK_BOUNDED entry"
+        )
+    if name not in _ONE_TASK_BOUNDED and one_task:
+        problems.append("one-task CoalesceExec over unbounded input")
     non_scalar = [(c, t) for c, t in df.dtypes if t.startswith(_NON_SCALAR)]
     if non_scalar:
         problems.append(f"non-scalar output columns: {non_scalar}")
@@ -200,6 +278,14 @@ def test_query_matches_oracle(spark, sf_dir, name):
             "corpora only (scale-keyed on lineitem count)"
         )
     compare_to_oracle(df, q.oracle, sf_dir)
+    if name in _ONE_TASK_BOUNDED:
+        bound = _ONE_TASK_BOUNDED[name][1]
+        # none left when AQE replaced an empty result's plan (q7 at sf0.001)
+        rows = [_rows_into(n) for c, n in walk_plan(df) if _one_task(c, n)]
+        assert max(rows, default=0) <= bound, (
+            f"{name}: rows entering its one-task coalesce {rows} exceed "
+            f"the bound {bound}"
+        )
     _assert_conf_unchanged(spark, name, conf)
 
 

@@ -62,10 +62,10 @@ def test_walk_does_not_enter_reused_exchange(spark):
 
 def test_walk_enters_cached_plan_once(spark, sf_dir):
     # tpcds_return_ratio_rank reads its persisted candidate aggregate
-    # through 11 InMemoryTableScanExecs; the cached plan's one lineitem
+    # through 4 InMemoryTableScanExecs; the cached plan's one lineitem
     # scan is yielded once.
     df = REGISTRY["tpcds_return_ratio_rank"].fn(spark, sf_dir)
     nodes = list(walk_plan(df))
-    assert [cls for cls, _ in nodes].count("InMemoryTableScanExec") == 11
+    assert [cls for cls, _ in nodes].count("InMemoryTableScanExec") == 4
     scans = [scan_table(n) for cls, n in nodes if cls == "FileSourceScanExec"]
     assert scans == ["lineitem"], scans
