@@ -128,7 +128,7 @@ def main() -> None:
         # Catalyst prune result expressions); all bench queries return
         # small (aggregated / limited) results.  Where a final sort runs
         # in one task on that account, tests/test_queries_oracle.py
-        # _ONE_TASK_BOUNDED is where its bound is checked
+        # _ONE_TASK_BOUNDED states its bound and checks its one-task stage
         def run():
             counts.append(len(registry[name].fn(spark, sf_dir).collect()))
 

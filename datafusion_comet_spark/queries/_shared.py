@@ -125,6 +125,34 @@ def _spread_scan(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def _sort_one_task(
+    df: DataFrame, *names: str, ascending: bool | list[bool] = True
+) -> DataFrame:
+    """``df.orderBy(*names, ascending=ascending)`` sorted in one task,
+    for a final result bounded by construction (called through
+    ``DataFrame.transform``).
+
+    Spark plans a bare ``orderBy`` as a RangePartitioning exchange: a
+    sampling job and a shuffle stage, even for a 4-row answer.
+    ``coalesce(1)`` needs neither, but it does not shuffle either, so
+    the whole stage below it, back to the last exchange, runs in that
+    one task: the bound must hold for the rows entering that stage (a
+    final aggregate over a fixed key domain reads map tasks × groups
+    partial aggregates; a WindowGroupLimit top-k its survivors), not
+    only for the result.  A sort over rows that grow with the data
+    keeps ``orderBy``.  (DataFusion, the reference's engine, takes no
+    sampling pass either: it sorts each partition and merges them,
+    ``SortPreservingMergeExec``.)  ``tests/test_queries_oracle.py``
+    ``_ONE_TASK_BOUNDED`` lists every caller with its bound and checks
+    that the one-task stage holds no scan or join.
+
+    The keys are columns of the coalesced frame, one py4j command each
+    where a name ``orderBy`` resolves costs three, so the sort builds
+    with no more commands than the ``orderBy`` it replaces."""
+    one = df.coalesce(1)
+    return one.orderBy(*(one[n] for n in names), ascending=ascending)
+
+
 # The scalar helpers below are spelled as Spark SQL fragments: one
 # F.expr parse per call instead of a py4j round trip per Column op
 # (_drev() cost 14 commands, _sum_rev_money() 34; each now costs 3),

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from . import register
-from ._shared import _spread_scan
+from ._shared import _sort_one_task, _spread_scan
 
 # Winnowing parameters: k tokens per gram, w grams per window.  Any
 # shared token run of length >= K + WIN - 1 (the paper's guarantee
@@ -608,8 +608,7 @@ def text_bm25_multiquery(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("contrib_micros").cast("bigint").alias("bm25_micros"))
         .withColumn("rn", F.row_number().over(w).cast("int"))
         .filter(F.col("rn") <= 10)
-        .coalesce(1)  # |queries| x top 10: a one-task sort
-        .orderBy("query_id", "rn")
+        .transform(_sort_one_task, "query_id", "rn")
     )
 
 

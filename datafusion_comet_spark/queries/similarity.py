@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, table_facts
 from . import register
-from ._shared import _spread_scan, _t
+from ._shared import _sort_one_task, _spread_scan, _t
 from ._values_oracles import VALUES_ORACLES
 
 
@@ -224,8 +224,7 @@ def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             " AS rn",
         )
         .filter("rn <= 5")
-        .coalesce(1)  # 3 queries x top 5: a one-task sort
-        .orderBy("qid", "rn")
+        .transform(_sort_one_task, "qid", "rn")
     )
 
 
@@ -809,8 +808,7 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
             " AS rn",
         )
         .filter("rn <= 5")
-        .coalesce(1)  # 3 queries x top 5: a one-task sort
-        .orderBy("qid", "rn")
+        .transform(_sort_one_task, "qid", "rn")
     )
 
 

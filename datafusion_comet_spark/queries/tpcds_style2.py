@@ -30,6 +30,7 @@ from ._shared import (
     _dim_hint,
     _drev,
     _money,
+    _sort_one_task,
     _stats_join_back,
     _t,
     _ts,
@@ -328,7 +329,7 @@ def tpcds_return_ratio_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     #      kept key loses none and count_if() counts each measure;
     #   4. the grouped counts are partial-aggregated per map task, so
     #      the final sort's input is at most |kept| rows per task and
-    #      it sorts in one task (coalesce(1)), without a range shuffle.
+    #      it sorts in one task (_sort_one_task), without a range shuffle.
     th_amt = (
         cand.orderBy(F.desc("amt_ratio"))
         .limit(10)
@@ -358,8 +359,7 @@ def tpcds_return_ratio_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "amt_gt + 1 AS amt_rank",
             "qty_gt + 1 AS qty_rank",
         )
-        .coalesce(1)
-        .orderBy("amt_rank", "qty_rank", "l_partkey")
+        .transform(_sort_one_task, "amt_rank", "qty_rank", "l_partkey")
     )
 
 

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import register
-from ._shared import SPARK_SQL_REV, SQL_REV, _dim_hint, _spread_scan, _t
+from ._shared import SPARK_SQL_REV, SQL_REV, _dim_hint, _sort_one_task, _spread_scan, _t
 
 
 # --------------------------------------------------------------------------
@@ -159,12 +159,8 @@ def tpcds_cross_channel_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("CAST(count(1) AS BIGINT) AS n_lines"),
             F.expr(f"CAST(round(sum({SPARK_SQL_REV}), 2) AS DOUBLE) AS revenue"),
         )
-        .coalesce(1)  # brands x years rollup levels: a one-task sort
-        .orderBy(
-            "lvl",
-            F.col("p_brand").asc_nulls_first(),
-            F.col("yr").asc_nulls_first(),
-        )
+        # ascending sorts put the rollup's NULL (total) keys first
+        .transform(_sort_one_task, "lvl", "p_brand", "yr")
     )
 
 

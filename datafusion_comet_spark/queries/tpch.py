@@ -21,19 +21,10 @@ reference solves the same problem by forcing Decimal128 everywhere
 we do the idiomatic equivalent with explicit decimal casts, then cast
 the exact result back to double for a stable cross-engine hash.
 
-A final sort over a result whose keys range over a fixed domain is
-spelled ``.coalesce(1).orderBy(...)``: Spark plans a bare ``orderBy``
-as a RangePartitioning exchange, which costs a sampling job and a
-shuffle stage even for a 4-row answer.  ``coalesce(1)`` does not
-shuffle, so the whole final-aggregate stage runs in one task; that is
-cheap only because its input is the partial aggregates, map tasks ×
-groups rows.  (DataFusion, the reference's engine, takes no sampling
-pass either: it sorts each partition and merges them,
-``SortPreservingMergeExec``.)  A sort over rows that grow with the
-data (q15's supplier join) keeps the range exchange.
-``tests/test_queries_oracle.py`` ``_ONE_TASK_BOUNDED`` lists every
-one-task sort with its bound and checks the rows entering it.
-"""
+A final sort over a result whose keys range over a fixed domain runs
+in one task (``_shared._sort_one_task``), not through a
+RangePartitioning exchange; a sort over rows that grow with the data
+(q15's supplier join) keeps ``orderBy``."""
 
 from __future__ import annotations
 
@@ -53,6 +44,7 @@ from ._shared import (  # noqa: F401  (re-exported)
     _dec,
     _drev,
     _money,
+    _sort_one_task,
     _stats_join_back,
     _sum_rev_money,
     _t,
@@ -134,8 +126,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             n.alias("count_order"),
         )
-        .coalesce(1)  # returnflag x linestatus groups: a one-task sort
-        .orderBy("l_returnflag", "l_linestatus")
+        .transform(_sort_one_task, "l_returnflag", "l_linestatus")
     )
 
 
@@ -221,8 +212,7 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).alias("order_count"))
-        .coalesce(1)  # order priorities: a one-task sort
-        .orderBy("o_orderpriority")
+        .transform(_sort_one_task, "o_orderpriority")
     )
 
 
@@ -272,8 +262,7 @@ def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
         .groupBy("n_name")
         .agg(_sum_rev_money().alias("revenue"))
-        .coalesce(1)  # nations of one region: a one-task sort
-        .orderBy(F.col("revenue").desc(), "n_name")
+        .transform(_sort_one_task, "revenue", "n_name", ascending=[False, True])
     )
 
 
@@ -376,8 +365,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("supp_nation", "cust_nation", "l_year")
         .agg(_money(F.sum("volume")).alias("revenue"))
-        .coalesce(1)  # 2 x 2 nations x ship years: a one-task sort
-        .orderBy("supp_nation", "cust_nation", "l_year")
+        .transform(_sort_one_task, "supp_nation", "cust_nation", "l_year")
     )
 
 
@@ -453,8 +441,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("mkt_share")
         )
-        .coalesce(1)  # order years: a one-task sort
-        .orderBy("o_year")
+        .transform(_sort_one_task, "o_year")
     )
 
 
@@ -507,8 +494,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("nation", "o_year")
         .agg(_money(F.sum("amount")).alias("sum_profit"))
-        .coalesce(1)  # nations x order years: a one-task sort
-        .orderBy("nation", F.col("o_year").desc())
+        .transform(_sort_one_task, "nation", "o_year", ascending=[True, False])
     )
 
 
@@ -592,8 +578,7 @@ def q12_late_shipments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(late).cast("long").alias("late_count"),
             F.count(F.lit(1)).alias("line_count"),
         )
-        .coalesce(1)  # order priorities: a one-task sort
-        .orderBy("o_orderpriority")
+        .transform(_sort_one_task, "o_orderpriority")
     )
 
 
@@ -634,8 +619,7 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         per_cust.groupBy("c_count")
         .agg(F.count(F.lit(1)).alias("custdist"))
-        .coalesce(1)  # distinct order counts: a one-task sort
-        .orderBy(F.col("custdist").desc(), F.col("c_count").desc())
+        .transform(_sort_one_task, "custdist", "c_count", ascending=False)
     )
 
 
@@ -993,8 +977,7 @@ def q22_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("numcust"),
             _money(F.sum(_dec("c_acctbal"))).alias("totacctbal"),
         )
-        .coalesce(1)  # market segments: a one-task sort
-        .orderBy("c_mktsegment")
+        .transform(_sort_one_task, "c_mktsegment")
     )
 
 

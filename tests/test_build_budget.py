@@ -31,48 +31,51 @@ from datafusion_comet_spark.sources import write_read
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import bench  # noqa: E402
+from perfbench.run import WORKLOADS  # noqa: E402
 
 REGISTRY = load_all()
 
 # Non-GC py4j commands of the SECOND build of each bench query in one
 # session (the first build also loads tables and trains the memoized
 # IVF index).  Counts repeat exactly from the second build on and are
-# the same at sf0.001/sf0.01 and 4/8 cores.  The 13 queries whose final
-# sort runs in one task pay one command for the ``.coalesce(1)``
-# (tests/test_queries_oracle.py ``_ONE_TASK_BOUNDED``), which saves a
-# sampling job and a shuffle stage per execution; return_ratio_rank's
-# rank plan is one inequality join where it was two joins, two
-# aggregates and two joins back (245 -> 172).
+# the same at sf0.001/sf0.01 and 4/8 cores.  The 14 queries that sort
+# in one task (queries/_shared.py ``_sort_one_task``) name their sort
+# keys as columns of the coalesced frame, one command each where a name
+# passed to ``orderBy`` costs three, so each builds with fewer commands
+# than its range-partitioned ``orderBy`` did (q1 187 -> 184, rollup
+# 164 -> 157); return_ratio_rank's rank plan is one inequality join
+# where it was two joins, two aggregates and two joins back
+# (245 -> 166).
 BUILD_CEILINGS = {
-    "q1_pricing_summary": 188,
+    "q1_pricing_summary": 184,
     "q3_shipping_priority": 99,
-    "q4_order_priority": 61,
-    "q5_local_supplier": 100,
+    "q4_order_priority": 59,
+    "q5_local_supplier": 96,
     "q6_forecast_revenue": 61,
-    "q7_volume_shipping": 173,
-    "q8_market_share": 183,
-    "q9_product_profit": 120,
+    "q7_volume_shipping": 167,
+    "q8_market_share": 181,
+    "q9_product_profit": 116,
     "q10_returned_items": 118,
-    "q12_late_shipments": 78,
-    "q13_customer_distribution": 69,
+    "q12_late_shipments": 76,
+    "q13_customer_distribution": 65,
     "q14_promo_revenue": 70,
     "q15_top_supplier": 109,
     "q17_small_quantity": 88,
     "q18_large_volume": 117,
     "q19_discounted_revenue": 73,
     "q21_waiting_supplier": 137,
-    "q22_sales_opportunity": 95,
-    "ann_bruteforce_topk": 235,
-    "ann_ivf_kmeans": 338,
+    "q22_sales_opportunity": 93,
+    "ann_bruteforce_topk": 231,
+    "ann_ivf_kmeans": 334,
     "dedup_exact": 58,
     "dedup_minhash_lsh": 262,
     "dedup_winnow_cut": 109,
     "dedup_winnow_fingerprint": 135,
-    "text_bm25_multiquery": 216,
+    "text_bm25_multiquery": 212,
     "text_bm25_topk": 138,
     "text_stats": 151,
-    "tpcds_cross_channel_rollup": 165,
-    "tpcds_return_ratio_rank": 172,
+    "tpcds_cross_channel_rollup": 157,
+    "tpcds_return_ratio_rank": 166,
 }
 
 # Spark jobs of the second (warm) execution, build and collect, of each
@@ -152,6 +155,7 @@ def jobs(spark, sf_dir, group, *names, collect=False):
 def test_ceilings_cover_exactly_the_bench_queries():
     assert set(bench.BENCH_QUERIES) <= set(REGISTRY)
     assert set(BUILD_CEILINGS) == set(bench.bench_names(REGISTRY))
+    assert set(JOB_CEILINGS) == {n for _, names in WORKLOADS.values() for n in names}
 
 
 def test_dataframe_debugging_is_off(spark):

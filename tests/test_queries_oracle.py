@@ -15,15 +15,14 @@ it runs) and checks the per-query invariants on that walk:
   queries, whose windowed input is bounded by construction;
 - only scalar output columns (no array, map, struct or decimal);
 - no one-partition ``CoalesceExec`` (a stage run in one task), except
-  the ``_ONE_TASK_BOUNDED`` queries, whose one-task input is bounded
-  by construction.
+  in the ``_ONE_TASK_BOUNDED`` queries, whose one-task input is bounded
+  by construction; even there the stage may run no join and scan no
+  table that grows with the data (``_ONE_TASK_OPS``).
 
 Then it runs the query: against its DuckDB oracle at sf0.001 (the
 same gate the driver runs at sf0.01), or, for a query with no oracle,
-to a row count.  After an oracle run, the rows entering each
-one-task coalesce may not exceed the query's ``_ONE_TASK_BOUNDED``
-bound.  Last, no session conf may have changed under the query
-(``_CONF_SETTERS`` names the deliberate exceptions).
+to a row count.  Last, no session conf may have changed under the
+query (``_CONF_SETTERS`` names the deliberate exceptions).
 """
 
 from __future__ import annotations
@@ -31,7 +30,8 @@ from __future__ import annotations
 import pytest
 from pyspark.errors import SparkNoSuchElementException
 
-from datafusion_comet_spark.plans import walk_plan
+from datafusion_comet_spark.catalog import FIXED_SIZE_DIMS
+from datafusion_comet_spark.plans import scan_table, walk_plan
 from datafusion_comet_spark.queries import load_all
 from datafusion_comet_spark.testing import compare_to_oracle
 
@@ -75,52 +75,53 @@ _SINGLE_WINDOW_BOUNDED = {
     ),
 }
 
-# Queries that run a stage in ONE task (``.coalesce(1)``, a
-# one-partition CoalesceExec), with why its input is bounded and the
-# bound on the rows the coalesce receives.  coalesce(1) does not
-# shuffle, so the whole stage below it runs in that task: the bound
-# must hold for the rows entering the stage (the partial aggregates of
-# a fixed key domain, or a WindowGroupLimit's survivors), not only for
-# the result.  Most entries are a final sort that would otherwise plan
-# a RangePartitioning exchange: a sampling job and a shuffle stage.
+# Queries that run a stage in ONE task (a one-partition CoalesceExec,
+# mostly ``_shared._sort_one_task``'s final sort), with why the rows
+# entering that stage are bounded by construction.  coalesce(1) does
+# not shuffle, so the whole stage below it, back to the exchanges that
+# feed it, runs in that task: the bound must hold for the rows the
+# stage reads (the partial aggregates of a fixed key domain, or a
+# WindowGroupLimit's survivors), not only for the result.  These
+# strings are the one place each bound is written down.
 _ONE_TASK_BOUNDED = {
-    "q1_pricing_summary": ("returnflag × linestatus, ≤ 6 groups", 6),
-    "q4_order_priority": ("order priority, ≤ 5 groups", 5),
-    "q5_local_supplier": ("nations of one region, ≤ 5 groups", 5),
-    "q7_volume_shipping": (
-        "2 × 2 nations × ship years 1995-2001, ≤ 28 groups", 28
-    ),
-    "q8_market_share": ("order years 1995-2001, ≤ 7 groups", 7),
-    "q9_product_profit": ("25 nations × order years 1995-2001, ≤ 175 groups", 175),
-    "q12_late_shipments": ("order priority, ≤ 5 groups", 5),
+    "q1_pricing_summary": "returnflag × linestatus, ≤ 6 groups",
+    "q4_order_priority": "order priority, ≤ 5 groups",
+    "q5_local_supplier": "nations of one region, ≤ 5 groups",
+    "q7_volume_shipping": "2 × 2 nations × ship years 1995-2001, ≤ 28 groups",
+    "q8_market_share": "order years 1995-2001, ≤ 7 groups",
+    "q9_product_profit": "25 nations × order years 1995-2001, ≤ 175 groups",
+    "q12_late_shipments": "order priority, ≤ 5 groups",
     "q13_customer_distribution": (
-        "c_count: orders of one customer, at most 26 up to generator "
-        "sf1, ≤ 64 groups",
-        64,
+        "c_count: the orders of one customer, whose spread the generator "
+        "fixes (16-26 values from sf0.001 to sf1)"
     ),
-    "q22_sales_opportunity": ("market segment, ≤ 5 groups", 5),
-    "ann_bruteforce_topk": (
-        "3 query vectors × top 5 below a WindowGroupLimit, ≤ 15 rows", 15
-    ),
-    "ann_ivf_kmeans": (
-        "3 query vectors × top 5 below a WindowGroupLimit, ≤ 15 rows", 15
-    ),
-    "text_bm25_multiquery": (
-        "3 literal queries × top 10 below a WindowGroupLimit, ≤ 30 rows", 30
-    ),
+    "q22_sales_opportunity": "market segment, ≤ 5 groups",
+    "ann_bruteforce_topk": "3 query vectors × top 5 below a WindowGroupLimit",
+    "ann_ivf_kmeans": "3 query vectors × top 5 below a WindowGroupLimit",
+    "text_bm25_multiquery": "3 literal queries × top 10 below a WindowGroupLimit",
     "tpcds_cross_channel_rollup": (
-        "rollup of 25 brands × years 1995-2001, ≤ 25 × 8 + 1 groups", 201
+        "rollup of 25 brands × years 1995-2001, ≤ 25 × 8 + 1 groups"
     ),
     "tpcds_return_ratio_rank": (
-        "the kept items' rank counts: the top 10 per measure, plus rows "
-        "tied with a 10th value, ≤ 20 groups without such ties",
-        20,
+        "the kept items' rank counts: the top 10 per measure plus the "
+        "rows tied with a 10th value (tests/test_asymptotic_regime.py)"
     ),
     "expr_nondeterministic": (
         "nation's 25 rows, coalesced so the partition-dependent "
-        "expressions are deterministic",
-        25,
+        "expressions are deterministic"
     ),
+}
+
+# What a one-task stage may run: row-local operators and the reducing
+# ones that bound it, reading exchanges.  A scan may feed it only for a
+# fixed-cardinality table (catalog.FIXED_SIZE_DIMS).
+_ONE_TASK_OPS = {
+    "ProjectExec",
+    "FilterExec",
+    "HashAggregateExec",
+    "WindowExec",
+    "WindowGroupLimitExec",
+    "SortExec",
 }
 
 # Session confs a query sets on purpose and leaves set, with why.
@@ -168,14 +169,26 @@ def _one_task(cls: str, node) -> bool:
     return cls == "CoalesceExec" and node.numPartitions() == 1
 
 
-def _rows_into(coalesce) -> int:
-    """Rows a ``CoalesceExec`` received in the executed plan: the
-    ``numOutputRows`` of the first node down its input spine that
-    counts rows (codegen wrappers and projections do not)."""
-    node = coalesce.child()
-    while not node.metrics().contains("numOutputRows"):
-        node = node.children().apply(0)
-    return node.metrics().apply("numOutputRows").value()
+def _one_task_stage_misfits(coalesce) -> list[str]:
+    """Operators of the stage under a one-partition ``CoalesceExec``
+    (its subtree down to the exchanges that feed it) that a one-task
+    stage may not run: anything outside ``_ONE_TASK_OPS``, such as a
+    join, an aggregation of another kind or a scan of a table that
+    grows with the data."""
+    misfits, stack = [], [coalesce.child()]
+    while stack:
+        node = stack.pop()
+        cls = node.getClass().getSimpleName()
+        if "Exchange" in cls or cls.endswith("QueryStageExec"):
+            continue
+        if cls == "FileSourceScanExec":
+            if scan_table(node) not in FIXED_SIZE_DIMS:
+                misfits.append(f"scan of {scan_table(node)}")
+        elif cls not in _ONE_TASK_OPS:
+            misfits.append(cls)
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return misfits
 
 
 def _assert_plan_invariants(name: str, df) -> None:
@@ -199,7 +212,7 @@ def _assert_plan_invariants(name: str, df) -> None:
     Collections are serialized at the output boundary (array_join /
     '|'-joined casts) and decimal math ends in round(...)::double or
     scaled-integer cents (tpch.py _money)."""
-    python, single_window, one_task = [], False, False
+    python, single_window, one_task, misfits = [], False, False, []
     for cls, node in walk_plan(df):
         if cls.startswith(_PYTHON_EVALS):
             python.append(cls)
@@ -207,6 +220,7 @@ def _assert_plan_invariants(name: str, df) -> None:
             single_window = True
         elif _one_task(cls, node):
             one_task = True
+            misfits += _one_task_stage_misfits(node)
     problems = []
     if python and "udtf" not in REGISTRY[name].tags:
         problems.append(f"Python UDF evaluation in the plan: {python}")
@@ -224,6 +238,8 @@ def _assert_plan_invariants(name: str, df) -> None:
         )
     if name not in _ONE_TASK_BOUNDED and one_task:
         problems.append("one-task CoalesceExec over unbounded input")
+    if misfits:
+        problems.append(f"one-task stage runs {misfits}")
     non_scalar = [(c, t) for c, t in df.dtypes if t.startswith(_NON_SCALAR)]
     if non_scalar:
         problems.append(f"non-scalar output columns: {non_scalar}")
@@ -278,14 +294,6 @@ def test_query_matches_oracle(spark, sf_dir, name):
             "corpora only (scale-keyed on lineitem count)"
         )
     compare_to_oracle(df, q.oracle, sf_dir)
-    if name in _ONE_TASK_BOUNDED:
-        bound = _ONE_TASK_BOUNDED[name][1]
-        # none left when AQE replaced an empty result's plan (q7 at sf0.001)
-        rows = [_rows_into(n) for c, n in walk_plan(df) if _one_task(c, n)]
-        assert max(rows, default=0) <= bound, (
-            f"{name}: rows entering its one-task coalesce {rows} exceed "
-            f"the bound {bound}"
-        )
     _assert_conf_unchanged(spark, name, conf)
 
 
