@@ -21,10 +21,6 @@ from pyspark.sql import DataFrame
 
 _REUSED = frozenset({"ReusedExchangeExec", "ReusedSubqueryExec"})
 
-_SHUFFLES = frozenset(
-    {"ShuffleExchangeExec HashPartitioning", "ShuffleExchangeExec RangePartitioning"}
-)
-
 
 def plan_string(df: DataFrame, mode: str = "formatted") -> str:
     """Return the explain output for ``df`` as a string."""
@@ -102,16 +98,6 @@ def pushed_filters(df: DataFrame) -> list[str]:
             body = node.metadata().apply("PushedFilters").strip("[]")
             out.extend(f for f in body.split(", ") if f)
     return out
-
-
-def shuffle_count(df: DataFrame) -> int:
-    """Number of hash/range shuffle exchanges in the plan — the scale
-    metric to minimize."""
-    return sum(1 for op in operators_in_plan(df) if op in _SHUFFLES)
-
-
-def broadcast_join_count(df: DataFrame) -> int:
-    return sum(1 for cls, _ in walk_plan(df) if cls == "BroadcastHashJoinExec")
 
 
 def skew_split_joins(df: DataFrame) -> int:

@@ -2084,8 +2084,8 @@ def pipeline_corpus_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval-shingle side is DISTINCT'd then broadcast; packing reuses the
     per-source window partitioning.  Corpus exchanges end-to-end:
     dedup window, overlap regroup, packing window (+ tiny eval
-    distinct and the output sort) — enforced by the exchange-budget
-    plan test."""
+    distinct and the output sort) — pinned by its plan golden,
+    tests/goldens/plans/pipeline_corpus_curation_v2.txt."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     toks = F.split(F.lower("text"), " ")
     nk = F.md5(
@@ -3075,8 +3075,8 @@ def sample_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum and joined back via broadcast, so the corpus is touched exactly
     twice — once for counts (partial-agg, narrow), once for the ranked
     selection (one hash exchange on source + per-source top-target);
-    plan-asserted in tests/test_plans.py::
-    test_temperature_mixture_shuffle_budget.
+    pinned by its plan golden,
+    tests/goldens/plans/sample_temperature_mixture.txt.
     The rank filter is a conjunction with the literal
     budget bound (rn <= K AND rn <= target), so the window planner can
     prune per-partition at K before the exact per-source threshold
@@ -3094,7 +3094,7 @@ def sample_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     # subtree — the branches differ by a join-null filter, so
     # ReuseExchange can't merge them; measured, not guessed).  The
     # unpartitioned window is bounded by |sources| — allowlisted with
-    # justification in tests/test_plans.py::_SINGLE_WINDOW_BOUNDED.
+    # justification in tests/test_queries_oracle.py::_SINGLE_WINDOW_BOUNDED.
     tgt = w.withColumn(
         "tot_isq", F.sum("isq").over(W.partitionBy())
     ).select(

@@ -653,7 +653,7 @@ def join_sort_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     or hash-build (the 100 TB fact-fact case): shuffle on the key,
     sort each side, streaming merge with spill-safe memory use.
     Values identical to any other join strategy, which the oracle
-    checks; the plan test asserts SortMergeJoin actually ran."""
+    checks; its plan golden pins the SortMergeJoin."""
     cust = _t(spark, sf_dir, "customer").hint("merge")
     orders = _t(spark, sf_dir, "orders")
     return (
@@ -1290,9 +1290,9 @@ def join_shuffle_hash_hint(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale note: prefer it when the build side's per-partition slice
     fits executor memory (here orders filtered by date); keep
     sort-merge for balanced giant-giant joins where neither side
-    should be hash-built.  The plan test asserts ShuffledHashJoin
-    actually planned — a silently-ignored hint would fall back to
-    sort-merge and the regression would be invisible in results."""
+    should be hash-built.  Its plan golden pins the ShuffledHashJoin —
+    a silently-ignored hint would fall back to another join and the
+    regression would be invisible in results."""
     orders = (
         _t(spark, sf_dir, "orders")
         .filter(F.col("o_orderdate") >= datetime.date(1996, 1, 1))

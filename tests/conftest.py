@@ -39,6 +39,14 @@ def sf_dir() -> str:
     return SF_DIR
 
 
+@pytest.fixture(scope="module")
+def duck():
+    """An in-memory DuckDB connection, one per test module."""
+    import duckdb
+
+    return duckdb.connect()
+
+
 def jobs_in_group(spark, group: str) -> int:
     """Spark jobs started so far under job group ``group``."""
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()

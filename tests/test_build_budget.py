@@ -17,8 +17,6 @@ import inspect
 import os
 import struct
 import sys
-import threading
-from contextlib import contextmanager
 
 import pytest
 from conftest import jobs_in_group
@@ -32,6 +30,7 @@ from datafusion_comet_spark.sources import write_read
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import bench  # noqa: E402
 from perfbench.run import WORKLOADS  # noqa: E402
+from perfbench.tracing import Py4JCounter  # noqa: E402
 
 REGISTRY = load_all()
 
@@ -45,7 +44,8 @@ REGISTRY = load_all()
 # than its range-partitioned ``orderBy`` did (q1 187 -> 184, rollup
 # 164 -> 157); return_ratio_rank's rank plan is one inequality join
 # where it was two joins, two aggregates and two joins back
-# (245 -> 166).
+# (245 -> 166).  The counter is perfbench's ``Py4JCounter``, the same
+# one behind its ``queries.py4j_calls``.
 BUILD_CEILINGS = {
     "q1_pricing_summary": 184,
     "q3_shipping_priority": 99,
@@ -110,32 +110,6 @@ JOB_CEILINGS = {
     "parquet_write_partitioned": 5,
 }
 
-# py4j's finalizer sends one "memory delete" command per collected
-# JavaObject, whenever the Python GC runs; those are not build cost.
-_MEMORY_DELETE = "m\nd\n"
-
-
-@contextmanager
-def _py4j_commands(spark):
-    """Yield a one-element list holding the count of non-GC py4j
-    commands the calling thread sends while the context is open."""
-    client = spark.sparkContext._gateway._gateway_client
-    orig = client.send_command
-    thread = threading.get_ident()
-    count = [0]
-
-    def counted(command, *args, **kwargs):
-        if threading.get_ident() == thread and not command.startswith(_MEMORY_DELETE):
-            count[0] += 1
-        return orig(command, *args, **kwargs)
-
-    client.send_command = counted
-    try:
-        yield count
-    finally:
-        client.send_command = orig
-
-
 def jobs(spark, sf_dir, group, *names, collect=False):
     """Spark jobs started under job group ``group`` (unique per
     session) by building each of ``names`` and, with ``collect``,
@@ -172,9 +146,9 @@ def test_bench_query_build_py4j_budget(spark, sf_dir, name):
     fn = REGISTRY[name].fn
     fn(spark, sf_dir)
     gc.collect()
-    with _py4j_commands(spark) as count:
+    with Py4JCounter(spark).counting() as counter:
         fn(spark, sf_dir)
-    assert count[0] <= BUILD_CEILINGS[name], (name, count[0])
+    assert counter.calls <= BUILD_CEILINGS[name], (name, counter.calls)
 
 
 @pytest.mark.parametrize("name", sorted(JOB_CEILINGS))

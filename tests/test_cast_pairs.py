@@ -39,7 +39,6 @@ import math
 import struct
 from decimal import ROUND_DOWN, Decimal
 
-import duckdb
 import pytest
 
 from datafusion_comet_spark.session import conf_override
@@ -621,11 +620,6 @@ def _duck_value(con, duck_lit, to):
         return _canon(r[0])
     except Exception:
         return _DUCK_ERROR
-
-
-@pytest.fixture(scope="module")
-def duck():
-    return duckdb.connect()
 
 
 def _sweep(spark, duck, mode):

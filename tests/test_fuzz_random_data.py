@@ -19,7 +19,6 @@ elsewhere).
 from __future__ import annotations
 
 import pandas as pd
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -52,13 +51,6 @@ BATTERY = [
     "SELECT s, CAST(sum(i) AS BIGINT) AS si FROM t "
     "GROUP BY s HAVING count(*) > 1 ORDER BY s NULLS FIRST",
 ]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    import duckdb
-
-    return duckdb.connect()
 
 
 def _canon(rows):

@@ -3,10 +3,12 @@
 Rebuild of the reference's plan-stability suite (reference:
 spark/src/test/scala/org/apache/spark/sql/comet/CometPlanStabilitySuite.scala:78-125,
 goldens under spark/src/test/resources/tpcds-plan-stability/): the
-*shape* of the physical plan for headline queries is part of the
-contract, not an accident — a regression that swaps a broadcast join
-for a shuffled one, or drops TakeOrderedAndProject for a global sort,
-changes no rows at test scale but is a cliff at 100 TB.
+*shape* of each query's physical plan is part of the contract, not an
+accident — a regression that swaps a broadcast join for a shuffled
+one, or drops TakeOrderedAndProject for a global sort, changes no rows
+at test scale but is a cliff at 100 TB.  The goldens
+are the one record of each registry query's static plan shape; other
+plan tests (tests/test_plans.py) pin only what they cannot show.
 
 Goldens store ``plans.operators_in_plan``: one label per node of the
 walked physical plan (scalar subqueries and cached sub-plans
@@ -30,10 +32,6 @@ show, per query:
   (test_plans.test_date_intersect_returns_single_orders_pass).
 - tpcds_return_ratio_rank: the persisted candidate aggregate's plan is
   listed once, however many InMemoryTableScans read it.
-- tpcds_cross_channel_rollup: round 11 dropped it from 4 to 3 shuffles
-  when the 2-channel key set's count_distinct became summed
-  max(status == ch) presence bits, removing the (partkey, status)-keyed
-  distinct level and its exchange.
 """
 
 from __future__ import annotations
@@ -48,95 +46,15 @@ from datafusion_comet_spark.testing import beyond_pinned_regime, scale_regime
 
 REGISTRY = load_all()
 
-# Queries whose plan shape is pinned: the TPC-H headliners exercising
-# each join/agg strategy plus the scale-critical pipeline operators.
-PINNED = [
-    "q1_pricing_summary",       # two-phase hash agg + sort
-    "q3_shipping_priority",     # TakeOrderedAndProject top-k
-    "q5_local_supplier",        # broadcast dimension joins
-    "q9_product_profit",        # deep join tree
-    "q21_waiting_supplier",     # semi + anti self-joins
-    "dedup_minhash_lsh",        # reused exchange self-join
-    "text_stats",               # map-only array expressions, zero shuffles
-    "vocab_top_tokens",         # two-level agg + TakeOrderedAndProject
-    "window_topk_per_group",    # WindowGroupLimit
-    "tpcds_rank_in_category",   # window over aggregate
-    "merge_upsert",             # full-outer merge join
-    "join_theta_nested_loop",   # BroadcastNestedLoopJoin
-    "pipeline_corpus_curation", # WindowGroupLimit pre-shuffle dedup
-    "join_range_bucketed",      # manufactured equi key, no NLJ
-    "recursive_cte_month_spine",  # spine broadcast, single fact pass
-    # round 2 additions
-    "join_shuffle_hash_hint",   # ShuffledHashJoin, no sort on either side
-    "doc_pack_greedy",          # one window cumsum + rollup, two exchanges
-    "dedup_incremental_vs_corpus",  # fingerprint-table join, no raw rejoin
-    "events_session_window_batch",  # native session-window aggregate
-    "multimodal_embed_ann",     # MapInPandas embed below broadcast cosine join
-    "scalar_subquery_api",      # Subquery + ReusedSubquery, no join
-    # round 2: the remaining TPC-H set — all 22 plan shapes pinned
-    "q2_min_cost_supplier",
-    "q4_order_priority",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q10_returned_items",
-    "q11_important_stock",
-    "q12_late_shipments",
-    "q13_customer_distribution",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q16_parts_supplier",
-    "q17_small_quantity",
-    "q18_large_volume",
-    "q19_discounted_revenue",
-    "q20_part_promotion",
-    "q22_sales_opportunity",
-    # round 2: TPC-DS batch-2 scale-critical shapes
-    "tpcds_net_after_returns",      # agg-before-join + TakeOrdered top-k
-    "tpcds_frequent_buyer_semi",    # two broadcast LeftSemi filter sets
-    "tpcds_quarterly_share_growth", # one fact exchange + lead windows
-    "tpcds_class_revenue_ratio",    # window-over-aggregate class share
-    # round 7: the fact-pass-collapse signatures (scan counts are also
-    # pinned in tests/test_plans.py) + the reference's dedicated q72
-    # extended golden (spark/src/test/resources/tpcds-query-results/
-    # extended/) and the q64-style repeat-purchase chain
-    "tpcds_week_offset_join",         # q72: dim-chain + week-offset join
-    "tpcds_cross_channel_rollup",     # q14: count-distinct-channel pass
-    "tpcds_date_intersect_returns",   # q83: single-pass INTERSECT legs
-    "tpcds_multi_supplier_returned",  # q95: one-pass flag aggregate
-    "tpcds_repeat_purchase_chain",    # q64-style self-chain
-    "tpcds_buy_return_rebuy",         # buy→return→rebuy chain
-    # round 7: the IVF family after the deterministic-Lloyd rewrite —
-    # the pinned shape proves assignment is MAP-SIDE literal
-    # arithmetic (no join/shuffle for cell routing) and search is the
-    # broadcast cell equi-join
-    "ann_ivf_kmeans",
-    "ann_ivf_multiprobe",
-    "ann_ivf_pq_adc",
-]
-
-# Round 7: the reference pins APPROVED PLANS for every TPC-DS query
-# (spark/src/test/resources/tpcds-plan-stability/, enforced by
-# CometPlanStabilitySuite) — mirror that for the full TPC-DS-shape
-# family here.  Programmatic so a future batch is golden-required the
-# moment it registers; regenerate deliberately with
-# SPARK_GRAFT_REGEN_GOLDENS=1.
-PINNED += sorted(
-    n for n in REGISTRY if n.startswith("tpcds_") and n not in PINNED
-)
-
-# Round 8: extend the same discipline to EVERY statically-plannable
-# registry query — the round-8 rotation made the last of them
-# driver-proven, and their plan shapes are part of that claim.  The
-# exclusions: streaming queries run a full availableNow execution on
-# construction and sources write files on construction, so their
-# "plan" is a post-hoc artifact, not a stable pre-execution contract.
+# Every statically plannable registry query is pinned.  Streaming
+# queries run a full availableNow execution on construction and sources
+# write files on construction, so their "plan" is a post-hoc artifact,
+# not a stable pre-execution contract.
 _EXCLUDED_MODULES = {"sources", "streaming", "streaming_fast"}
-PINNED += sorted(
+PINNED = sorted(
     n
     for n, q in REGISTRY.items()
-    if n not in PINNED
-    and q.fn.__module__.rsplit(".", 1)[-1] not in _EXCLUDED_MODULES
+    if q.fn.__module__.rsplit(".", 1)[-1] not in _EXCLUDED_MODULES
 )
 
 # Queries whose plan LEGITIMATELY changes in the large-scale regime

@@ -19,7 +19,6 @@ constructs; this file is where they are allowed and pinned.
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 from pyspark.sql import functions as F
 
@@ -51,11 +50,6 @@ RLIKE_PINS = [
     # \Z (end before final terminator) is Java; RE2 has only \z
     ("Z_anchor", r"abc\Z", "abc\n", True, "error"),
 ]
-
-
-@pytest.fixture(scope="module")
-def duck():
-    return duckdb.connect()
 
 
 @pytest.mark.parametrize(

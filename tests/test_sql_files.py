@@ -45,7 +45,6 @@ from decimal import Decimal
 from fractions import Fraction
 from pathlib import Path
 
-import duckdb
 import pytest
 
 from datafusion_comet_spark.session import conf_override
@@ -214,11 +213,6 @@ def _tables_in(stmt: str) -> list[str]:
 
 
 _FILES = sorted(SQL_DIR.rglob("*.sql")) if SQL_DIR.exists() else []
-
-
-@pytest.fixture(scope="module")
-def duck():
-    return duckdb.connect()
 
 
 @pytest.mark.parametrize(
