@@ -6,7 +6,8 @@ native shuffle codecs operator.proto:301-306).  In a single-engine
 PySpark build that whole subsystem collapses into session
 configuration; the settings below are the 100 TB-posture defaults:
 
-- AQE on (runtime coalesce, skew-join splitting, dynamic join demotion)
+- AQE on, as in Spark's defaults (runtime coalesce, skew-join splitting,
+  dynamic join demotion)
 - broadcast threshold generous enough that dimension tables of a
   TPC-H-ish star schema broadcast instead of shuffling
 - shuffle partition count sized from the env (local[32] in tests;
@@ -81,10 +82,8 @@ BROADCAST_THRESHOLD_BYTES = 32 << 20
 
 DEFAULT_CONF: dict[str, str] = {
     # --- adaptive execution: the scale story -------------------------------
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    "spark.sql.adaptive.localShuffleReader.enabled": "true",
+    # AQE, its partition coalescing, skew-join splitting and local
+    # shuffle reader are Spark's defaults and are not restated here.
     # Let AQE re-optimize (coalesce/skew-split) INSIDE persisted plans.
     # Default false pins a cached aggregate's shuffle output at the full
     # spark.sql.shuffle.partitions count, so every consumer stage of a
@@ -102,12 +101,9 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.sql.adaptive.autoBroadcastJoinThreshold": "64m",
     "spark.sql.autoBroadcastJoinThreshold": f"{BROADCAST_THRESHOLD_BYTES >> 20}m",
     # --- scan / pushdown ---------------------------------------------------
-    "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.parquet.aggregatePushdown": "true",
-    "spark.sql.files.maxPartitionBytes": "134217728",
     # --- python interchange ------------------------------------------------
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
     # --- semantics ---------------------------------------------------------
     "spark.sql.session.timeZone": "UTC",
     # Parquet INT64(TIMESTAMP_NANOS) columns (events.ts) are unreadable as

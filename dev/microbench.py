@@ -33,15 +33,14 @@ ITERATIONS = int(os.environ.get("SPARK_GRAFT_BENCH_ITERATIONS", "3"))
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
     from pyspark.sql import functions as F
 
+    from datafusion_comet_spark.catalog import DEFAULT_SF_DIR
     from datafusion_comet_spark.session import get_session
     from datafusion_comet_spark.testing import scale_factor, timings
 
     spark = get_session(app_name="dcs-microbench")
-    li_path = os.path.join(sf_dir, "lineitem.parquet")
+    li_path = os.path.join(DEFAULT_SF_DIR, "lineitem.parquet")
     li = spark.read.parquet(li_path)
     li.count()  # warm: JVM JIT + parquet footers in page cache
 
@@ -90,7 +89,7 @@ def main() -> None:
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
-    print(json.dumps({"metric": "microbench", "cases": cases, "sf": scale_factor(sf_dir)}))
+    print(json.dumps({"metric": "microbench", "cases": cases, "sf": scale_factor(DEFAULT_SF_DIR)}))
     spark.stop()
 
 

@@ -39,6 +39,16 @@ def sf_dir() -> str:
     return SF_DIR
 
 
+def corpus_beside(scale: str) -> str:
+    """The ``scale`` corpus (``"sf0.01"``) in the directory that holds
+    the suite's own (``sf_dir``); skips the calling test when it is
+    absent."""
+    path = os.path.join(os.path.dirname(SF_DIR.rstrip("/")), scale)
+    if not os.path.isdir(path):
+        pytest.skip(f"no {scale} corpus beside {SF_DIR}")
+    return path
+
+
 @pytest.fixture(scope="module")
 def duck():
     """An in-memory DuckDB connection, one per test module."""

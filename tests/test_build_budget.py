@@ -2,13 +2,16 @@
 bench query's DataFrame costs, and the spellings that keep it low.
 
 Every PySpark Column or DataFrame call is at least one py4j round trip
-to the JVM, so the command count of ``Query.fn(spark, sf_dir)`` is the
-cost of the build layer.  The ceilings below are the counts after the
-build-cost cuts (session ``dataFrameDebugging`` off, SQL fragments for
-hot expressions, one from_json centroid literal, schema'd parquet
-read-back); a change that raises one must say why, here.  The
-from_json literal and the schema'd read-back are pinned against the
-spellings they replaced."""
+to the JVM.  ``BUILD_CEILINGS`` pins the command count of
+``Query.fn(spark, sf_dir)``, not the build time: each DataFrame
+operation also costs 2-4 ms of eager analysis in the JVM, against
+0.2-0.3 ms per command, so one more operation can cost more than many
+commands.  The build time is perfbench's traced ``queries.build_s``.
+The ceilings below are the counts after the build-cost cuts (session
+``dataFrameDebugging`` off, SQL fragments for hot expressions, one
+from_json centroid literal, schema'd parquet read-back); a change that
+raises one must say why, here.  The from_json literal and the schema'd
+read-back are pinned against the spellings they replaced."""
 
 from __future__ import annotations
 

@@ -28,23 +28,29 @@ import os
 
 import pyarrow.parquet as pq
 import pytest
+from conftest import corpus_beside
 from pyspark.sql import functions as F
 
 from datafusion_comet_spark.plans import pushed_filters, walk_plan
 from datafusion_comet_spark.session import conf_override
 
 ROW_GROUP_SIZE = 8000
-SRC = "/root/testdata/sf0.01/lineitem.parquet"
 
 
 @pytest.fixture(scope="module")
-def mrg_path(tmp_path_factory):
+def src() -> str:
+    """The sf0.01 lineitem file: one row group."""
+    return os.path.join(corpus_beside("sf0.01"), "lineitem.parquet")
+
+
+@pytest.fixture(scope="module")
+def mrg_path(tmp_path_factory, src):
     """lineitem rewritten as one file with many row groups, sorted by
     l_orderkey so row-group min/max statistics are disjoint (the
     precondition for pruning — same layout test_semantics.py pins for
     the sorted parquet writer)."""
     path = str(tmp_path_factory.mktemp("mrg") / "lineitem_mrg.parquet")
-    tbl = pq.read_table(SRC).sort_by("l_orderkey")
+    tbl = pq.read_table(src).sort_by("l_orderkey")
     pq.write_table(tbl, path, row_group_size=ROW_GROUP_SIZE)
     meta = pq.ParquetFile(path).metadata
     assert meta.num_row_groups > 4, meta.num_row_groups
@@ -70,7 +76,7 @@ def test_multi_rowgroup_file_splits_into_tasks(spark, mrg_path, small_split):
     )
 
 
-def test_split_read_is_result_invariant(spark, mrg_path, small_split):
+def test_split_read_is_result_invariant(spark, src, mrg_path, small_split):
     """The multi-task read of the re-grouped file aggregates to the
     EXACT values of the single-task read of the original file — row
     groups change physical layout only.  Sums go through decimal so
@@ -92,7 +98,7 @@ def test_split_read_is_result_invariant(spark, mrg_path, small_split):
             .collect()[0]
         )
 
-    assert digest(mrg_path) == digest(SRC)
+    assert digest(mrg_path) == digest(src)
 
 
 def test_pushed_filter_prunes_row_groups(spark, mrg_path):

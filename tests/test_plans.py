@@ -27,6 +27,7 @@ the oracle.
 
 from __future__ import annotations
 
+from conftest import corpus_beside
 from pyspark.sql import functions as F
 
 from datafusion_comet_spark.plans import (
@@ -314,7 +315,7 @@ def test_q11_threshold_reuses_fact_exchange(spark, sf_dir):
     # and no shuffle stage exists at all (nothing to reuse); the claim
     # under test is about the scale regime where the per-part
     # aggregate DOES shuffle
-    df = REGISTRY["q11_important_stock"].fn(spark, "/root/testdata/sf0.01")
+    df = REGISTRY["q11_important_stock"].fn(spark, corpus_beside("sf0.01"))
     df.collect()
     ops = operators_in_plan(df)
     assert "ReusedExchangeExec" in ops, ops

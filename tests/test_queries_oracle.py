@@ -29,9 +29,8 @@ names the deliberate exceptions).
 
 from __future__ import annotations
 
-import os
-
 import pytest
+from conftest import corpus_beside
 from pyspark.errors import SparkNoSuchElementException
 
 from datafusion_comet_spark.catalog import FIXED_SIZE_DIMS
@@ -311,12 +310,10 @@ _AT_SCALE = [("q7_volume_shipping", "sf0.01"), ("tpcds_return_ratio_rank", "sf0.
 
 
 @pytest.mark.parametrize("name,scale", _AT_SCALE)
-def test_query_matches_oracle_at_scale(spark, sf_dir, name, scale):
+def test_query_matches_oracle_at_scale(spark, name, scale):
     """The query against its oracle on the ``scale`` corpus beside the
     suite's own, with a non-empty answer."""
-    data = os.path.join(os.path.dirname(sf_dir.rstrip("/")), scale)
-    if not os.path.isdir(data):
-        pytest.skip(f"no {scale} corpus beside {sf_dir}")
+    data = corpus_beside(scale)
     q = REGISTRY[name]
     df = q.fn(spark, data)
     rows = df.collect()

@@ -35,10 +35,9 @@ from datafusion_comet_spark.catalog import (
 )
 from datafusion_comet_spark.queries import load_all
 
-from conftest import SF_DIR, jobs_in_group, plant_stale_cds_archive
+from conftest import corpus_beside, jobs_in_group, plant_stale_cds_archive
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-DATA_ROOT = os.path.dirname(SF_DIR.rstrip("/"))
 
 
 def _assert_parity(spark, sf_dir: str, name: str) -> None:
@@ -68,9 +67,7 @@ def gen_dir(tmp_path_factory) -> str:
 
 @pytest.mark.parametrize("scale", ["sf0.001", "sf0.01", "sf0.1", "generator"])
 def test_footer_schema_equals_inferred_schema(spark, gen_dir, scale):
-    sf_dir = gen_dir if scale == "generator" else os.path.join(DATA_ROOT, scale)
-    if not os.path.isdir(sf_dir):
-        pytest.skip(f"no data at {sf_dir}")
+    sf_dir = gen_dir if scale == "generator" else corpus_beside(scale)
     for name in TABLES:
         _assert_parity(spark, sf_dir, name)
 

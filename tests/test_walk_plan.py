@@ -4,6 +4,7 @@ reused exchanges/subqueries, and works before and after execution."""
 
 from __future__ import annotations
 
+from conftest import corpus_beside
 from pyspark import SparkContext
 
 from datafusion_comet_spark.plans import scan_table, walk_plan
@@ -50,7 +51,7 @@ def test_walk_does_not_enter_reused_exchange(spark):
     # Executed q11 at sf0.01 reuses its per-part aggregate's exchange
     # (test_plans.test_q11_threshold_reuses_fact_exchange): the walk
     # yields each reused exchange once, where it ran.
-    df = REGISTRY["q11_important_stock"].fn(spark, "/root/testdata/sf0.01")
+    df = REGISTRY["q11_important_stock"].fn(spark, corpus_beside("sf0.01"))
     df.collect()
     identity = SparkContext._jvm.System.identityHashCode
     nodes = [(cls, identity(node), node) for cls, node in walk_plan(df)]
