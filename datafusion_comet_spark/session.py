@@ -82,8 +82,6 @@ BROADCAST_THRESHOLD_BYTES = 32 << 20
 
 DEFAULT_CONF: dict[str, str] = {
     # --- adaptive execution: the scale story -------------------------------
-    # AQE, its partition coalescing, skew-join splitting and local
-    # shuffle reader are Spark's defaults and are not restated here.
     # Let AQE re-optimize (coalesce/skew-split) INSIDE persisted plans.
     # Default false pins a cached aggregate's shuffle output at the full
     # spark.sql.shuffle.partitions count, so every consumer stage of a

@@ -305,7 +305,7 @@ def test_or_of_and_predicate_pushed_to_scan(spark, sf_dir):
     assert any("Or(" in f for f in pf), f"OR tree not pushed: {pf}"
 
 
-def test_q11_threshold_reuses_fact_exchange(spark, sf_dir):
+def test_q11_threshold_reuses_fact_exchange(spark):
     """Round-3 rewrite lock-in: q11's broadcast-scalar threshold must
     NOT re-run the fact semi-join — after execution the adaptive plan
     shows the per-part aggregate's exchange reused by the 1-row
